@@ -42,51 +42,31 @@ object Pipeline {
 
   /** raw-text column named `rawCol` -> level-result struct column `out`
     * = (ok, value, unit, ref_min, ref_max, confidence, error, raw_text).
-    * `reuse = Some((otherRaw, otherOut))` short-circuits the parse when
-    * this level's raw text is identical to an already-parsed level's
-    * (typical for premium vs optimum: they differ only for docs the
-    * binarization rescue actually changes), paying one string compare
-    * instead of a reparse. Helper columns (`_lab`, `_cands`, `_best`)
-    * are left in place for downstream reuse; callers project them away.
-    */
-  /** Candidate-gather strategy: the fused native Expression
-    * (TshGatherCandidates, one compiled pass per doc) is the default;
-    * the pure-HOF expression chain (TshExtract.*Candidates) remains
-    * selectable per-call via `fused` (a parameter, not a JVM global —
-    * concurrently-running suites must not observe each other's plan
-    * encoding) — the golden suite validates both and a property test
-    * asserts their equality.
+    * Candidates come from the fused native gather (TshGatherCandidates,
+    * one compiled pass per doc). `reuse = Some((otherRaw, otherOut))`
+    * short-circuits the parse when this level's raw text is identical
+    * to an already-parsed level's (typical for premium vs optimum: they
+    * differ only for docs the binarization rescue actually changes),
+    * paying one string compare instead of a reparse. Helper columns
+    * (`_cands`, `_best`) are left in place for downstream reuse;
+    * callers project them away.
     */
   def withLevelResult(df: DataFrame, rawCol: String, out: String,
       reuse: Option[(String, String)] = None,
-      skipWhen: Option[Column] = None,
-      fused: Boolean = true): DataFrame = {
-    def freshCands(d: DataFrame): (DataFrame, Column) =
-      if (fused)
-        (d, graft.extract.TshGatherCandidates.gather(col(rawCol)))
-      else {
-        val d1 = d.withColumn(s"${out}_lab",
-          TshExtract.labelledCandidates(col(rawCol)))
-        (d1, TshExtract.gatherCandidates(col(rawCol), col(s"${out}_lab")))
-      }
+      skipWhen: Option[Column] = None): DataFrame = {
+    val cands = graft.extract.TshGatherCandidates.gather(col(rawCol))
     val nullCands = lit(null).cast(graft.extract.TshGatherCandidates.schema)
-    val staged = reuse match {
+    val gated = reuse match {
       case Some((rRaw, rOut)) =>
-        val eq = col(rawCol) <=> col(rRaw)
-        val (d1, cands) = freshCands(df)
-        val gated = when(eq, col(s"${rOut}_cands")).otherwise(cands)
-        // CASE branches evaluate lazily: a doc already accepted by an
-        // earlier cascade level never pays this level's parse — the
-        // reference's early-exit cost model (`app.py:153-163`) without
-        // the iterative form's persist/union machinery
-        d1.withColumn(s"${out}_cands",
-          skipWhen.map(s => when(s, nullCands).otherwise(gated)).getOrElse(gated))
-      case None =>
-        val (d1, cands) = freshCands(df)
-        d1.withColumn(s"${out}_cands",
-          skipWhen.map(s => when(s, nullCands).otherwise(cands)).getOrElse(cands))
+        when(col(rawCol) <=> col(rRaw), col(s"${rOut}_cands")).otherwise(cands)
+      case None => cands
     }
-    staged
+    // CASE branches evaluate lazily: a doc already accepted by an
+    // earlier cascade level never pays this level's parse — the
+    // reference's early-exit cost model (`app.py:153-163`) without
+    // the iterative form's persist/union machinery
+    df.withColumn(s"${out}_cands",
+        skipWhen.map(s => when(s, nullCands).otherwise(gated)).getOrElse(gated))
       .withColumn(s"${out}_best", TshExtract.best(col(s"${out}_cands")))
       .withColumn(out, TshExtract.levelResult(col(rawCol), col(s"${out}_best")))
   }
@@ -124,25 +104,19 @@ object Pipeline {
     }
   }
 
-  /** (doc_id, first_media_ref, result struct `r`) for one explicit mode
-    * or the columnar auto cascade.
-    */
   /** All three level results staged as columns r_l / r_p / r_o; each
     * later level's parse is skipped per-row once an earlier level is
     * accepted (the skipped column degrades to a cheap placeholder the
     * cascade never reads).
     */
-  private def autoStaged(docs: Dataset[DocRow],
-      fused: Boolean = true): DataFrame = {
-    val d1 = withLevelResult(ocrAll(docs).toDF(), "light_raw", "r_l",
-      fused = fused)
+  private def autoStaged(docs: Dataset[DocRow]): DataFrame = {
+    val d1 = withLevelResult(ocrAll(docs).toDF(), "light_raw", "r_l")
     val accL = TshExtract.acceptWithRange(col("r_l"))
     val d2 = withLevelResult(d1, "premium_raw", "r_p",
-      reuse = Some(("light_raw", "r_l")), skipWhen = Some(accL), fused = fused)
+      reuse = Some(("light_raw", "r_l")), skipWhen = Some(accL))
     val accP = TshExtract.acceptWithRange(col("r_p"))
     withLevelResult(d2, "optimum_raw", "r_o",
-      reuse = Some(("premium_raw", "r_p")), skipWhen = Some(accL || accP),
-      fused = fused)
+      reuse = Some(("premium_raw", "r_p")), skipWhen = Some(accL || accP))
   }
 
   /** Audit metric: which cascade level resolves each doc (`app.py`
@@ -157,17 +131,19 @@ object Pipeline {
           .otherwise("failed"))
       .groupBy("resolved_level").agg(count(lit(1)).as("n_docs"))
 
-  def results(docs: Dataset[DocRow], mode: String,
-      fused: Boolean = true): DataFrame = {
+  /** (doc_id, first_media_ref, result struct `r`) for one explicit mode
+    * or the columnar auto cascade.
+    */
+  def results(docs: Dataset[DocRow], mode: String): DataFrame = {
     requireMode(mode)
     mode match {
       case "auto" =>
-        autoStaged(docs, fused)
+        autoStaged(docs)
           .withColumn("r",
             TshExtract.cascadeAuto(col("r_l"), col("r_p"), col("r_o")))
           .select("doc_id", "first_media_ref", "r")
       case level =>
-        withLevelResult(ocrLevel(docs, level).toDF(), "raw", "r", fused = fused)
+        withLevelResult(ocrLevel(docs, level).toDF(), "raw", "r")
           .select("doc_id", "first_media_ref", "r")
     }
   }
@@ -176,32 +152,17 @@ object Pipeline {
     * only over still-pending docs — matches the reference's lazy
     * early-exit cost model (`app.py:153-189`), the right choice when OCR
     * dominates. Join-free: pending rows carry their spans forward, so
-    * each stage is filter + map. Persisting the stage outputs bounds the
-    * recomputation the two downstream consumers (accepted / pending)
-    * would otherwise trigger.
+    * each stage is filter + map. Persisting the stage outputs
+    * (MEMORY_AND_DISK) bounds the recomputation the two downstream
+    * consumers (accepted / pending) would otherwise trigger.
     */
-  /** `checkpointDir`: when set, each stage output is written to (and
-    * read back from) a parquet table instead of `persist()` — the
-    * 100 TB encoding, where a stage output no longer fits executor
-    * storage and the lineage cut must survive executor loss; the
-    * MEMORY_AND_DISK persist is the single-job default. Same plan
-    * downstream either way (a test pins span equality).
-    */
-  def resultsAutoIterative(docs: Dataset[DocRow], persist: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def resultsAutoIterative(docs: Dataset[DocRow]): DataFrame = {
     import docs.sparkSession.implicits._
-    val lvl = StorageLevel.MEMORY_AND_DISK
 
-    def stage(in: Dataset[DocRow], level: String): DataFrame = {
-      val s = withLevelResult(ocrLevel(in, level).toDF(), "raw", "r")
+    def stage(in: Dataset[DocRow], level: String): DataFrame =
+      withLevelResult(ocrLevel(in, level).toDF(), "raw", "r")
         .select(col("doc_id"), col("first_media_ref"), col("spans"), col("r"))
-      checkpointDir match {
-        case Some(dir) =>
-          s.write.mode("overwrite").parquet(s"$dir/stage_$level")
-          docs.sparkSession.read.parquet(s"$dir/stage_$level")
-        case None => if (persist) s.persist(lvl) else s
-      }
-    }
+        .persist(StorageLevel.MEMORY_AND_DISK)
     val s1 = stage(docs, "light")
     val pend1 = s1.filter(!TshExtract.acceptWithRange(col("r")))
       .select(col("doc_id"), col("spans")).as[DocRow]
@@ -229,10 +190,10 @@ object Pipeline {
 
   /** Final output: (doc_id, spans array<struct<kind,text,media_ref,order>>). */
   def extract(docs: Dataset[DocRow], mode: String,
-      iterative: Boolean = false, fused: Boolean = true): DataFrame = {
+      iterative: Boolean = false): DataFrame = {
     val res =
       if (mode == "auto" && iterative) resultsAutoIterative(docs)
-      else results(docs, mode, fused)
+      else results(docs, mode)
     res.select(col("doc_id"),
       SpanAssembly.assemble(col("r"), col("first_media_ref")).as("spans"))
   }
@@ -245,8 +206,8 @@ object Pipeline {
     * assembly expression tree — a ~500k-node filter evaluated per row.
     */
   def extractRows(docs: Dataset[DocRow], mode: String,
-      iterative: Boolean = false, fused: Boolean = true): DataFrame =
-    extract(docs, mode, iterative, fused)
+      iterative: Boolean = false): DataFrame =
+    extract(docs, mode, iterative)
       .select(col("doc_id"), explode_outer(col("spans")).as("s"))
       .select(col("doc_id"), col("s.kind"), col("s.text"),
         col("s.media_ref"), col("s.order"))

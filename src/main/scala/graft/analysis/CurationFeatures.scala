@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused one-pass curation feature extractor — the performance path
-  * for the hygiene projection ([[TextOps.curationStage]], q49/q50 and
+  * for the hygiene projection ([[TextOps.curationFeatures]], q49/q50 and
   * the 1M volume job): the HOF/regex encoding pays SEVEN separate
   * regex passes per document (token count, punct count, stopword
   * count, four language-marker counts); this computes all of them in
@@ -17,9 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * text, punct walk over the original, one marker scan per word list
   * over the lowered text — scans, not NFA regex machinery).
   *
-  * Semantics are EXACTLY the regex chain's (the twin stays selectable
-  * per-call via `fused` and a test pins byte-equality over the corpus
-  * plus adversarial inputs):
+  * Semantics are EXACTLY the regex chain's (a test pins byte-equality
+  * against it over the corpus plus adversarial inputs):
   *
   *  - n_tokens: maximal `[\p{L}0-9']+` runs over lower(text) —
   *    code-point walk, `Character.isLetter` is precisely `\p{L}`

@@ -239,8 +239,8 @@ object LangProfiles {
   * in the broadcast profile table, accumulated into one dense
   * `array<double>` of per-language scores (Languages order). Real
   * `doGenCode` calling the public `evalCore` (CodegenFallback would
-  * re-run the child interpreted); byte-identical HOF twin:
-  * [[LangId.scoresHof]].
+  * re-run the child interpreted); byte-identical to the test-scope HOF
+  * twin `HofTwins.scoresHof`.
   */
 case class LangNgramScores(child: Expression,
     profiles: Broadcast[java.util.HashMap[String, Array[Double]]],
@@ -309,28 +309,6 @@ object LangId {
       profiles: Broadcast[java.util.HashMap[String, Array[Double]]]): Column =
     Bridge.column(
       LangNgramScores(Bridge.expression(text), profiles, Languages.length))
-
-  /** UDF-free HOF twin of [[scores]] — embeds the profile table as a
-    * map literal (fine for tests/small jobs; the broadcast path is the
-    * scale encoding). Byte-identical accumulation: per trigram in
-    * order, adding each language's weight left to right; absent
-    * trigrams add +0.0 to never-negative accumulators, so the IEEE
-    * result matches the fused skip exactly.
-    */
-  def scoresHof(text: Column): Column = {
-    import scala.jdk.CollectionConverters._
-    val zeros = typedlit(Seq.fill(Languages.length)(0.0))
-    val tableLit = typedlit(
-      LangProfiles.table.asScala.map { case (g, w) => g -> w.toSeq }.toMap)
-    val norm = concat(lit(" "),
-      trim(regexp_replace(lower(text), "[^\\p{L}]+", " ")), lit(" "))
-    val grams = when(length(norm) >= N,
-      transform(sequence(lit(0), length(norm) - N),
-        i => norm.substr(i + 1, lit(N))))
-      .otherwise(typedlit(Seq.empty[String]))
-    aggregate(grams, zeros, (acc, g) =>
-      zip_with(acc, coalesce(element_at(tableLit, g), zeros), (a, b) => a + b))
-  }
 
   /** Argmax over a [[scores]] vector: first-declared language wins
     * ties (same rule as [[TextOps.langIdBest]]); all-zero scores (no

@@ -15,7 +15,7 @@ import org.apache.spark.sql.graftbridge.Bridge.{ADT => AbstractDataType}
   * encoding's m nested `transform`s that allocate an intermediate
   * array per permutation.
   *
-  * Semantics are EXACTLY the HOF chain's (`TextOps.minhashSignature0`):
+  * Semantics are EXACTLY the HOF chain's (the test-scope twin `HofTwins.minhashSignature0`):
   * permutation p's hash of shingle-hash h is Spark's `xxhash64(p, h)`
   * with int32 p and int64 h — seed 42, then each argument folded with
   * the running hash as seed (`XxHash64Function`) — and an empty input
@@ -224,7 +224,7 @@ object PosShingleHashes {
   * bit — and because each references the token-hash subtree, Catalyst
   * inlines the WHOLE tokenize+hash chain 64 times per row (verified in
   * the optimized plan; it made the simhash-banded join ~20x slower than
-  * the hashing itself). Semantics identical to `TextOps.simhash`'s HOF
+  * the hashing itself). Semantics identical to the test-scope HOF
   * form: vote = +1/-1 per bit per hash, bit set iff votes > 0; empty
   * input -> 0L. Cross-validated byte-identical by test.
   */
@@ -428,7 +428,7 @@ object BroadcastDotProducts {
 /** Fused cosine similarity — the exact-rerank hot loop shared by
   * brute-force top-k, LSH/IVF ANN and the cosine dup join. One compiled
   * pass computes dot(a,b), |a|, |b| together; the HOF twin
-  * (`VectorOps.cosineHof`) pays three interpreted `aggregate(zip_with)`
+  * (`HofTwins.cosineHof`) pays three interpreted `aggregate(zip_with)`
   * walks plus an intermediate array per pair.
   *
   * Floating-point AND null semantics replicate the HOF form exactly
@@ -596,7 +596,7 @@ object SignBuckets {
 /** Fused MinHash LSH band keys: the per-band `concat_ws("_", slice) ->
   * xxhash64` chain as one pass building the identical "_"-joined
   * signed-decimal string per band and hashing its UTF-8 bytes with
-  * seed 42 — hash-compatible with `TextOps.lshBandKeys` (and with the
+  * seed 42 — hash-compatible with the test-scope `HofTwins.lshBandKeys` (and with the
   * Python oracle mirror, which builds the same string). Cross-validated
   * byte-identical by test.
   */

@@ -11,8 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    releases it (`spark.catalog.clearCache()`, as Bench does, or a
   *    per-call [[CacheScope]]).
   *  - `staging = Some(dir)`: write/read a parquet staging table — the
-  *    100 TB encoding (mirrors `Pipeline.resultsAutoIterative`'s
-  *    `checkpointDir`): nothing rides executor memory, the barrier
+  *    100 TB encoding: nothing rides executor memory, the barrier
   *    survives executor loss, a long-lived session accumulates no
   *    BlockManager storage, and the staged base is independently
   *    inspectable/resumable. Caller owns the directory's lifecycle —

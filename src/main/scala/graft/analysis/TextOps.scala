@@ -446,28 +446,14 @@ object TextOps {
     aggregate(tokens(text), lit(1125899906842597L),
       (acc, t) => xxhash64(acc, t))
 
-  /** SimHash over token hashes: per-bit majority vote of xxhash64(token).
-    * Default: fused one-pass Simhash64 expression — the HOF form's 64
-    * per-bit `aggregate`s each re-inline the tokenize+hash subtree (64
-    * regex passes per row once optimized). HOF form kept selectable and
-    * cross-validated byte-identical.
+  /** SimHash over token hashes: per-bit majority vote of xxhash64(token),
+    * as the one-pass Simhash64 expression — a HOF form's 64 per-bit
+    * `aggregate`s each re-inline the tokenize+hash subtree (64 regex
+    * passes per row once optimized). Cross-validated byte-identical
+    * against the test-scope HOF twin.
     */
-  def simhash(text: Column, fused: Boolean = true): Column = {
-    if (fused)
-      Simhash64.of(transform(tokens(text), t => xxhash64(t))).as("simhash")
-    else simhashHof(text)
-  }
-
-  /** The pure-HOF encoding (cross-validation twin of Simhash64). */
-  def simhashHof(text: Column): Column = {
-    val hs = transform(tokens(text), t => xxhash64(t))
-    val bits: Seq[Column] = (0 until 64).map { b =>
-      val votes = aggregate(hs, lit(0),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      when(votes > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b)).as("simhash")
-  }
+  def simhash(text: Column): Column =
+    Simhash64.of(transform(tokens(text), t => xxhash64(t))).as("simhash")
 
   /** Hamming distance between two simhash values (expression-only). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -481,9 +467,9 @@ object TextOps {
     */
   def simhashDupPairs(docs: DataFrame, id: Column, text: Column,
       bands: Int = 4, maxHamming: Int = 3, maxBucket: Int = 4096,
-      fused: Boolean = true, staging: Option[String] = None,
+      staging: Option[String] = None,
       scope: CacheScope = CacheScope.unmanaged): DataFrame =
-    bandedHammingPairs(docs.select(id.as("id"), simhash(text, fused).as("sh")),
+    bandedHammingPairs(docs.select(id.as("id"), simhash(text).as("sh")),
       col("id"), col("sh"), bands, maxHamming, maxBucket, staging, scope,
       stagingName = "simhash_base")
 
@@ -559,16 +545,6 @@ object TextOps {
   }
 
   // ---- n-gram Jaccard ------------------------------------------------------
-  /** Distinct word n-gram shingles as an array column. */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    array_distinct(
-      when(size(toks) >= n,
-        transform(sequence(lit(0), size(toks) - n),
-          i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
-        .otherwise(array()))
-  }
-
   /** Jaccard similarity of distinct n-gram sets (map-side when the two
     * texts are already co-located in one row).
     */
@@ -579,64 +555,18 @@ object TextOps {
   }
 
   // ---- MinHash + LSH near-dup ---------------------------------------------
-  /** Distinct shingle hashes (one string hash per shingle; the m
-    * permutations below then re-hash the LONG, which is far cheaper
-    * than re-hashing strings m times).
-    */
-  def shingleHashes(sh: Column): Column = transform(sh, s => xxhash64(s))
-
-  /** MinHash signature: m permutations approximated by seeded xxhash64
-    * over the shingle hashes. Expression-only per row.
-    */
-  def minhashSignature(sh: Column, m: Int = 16): Column = {
-    val hs = shingleHashes(sh)
-    transform(sequence(lit(0), lit(m - 1)),
-      p => coalesce(array_min(transform(hs, h => xxhash64(p, h))),
-        lit(Long.MaxValue)))
-  }
-
-  /** LSH band keys: split the signature into `bands` bands and hash each.
-    * Docs sharing any band key are near-dup candidates.
-    */
-  def lshBandKeys(sig: Column, m: Int = 16, bands: Int = 4): Column = {
-    val rows = m / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        xxhash64(concat_ws("_", slice(sig, b * lit(rows) + lit(1), lit(rows))))
-          .as("bucket")))
-  }
-
   /** End-to-end MinHash-LSH near-dup candidate pairs with verified
     * n-gram Jaccard: shingle -> minhash -> band -> bucket self-join
     * (the one shuffle; banded so each bucket is small) -> exact-Jaccard
     * rerank. Returns (id_a, id_b, jaccard) with id_a < id_b.
     */
-  /** Signature strategy: the fused native Expression (MinhashSignature,
-    * one pass, no per-permutation arrays) is the default; the pure-HOF
-    * chain (minhashSignature0) remains selectable per-call via `fused`
-    * (a parameter, not a JVM-global — concurrent suites/sessions must
-    * not observe each other's plan encoding) — a test asserts
-    * byte-identical signatures.
-    */
-  private def signature(hs: Column, m: Int, fused: Boolean): Column =
-    if (fused) MinhashSignature.of(hs, m)
-    else minhashSignature0(hs, m)
-
-  /** Distinct n-gram hash set per doc — the near-dup map side. Fused
-    * single-pass expression by default (string construction per shingle
-    * dominates the HOF encoding, measured 4.8s of q25's 6.5s at sf0.1).
-    */
-  private def shingleHashSet(text: Column, n: Int, fused: Boolean): Column =
-    if (fused) ShingleHashes.of(tokens(text), n)
-    else array_distinct(shingleHashes(shingles(text, n)))
-
   def minhashDupPairs(docs: DataFrame, id: Column, text: Column,
       n: Int = 3, m: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.5, maxBucket: Int = 4096,
-      fused: Boolean = true, staging: Option[String] = None,
+      staging: Option[String] = None,
       scope: CacheScope = CacheScope.unmanaged): DataFrame =
     minhashPairsAndBase(docs, id, text, n, m, bands, minJaccard, maxBucket,
-      fused, staging, scope)._1
+      staging, scope)._1
 
   /** [[minhashDupPairs]] plus its materialized (id, hs, band, bucket)
     * base — what the hot-bucket audit reads ([[curate]] returns
@@ -646,7 +576,7 @@ object TextOps {
     */
   private def minhashPairsAndBase(docs: DataFrame, id: Column, text: Column,
       n: Int, m: Int, bands: Int, minJaccard: Double, maxBucket: Int,
-      fused: Boolean, staging: Option[String],
+      staging: Option[String],
       scope: CacheScope): (DataFrame, DataFrame) = {
     // Materialization barrier ([[Staging]]): the self-join would
     // otherwise recompute the minhash chain per side AND pull inlined
@@ -659,7 +589,7 @@ object TextOps {
     // and the one long-lived sessions should use so repeated invocations
     // accumulate no BlockManager storage.
     val base = Staging.materialize(
-      minhashExploded(docs, id, text, n, m, bands, fused),
+      minhashExploded(docs, id, text, n, m, bands),
       staging, "minhash_base", scope)
     (minhashSelfPairs(base, minJaccard, maxBucket), base)
   }
@@ -671,14 +601,18 @@ object TextOps {
     * explode_outer: band-key arrays are never empty, and plain explode
     * lets InferFiltersFromGenerate push a filter that re-inlines the
     * whole minhash expression tree (see Pipeline.extractRows).
+    * Each step is one native expression: the distinct n-gram hash set
+    * (ShingleHashes — string construction per shingle dominated the
+    * HOF encoding, measured 4.8s of q25's 6.5s at sf0.1), the
+    * signature (MinhashSignature, one pass, no per-permutation arrays)
+    * and the band keys (MinhashBandKeys). Each is cross-validated
+    * byte-identical against its test-scope HOF twin.
     */
   private def minhashExploded(docs: DataFrame, id: Column, text: Column,
-      n: Int, m: Int, bands: Int, fused: Boolean): DataFrame =
-    docs.select(id.as("id"), shingleHashSet(text, n, fused).as("hs"))
-      .withColumn("sig", signature(col("hs"), m, fused))
-      .withColumn("bk", explode_outer(
-        if (fused) MinhashBandKeys.of(col("sig"), bands)
-        else lshBandKeys(col("sig"), m, bands)))
+      n: Int, m: Int, bands: Int): DataFrame =
+    docs.select(id.as("id"), ShingleHashes.of(tokens(text), n).as("hs"))
+      .withColumn("sig", MinhashSignature.of(col("hs"), m))
+      .withColumn("bk", explode_outer(MinhashBandKeys.of(col("sig"), bands)))
       .select(col("id"), col("hs"), col("bk.band"), col("bk.bucket"))
 
   /** Banded self-join + exact-Jaccard rerank over a MATERIALIZED
@@ -797,12 +731,6 @@ object TextOps {
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
       .filter(col("n_hits") >= minHits)
   }
-
-  /** Signature straight from already-hashed shingles. */
-  def minhashSignature0(hs: Column, m: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)),
-      p => coalesce(array_min(transform(hs, h => xxhash64(p, h))),
-        lit(Long.MaxValue)))
 
   // ---- source/domain-aware curation ------------------------------------
   /** Per-source quota: keep at most `maxPerSource` docs per source
@@ -955,11 +883,10 @@ object TextOps {
     */
   def curationFilter(docs: DataFrame, id: Column, text: Column,
       lang: String = "en", minTokens: Int = 30,
-      maxPunctRatio: Double = 0.2, fused: Boolean = true,
+      maxPunctRatio: Double = 0.2,
       langId: Option[Column => Column] = None): DataFrame =
     dedupStaged(
-      curationStage(docs, id, text, lang, minTokens, maxPunctRatio, fused,
-        langId),
+      curationStage(docs, id, text, lang, minTokens, maxPunctRatio, langId),
       docs, id, text).drop("text")
 
   /** Exact-dedup a hygiene-FILTERED projection without paying the
@@ -982,6 +909,32 @@ object TextOps {
       "left_semi")
   }
 
+  /** (doc_id, text, lang_pred, n_tokens, punct_ratio, extra...): the
+    * hygiene features of every doc from ONE fused [[CurationFeatures]]
+    * walk instead of seven regex passes. Byte-identical to the regex
+    * chain ([[qualityFeatures]] + [[langIdBest]]; test-scope twin, plus
+    * the q49/q50 oracles, whose DuckDB side mirrors the regex
+    * semantics). `extra`: caller-named metadata columns carried through
+    * UNTOUCHED — they never feed the verdict (see [[curationStage]]'s
+    * INVARIANT), they just ride so compositions like [[release]] need
+    * no re-join against the raw table to recover them.
+    */
+  private[graft] def curationFeatures(docs: DataFrame, id: Column,
+      text: Column, extra: Seq[String] = Nil): DataFrame = {
+    val extraCols = extra.map(col)
+    val cf = col("__cf")
+    docs.select(id.as("doc_id") +: text.as("text") +: extraCols: _*)
+      .withColumn("__cf", CurationFeatures.of(col("text")))
+      .select(col("doc_id") +: col("text") +:
+        langArgmax(TextOps.LangMarkerWords.map { case (l, _) =>
+          l -> cf.getField(s"s_$l")
+        }).as("lang_pred") +:
+        cf.getField("n_tokens").as("n_tokens") +:
+        (when(cf.getField("n_chars") > 0,
+          cf.getField("n_punct").cast("double") / cf.getField("n_chars"))
+          .otherwise(0.0).as("punct_ratio")) +: extraCols: _*)
+  }
+
   /** Hygiene filter with the text column kept (shared by curationFilter
     * and the full curate() composition).
     *
@@ -997,38 +950,9 @@ object TextOps {
     */
   private def curationStage(docs: DataFrame, id: Column, text: Column,
       lang: String, minTokens: Int, maxPunctRatio: Double,
-      fused: Boolean = true,
       langId: Option[Column => Column] = None,
       extra: Seq[String] = Nil): DataFrame = {
-    // `extra`: caller-named metadata columns (e.g. source) carried
-    // through the projection UNTOUCHED — they never feed the verdict
-    // (see the INVARIANT above), they just ride so compositions like
-    // [[release]] need no re-join against the raw table to recover them
-    val extraCols = extra.map(col)
-    val featured =
-      if (fused) {
-        // one fused walk instead of seven regex passes; byte-identical
-        // to the HOF chain below (cross-validation test + the q49/q50
-        // oracles, whose DuckDB side mirrors the regex semantics)
-        val cf = col("__cf")
-        docs.select(id.as("doc_id") +: text.as("text") +: extraCols: _*)
-          .withColumn("__cf", CurationFeatures.of(col("text")))
-          .select(col("doc_id") +: col("text") +:
-            langArgmax(TextOps.LangMarkerWords.map { case (l, _) =>
-              l -> cf.getField(s"s_$l")
-            }).as("lang_pred") +:
-            cf.getField("n_tokens").as("n_tokens") +:
-            (when(cf.getField("n_chars") > 0,
-              cf.getField("n_punct").cast("double") / cf.getField("n_chars"))
-              .otherwise(0.0).as("punct_ratio")) +: extraCols: _*)
-      } else {
-        docs.select(id.as("doc_id") +: text.as("text") +: extraCols: _*)
-          .withColumn("f", qualityFeatures(col("text")))
-          .withColumn("lang_pred", langIdBest(col("text")))
-          .select(col("doc_id") +: col("text") +: col("lang_pred") +:
-            col("f.n_tokens").as("n_tokens") +:
-            col("f.punct_ratio").as("punct_ratio") +: extraCols: _*)
-      }
+    val featured = curationFeatures(docs, id, text, extra)
     // pluggable language classifier (e.g. the 26-language char-n-gram
     // [[LangId]]); MUST stay a pure function of the text column — the
     // dedupStaged keeper rule above depends on it (see the INVARIANT)
@@ -1072,11 +996,10 @@ object TextOps {
       exactClusters: Boolean = false,
       staging: Option[String] = None,
       scope: CacheScope = CacheScope.unmanaged,
-      fused: Boolean = true,
       langId: Option[Column => Column] = None,
       extra: Seq[String] = Nil): CurationResult = {
     val staged =
-      curationStage(docs, id, text, lang, minTokens, maxPunctRatio, fused,
+      curationStage(docs, id, text, lang, minTokens, maxPunctRatio,
         langId, extra)
     // keepers feed BOTH the near-dup join and the final anti-join:
     // materialize so the regex-heavy hygiene projection and the
@@ -1089,7 +1012,7 @@ object TextOps {
       dedupStaged(staged, docs, id, text),
       staging, "curate_keepers", scope)
     val (pairs, base) = minhashPairsAndBase(keepers, col("doc_id"), col("text"),
-      n, m, bands, minJaccard, maxBucket, fused, staging, scope)
+      n, m, bands, minJaccard, maxBucket, staging, scope)
     // no .distinct() on the drop side: left_anti ignores right-side
     // multiplicity, and the anti-join's own hash build dedups keys —
     // a pre-distinct was one spare exchange (r08)
@@ -1166,8 +1089,7 @@ object TextOps {
       splitOn: String = "doc_id",
       exactClusters: Boolean = false,
       staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged,
-      fused: Boolean = true): ReleaseResult = {
+      scope: CacheScope = CacheScope.unmanaged): ReleaseResult = {
     require(splitOn == "doc_id" || splitOn == "source",
       s"splitOn must be 'doc_id' or 'source', got '$splitOn'")
     val named = docs.select(id.as("doc_id"), text.as("text"), source.as("source"))
@@ -1176,7 +1098,7 @@ object TextOps {
     // recover it (r08: one join + one raw-union re-scan removed)
     val cur = curate(named, col("doc_id"), col("text"), lang, minTokens,
       maxPunctRatio, n, m, bands, minJaccard, maxBucket, exactClusters,
-      staging, scope, fused, extra = Seq("source"))
+      staging, scope, extra = Seq("source"))
     // BARRIER the curate output: it feeds the decontamination semi-join
     // AND the clean anti-join, and is itself the result of the LSH
     // near-dup drop — unmaterialized, each downstream reference would
@@ -1375,13 +1297,13 @@ object TextOps {
     */
   def dedupCascade(docs: DataFrame, id: Column, text: Column,
       n: Int = 3, m: Int = 16, bands: Int = 4, minJaccard: Double = 0.5,
-      maxBucket: Int = 4096, fused: Boolean = true,
+      maxBucket: Int = 4096,
       staging: Option[String] = None,
       scope: CacheScope = CacheScope.unmanaged): (DataFrame, DataFrame) = {
     val named = docs.select(id.as("id"), text.as("text"))
     val reps = dedupExact(named, xxhash64(col("text")), col("id"))
     val pairs = minhashDupPairs(reps, col("id"), col("text"),
-      n, m, bands, minJaccard, maxBucket, fused, staging, scope)
+      n, m, bands, minJaccard, maxBucket, staging, scope)
     (pairs, exactDupGroups(named, xxhash64(col("text")), col("id")))
   }
 
@@ -1396,7 +1318,7 @@ object TextOps {
     * steady state). A [[curate]]/[[release]] run with `staging` already
     * writes this exact table (over its exact-collapse keepers), so a
     * released corpus's staging dir IS a valid `baseDir` — no separate
-    * seeding pass needed. The (n, m, bands, fused-vs-HOF) parameters are
+    * seeding pass needed. The (n, m, bands) parameters are
     * part of the table's contract: incremental calls must pass the SAME
     * values or band keys will not collide (documented, not detectable
     * from the table itself).
@@ -1412,9 +1334,8 @@ object TextOps {
     * [[curate]] run) when the corpus may carry identical-text clusters.
     */
   def buildMinhashBase(docs: DataFrame, id: Column, text: Column,
-      baseDir: String, n: Int = 3, m: Int = 16, bands: Int = 4,
-      fused: Boolean = true): DataFrame =
-    Staging.materialize(minhashExploded(docs, id, text, n, m, bands, fused),
+      baseDir: String, n: Int = 3, m: Int = 16, bands: Int = 4): DataFrame =
+    Staging.materialize(minhashExploded(docs, id, text, n, m, bands),
       Some(baseDir), "minhash_base")
 
   /** What [[dedupAgainstBase]] hands back.
@@ -1466,13 +1387,13 @@ object TextOps {
   def dedupAgainstBase(newDocs: DataFrame, id: Column, text: Column,
       baseDir: String, n: Int = 3, m: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.5, maxBucket: Int = 4096,
-      fused: Boolean = true, staging: Option[String] = None,
+      staging: Option[String] = None,
       scope: CacheScope = CacheScope.unmanaged): IncrementalDedupResult = {
     val spark = newDocs.sparkSession
     val base = spark.read.parquet(s"$baseDir/minhash_base")
     val named = newDocs.select(id.as("doc_id"), text.as("text"))
     val newBase = Staging.materialize(
-      minhashExploded(named, col("doc_id"), col("text"), n, m, bands, fused),
+      minhashExploded(named, col("doc_id"), col("text"), n, m, bands),
       staging, "minhash_base_new", scope)
     // barrier both pair frames: each feeds the keeper anti-join AND is
     // returned for the caller to consume — unmaterialized, reading both

@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (array<float/double>).
-  * Dot products / norms are expression-only (`zip_with` + `aggregate`
-  * HOFs). Two physical strategies:
+  * Cosines, projections and centroid dots are one-pass native
+  * expressions (CosineSim, SignProjections/SignBuckets,
+  * BroadcastDotProducts). Two physical strategies:
   *  - brute-force top-k: broadcast the (small) query set against the
   *    corpus — a map-side cross product + per-query window top-k;
   *  - LSH-bucketed ANN (the 100 TB scale path): sign-of-random-
@@ -26,23 +27,11 @@ object VectorOps {
   private def vecAsDouble(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn(vecCol, col(vecCol).cast("array<double>"))
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0d), (acc, x) => acc + x * x))
-
-  /** Exact cosine — fused one-pass expression by default (CosineSim);
-    * the HOF twin below is float- AND null-identical (cross-validated),
-    * like every other fused/HOF pair in this module.
+  /** Exact cosine as the one-pass CosineSim expression; float- AND
+    * null-identical to the test-scope HOF twin (cross-validated), like
+    * every other native expression in this module.
     */
-  def cosine(a: Column, b: Column, fused: Boolean = true): Column =
-    if (fused) CosineSim.of(a, b) else cosineHof(a, b)
-
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d > 0, dot(a, b) / d).otherwise(0.0)
-  }
+  def cosine(a: Column, b: Column): Column = CosineSim.of(a, b)
 
   /** Brute-force cosine top-k: every query scored against every corpus
     * vector. `queries` must be small (it is broadcast); the corpus side
@@ -50,38 +39,18 @@ object VectorOps {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       qId: String = "vec_id", qVec: String = "embedding",
-      cId: String = "vec_id", cVec: String = "embedding",
-      fused: Boolean = true): DataFrame = {
+      cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     val q = vecAsDouble(queries, qVec).select(col(qId).as("query_id"), col(qVec).as("q_vec"))
     val c = vecAsDouble(corpus, cVec).select(col(cId).as("neighbor_id"), col(cVec).as("c_vec"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("c_vec"), fused))
+      .withColumn("cos", cosine(col("q_vec"), col("c_vec")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
-
-  /** Deterministic pseudo-random ±1 hyperplane component for
-    * (plane, dim) — recomputable anywhere, nothing to broadcast.
-    */
-  private def planeComponent(p: Column, d: Column): Column =
-    when(pmod(xxhash64(p, d), lit(2)) === 0, 1.0d).otherwise(-1.0d)
-
-  /** Per-plane signed projections of `vec` onto `nPlanes` hyperplanes of
-    * table `t` (array<double>, expression-only). The projections carry
-    * the MARGIN information multi-probe needs: a small |projection|
-    * means that sign bit is the likeliest to differ for a true
-    * near-neighbor.
-    */
-  private def projections(vec: Column, nPlanes: Int, table: Int): Column =
-    transform(sequence(lit(0), lit(nPlanes - 1)), p =>
-      aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, d) => x * planeComponent(p + lit(table * nPlanes), d)),
-        lit(0.0d), (acc, v) => acc + v))
 
   /** 2^i as a long, expression-side (shiftleft has no Column-shift
     * overload inside HOF lambdas; powers of two are exact doubles, and
@@ -97,41 +66,10 @@ object VectorOps {
       s"nPlanes must be in [1, 62] (bucket ids are 2^i sums in a long), got $nPlanes")
 
   /** Sign bucket from a projections array: bit i set iff proj(i) >= 0. */
-  private def bucketOf(projs: Column): Column =
+  private[graft] def bucketOf(projs: Column): Column =
     aggregate(zip_with(projs, sequence(lit(0), size(projs) - 1),
       (pr, i) => when(pr >= 0, bit(i)).otherwise(lit(0L))),
       lit(0L), (acc, b) => acc + b)
-
-  /** Sign-LSH bucket id (kept as the single-table public primitive). */
-  def lshBucket(vec: Column, nPlanes: Int = 16, table: Int = 0): Column = {
-    requirePlanes(nPlanes)
-    bucketOf(projections(vec, nPlanes, table))
-  }
-
-  /** Projection strategy: fused single-pass SignProjections expression
-    * (default) vs the HOF form whose tables*nPlanes separate
-    * `aggregate(zip_with(...))` passes re-walk the vector through
-    * interpreted lambdas. Selected per-call via `fused` (a parameter,
-    * not a JVM-global — concurrent suites/sessions must not observe
-    * each other's plan encoding); cross-validated byte-identical by
-    * test. All projections as [table][plane] (array<array<double>>).
-    */
-  private def projMatrix(vec: Column, nPlanes: Int, tables: Int,
-      fused: Boolean): Column =
-    if (fused) SignProjections.of(vec, nPlanes, tables)
-    else array((0 until tables).map(t => projections(vec, nPlanes, t)): _*)
-
-  /** Corpus-side keys: one (table, bucket) per table. Fused path is the
-    * single-pass SignBuckets expression (projection + sign-bucketing
-    * together — every corpus vector pays this); HOF twin kept for
-    * cross-validation.
-    */
-  private def lshKeys(vec: Column, nPlanes: Int, tables: Int,
-      fused: Boolean): Column =
-    if (fused) SignBuckets.of(vec, nPlanes, tables)
-    else zip_with(projMatrix(vec, nPlanes, tables, fused = false),
-      sequence(lit(0), lit(tables - 1)),
-      (projs, t) => struct(t.as("table"), bucketOf(projs).as("bucket")))
 
   /** Query-side multi-probe keys: per table, the home bucket plus every
     * bucket reachable by flipping any subset of the `probeBits`
@@ -141,9 +79,12 @@ object VectorOps {
     * count instead of by collapsing the bucket space.
     */
   private def probeKeys(vec: Column, nPlanes: Int, tables: Int,
-      probeBits: Int, fused: Boolean): Column = {
+      probeBits: Int): Column = {
     val nProbes = 1 << probeBits
-    val perTable = projMatrix(vec, nPlanes, tables, fused)
+    // signed projections as [table][plane], one pass over the vector;
+    // a small |projection| marks the sign bit likeliest to differ for a
+    // true near-neighbor
+    val perTable = SignProjections.of(vec, nPlanes, tables)
     flatten(zip_with(perTable, sequence(lit(0), lit(tables - 1)), (projs, t) => {
       val home = bucketOf(projs)
       // plane indices ordered by |projection| ascending (struct sort:
@@ -175,8 +116,7 @@ object VectorOps {
     * nPlanes — brute force is the honest choice there anyway.
     */
   def annTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      nPlanes: Int = 16, tables: Int = 4, probeBits: Int = 3,
-      fused: Boolean = true): DataFrame = {
+      nPlanes: Int = 16, tables: Int = 4, probeBits: Int = 3): DataFrame = {
     requirePlanes(nPlanes)
     require(probeBits >= 0 && probeBits <= nPlanes,
       s"probeBits must be in [0, nPlanes], got $probeBits vs $nPlanes")
@@ -184,11 +124,11 @@ object VectorOps {
     // inferred-filter re-inline trap (see Pipeline.extractRows)
     val c = vecAsDouble(corpus, "embedding")
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
-      .withColumn("bk", explode_outer(lshKeys(col("c_vec"), nPlanes, tables, fused)))
+      .withColumn("bk", explode_outer(SignBuckets.of(col("c_vec"), nPlanes, tables)))
       .select(col("neighbor_id"), col("c_vec"), col("bk.table"), col("bk.bucket"))
     val q = vecAsDouble(queries, "embedding")
       .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
-      .withColumn("bk", explode_outer(probeKeys(col("q_vec"), nPlanes, tables, probeBits, fused)))
+      .withColumn("bk", explode_outer(probeKeys(col("q_vec"), nPlanes, tables, probeBits)))
       .select(col("query_id"), col("q_vec"), col("bk.table"), col("bk.bucket"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
@@ -202,7 +142,7 @@ object VectorOps {
       // is a pure function of the pair (guide §2.3 / §8: decide with
       // small rows).
       .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec"), fused).as("cos"))
+        cosine(col("q_vec"), col("c_vec")).as("cos"))
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -218,14 +158,14 @@ object VectorOps {
     */
   def cosineDupPairs(corpus: DataFrame, minCos: Double,
       nPlanes: Int = 16, tables: Int = 4, maxBucket: Int = 4096,
-      fused: Boolean = true, staging: Option[String] = None,
+      staging: Option[String] = None,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     requirePlanes(nPlanes)
     // barrier default .cache(), caller-owned; `staging` stages through
     // parquet instead (see TextOps.minhashDupPairs / Staging)
     val keyed = Staging.materialize(
       vecAsDouble(corpus, "embedding").select(col("vec_id"), col("embedding"))
-        .withColumn("bk", explode_outer(lshKeys(col("embedding"), nPlanes, tables, fused)))
+        .withColumn("bk", explode_outer(SignBuckets.of(col("embedding"), nPlanes, tables)))
         .select(col("vec_id"), col("embedding"), col("bk.table"), col("bk.bucket")),
       staging, "cosine_base", scope)
     // hot-bucket bound (see Buckets): a cluster of identical/mirrored
@@ -243,31 +183,27 @@ object VectorOps {
       // score + threshold BEFORE the pair-dedup exchange (see annTopK):
       // the exchange then carries the thresholded (id_a, id_b, cos)
       // rows instead of two full vectors per band collision
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b"), fused).as("cos"))
+      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos"))
       .filter(col("cos") >= minCos)
       .dropDuplicates("id_a", "id_b")
   }
 
   /** Centroid dot products for cell assignment, as a vec-Column ->
     * dots-Column function plus the broadcast handle (for callers that
-    * can release it after their action). The fused default consumes the
-    * centroids via a TorrentBroadcast inside a native expression — at
-    * the documented nCells ~ sqrt(N) sizing, 1B vectors x 768 dims is
+    * can release it after their action). The centroids ride a
+    * TorrentBroadcast consumed by a native expression — at the
+    * documented nCells ~ sqrt(N) sizing, 1B vectors x 768 dims is
     * ~200 MB of centroids, which as a `typedlit` plan literal would ride
     * in EVERY task's serialized expression tree; a broadcast ships once
-    * per executor. The HOF twin keeps the literal encoding (tiny at test
-    * scale) and is cross-validated byte-identical.
+    * per executor. The test-scope HOF twin keeps the literal encoding
+    * (tiny at test scale) and is cross-validated byte-identical.
     */
   private def centroidDotsFn(unitCents: Seq[Seq[Double]],
-      spark: org.apache.spark.sql.SparkSession, fused: Boolean)
-      : (Column => Column,
-         Option[org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]]) =
-    if (fused) {
-      val bc = spark.sparkContext.broadcast(unitCents.map(_.toArray).toArray)
-      ((v: Column) => BroadcastDotProducts.of(v, bc), Some(bc))
-    } else {
-      ((v: Column) => transform(typedlit(unitCents), c => dot(v, c)), None)
-    }
+      spark: org.apache.spark.sql.SparkSession)
+      : (Column => Column, org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]) = {
+    val bc = spark.sparkContext.broadcast(unitCents.map(_.toArray).toArray)
+    ((v: Column) => BroadcastDotProducts.of(v, bc), bc)
+  }
 
   /** Query-side cell probes: indices of the `nProbe` nearest (by dot
     * against unit-normalized centroids == by cosine) cells, via one
@@ -301,11 +237,11 @@ object VectorOps {
     * centroid.
     */
   def kmeansCentroids(corpus: DataFrame, k: Int,
-      iters: Int = 2, fused: Boolean = true): Seq[Seq[Double]] = {
+      iters: Int = 2): Seq[Seq[Double]] = {
     var cents = seedCentroids(corpus, k)
     val dcorpus = vecAsDouble(corpus, "embedding")
     for (_ <- 1 to iters) {
-      val (dotsOf, bc) = centroidDotsFn(unitNorm(cents), corpus.sparkSession, fused)
+      val (dotsOf, bc) = centroidDotsFn(unitNorm(cents), corpus.sparkSession)
       // stage the dots as a named column: cellKeys references its input
       // twice (zip_with + size), and an inlined subtree would compute
       // the k-centroid dots twice per row
@@ -328,7 +264,7 @@ object VectorOps {
         }
       }
       // the iteration's action is complete; its centroid broadcast is dead
-      bc.foreach(_.unpersist(blocking = false))
+      bc.unpersist(blocking = false)
     }
     cents
   }
@@ -348,12 +284,11 @@ object VectorOps {
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       nCells: Int = 64, nProbe: Int = 4,
-      centroids: Option[Seq[Seq[Double]]] = None,
-      fused: Boolean = true): DataFrame = {
+      centroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
     val cents = unitNorm(centroids.getOrElse(seedCentroids(corpus, nCells)))
     // one broadcast serves both sides; it lives as long as the returned
     // plan may execute, so no unpersist here (Spark GCs it with the ref)
-    val (dotsOf, _) = centroidDotsFn(cents, corpus.sparkSession, fused)
+    val (dotsOf, _) = centroidDotsFn(cents, corpus.sparkSession)
     // dots staged as a named column (cellKeys reads its input twice —
     // zip_with + size; inlining would double the per-row dot cost)
     val c = vecAsDouble(corpus, "embedding")
@@ -374,7 +309,7 @@ object VectorOps {
       // exchange carries (query_id, neighbor_id, cos), not two vectors
       // per cell collision
       .select(col("query_id"), col("neighbor_id"),
-        cosine(col("q_vec"), col("c_vec"), fused).as("cos"))
+        cosine(col("q_vec"), col("c_vec")).as("cos"))
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -385,9 +320,9 @@ object VectorOps {
     * invariant is max(n) ≈ N/2^nPlanes per table, NOT N/16.
     */
   def bucketOccupancy(corpus: DataFrame, nPlanes: Int = 16,
-      tables: Int = 4, fused: Boolean = true): DataFrame =
+      tables: Int = 4): DataFrame =
     vecAsDouble(corpus, "embedding").select(col("vec_id"),
-        explode_outer(lshKeys(col("embedding"), nPlanes, tables, fused)).as("bk"))
+        explode_outer(SignBuckets.of(col("embedding"), nPlanes, tables)).as("bk"))
       .groupBy(col("bk.table"), col("bk.bucket"))
       .agg(count(lit(1)).as("n"))
 }

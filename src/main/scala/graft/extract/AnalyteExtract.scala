@@ -3,7 +3,7 @@ package graft.extract
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import TshPatterns.{Num, Range, UnitLabelled}
+import TshPatterns.UnitLabelled
 
 /** One extractable lab-report entity: a label alternation and a unit
   * alternation plug into the shared labelled-line machinery
@@ -17,64 +17,15 @@ final case class AnalyteConfig(name: String, label: String, unit: String)
 
 /** Generic analyte extraction (north_star: "regex/finite-state field
   * extraction for lab-report entities — analyte name, value, unit,
-  * reference range, date"). The per-line candidate chain here is THE
-  * machinery `TshExtract.labelledCandidates` runs (TSH delegates to it
-  * with the reference's patterns, `parsers/tsh.py:101-124,157-161`);
-  * everything stays UDF-free expression-only, so multi-analyte
-  * extraction is still one map-side projection per document.
+  * reference range, date"). The per-line candidate machinery is the
+  * compiled [[GatherCore]] that TSH's labelled phase runs too (TSH is
+  * the instance with the reference's patterns,
+  * `parsers/tsh.py:101-124,157-161`); everything stays UDF-free, so
+  * multi-analyte extraction is still one map-side projection per
+  * document.
   */
 object AnalyteExtract {
-  import TshExtract.{adjustRefValue, best, candidate, labelPenalty, linesOf, nullIfEmpty, toFloat}
-
-  /** E1-E6 generalized — `_extract_tsh_from_labelled_line` semantics
-    * (`parsers/tsh.py:131-182,251-257`) with the label/unit patterns as
-    * parameters; returns candidate structs in line order. Staged
-    * `transform` chain: each stage's fields are leaf references in the
-    * next, keeping the expression tree linear (see TshExtract note).
-    */
-  def labelledCandidates(raw: Column, labelRe: String, unitRe: String): Column = {
-    val s1 = transform(linesOf(raw), (l, i) =>
-      struct(l.as("line"), i.as("line_no"),
-        regexp_instr(l, lit(labelRe)).as("label_pos"))) // 1-based; 0 = none
-    // E1 gate (`parsers/tsh.py:252-253`): drop label-less lines NOW so
-    // the expensive per-line stages below only run on candidate lines
-    val s1g = filter(s1, c => c("label_pos") > 0)
-    val s1l = transform(s1g, c =>
-      struct(c("line"), c("line_no"), c("label_pos"),
-        regexp_extract(c("line"), labelRe, 0).as("label")))
-    // snippet = everything after the label (`parsers/tsh.py:142`)
-    val s2 = transform(s1l, c =>
-      struct(c("line_no"), c("label_pos"), c("label"),
-        c("line").substr(c("label_pos") + length(c("label")),
-          length(c("line"))).as("snippet")))
-    val s3 = transform(s2, c =>
-      struct(c("line_no"), c("label_pos"), c("label"), c("snippet"),
-        get(regexp_extract_all(c("snippet"), lit(Num), lit(0)), lit(0))
-          .as("first_num"), // first number after label (Q8)
-        regexp_instr(c("snippet"), lit(Num)).as("num_pos"),
-        size(regexp_extract_all(c("snippet"), lit(Num), lit(0))).as("n_nums")))
-    val s4 = transform(s3, c =>
-      struct(c("line_no"), c("label_pos"), c("label"), c("first_num"), c("n_nums"),
-        c("snippet").substr(c("num_pos") + length(c("first_num")),
-          length(c("snippet"))).as("after")))
-    val s5 = transform(s4, c =>
-      struct(c("line_no"), c("label_pos"), c("label"), c("n_nums"),
-        toFloat(c("first_num")).as("value"),
-        // unit searched in a 25-char window after the value (quirk Q10)
-        nullIfEmpty(regexp_extract(substring(c("after"), 1, 25), unitRe, 0))
-          .as("unit"),
-        adjustRefValue(nullIfEmpty(regexp_extract(c("after"), Range, 1)))
-          .as("ref_min"),
-        adjustRefValue(nullIfEmpty(regexp_extract(c("after"), Range, 2)))
-          .as("ref_max")))
-    val cands = transform(s5, c =>
-      when(c("label_pos") > 0 && c("n_nums") > 0 && c("value").isNotNull,
-        candidate(
-          when(c("ref_min").isNotNull && c("ref_max").isNotNull, 0).otherwise(1),
-          labelPenalty(c("label")), c("label_pos") - 1, c("line_no"),
-          c("value"), c("unit"), c("ref_min"), c("ref_max"), c("label"))))
-    filter(cands, c => c.isNotNull)
-  }
+  import TshExtract.best
 
   // ---- standard configs over the corpus' secondary analyte lines ---------
   val Tsh = AnalyteConfig("tsh", TshPatterns.Label, UnitLabelled)
@@ -94,24 +45,19 @@ object AnalyteExtract {
     * Intermediates are materialized as named columns (`${out}_*`) so
     * multi-analyte extraction does not re-inline the candidate chains
     * (Column-tree hygiene, see Pipeline); callers project them away.
-    * `fused` (default): ONE compiled [[MultiAnalyteGather]] pass per
-    * document evaluates every config against a single normalize+split
-    * line walk (the per-analyte [[AnalyteGather]] would re-normalize
-    * the text once per analyte); the q43 oracle checks the fused output
-    * against the independent Python implementation, and AnalyteSpec
-    * pins fused == HOF and multi == per-analyte.
+    * ONE compiled [[MultiAnalyteGather]] pass per document evaluates
+    * every config against a single normalize+split line walk (the
+    * per-analyte [[AnalyteGather]] would re-normalize the text once per
+    * analyte); the q43 oracle checks the output against the
+    * independent Python implementation, and AnalyteSpec pins the
+    * gather == the test-scope HOF twin and multi == per-analyte.
     */
   def withEntities(df: DataFrame, rawCol: String, out: String,
-      cfgs: Seq[AnalyteConfig] = Secondary,
-      fused: Boolean = true): DataFrame = {
-    val base =
-      if (fused) df.withColumn(s"${out}_all",
-        MultiAnalyteGather.of(col(rawCol), cfgs.map(c => (c.label, c.unit))))
-      else df
+      cfgs: Seq[AnalyteConfig] = Secondary): DataFrame = {
+    val base = df.withColumn(s"${out}_all",
+      MultiAnalyteGather.of(col(rawCol), cfgs.map(c => (c.label, c.unit))))
     val staged = cfgs.zipWithIndex.foldLeft(base) { case (d, (cfg, ix)) =>
-      d.withColumn(s"${out}_${cfg.name}_cands",
-          if (fused) get(col(s"${out}_all"), lit(ix))
-          else labelledCandidates(col(rawCol), cfg.label, cfg.unit))
+      d.withColumn(s"${out}_${cfg.name}_cands", get(col(s"${out}_all"), lit(ix)))
         .withColumn(s"${out}_${cfg.name}_best",
           best(col(s"${out}_${cfg.name}_cands")))
     }

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Shared compiled core of the labelled-line gather — the single place
   * the N1/N3/N4/E1-E6 JVM semantics live, used by both the TSH
   * expression (phase 1 of [[TshGatherCandidates]]) and the generic
-  * [[AnalyteGather]]. Byte-equal to the HOF chain
-  * ([[AnalyteExtract.labelledCandidates]]); the golden suite, the
+  * [[AnalyteGather]]. Byte-equal to the HOF chain (the test-scope
+  * `HofTwins.labelledCandidates`); the golden suite, the
   * fused==HOF cross-validation tests and the q43 independent-Python
   * oracle all pin it.
   */
@@ -70,7 +70,7 @@ private[extract] object GatherCore {
       .split("\n", -1)
 
   /** E1-E6 labelled candidates over the given lines, appended to `out`
-    * in line order (`AnalyteExtract.labelledCandidates` semantics).
+    * in line order (`HofTwins.labelledCandidates` semantics).
     */
   private[extract] def labelled(lines: Array[String], labelRe: Pattern,
       numRe: Pattern, rangeRe: Pattern, unitRe: Pattern,
@@ -115,8 +115,8 @@ private[extract] object GatherCore {
   * machinery (north_star's "analyte name, value, unit, reference range"
   * surface) as ONE compiled pass per (document, analyte), exactly like
   * [[TshGatherCandidates]] is for TSH. The HOF chain
-  * (`AnalyteExtract.labelledCandidates`) remains the cross-validated
-  * twin; q43's oracle checks the fused path against the independent
+  * (`HofTwins.labelledCandidates`, test scope) remains the
+  * cross-validated twin; q43's oracle checks the fused path against the independent
   * Python implementation.
   */
 case class AnalyteGather(child: Expression, labelRe: String, unitRe: String)

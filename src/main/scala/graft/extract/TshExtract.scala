@@ -6,32 +6,24 @@ import org.apache.spark.sql.types.DoubleType
 
 import TshPatterns._
 
-/** The UDF-free Catalyst extraction core (SURVEY.md §2.5-2.7).
+/** The Column-level TSH parse helpers around the fused candidate gather
+  * (SURVEY.md §2.5-2.7).
   *
-  * Everything here is built from built-in expressions (`regexp_*`,
-  * `split`, array higher-order functions, `when`), so the whole parse of
-  * a document is a single map-side projection: no UDF, no explode, no
-  * shuffle. Candidates stay as an array inside the row and best-pick is
-  * an `array_sort` on a struct whose leading fields are the reference's
-  * sort key `(has_range, label_penalty, span_start)` plus the `line_no`
-  * tiebreak that replaces Python's stable sort (quirk Q7,
+  * Candidates come from [[TshGatherCandidates]] (one compiled pass per
+  * document); everything here is built from built-in expressions, so
+  * the rest of a document's parse — best-pick, level-result assembly,
+  * the auto cascade — stays a single map-side projection: no UDF, no
+  * explode, no shuffle. Best-pick is an `array_sort` on the candidate
+  * struct, whose leading fields are the reference's sort key
+  * `(has_range, label_penalty, span_start)` plus the `line_no` tiebreak
+  * that replaces Python's stable sort (quirk Q7,
   * `parsers/tsh.py:295-301`).
   *
-  * Positional decomposition (label end, first-number end, unit window)
-  * uses `regexp_instr` + `length(regexp_extract(...))` — both return the
-  * same leftmost match as Python `re.search`/`finditer[0]` — and
-  * `regexp_extract_all` reproduces `finditer`'s non-overlapping
-  * left-to-right tokenization for the fallback path's *last* number
-  * before the unit (quirk Q8, `parsers/tsh.py:215-221`).
-  *
-  * Structure note: per-line parsing is a staged chain of `transform`
-  * calls, each adding fields to a struct; a field referenced in the next
-  * stage is a leaf `GetStructField` of the lambda variable, so the
-  * expression tree stays LINEAR in the number of parse steps (naive
-  * Column composition re-inlines whole subtrees at every reference and
-  * blows up super-exponentially). Likewise callers must materialize the
-  * doc-level intermediates (candidate array, best struct, level result)
-  * as named columns — see Pipeline.
+  * Callers must materialize the doc-level intermediates (candidate
+  * array, best struct, level result) as named columns — naive Column
+  * composition re-inlines whole subtrees at every reference; see
+  * Pipeline. The UDF-free expression-chain twin of the gather is a
+  * test-scope oracle (`graft.extract.HofTwins`).
   */
 object TshExtract {
 
@@ -72,96 +64,6 @@ object TshExtract {
       .when(length(digits) === 3, dval / 100.0)
       .otherwise(dval)
   }
-
-  private[extract] def nullIfEmpty(c: Column): Column =
-    when(c === "", nullS).otherwise(c)
-
-  /** G2 — `_score_candidate`'s label penalty (`parsers/tsh.py:282-290`).
-    * `fallback` is tested before `tsh` (so the fallback label scores 2),
-    * and dotted labels like "T.S.H" contain neither "tsh" nor "thyr" and
-    * genuinely score 3 — the reference's `else` branch is reachable.
-    */
-  private[extract] def labelPenalty(label: Column): Column = {
-    val l = lower(label)
-    when(l.contains("fallback"), 2)
-      .when(l.contains("tsh"), 0)
-      .when(l.contains("thyr"), 1)
-      .otherwise(3)
-  }
-
-  /** Candidate struct: leading fields are the total sort key (Q7). */
-  private[extract] def candidate(hasRange: Column, penalty: Column, spanStart: Column,
-      lineNo: Column, value: Column, unit: Column, refMin: Column,
-      refMax: Column, label: Column): Column =
-    struct(
-      hasRange.as("has_range"), penalty.as("penalty"),
-      spanStart.cast("int").as("span_start"), lineNo.cast("int").as("line_no"),
-      value.as("value"), unit.as("unit"),
-      refMin.as("ref_min"), refMax.as("ref_max"), label.as("label"))
-
-  private[extract] def linesOf(raw: Column): Column = split(normalize(raw), "\n")
-
-  /** E1-E6 — `_extract_tsh_from_labelled_line` over every line
-    * (`parsers/tsh.py:131-182,251-257`); returns the array of candidate
-    * structs in line order. The chain itself lives in
-    * [[AnalyteExtract.labelledCandidates]] — TSH is the reference's
-    * instance of the generic labelled-analyte machinery (the "thyr"
-    * half of the reference's gate is semantically inert — E2 re-requires
-    * the label — so label_pos>0 is the net gate).
-    */
-  def labelledCandidates(raw: Column): Column =
-    AnalyteExtract.labelledCandidates(raw, Label, UnitLabelled)
-
-  /** E7-E11 — `_extract_tsh_from_mui_line` over every line
-    * (`parsers/tsh.py:189-239`): unit-anchored fallback; value = LAST
-    * number before the unit (Q8); span_start fixed at 0
-    * (`parsers/tsh.py:236`); unit regex lacks pUI/mL (Q6).
-    */
-  def fallbackCandidates(raw: Column): Column = {
-    val s0 = transform(linesOf(raw), (l, i) =>
-      struct(l.as("line"), i.as("line_no"),
-        (lower(l).contains("mui") || lower(l).contains("ui/l")).as("gate")))
-    // E7 gate (`parsers/tsh.py:198-199`): cheap substring check first,
-    // regex work only on gated lines
-    val s0g = filter(s0, c => c("gate"))
-    val s1 = transform(s0g, c =>
-      struct(c("line"), c("line_no"), c("gate"),
-        regexp_instr(c("line"), lit(UnitFallback)).as("unit_pos"),
-        regexp_extract(c("line"), UnitFallback, 0).as("unit")))
-    val s2 = transform(s1, c =>
-      struct(c("line_no"), c("gate"), c("unit_pos"), c("unit"),
-        c("line").substr(lit(1), c("unit_pos") - 1).as("before"),
-        c("line").substr(c("unit_pos") + length(c("unit")),
-          length(c("line"))).as("after")))
-    val s3 = transform(s2, c =>
-      struct(c("line_no"), c("gate"), c("unit_pos"), c("unit"),
-        try_element_at(regexp_extract_all(c("before"), lit(Num), lit(0)), lit(-1))
-          .as("last_num"), // ANSI-safe on empty arrays
-        adjustRefValue(nullIfEmpty(regexp_extract(c("after"), Range, 1)))
-          .as("ref_min"),
-        adjustRefValue(nullIfEmpty(regexp_extract(c("after"), Range, 2)))
-          .as("ref_max")))
-    val s4 = transform(s3, c =>
-      struct(c("line_no"), c("gate"), c("unit_pos"), c("unit"),
-        c("ref_min"), c("ref_max"), toFloat(c("last_num")).as("value")))
-    val cands = transform(s4, c =>
-      when(c("gate") && c("unit_pos") > 0 && c("value").isNotNull,
-        candidate(
-          when(c("ref_min").isNotNull && c("ref_max").isNotNull, 0).otherwise(1),
-          lit(2), lit(0), c("line_no"),
-          c("value"), nullIfEmpty(c("unit")), c("ref_min"), c("ref_max"),
-          lit(FallbackLabel))))
-    filter(cands, c => c.isNotNull)
-  }
-
-  /** G1 — two-phase gather (`parsers/tsh.py:246-266`): the fallback pass
-    * runs only for docs with zero labelled candidates — a row-local
-    * conditional (CASE WHEN branches evaluate lazily, so the fallback
-    * regex work is only paid by label-less docs), no anti-join needed.
-    * `labelled` should be a materialized column to avoid double eval.
-    */
-  def gatherCandidates(raw: Column, labelled: Column): Column =
-    when(size(labelled) > 0, labelled).otherwise(fallbackCandidates(raw))
 
   /** G3 — best-pick: min by (has_range, penalty, span_start, line_no) —
     * the leading struct fields, so plain array_sort is the comparator.

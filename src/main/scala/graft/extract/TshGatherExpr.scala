@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused single-pass candidate gather as a native Catalyst Expression —
   * the performance path for G1 (`parsers/tsh.py:246-266`). Semantics are
-  * identical to the expression-chain form (TshExtract.labelledCandidates
-  * / fallbackCandidates / gatherCandidates); the golden suite and a
-  * cross-validation property test run both. This is preference order (b)
+  * identical to the expression-chain form (the test-scope twins
+  * `HofTwins.tshLabelledCandidates` / `fallbackCandidates` /
+  * `gatherCandidates`); the golden suite and the line oracles run both. This is preference order (b)
   * of SURVEY.md §7.5: a custom Expression (not a UDF) fusing the
   * ~10-regex-op per-line chain into one compiled pass — one matcher walk
   * per pattern, no intermediate arrays/strings — because the interpreted

@@ -409,14 +409,14 @@ object StreamingExtract {
       maxPerBucket: Int = 64, stateTtlMs: Long = 0L): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.analysis.{MinhashSignature, ShingleHashes, TextOps}
+    import graft.analysis.{MinhashBandKeys, MinhashSignature, ShingleHashes, TextOps}
     val keyed = spark.readStream.schema(textDocsSchema).parquet(inDir)
       // null rows drop like the batch twin's join drops them (see
       // simhashDupStream — one dirty record must not kill the query)
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .withColumn("hs", ShingleHashes.of(TextOps.tokens(col("text")), n))
       .withColumn("sig", MinhashSignature.of(col("hs"), m))
-      .withColumn("bk", explode_outer(TextOps.lshBandKeys(col("sig"), m, bands)))
+      .withColumn("bk", explode_outer(MinhashBandKeys.of(col("sig"), bands)))
       .select(col("bk.band"), col("bk.bucket"), col("doc_id"), col("sig"))
       .as[(Int, Long, Long, Seq[Long])]
     val timeout =

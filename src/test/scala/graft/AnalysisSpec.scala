@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analysis.{LangId, LangProfiles, TextOps, VectorOps}
+import graft.extract.HofTwins
 
 /** Semantic checks for the training-data ops (beyond the DuckDB oracle
   * queries): MinHash-LSH recall on injected near-dups, ANN consistency
@@ -141,13 +142,13 @@ class AnalysisSpec extends AnyFunSuite {
     // null text -> null struct, like the regex chain
     assert(Seq(Option.empty[String]).toDF("text")
       .select(CurationFeatures.of(col("text"))).collect().head.isNullAt(0))
-    // the full curation paths agree end-to-end
-    val docs = documents.select(col("doc_id"), col("text"))
-    val f = TextOps.curationFilter(docs, col("doc_id"), col("text"))
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val h = TextOps.curationFilter(docs, col("doc_id"), col("text"), fused = false)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(f == h && f.nonEmpty)
+    // the hygiene projection the curation verdict reads agrees per doc
+    def feats(d: org.apache.spark.sql.DataFrame) =
+      d.select("doc_id", "lang_pred", "n_tokens", "punct_ratio")
+        .as[(Long, String, Int, Double)].collect().sortBy(_._1).toSeq
+    val pf = feats(TextOps.curationFeatures(df, col("id"), col("text")))
+    val ph = feats(HofTwins.curationFeatures(df, col("id"), col("text")))
+    assert(pf.length == all.length && pf == ph)
   }
 
   test("curationFilter: min-id keeper per duplicate text, rejects never leak") {
@@ -324,7 +325,7 @@ class AnalysisSpec extends AnyFunSuite {
   test("fused ShingleHashes == HOF chain (hash sets identical, order too)") {
     val both = documents.select(
       graft.analysis.ShingleHashes.of(TextOps.tokens(col("text")), 3).as("fused"),
-      array_distinct(TextOps.shingleHashes(TextOps.shingles(col("text"), 3)))
+      array_distinct(HofTwins.shingleHashes(HofTwins.shingles(col("text"), 3)))
         .as("hof"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(both.nonEmpty && both.forall { case (f, h) => f == h })
@@ -361,7 +362,7 @@ class AnalysisSpec extends AnyFunSuite {
   test("fused Simhash64 == HOF chain, byte-identical") {
     val both = documents.select(
       TextOps.simhash(col("text")).as("fused"), // default = fused
-      TextOps.simhashHof(col("text")).as("hof"))
+      HofTwins.simhashHof(col("text")).as("hof"))
       .as[(Long, Long)].collect()
     assert(both.nonEmpty && both.forall { case (f, h) => f == h })
     val empty = Seq("").toDF("text")
@@ -371,11 +372,11 @@ class AnalysisSpec extends AnyFunSuite {
 
   test("fused MinhashSignature == HOF chain, byte-identical") {
     val hs = documents.select(
-      array_distinct(TextOps.shingleHashes(TextOps.shingles(col("text"), 3)))
+      array_distinct(HofTwins.shingleHashes(HofTwins.shingles(col("text"), 3)))
         .as("hs"))
     val both = hs.select(
       graft.analysis.MinhashSignature.of(col("hs"), 16).as("fused"),
-      TextOps.minhashSignature0(col("hs"), 16).as("hof"))
+      HofTwins.minhashSignature0(col("hs"), 16).as("hof"))
       .as[(Seq[Long], Seq[Long])].collect()
     assert(both.nonEmpty && both.forall { case (f, h) => f == h })
     // empty input -> MaxValue sentinel in both encodings
@@ -391,7 +392,7 @@ class AnalysisSpec extends AnyFunSuite {
       ("a b c d", "a b c e")                          // 2-grams: {ab,bc,cd} vs {ab,bc,ce} -> 2/4
     ).toDF("ta", "tb")
     val got = df.select(TextOps.jaccard(
-      TextOps.shingles(col("ta"), 2), TextOps.shingles(col("tb"), 2)))
+      HofTwins.shingles(col("ta"), 2), HofTwins.shingles(col("tb"), 2)))
       .as[Double].collect().toSeq
     assert(got == Seq(1.0, 0.0, 0.5))
   }
@@ -572,35 +573,40 @@ class AnalysisSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"trained IVF recall too low: $recall")
   }
 
+  /** ivfTopK's default centroids: the first `k` vectors, unit-normalized. */
+  private def seedCents(emb: org.apache.spark.sql.DataFrame, k: Int) =
+    emb.orderBy("vec_id").limit(k).select("embedding").as[Seq[Double]].collect()
+      .toSeq.map(v => v.map(_ / math.sqrt(v.map(x => x * x).sum)))
+
   test("fused broadcast DotProducts == HOF literal path: identical IVF results") {
+    // IVF cells (corpus assignment and query probes) are picked from
+    // these dots alone, so identical dots give identical IVF results
     val emb = clustered(nClusters = 10, perCluster = 30, dim = 64, noise = 0.6).cache()
-    val q = emb.filter(col("vec_id") < 5)
-    def run(fused: Boolean) =
-      VectorOps.ivfTopK(q, emb, 3, nCells = 16, nProbe = 3, fused = fused)
-        .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
-    val fused = run(fused = true)
-    val hof = run(fused = false)
-    assert(fused.nonEmpty && fused.toSeq == hof.toSeq)
+    val cents = seedCents(emb, 16)
+    val bc = spark.sparkContext.broadcast(cents.map(_.toArray).toArray)
+    val both = emb.select(
+      graft.analysis.BroadcastDotProducts.of(col("embedding"), bc).as("f"),
+      HofTwins.centroidDots(col("embedding"), cents).as("h"))
+      .as[(Seq[Double], Seq[Double])].collect()
+    assert(both.length == 300 && both.forall { case (f, h) => f == h })
   }
 
   test("IVF centroids ride as a broadcast, not a plan literal") {
     val emb = clustered(nClusters = 8, perCluster = 20, dim = 16, noise = 0.4).cache()
     val q = emb.filter(col("vec_id") < 3)
-    def plan(fused: Boolean) =
-      VectorOps.ivfTopK(q, emb, 2, nCells = 8, nProbe = 2, fused = fused)
-        .queryExecution.optimizedPlan.toString
     // marker: the first component of the first (unit-normalized) seed
     // centroid — ivfTopK seeds from the first k corpus vectors
-    val v0 = emb.orderBy("vec_id").limit(1)
-      .select("embedding").as[Seq[Double]].head()
-    val marker = (v0.head / math.sqrt(v0.map(x => x * x).sum)).toString.take(12)
+    val cents = seedCents(emb, 8)
+    val marker = cents.head.head.toString.take(12)
     // HOF (cross-validation twin) embeds the centroid matrix literal —
     // sanity-check the marker actually detects that encoding ...
-    val hofPlan = plan(fused = false)
+    val hofPlan = emb.select(HofTwins.centroidDots(col("embedding"), cents))
+      .queryExecution.optimizedPlan.toString
     assert(hofPlan.contains(marker) && !hofPlan.contains("broadcast_dot_products"))
     // ... the default fused path must NOT: at nCells ~ sqrt(N) the
     // literal is ~200 MB serialized into every task (the round-2 flag)
-    val fusedPlan = plan(fused = true)
+    val fusedPlan = VectorOps.ivfTopK(q, emb, 2, nCells = 8, nProbe = 2)
+      .queryExecution.optimizedPlan.toString
     assert(fusedPlan.contains("broadcast_dot_products"))
     assert(!fusedPlan.contains(marker),
       s"fused IVF plan embeds centroid literal $marker")
@@ -608,10 +614,11 @@ class AnalysisSpec extends AnyFunSuite {
 
   test("fused MinhashBandKeys == HOF lshBandKeys, byte-identical") {
     val sig = documents.select(
-      TextOps.minhashSignature(TextOps.shingles(col("text"), 3), 16).as("sig"))
+      HofTwins.minhashSignature0(HofTwins.shingleHashes(HofTwins.shingles(col("text"), 3)), 16)
+        .as("sig"))
     val both = sig.select(
       graft.analysis.MinhashBandKeys.of(col("sig"), 4).cast("string").as("f"),
-      TextOps.lshBandKeys(col("sig"), 16, 4).cast("string").as("h"))
+      HofTwins.lshBandKeys(col("sig"), 16, 4).cast("string").as("h"))
       .as[(String, String)].collect()
     assert(both.nonEmpty && both.forall { case (f, h) => f == h })
   }
@@ -622,19 +629,28 @@ class AnalysisSpec extends AnyFunSuite {
       .select((col("doc_id") + 100000).as("doc_id"),
         concat(col("text"), lit(" zz")).as("text"))
     val all = base.unionByName(dups)
-    def run(fused: Boolean) =
-      TextOps.minhashDupPairs(all, col("doc_id"), col("text"), fused = fused)
-        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2)).toSeq
-    assert(run(fused = true) == run(fused = false))
-    def runCos(fused: Boolean) = {
-      val emb = spark.read.parquet(s"$docsPath/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      VectorOps.cosineDupPairs(emb.unionByName(
-          emb.select((col("vec_id") + 10000).as("vec_id"), col("embedding"))),
-        minCos = 0.999, fused = fused)
-        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2)).toSeq
-    }
-    assert(runCos(fused = true) == runCos(fused = false))
+    // every map-side step of minhashDupPairs at its defaults (n = 3,
+    // m = 16, bands = 4): shingle-hash set, signature, band keys
+    val sketched = all
+      .withColumn("hs", graft.analysis.ShingleHashes.of(TextOps.tokens(col("text")), 3))
+      .withColumn("hs_h", array_distinct(HofTwins.shingleHashes(HofTwins.shingles(col("text"), 3))))
+      .withColumn("sig", graft.analysis.MinhashSignature.of(col("hs"), 16))
+      .withColumn("sig_h", HofTwins.minhashSignature0(col("hs_h"), 16))
+      .withColumn("bk", graft.analysis.MinhashBandKeys.of(col("sig"), 4))
+      .withColumn("bk_h", HofTwins.lshBandKeys(col("sig_h"), 16, 4))
+      .select(Seq("hs", "hs_h", "sig", "sig_h", "bk", "bk_h").map(col(_).cast("string")): _*)
+      .as[(String, String, String, String, String, String)].collect()
+    assert(sketched.length == all.count() && sketched.forall(r =>
+      r._1 == r._2 && r._3 == r._4 && r._5 == r._6))
+    // cosineDupPairs' bucket keys at its defaults (16 planes x 4
+    // tables); its exact-cosine rerank is the CosineSim test below
+    val emb = spark.read.parquet(s"$docsPath/embeddings.parquet")
+      .select(col("embedding").cast("array<double>").as("v"))
+    val keyed = emb.select(
+      graft.analysis.SignBuckets.of(col("v"), 16, 4).cast("string"),
+      HofTwins.lshKeys(col("v"), 16, 4).cast("string"))
+      .as[(String, String)].collect()
+    assert(keyed.nonEmpty && keyed.forall { case (f, h) => f == h })
   }
 
   test("fused CosineSim == HOF cosine: float- and null-identical") {
@@ -643,9 +659,9 @@ class AnalysisSpec extends AnyFunSuite {
       .withColumn("b", reverse(col("a")))
     val both = emb.select(
       VectorOps.cosine(col("a"), col("b")).as("fused"),
-      VectorOps.cosineHof(col("a"), col("b")).as("hof"),
+      HofTwins.cosineHof(col("a"), col("b")).as("hof"),
       VectorOps.cosine(col("a"), col("a")).as("self_f"),
-      VectorOps.cosineHof(col("a"), col("a")).as("self_h"))
+      HofTwins.cosineHof(col("a"), col("a")).as("self_h"))
       .as[(Double, Double, Double, Double)].collect()
     assert(both.nonEmpty)
     both.foreach { case (f, h, sf, sh) =>
@@ -658,9 +674,9 @@ class AnalysisSpec extends AnyFunSuite {
         |       array(1.0d, CAST(NULL AS double)) AS nv""".stripMargin)
     val e = edge.select(
       VectorOps.cosine(col("z"), col("v")).as("f1"),
-      VectorOps.cosineHof(col("z"), col("v")).as("h1"),
+      HofTwins.cosineHof(col("z"), col("v")).as("h1"),
       VectorOps.cosine(col("nv"), col("v")).as("f2"),
-      VectorOps.cosineHof(col("nv"), col("v")).as("h2"))
+      HofTwins.cosineHof(col("nv"), col("v")).as("h2"))
       .as[(Double, Double, Double, Double)].head()
     assert(e._1 == 0.0 && e._1 == e._2)
     assert(e._3 == 0.0 && e._3 == e._4)
@@ -670,14 +686,16 @@ class AnalysisSpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"$docsPath/embeddings.parquet")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("embedding"))
       .cache()
-    val q = emb.filter(col("vec_id") < 5)
-    def run(fused: Boolean) =
-      VectorOps.annTopK(q, emb, 3, nPlanes = 8, tables = 4, probeBits = 2,
-          fused = fused)
-        .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
-    // buckets AND probe margins must agree, so results are identical
-    val fused = run(fused = true)
-    assert(fused.nonEmpty && fused.toSeq == run(fused = false).toSeq)
+    // annTopK reads only these two: corpus buckets (SignBuckets) and
+    // the query-side projection matrix its probe margins come from
+    // (SignProjections) — agreeing, they give identical ANN results
+    val both = emb.select(
+      graft.analysis.SignBuckets.of(col("embedding"), 8, 4).cast("string"),
+      HofTwins.lshKeys(col("embedding"), 8, 4).cast("string"),
+      flatten(graft.analysis.SignProjections.of(col("embedding"), 8, 4)),
+      flatten(HofTwins.projMatrix(col("embedding"), 8, 4)))
+      .as[(String, String, Seq[Double], Seq[Double])].collect()
+    assert(both.nonEmpty && both.forall(r => r._1 == r._2 && r._3 == r._4))
   }
 
   test("float-typed embedding tables work everywhere (the native parquet type)") {
@@ -1036,7 +1054,7 @@ class AnalysisSpec extends AnyFunSuite {
     val df = texts.toDF("text")
     val fused = df.select(LangId.scores(col("text"), bc))
       .as[Seq[Double]].collect()
-    val hof = df.select(LangId.scoresHof(col("text")))
+    val hof = df.select(HofTwins.scoresHof(col("text")))
       .as[Seq[Double]].collect()
     assert(fused.length == hof.length)
     fused.zip(hof).zipWithIndex.foreach { case ((f, h), i) =>
@@ -1050,7 +1068,7 @@ class AnalysisSpec extends AnyFunSuite {
     // marker: the weight of English's ' th' trigram — present in the
     // HOF twin's embedded map literal, absent from the fused plan
     val marker = LangProfiles.profiles.head._2(" th").toString.take(12)
-    val hofPlan = df.select(LangId.scoresHof(col("text")))
+    val hofPlan = df.select(HofTwins.scoresHof(col("text")))
       .queryExecution.optimizedPlan.toString
     assert(hofPlan.contains(marker) && !hofPlan.contains("lang_ngram_scores"))
     val fusedPlan = df.select(LangId.scores(col("text"), bc))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
-import graft.extract.AnalyteExtract
+import graft.extract.{AnalyteExtract, AnalyteGather, HofTwins}
 
 /** Generic lab-entity surface (north_star: analyte name, value, unit,
   * reference range, date). The cross-engine hash check lives in the
@@ -21,30 +21,28 @@ class AnalyteSpec extends AnyFunSuite {
       "bruit\nThyréostimuline 1,1 mUI/L 027 - 494\nTSH 2,0",
       "rien", null)
     val df = raws.toDF("raw")
-    val viaGeneric = df.select(AnalyteExtract.labelledCandidates(col("raw"),
-      graft.extract.TshPatterns.Label, graft.extract.TshPatterns.UnitLabelled)
+    // the generic compiled gather with the Tsh config == TSH's labelled
+    // phase (the reference-pattern twin), null raw included
+    val viaGeneric = df.select(AnalyteGather.of(col("raw"),
+      AnalyteExtract.Tsh.label, AnalyteExtract.Tsh.unit)
       .cast("string")).as[String].collect().toSeq
-    val viaTsh = df.select(graft.extract.TshExtract.labelledCandidates(col("raw"))
+    val viaTsh = df.select(HofTwins.tshLabelledCandidates(col("raw"))
       .cast("string")).as[String].collect().toSeq
     assert(viaGeneric == viaTsh)
   }
 
   test("fused AnalyteGather == HOF labelled chain, byte-identical per analyte") {
     val ocr = Pipeline.ocrAll(Corpus.generate(spark, 200)).toDF().cache()
-    def ents(fused: Boolean) =
-      AnalyteExtract.withEntities(ocr, "optimum_raw", "ents", fused = fused)
-        .select(col("doc_id"), col("ents").cast("string").as("e"))
-        .orderBy("doc_id").as[(String, String)].collect().toSeq
-    assert(ents(fused = true) == ents(fused = false))
-    // raw candidate arrays too (pre-best), for one analyte config
-    val cfg = AnalyteExtract.Glycemia
-    val both = ocr.select(
-      graft.extract.AnalyteGather.of(col("optimum_raw"), cfg.label, cfg.unit)
-        .cast("string").as("f"),
-      AnalyteExtract.labelledCandidates(col("optimum_raw"), cfg.label, cfg.unit)
-        .cast("string").as("h"))
-      .as[(String, String)].collect()
-    assert(both.nonEmpty && both.forall { case (f, h) => f == h })
+    // withEntities' candidate arrays (pre-best), every secondary config
+    AnalyteExtract.Secondary.foreach { cfg =>
+      val both = ocr.select(
+        AnalyteGather.of(col("optimum_raw"), cfg.label, cfg.unit)
+          .cast("string").as("f"),
+        HofTwins.labelledCandidates(col("optimum_raw"), cfg.label, cfg.unit)
+          .cast("string").as("h"))
+        .as[(String, String)].collect()
+      assert(both.length == 200 && both.forall { case (f, h) => f == h }, cfg.name)
+    }
   }
 
   test("single-pass MultiAnalyteGather == one AnalyteGather per config, byte-identical") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
+import graft.extract.HofTwins
 
 /** The correctness contract (BASELINE.json `metric`): 100% span-sequence
   * equality (kind, text, media_ref, order) per (doc, mode) against
@@ -47,9 +48,8 @@ class GoldenSpec extends AnyFunSuite {
 
   lazy val docs = Corpus.generate(spark, 200).cache()
 
-  private def check(mode: String, iterative: Boolean = false,
-      fused: Boolean = true): Unit = {
-    val got = Pipeline.extractRows(docs, mode, iterative, fused)
+  private def check(mode: String, iterative: Boolean = false): Unit = {
+    val got = Pipeline.extractRows(docs, mode, iterative)
       .select(col("doc_id"), lit(mode).as("mode"), col("kind"), col("text"),
         col("media_ref"), col("order"))
       .as[Fx].collect().toSeq
@@ -69,31 +69,23 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("mode=light matches reference-derived golden fixtures")(check("light"))
-  test("HOF (UDF-free) gather path matches golden too (all modes)") {
-    check("light", fused = false); check("auto", fused = false)
-  }
   test("fused Expression gather == HOF expression-chain gather") {
+    // every level's raw text: twin == fused candidates at all three,
+    // plus the goldens below, is the HOF path matching the goldens
     val ocr = Pipeline.ocrAll(docs).toDF()
-    def cands(fused: Boolean) =
-      Pipeline.withLevelResult(ocr, "optimum_raw", "r", fused = fused)
-        .select(col("doc_id"), col("r_cands").cast("string").as("c"))
-        .orderBy("doc_id").as[(String, String)].collect().toSeq
-    assert(cands(true) == cands(false))
+    Seq("light_raw", "premium_raw", "optimum_raw").foreach { raw =>
+      val both = HofTwins.withGather(ocr, raw, "h")
+        .select(graft.extract.TshGatherCandidates.gather(col(raw))
+          .cast("string"), col("h").cast("string"))
+        .as[(String, String)].collect()
+      assert(both.length == 200 && both.forall { case (f, h) => f == h }, raw)
+    }
   }
   test("mode=premium matches reference-derived golden fixtures")(check("premium"))
   test("mode=optimum matches reference-derived golden fixtures")(check("optimum"))
   test("mode=auto (columnar cascade) matches golden fixtures")(check("auto"))
   test("mode=auto (iterative cascade) matches golden fixtures")(
     check("auto", iterative = true))
-
-  test("iterative cascade with table checkpoints == persisted encoding") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val ckpt = Pipeline.resultsAutoIterative(docs, checkpointDir = Some(dir))
-    val mem = Pipeline.resultsAutoIterative(docs)
-    assert(ckpt.except(mem).count() == 0 && mem.except(ckpt).count() == 0)
-    // the stage tables really were written (the lineage cut is a table)
-    assert(new java.io.File(s"$dir/stage_light").exists())
-  }
 
   test("quirk Q3: unaccented '3eme generation' yields value 3.0") {
     // family 3 docs: i % 16 == 3

@@ -109,7 +109,7 @@ class PropertySpec extends AnyFunSuite {
     val both = cases.toDF("id", "raw").select(col("id"),
       graft.extract.AnalyteGather.of(col("raw"), cfg.label, cfg.unit)
         .cast("string").as("f"),
-      graft.extract.AnalyteExtract.labelledCandidates(col("raw"),
+      graft.extract.HofTwins.labelledCandidates(col("raw"),
         cfg.label, cfg.unit).cast("string").as("h"))
       .as[(Long, String, String)].collect()
     assert(both.length == cases.length)

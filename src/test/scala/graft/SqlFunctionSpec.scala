@@ -65,7 +65,7 @@ class SqlFunctionSpec extends AnyFunSuite {
       "SELECT minhash_signature(array(1L, CAST(NULL AS bigint)), 4) AS s")
       .as[Seq[Long]].head()
     val hof = spark.sql("SELECT array(1L, CAST(NULL AS bigint)) AS hs")
-      .select(graft.analysis.TextOps.minhashSignature0(col("hs"), 4))
+      .select(graft.extract.HofTwins.minhashSignature0(col("hs"), 4))
       .as[Seq[Long]].head()
     assert(sql == hof, s"fused $sql != HOF $hof on a null element")
     // shingle_hashes over a null token: concat_ws skips nulls both ways
@@ -73,7 +73,7 @@ class SqlFunctionSpec extends AnyFunSuite {
       "SELECT shingle_hashes(array('a', CAST(NULL AS string), 'b'), 2) AS s")
       .as[Seq[Long]].head()
     val hofSh = spark.sql("SELECT array('a', CAST(NULL AS string), 'b') AS toks")
-      .select(array_distinct(graft.analysis.TextOps.shingleHashes(
+      .select(array_distinct(graft.extract.HofTwins.shingleHashes(
         transform(sequence(lit(0), size(col("toks")) - 2),
           i => concat_ws(" ", slice(col("toks"), i + lit(1), lit(2)))))))
       .as[Seq[Long]].head()
@@ -197,7 +197,7 @@ class SqlFunctionSpec extends AnyFunSuite {
     val df = spark.sql("SELECT array(1L, CAST(NULL AS bigint), 3L, 4L) AS sig")
     val both = df.select(
       graft.analysis.MinhashBandKeys.of(col("sig"), 2).cast("string").as("f"),
-      graft.analysis.TextOps.lshBandKeys(col("sig"), 4, 2).cast("string").as("h"))
+      graft.extract.HofTwins.lshBandKeys(col("sig"), 4, 2).cast("string").as("h"))
       .as[(String, String)].head()
     assert(both._1 == both._2, s"fused ${both._1} != HOF ${both._2}")
     // implicit casts: float embeddings / int signatures are coerced, not
