@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement tool (guide §1.4): runs named
   * SparkEntry queries through the noop sink with a per-stage listener,
@@ -16,13 +15,8 @@ object BenchExtra {
     require(args.nonEmpty, "usage: BenchExtra <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.localSession(s"local[$cpus]", cpus.toInt,
+      "spark.sql.session.timeZone" -> "UTC")
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared bench measurement helpers. The whole methodology here hinges
@@ -9,6 +9,21 @@ import org.apache.spark.sql.functions._
   * construction.
   */
 private[graft] object BenchUtil {
+
+  /** The local-mode session the bench and dump mains start with: UI
+    * off, WARN logging, `partitions` shuffle partitions, plus any extra
+    * `conf` pairs (app name, session time zone, ...).
+    */
+  def localSession(master: String, partitions: Int,
+      conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder().master(master)
+      .config("spark.sql.shuffle.partitions", partitions.toLong)
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** (stealTicks, totalTicks) from the aggregate /proc/stat cpu line. */
   def cpuTicks(): (Long, Long) = {

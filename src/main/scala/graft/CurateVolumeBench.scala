@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.{Buckets, TextOps}
@@ -42,13 +42,8 @@ object CurateVolumeBench {
       java.nio.file.Files.createTempDirectory("graft-curate-vol").toString)
     val nClones = math.min(100000L, nDocs / 10)
     val nChain = math.min(1000L, nDocs / 100)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.localSession("local[16]", 32,
+      "spark.sql.session.timeZone" -> "UTC")
     import spark.implicits._
 
     // clone text: constant-foldable (fixed stream offset far from every

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.Corpus
 
 /** Dumps the sf-small corpus' per-level OCR output as JSON lines for
@@ -22,13 +20,8 @@ object FixtureDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "fixtures/ocr_dump.jsonl"
     val n = if (args.length > 1) args(1).toLong else 200L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-fixture-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.localSession("local[8]", 8,
+      "spark.app.name" -> "graft-fixture-dump")
     try {
       val docs = Corpus.generate(spark, n)
       val lines = Pipeline.ocrAll(docs).orderBy("doc_id").toJSON.collect()

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.Corpus
 import graft.media.BinaryOps
 
@@ -24,13 +22,8 @@ object MediaDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "fixtures/assets_dump.jsonl"
     val n = if (args.length > 1) args(1).toLong else 2000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-media-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.localSession("local[8]", 8,
+      "spark.app.name" -> "graft-media-dump")
     try {
       val assets = BinaryOps.assetsFor(Corpus.generate(spark, n))
       val lines = assets.orderBy("media_ref").toJSON.collect()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.extract.{SpanAssembly, TshExtract}
+import graft.extract.{AnalyteExtract, MultiAnalyteGather, SpanAssembly, TshExtract}
 import graft.media.{OcrEnginePool, OcrRun}
 import graft.schema._
 
@@ -42,11 +42,12 @@ object Pipeline {
 
   /** raw-text column named `rawCol` -> level-result struct column `out`
     * = (ok, value, unit, ref_min, ref_max, confidence, error, raw_text).
-    * Candidates come from the fused native gather (TshGatherCandidates,
-    * one compiled pass per doc). `reuse = Some((otherRaw, otherOut))`
-    * short-circuits the parse when this level's raw text is identical
-    * to an already-parsed level's (typical for premium vs optimum: they
-    * differ only for docs the binarization rescue actually changes),
+    * Candidates come from the fused native gather (MultiAnalyteGather
+    * over `AnalyteExtract.Tsh`, one compiled pass per doc).
+    * `reuse = Some((otherRaw, otherOut))` short-circuits the parse when
+    * this level's raw text is identical to an already-parsed level's
+    * (typical for premium vs optimum: they differ only for docs the
+    * binarization rescue actually changes),
     * paying one string compare instead of a reparse. Helper columns
     * (`_cands`, `_best`) are left in place for downstream reuse;
     * callers project them away.
@@ -54,8 +55,8 @@ object Pipeline {
   def withLevelResult(df: DataFrame, rawCol: String, out: String,
       reuse: Option[(String, String)] = None,
       skipWhen: Option[Column] = None): DataFrame = {
-    val cands = graft.extract.TshGatherCandidates.gather(col(rawCol))
-    val nullCands = lit(null).cast(graft.extract.TshGatherCandidates.schema)
+    val cands = MultiAnalyteGather.one(col(rawCol), AnalyteExtract.Tsh)
+    val nullCands = lit(null).cast(MultiAnalyteGather.schema)
     val gated = reuse match {
       case Some((rRaw, rOut)) =>
         when(col(rawCol) <=> col(rRaw), col(s"${rOut}_cands")).otherwise(cands)
@@ -104,13 +105,14 @@ object Pipeline {
     }
   }
 
-  /** All three level results staged as columns r_l / r_p / r_o; each
-    * later level's parse is skipped per-row once an earlier level is
-    * accepted (the skipped column degrades to a cheap placeholder the
-    * cascade never reads).
+  /** All three level results of a frame with `light_raw` /
+    * `premium_raw` / `optimum_raw` staged as columns r_l / r_p / r_o;
+    * each later level's parse is skipped per-row once an earlier level
+    * is accepted (the skipped column degrades to a cheap placeholder
+    * the cascade never reads).
     */
-  private def autoStaged(docs: Dataset[DocRow]): DataFrame = {
-    val d1 = withLevelResult(ocrAll(docs).toDF(), "light_raw", "r_l")
+  private def autoStaged(ocr: DataFrame): DataFrame = {
+    val d1 = withLevelResult(ocr, "light_raw", "r_l")
     val accL = TshExtract.acceptWithRange(col("r_l"))
     val d2 = withLevelResult(d1, "premium_raw", "r_p",
       reuse = Some(("light_raw", "r_l")), skipWhen = Some(accL))
@@ -123,7 +125,7 @@ object Pipeline {
     * acceptance order) — the realized level mix of auto mode.
     */
   def levelMix(docs: Dataset[DocRow]): DataFrame =
-    autoStaged(docs)
+    autoStaged(ocrAll(docs).toDF())
       .withColumn("resolved_level",
         when(TshExtract.acceptWithRange(col("r_l")), "light")
           .when(TshExtract.acceptWithRange(col("r_p")), "premium")
@@ -138,7 +140,7 @@ object Pipeline {
     requireMode(mode)
     mode match {
       case "auto" =>
-        autoStaged(docs)
+        autoStaged(ocrAll(docs).toDF())
           .withColumn("r",
             TshExtract.cascadeAuto(col("r_l"), col("r_p"), col("r_o")))
           .select("doc_id", "first_media_ref", "r")
@@ -175,12 +177,7 @@ object Pipeline {
     val s3 = withLevelResult(ocrLevel(pend2, "optimum").toDF(), "raw", "r")
       .select(col("doc_id"), col("first_media_ref"),
         when(o("ok"), o).otherwise(
-          struct(lit(false).as("ok"),
-            lit(null).cast("double").as("value"), lit(null).cast("string").as("unit"),
-            lit(null).cast("double").as("ref_min"), lit(null).cast("double").as("ref_max"),
-            lit(null).cast("string").as("confidence"),
-            coalesce(o("error"), lit("TSH_NOT_FOUND")).as("error"),
-            o("raw_text").as("raw_text"))).as("r"))
+          TshExtract.failure(o("error"), o("raw_text"))).as("r"))
 
     val sel = Seq("doc_id", "first_media_ref", "r").map(col)
     s1.filter(TshExtract.acceptWithRange(col("r"))).select(sel: _*)
@@ -278,14 +275,7 @@ object Pipeline {
 
     val heavyRes = mode match {
       case "auto" =>
-        val d1 = withLevelResult(assembled, "light_raw", "r_l")
-        val accL = TshExtract.acceptWithRange(col("r_l"))
-        val d2 = withLevelResult(d1, "premium_raw", "r_p",
-          reuse = Some(("light_raw", "r_l")), skipWhen = Some(accL))
-        val accP = TshExtract.acceptWithRange(col("r_p"))
-        val d3 = withLevelResult(d2, "optimum_raw", "r_o",
-          reuse = Some(("premium_raw", "r_p")), skipWhen = Some(accL || accP))
-        d3.withColumn("r",
+        autoStaged(assembled).withColumn("r",
           TshExtract.cascadeAuto(col("r_l"), col("r_p"), col("r_o")))
       case lv =>
         withLevelResult(assembled, s"${lv}_raw", "r")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round evidence tool: writes `.explain("formatted")`
@@ -23,17 +22,12 @@ object PlanDump {
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = BenchUtil.localSession(s"local[$cpus]", cpus.toInt,
+      "spark.sql.session.timeZone" -> "UTC",
       // deep compositions print each cached subtree per reference —
       // untruncated, q64's formatted plan is multiple MB of repeats;
       // Spark's own truncation marker keeps the artifact reviewable
-      .config("spark.sql.maxPlanStringLength", "200000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.maxPlanStringLength" -> "200000")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

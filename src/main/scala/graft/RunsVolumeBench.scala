@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analysis.TextOps
@@ -48,13 +48,8 @@ object RunsVolumeBench {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val workDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-runs-vol").toString)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.localSession("local[16]", 32,
+      "spark.sql.session.timeZone" -> "UTC")
     import spark.implicits._
 
     // disjoint per-doc windows at (id + 1000) * 50; donors for doc id

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.Corpus
 
 /** Two-cluster-size scaling evidence (BASELINE.json north_rule): the
@@ -30,13 +28,8 @@ object ScalingBench {
     val trials = sys.env.getOrElse("SPARK_GRAFT_SCALE_TRIALS", "3").toInt
 
     def run(cpus: Int): Double = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName(s"graft-scaling-$cpus")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = BenchUtil.localSession(s"local[$cpus]", cpus,
+        "spark.app.name" -> s"graft-scaling-$cpus")
       try {
         // partition count fixed by the INPUT (same in both sizes) so both
         // runs do identical work in identically-sized tasks. The corpus

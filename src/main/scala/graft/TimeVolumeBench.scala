@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Volume evidence for the hot-key-proof temporal forms (TimeOps):
@@ -23,13 +22,8 @@ object TimeVolumeBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(5000000L)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchUtil.localSession("local[16]", 32,
+      "spark.sql.session.timeZone" -> "UTC")
     import spark.implicits._
 
     val dayUs = 86400L * 1000000L

@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftbridge.Bridge.{ADT => AbstractDataType}
 /** Fused MinHash signature as a native Catalyst Expression — the
   * performance path for the near-dup pipeline's per-row signature
   * (preference order (b) of SURVEY.md §7.5, same pattern as
-  * TshGatherCandidates): one pass over the shingle hashes computing all
+  * MultiAnalyteGather): one pass over the shingle hashes computing all
   * `m` permutation minima in a local array, instead of the HOF
   * encoding's m nested `transform`s that allocate an intermediate
   * array per permutation.

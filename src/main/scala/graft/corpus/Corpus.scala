@@ -51,7 +51,6 @@ object Corpus {
   val NumFamilies = 16
   /** Round-robin guarantees every family appears in any 16-doc window. */
   def family(i: Long): Int = (i % NumFamilies).toInt
-  val FamNegative = 12
   val FamQ2 = 14 // light parses (no range), optimum corrupts the line (quirk Q2)
 
   private def fr(v: Double): String = f"$v%.2f".replace('.', ',')

@@ -12,23 +12,32 @@ import TshPatterns.UnitLabelled
   * line_no)). TSH is the reference-derived instance; the others cover
   * the north_star's generic "analyte name, value, unit, reference
   * range" surface over the same corpus.
+  *
+  * `muiFallback` adds the reference's unit-anchored mUI fallback phase
+  * (`parsers/tsh.py:189-239,259-264`) for documents where the label
+  * finds nothing; only TSH has one.
   */
-final case class AnalyteConfig(name: String, label: String, unit: String)
+final case class AnalyteConfig(name: String, label: String, unit: String,
+    muiFallback: Boolean = false)
 
 /** Generic analyte extraction (north_star: "regex/finite-state field
   * extraction for lab-report entities — analyte name, value, unit,
-  * reference range, date"). The per-line candidate machinery is the
-  * compiled [[GatherCore]] that TSH's labelled phase runs too (TSH is
-  * the instance with the reference's patterns,
-  * `parsers/tsh.py:101-124,157-161`); everything stays UDF-free, so
-  * multi-analyte extraction is still one map-side projection per
-  * document.
+  * reference range, date"). Every analyte, TSH included, goes through
+  * the one compiled [[MultiAnalyteGather]] (TSH is the instance with the
+  * reference's patterns, `parsers/tsh.py:101-124,157-161`); everything
+  * stays UDF-free, so multi-analyte extraction is still one map-side
+  * projection per document.
   */
 object AnalyteExtract {
   import TshExtract.best
 
   // ---- standard configs over the corpus' secondary analyte lines ---------
-  val Tsh = AnalyteConfig("tsh", TshPatterns.Label, UnitLabelled)
+  /** The single definition of TSH's patterns; the TSH cascade
+    * (`Pipeline.withLevelResult`) and the SQL `tsh_gather_candidates`
+    * gather with it.
+    */
+  val Tsh = AnalyteConfig("tsh", TshPatterns.Label, UnitLabelled,
+    muiFallback = true)
   val Glycemia = AnalyteConfig("glycemia",
     "(?iU)glyc[ée]mie", "(?iU)(?:g ?/?L|mmol/?L)")
   val Hemoglobin = AnalyteConfig("hemoglobin",
@@ -46,16 +55,15 @@ object AnalyteExtract {
     * multi-analyte extraction does not re-inline the candidate chains
     * (Column-tree hygiene, see Pipeline); callers project them away.
     * ONE compiled [[MultiAnalyteGather]] pass per document evaluates
-    * every config against a single normalize+split line walk (the
-    * per-analyte [[AnalyteGather]] would re-normalize the text once per
-    * analyte); the q43 oracle checks the output against the
-    * independent Python implementation, and AnalyteSpec pins the
-    * gather == the test-scope HOF twin and multi == per-analyte.
+    * every config against a single normalize+split line walk; the q43
+    * oracle checks the output against the independent Python
+    * implementation, and AnalyteSpec pins the gather == the test-scope
+    * HOF twin and N configs in one pass == one pass per config.
     */
   def withEntities(df: DataFrame, rawCol: String, out: String,
       cfgs: Seq[AnalyteConfig] = Secondary): DataFrame = {
     val base = df.withColumn(s"${out}_all",
-      MultiAnalyteGather.of(col(rawCol), cfgs.map(c => (c.label, c.unit))))
+      MultiAnalyteGather.of(col(rawCol), cfgs))
     val staged = cfgs.zipWithIndex.foldLeft(base) { case (d, (cfg, ix)) =>
       d.withColumn(s"${out}_${cfg.name}_cands", get(col(s"${out}_all"), lit(ix)))
         .withColumn(s"${out}_${cfg.name}_best",

@@ -1,37 +1,37 @@
 package graft.extract
 
-import java.util.regex.{Matcher, Pattern}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, GetArrayItem, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared compiled core of the labelled-line gather — the single place
-  * the N1/N3/N4/E1-E6 JVM semantics live, used by both the TSH
-  * expression (phase 1 of [[TshGatherCandidates]]) and the generic
-  * [[AnalyteGather]]. Byte-equal to the HOF chain (the test-scope
-  * `HofTwins.labelledCandidates`); the golden suite, the
-  * fused==HOF cross-validation tests and the q43 independent-Python
-  * oracle all pin it.
+/** Shared compiled core of the candidate gather — the single place the
+  * N1/N3/N4/E1-E11 JVM semantics live, run by [[MultiAnalyteGather]].
+  * Byte-equal to the HOF chain (the test-scope
+  * `HofTwins.labelledCandidates` / `fallbackCandidates`); the golden
+  * suite, the fused==HOF cross-validation tests and the q43
+  * independent-Python oracle all pin it.
   */
 private[extract] object GatherCore {
 
-  private[extract] val wsRe = Pattern.compile(TshPatterns.WsRun)
-  private[extract] val nlRe = Pattern.compile("\n+")
+  private val wsRe = Pattern.compile(TshPatterns.WsRun)
+  private val nlRe = Pattern.compile("\n+")
 
-  private[extract] def toFloat(s: String): java.lang.Double = {
+  private def toFloat(s: String): java.lang.Double = {
     if (s == null || s.isEmpty) return null
     val cleaned = s.replace(" ", "").replace(" ", "").replace(',', '.')
     try java.lang.Double.valueOf(cleaned)
     catch { case _: NumberFormatException => null }
   }
 
-  private[extract] def adjustRef(raw: String): java.lang.Double = {
+  private def adjustRef(raw: String): java.lang.Double = {
     if (raw == null || raw.isEmpty) return null
     if (raw.indexOf(',') >= 0 || raw.indexOf('.') >= 0) return toFloat(raw)
     val digits = raw.filter(Character.isDigit)
@@ -45,10 +45,10 @@ private[extract] object GatherCore {
   // Locale.ROOT: Python str.lower() and Spark's lower() are locale-
   // independent; the JVM default is not (Turkish 'I' -> 'ı' would
   // silently change penalties/gates on such executors).
-  private[extract] def lowerRoot(s: String): String =
+  private def lowerRoot(s: String): String =
     s.toLowerCase(java.util.Locale.ROOT)
 
-  private[extract] def penaltyOf(label: String): Int = {
+  private def penaltyOf(label: String): Int = {
     val l = lowerRoot(label)
     if (l.contains("fallback")) 2
     else if (l.contains("tsh")) 0
@@ -56,7 +56,7 @@ private[extract] object GatherCore {
     else 3
   }
 
-  private[extract] def row(hasRange: Int, penalty: Int, spanStart: Int,
+  private def row(hasRange: Int, penalty: Int, spanStart: Int,
       lineNo: Int, value: Double, unit: String, refMin: java.lang.Double,
       refMax: java.lang.Double, label: String): InternalRow =
     new GenericInternalRow(Array[Any](hasRange, penalty, spanStart, lineNo,
@@ -109,87 +109,91 @@ private[extract] object GatherCore {
       i += 1
     }
   }
-}
 
-/** Fused generic labelled-analyte gather — the [[AnalyteExtract]]
-  * machinery (north_star's "analyte name, value, unit, reference range"
-  * surface) as ONE compiled pass per (document, analyte), exactly like
-  * [[TshGatherCandidates]] is for TSH. The HOF chain
-  * (`HofTwins.labelledCandidates`, test scope) remains the
-  * cross-validated twin; q43's oracle checks the fused path against the independent
-  * Python implementation.
-  */
-case class AnalyteGather(child: Expression, labelRe: String, unitRe: String)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.ADT] =
-    Seq(org.apache.spark.sql.types.StringType)
-
-
-  override def dataType: DataType = TshGatherCandidates.schema
-  override def prettyName: String = "analyte_gather_candidates"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("analyteGather", this)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) " +
-        s"$ref.evalCore($c);"
-    })
-
-  @transient private lazy val labelP = Pattern.compile(labelRe)
-  @transient private lazy val unitP = Pattern.compile(unitRe)
-  @transient private lazy val numP = Pattern.compile(TshPatterns.Num)
-  @transient private lazy val rangeP = Pattern.compile(TshPatterns.Range)
-
-  override def nullSafeEval(input: Any): Any =
-    evalCore(input.asInstanceOf[UTF8String])
-
-  /** Shared by interpreted eval and generated code (public for janino). */
-  def evalCore(input: UTF8String): GenericArrayData = {
-    val out = new java.util.ArrayList[InternalRow]()
-    GatherCore.labelled(GatherCore.linesOf(input.toString),
-      labelP, numP, rangeP, unitP, out)
-    new GenericArrayData(out.toArray)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object AnalyteGather {
-  def of(raw: Column, labelRe: String, unitRe: String): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    // null raw behaves like `_normalize_text(None) -> ''` (empty array)
-    Bridge.column(AnalyteGather(Bridge.expression(
-      org.apache.spark.sql.functions.coalesce(raw,
-        org.apache.spark.sql.functions.lit(""))), labelRe, unitRe))
+  /** E7-E11 `_extract_tsh_from_mui_line` (tsh.py:189-239) over every
+    * line, appended to `out`: the unit-anchored fallback phase, which
+    * the reference runs only for docs with zero labelled candidates
+    * (tsh.py:259-264; `HofTwins.fallbackCandidates` semantics).
+    */
+  private[extract] def muiFallback(lines: Array[String], numRe: Pattern,
+      rangeRe: Pattern, unitFbRe: Pattern,
+      out: java.util.ArrayList[InternalRow]): Unit = {
+    var j = 0
+    while (j < lines.length) {
+      val line = lines(j)
+      val low = lowerRoot(line)
+      if (low.contains("mui") || low.contains("ui/l")) {
+        val um = unitFbRe.matcher(line)
+        if (um.find()) {
+          val unit = um.group(0)
+          val before = line.substring(0, um.start())
+          val after = line.substring(um.end())
+          // E9: LAST number before the unit (Q8)
+          val nm = numRe.matcher(before)
+          var lastNum: String = null
+          while (nm.find()) lastNum = nm.group(0)
+          val value = toFloat(lastNum)
+          if (value != null) {
+            val rm = rangeRe.matcher(after)
+            var refMin: java.lang.Double = null
+            var refMax: java.lang.Double = null
+            if (rm.find()) {
+              refMin = adjustRef(rm.group(1))
+              refMax = adjustRef(rm.group(2))
+            }
+            val hasRange = if (refMin != null && refMax != null) 0 else 1
+            out.add(row(hasRange, 2, 0, j, value, unit, refMin, refMax,
+              TshPatterns.FallbackLabel))
+          }
+        }
+      }
+      j += 1
+    }
   }
 }
 
-/** Single-pass MULTI-analyte gather: every configured analyte evaluated
-  * against ONE normalize+split line walk per document. The per-analyte
-  * [[AnalyteGather]] re-runs `GatherCore.linesOf` (the N1 regex
-  * normalize + split over the whole text) once per analyte — O(text ·
-  * analytes); this pass is O(text + lines · analytes), which at the
-  * north_star's "lab-report entities" breadth (tens to hundreds of
-  * analytes) is the difference between one and N normalize passes over
-  * every document. Returns one candidate array per config, in config
-  * order; element i is byte-identical to `AnalyteGather(raw,
-  * configs(i))` (pinned by AnalyteSpec, cross-checked by the q43
-  * independent-Python oracle through `AnalyteExtract.withEntities`).
+/** The candidate gather (G1, `parsers/tsh.py:246-266`) as ONE native
+  * Catalyst Expression for TSH and every analyte: each configured
+  * analyte is evaluated against a single normalize+split line walk per
+  * document (O(text + lines · analytes), where one pass per analyte
+  * would re-run the N1 regex normalize per analyte). This is preference
+  * order (b) of SURVEY.md §7.5: a custom Expression (not a UDF) fusing
+  * the ~10-regex-op per-line chain into one compiled pass, because the
+  * interpreted HOF chain is allocation-bound and stops scaling with
+  * cores.
+  *
+  * Returns one candidate array per config, in config order. Per config,
+  * 1:1 with the reference:
+  *  - N1 `_normalize_text` (tsh.py:37-44), N2 line split (tsh.py:248)
+  *  - E1 gate + E2-E6 `_extract_tsh_from_labelled_line` (tsh.py:131-182)
+  *    with the config's label/unit patterns
+  *  - E7-E11 `_extract_tsh_from_mui_line` (tsh.py:189-239) when the
+  *    config sets `muiFallback` and found zero labelled candidates
+  *  - N3 `_to_float` (tsh.py:47-57), N4 `_adjust_ref_value` (tsh.py:59-93)
+  * Candidate rows carry the (has_range, penalty, span_start, line_no)
+  * sort key (G2/G3 + quirk Q7). Pinned against the test-scope HOF twins
+  * (GoldenSpec, AnalyteSpec, PropertySpec), and through
+  * `AnalyteExtract.withEntities` against the q43 independent-Python
+  * oracle.
   */
-case class MultiAnalyteGather(child: Expression, configs: Seq[(String, String)])
+case class MultiAnalyteGather(child: Expression, configs: Seq[AnalyteConfig])
     extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
 
-  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.ADT] =
-    Seq(org.apache.spark.sql.types.StringType)
+  override def inputTypes: Seq[Bridge.ADT] = Seq(StringType)
 
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    TshGatherCandidates.schema, containsNull = false)
+  override def dataType: DataType =
+    ArrayType(MultiAnalyteGather.schema, containsNull = false)
   override def prettyName: String = "multi_analyte_gather"
+  // plan strings name the configs instead of printing their regexes
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, configs.map(_.name).mkString("[", ", ", "]"))
 
+  /** Real codegen, not CodegenFallback: the fallback would evaluate the
+    * WHOLE subtree (child included) interpreted; this keeps the child
+    * inside whole-stage codegen and hands its unboxed UTF8String to the
+    * compiled gather core.
+    */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
       val ref = ctx.addReferenceObj("multiAnalyteGather", this)
@@ -197,10 +201,12 @@ case class MultiAnalyteGather(child: Expression, configs: Seq[(String, String)])
         s"$ref.evalCore($c);"
     })
 
-  @transient private lazy val labelPs = configs.map(c => Pattern.compile(c._1)).toArray
-  @transient private lazy val unitPs = configs.map(c => Pattern.compile(c._2)).toArray
+  @transient private lazy val labelPs = configs.map(c => Pattern.compile(c.label)).toArray
+  @transient private lazy val unitPs = configs.map(c => Pattern.compile(c.unit)).toArray
+  @transient private lazy val fallbacks = configs.map(_.muiFallback).toArray
   @transient private lazy val numP = Pattern.compile(TshPatterns.Num)
   @transient private lazy val rangeP = Pattern.compile(TshPatterns.Range)
+  @transient private lazy val unitFbP = Pattern.compile(TshPatterns.UnitFallback)
 
   override def nullSafeEval(input: Any): Any =
     evalCore(input.asInstanceOf[UTF8String])
@@ -213,6 +219,9 @@ case class MultiAnalyteGather(child: Expression, configs: Seq[(String, String)])
     while (i < labelPs.length) {
       val out = new java.util.ArrayList[InternalRow]()
       GatherCore.labelled(lines, labelPs(i), numP, rangeP, unitPs(i), out)
+      // two-phase gather: fallback only if no labelled candidate
+      if (fallbacks(i) && out.isEmpty)
+        GatherCore.muiFallback(lines, numP, rangeP, unitFbP, out)
       arr(i) = new GenericArrayData(out.toArray)
       i += 1
     }
@@ -224,10 +233,32 @@ case class MultiAnalyteGather(child: Expression, configs: Seq[(String, String)])
 }
 
 object MultiAnalyteGather {
-  def of(raw: Column, configs: Seq[(String, String)]): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(MultiAnalyteGather(Bridge.expression(
-      org.apache.spark.sql.functions.coalesce(raw,
-        org.apache.spark.sql.functions.lit(""))), configs))
-  }
+  /** One config's candidate array; the struct field order is the sort key. */
+  val schema: DataType = ArrayType(StructType(Seq(
+    StructField("has_range", IntegerType, nullable = false),
+    StructField("penalty", IntegerType, nullable = false),
+    StructField("span_start", IntegerType, nullable = false),
+    StructField("line_no", IntegerType, nullable = false),
+    StructField("value", DoubleType, nullable = false),
+    StructField("unit", StringType, nullable = true),
+    StructField("ref_min", DoubleType, nullable = true),
+    StructField("ref_max", DoubleType, nullable = true),
+    StructField("label", StringType, nullable = false))), containsNull = false)
+
+  // coalesce like N1 `_normalize_text` does (tsh.py:39-40): a null raw
+  // yields empty candidate arrays, same as the HOF chain
+  private def gather(raw: Expression, configs: Seq[AnalyteConfig]): Expression =
+    MultiAnalyteGather(Coalesce(Seq(raw, Literal(""))), configs)
+
+  def of(raw: Column, configs: Seq[AnalyteConfig]): Column =
+    Bridge.column(gather(Bridge.expression(raw), configs))
+
+  /** One config's candidates: element 0 of the gather over `Seq(cfg)`.
+    * The DataFrame path and the SQL functions build this same form.
+    */
+  def one(raw: Expression, cfg: AnalyteConfig): Expression =
+    GetArrayItem(gather(raw, Seq(cfg)), Literal(0))
+
+  def one(raw: Column, cfg: AnalyteConfig): Column =
+    Bridge.column(one(Bridge.expression(raw), cfg))
 }

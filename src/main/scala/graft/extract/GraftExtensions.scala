@@ -2,9 +2,12 @@ package graft.extract
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-/** SQL surface for the engine's native expression(s): registers
-  * `tsh_gather_candidates(text)` so pure-SQL users get the fused parse
-  * core too:
+/** SQL surface for the engine's native expressions and operator
+  * compositions: registers every function in [[GraftFunctions.all]]
+  * (the candidate gathers `tsh_gather_candidates` /
+  * `analyte_gather_candidates`, the text and vector sketches, the
+  * markup/PII/URL compositions, the `bounded_top_k` aggregate and
+  * `dhash64`), so pure-SQL users get the same fused cores:
   *
   *   spark.sql("SELECT tsh_gather_candidates(raw_text) FROM docs")
   *
@@ -12,7 +15,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * (cluster) or call [[GraftFunctions.register]] on an existing session.
   * No custom Rule/Strategy is needed anywhere in this engine (SURVEY.md
   * §4 conclusion): the planner's built-ins cover every operator; the
-  * only extension is this scalar expression.
+  * only extensions are these functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -21,26 +24,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftFunctions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, ExpressionInfo, Literal}
+  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-  /** SQL-path builder, kept in lockstep with the DataFrame path
-    * (TshGatherCandidates.gather): a null input must behave like the
+  /** SQL-path builder: the same one-config gather the DataFrame path
+    * builds (`MultiAnalyteGather.one`), so a null input behaves like the
     * reference's `_normalize_text(None) -> ''` (empty candidate array,
-    * tsh.py:39-40), so the child is coalesced with ''. Arity is
-    * validated here — `args.head` alone would silently drop extras and
-    * throw an opaque error on zero args.
+    * tsh.py:39-40). Arity is validated here — `args.head` alone would
+    * silently drop extras and throw an opaque error on zero args.
     */
   private def build(args: Seq[Expression]): Expression = {
     if (args.length != 1)
       throw new IllegalArgumentException(
         s"tsh_gather_candidates expects exactly 1 argument, got ${args.length}")
-    TshGatherCandidates(Coalesce(Seq(args.head, Literal(""))))
+    MultiAnalyteGather.one(args.head, AnalyteExtract.Tsh)
   }
 
   val tshGatherCandidates: (FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression) = (
     FunctionIdentifier("tsh_gather_candidates"),
-    new ExpressionInfo(classOf[TshGatherCandidates].getName,
+    new ExpressionInfo(classOf[MultiAnalyteGather].getName,
       "tsh_gather_candidates"),
     build(_))
 
@@ -120,10 +122,9 @@ object GraftFunctions {
 
   private def buildAnalyteGather(args: Seq[Expression]): Expression = {
     arity(args, 3, "analyte_gather_candidates")
-    // null raw behaves like _normalize_text(None) -> '' (empty array)
-    AnalyteGather(Coalesce(Seq(args.head, Literal(""))),
+    MultiAnalyteGather.one(args.head, AnalyteConfig("analyte_gather_candidates",
       litStr(args, 1, "analyte_gather_candidates"),
-      litStr(args, 2, "analyte_gather_candidates"))
+      litStr(args, 2, "analyte_gather_candidates")))
   }
 
   /** strip_markup is a COMPOSITION of built-in expressions, not a
@@ -186,7 +187,7 @@ object GraftFunctions {
       info(classOf[graft.analysis.MinhashBandKeys], "minhash_band_keys"),
       buildBandKeys(_)),
     (FunctionIdentifier("analyte_gather_candidates"),
-      info(classOf[AnalyteGather], "analyte_gather_candidates"),
+      info(classOf[MultiAnalyteGather], "analyte_gather_candidates"),
       buildAnalyteGather(_)),
     (FunctionIdentifier("strip_markup"),
       info(graft.analysis.TextOps.getClass, "strip_markup"),

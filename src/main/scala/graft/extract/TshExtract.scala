@@ -9,8 +9,9 @@ import TshPatterns._
 /** The Column-level TSH parse helpers around the fused candidate gather
   * (SURVEY.md §2.5-2.7).
   *
-  * Candidates come from [[TshGatherCandidates]] (one compiled pass per
-  * document); everything here is built from built-in expressions, so
+  * Candidates come from [[MultiAnalyteGather]] with the
+  * `AnalyteExtract.Tsh` config (one compiled pass per document);
+  * everything here is built from built-in expressions, so
   * the rest of a document's parse — best-pick, level-result assembly,
   * the auto cascade — stays a single map-side projection: no UDF, no
   * explode, no shuffle. Best-pick is an `array_sort` on the candidate
@@ -85,20 +86,23 @@ object TshExtract {
       when(bestC("ref_min").isNotNull && bestC("ref_max").isNotNull, "high")
         .when(lower(bestC("label")).contains("fallback"), "low")
         .otherwise("medium") // `parsers/tsh.py:327-332`
-    when(raw.isNull,
-      struct(lit(false).as("ok"), nullD.as("value"), nullS.as("unit"),
-        nullD.as("ref_min"), nullD.as("ref_max"), nullS.as("confidence"),
-        lit("OCR_FAILED").as("error"), nullS.as("raw_text")))
-      .when(bestC.isNull,
-        struct(lit(false).as("ok"), nullD.as("value"), nullS.as("unit"),
-          nullD.as("ref_min"), nullD.as("ref_max"), nullS.as("confidence"),
-          lit("TSH_NOT_FOUND").as("error"), raw.as("raw_text")))
+    when(raw.isNull, failure(lit("OCR_FAILED"), nullS))
+      .when(bestC.isNull, failure(lit("TSH_NOT_FOUND"), raw))
       .otherwise(
         struct(lit(true).as("ok"), bestC("value").as("value"),
           bestC("unit").as("unit"), bestC("ref_min").as("ref_min"),
           bestC("ref_max").as("ref_max"), confidence.as("confidence"),
           nullS.as("error"), raw.as("raw_text")))
   }
+
+  /** The `ok = false` result struct (`app.py:92,96,192-196`); a NULL
+    * `error` reads TSH_NOT_FOUND.
+    */
+  def failure(error: Column, rawText: Column): Column =
+    struct(lit(false).as("ok"), nullD.as("value"), nullS.as("unit"),
+      nullD.as("ref_min"), nullD.as("ref_max"), nullS.as("confidence"),
+      coalesce(error, lit("TSH_NOT_FOUND")).as("error"),
+      rawText.as("raw_text"))
 
   /** C3 acceptance for light/premium in auto mode (`app.py:154,167`):
     * parsed ok AND at least one ref bound.
@@ -112,15 +116,9 @@ object TshExtract {
     * and raw_text (`app.py:192-196`, quirk Q9) — and drops any earlier
     * partial success (quirk Q2). Arguments must be leaf columns.
     */
-  def cascadeAuto(light: Column, premium: Column, optimum: Column): Column = {
-    val failure = struct(lit(false).as("ok"), nullD.as("value"),
-      nullS.as("unit"), nullD.as("ref_min"), nullD.as("ref_max"),
-      nullS.as("confidence"),
-      coalesce(optimum("error"), lit("TSH_NOT_FOUND")).as("error"),
-      optimum("raw_text").as("raw_text"))
+  def cascadeAuto(light: Column, premium: Column, optimum: Column): Column =
     when(acceptWithRange(light), light)
       .when(acceptWithRange(premium), premium)
       .when(optimum("ok"), optimum)
-      .otherwise(failure)
-  }
+      .otherwise(failure(optimum("error"), optimum("raw_text")))
 }

@@ -52,14 +52,3 @@ final case class DocOcrOne(
     raw: Option[String],
     boxes: Seq[OcrBox],
     spans: Seq[DocSpan])
-
-object SpanKinds {
-  val Marker = "marker"
-  val Value = "value"
-  val Unit = "unit"
-  val RefMin = "ref_min"
-  val RefMax = "ref_max"
-  val Confidence = "confidence"
-  val RawText = "raw_text"
-  val Error = "error"
-}

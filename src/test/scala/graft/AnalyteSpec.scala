@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
-import graft.extract.{AnalyteExtract, AnalyteGather, HofTwins}
+import graft.extract.{AnalyteExtract, HofTwins, MultiAnalyteGather}
 
 /** Generic lab-entity surface (north_star: analyte name, value, unit,
   * reference range, date). The cross-engine hash check lives in the
@@ -19,16 +19,23 @@ class AnalyteSpec extends AnyFunSuite {
     val raws = Seq(
       "TSH 2,35 mUI/L (0,27 - 4,20)",
       "bruit\nThyréostimuline 1,1 mUI/L 027 - 494\nTSH 2,0",
-      "rien", null)
+      "rien", "valeur 2,1 mUI/L (0,4 - 4,0)", null)
     val df = raws.toDF("raw")
-    // the generic compiled gather with the Tsh config == TSH's labelled
-    // phase (the reference-pattern twin), null raw included
-    val viaGeneric = df.select(AnalyteGather.of(col("raw"),
-      AnalyteExtract.Tsh.label, AnalyteExtract.Tsh.unit)
+    // the generic compiled gather with the Tsh patterns == TSH's
+    // labelled phase (the reference-pattern twin), null raw included
+    val labelled = df.select(MultiAnalyteGather.one(col("raw"),
+      AnalyteExtract.Tsh.copy(muiFallback = false))
       .cast("string")).as[String].collect().toSeq
     val viaTsh = df.select(HofTwins.tshLabelledCandidates(col("raw"))
       .cast("string")).as[String].collect().toSeq
-    assert(viaGeneric == viaTsh)
+    assert(labelled == viaTsh)
+    // ... and the full Tsh config adds exactly the two-phase fallback
+    val full = HofTwins.withGather(df, "raw", "h")
+      .select(MultiAnalyteGather.one(col("raw"), AnalyteExtract.Tsh)
+        .cast("string"), col("h").cast("string"))
+      .as[(String, String)].collect().toSeq
+    assert(full.forall { case (f, h) => f == h }, full)
+    assert(full(3)._1.contains("fallback"), full(3))
   }
 
   test("fused AnalyteGather == HOF labelled chain, byte-identical per analyte") {
@@ -36,7 +43,7 @@ class AnalyteSpec extends AnyFunSuite {
     // withEntities' candidate arrays (pre-best), every secondary config
     AnalyteExtract.Secondary.foreach { cfg =>
       val both = ocr.select(
-        AnalyteGather.of(col("optimum_raw"), cfg.label, cfg.unit)
+        MultiAnalyteGather.one(col("optimum_raw"), cfg)
           .cast("string").as("f"),
         HofTwins.labelledCandidates(col("optimum_raw"), cfg.label, cfg.unit)
           .cast("string").as("h"))
@@ -47,20 +54,19 @@ class AnalyteSpec extends AnyFunSuite {
 
   test("single-pass MultiAnalyteGather == one AnalyteGather per config, byte-identical") {
     val ocr = Pipeline.ocrAll(Corpus.generate(spark, 200)).toDF()
-    val cfgs = AnalyteExtract.Secondary
-    val multi = ocr.select(graft.extract.MultiAnalyteGather
-        .of(col("optimum_raw"), cfgs.map(c => (c.label, c.unit)))
+    // Tsh included: its fallback phase is per config inside the pass
+    val cfgs = AnalyteExtract.Tsh +: AnalyteExtract.Secondary
+    val multi = ocr.select(MultiAnalyteGather.of(col("optimum_raw"), cfgs)
         .cast("string").as("m"))
       .as[String].collect()
     val single = ocr.select(array(cfgs.map(c =>
-        graft.extract.AnalyteGather.of(col("optimum_raw"), c.label, c.unit)): _*)
+        MultiAnalyteGather.one(col("optimum_raw"), c)): _*)
         .cast("string").as("s"))
       .as[String].collect()
     assert(multi.nonEmpty && multi.toSeq == single.toSeq)
     // null raw behaves like the per-analyte path: one empty array per cfg
     val nullRow = Seq(Option.empty[String]).toDF("raw")
-      .select(graft.extract.MultiAnalyteGather
-        .of(col("raw"), cfgs.map(c => (c.label, c.unit))).cast("string"))
+      .select(MultiAnalyteGather.of(col("raw"), cfgs).cast("string"))
       .as[String].head()
     assert(nullRow == Seq.fill(cfgs.length)("[]").mkString("[", ", ", "]"))
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
-import graft.extract.HofTwins
+import graft.extract.{AnalyteExtract, HofTwins, MultiAnalyteGather}
 
 /** The correctness contract (BASELINE.json `metric`): 100% span-sequence
   * equality (kind, text, media_ref, order) per (doc, mode) against
@@ -75,7 +75,7 @@ class GoldenSpec extends AnyFunSuite {
     val ocr = Pipeline.ocrAll(docs).toDF()
     Seq("light_raw", "premium_raw", "optimum_raw").foreach { raw =>
       val both = HofTwins.withGather(ocr, raw, "h")
-        .select(graft.extract.TshGatherCandidates.gather(col(raw))
+        .select(MultiAnalyteGather.one(col(raw), AnalyteExtract.Tsh)
           .cast("string"), col("h").cast("string"))
         .as[(String, String)].collect()
       assert(both.length == 200 && both.forall { case (f, h) => f == h }, raw)

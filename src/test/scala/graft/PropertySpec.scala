@@ -107,7 +107,7 @@ class PropertySpec extends AnyFunSuite {
     val cases = sample(docGen, 250, 5005L).zipWithIndex
       .map { case (raw, i) => (i.toLong, raw) }
     val both = cases.toDF("id", "raw").select(col("id"),
-      graft.extract.AnalyteGather.of(col("raw"), cfg.label, cfg.unit)
+      graft.extract.MultiAnalyteGather.one(col("raw"), cfg)
         .cast("string").as("f"),
       graft.extract.HofTwins.labelledCandidates(col("raw"),
         cfg.label, cfg.unit).cast("string").as("h"))

@@ -37,4 +37,13 @@ class SingleEncodingSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  test("src/main/scala/graft/extract defines one gather expression") {
+    val unary = """\bextends\s+UnaryExpression\b""".r
+    val defs = Files.walk(Paths.get("src/main/scala/graft/extract")).iterator()
+      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(f => unary.findAllIn(new String(Files.readAllBytes(f), "UTF-8"))
+        .map(_ => f.getFileName.toString))
+    assert(defs.size == 1, s"UnaryExpression definitions: $defs")
+  }
 }

@@ -38,6 +38,29 @@ class SqlFunctionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("exactly 1 argument"))
   }
 
+  test("SQL candidate gathers == the DataFrame candidate columns on the 200-doc corpus") {
+    GraftFunctions.register(spark)
+    import org.apache.spark.sql.functions.{col, expr}
+    import spark.implicits._
+    import graft.extract.AnalyteExtract
+    val levels = Seq("light_raw", "premium_raw", "optimum_raw")
+    val ocr = Pipeline.ocrAll(graft.corpus.Corpus.generate(spark, 200)).toDF()
+    val withTsh = levels.foldLeft(ocr)((d, raw) =>
+      Pipeline.withLevelResult(d, raw, s"t_$raw"))
+    val cfgs = AnalyteExtract.Secondary
+    val df = AnalyteExtract.withEntities(withTsh, "optimum_raw", "e", cfgs)
+    def sqlStr(s: String) = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    val pairs =
+      levels.map(raw => (s"tsh_gather_candidates($raw)", s"t_${raw}_cands")) ++
+        cfgs.map(c => (s"analyte_gather_candidates(optimum_raw, " +
+          s"${sqlStr(c.label)}, ${sqlStr(c.unit)})", s"e_${c.name}_cands"))
+    pairs.foreach { case (sql, dfCol) =>
+      val both = df.select(expr(sql).cast("string"), col(dfCol).cast("string"))
+        .as[(String, String)].collect()
+      assert(both.length == 200 && both.forall { case (s, d) => s == d }, sql)
+    }
+  }
+
   test("sketch expressions are SQL-callable: shingle_hashes + minhash_signature") {
     GraftFunctions.register(spark)
     import spark.implicits._

@@ -53,8 +53,8 @@ object HofTwins {
 
   /** E1-E6 generalized — `_extract_tsh_from_labelled_line` semantics
     * (`parsers/tsh.py:131-182,251-257`) with the label/unit patterns as
-    * parameters; returns candidate structs in line order. Twin of
-    * [[AnalyteGather]].
+    * parameters; returns candidate structs in line order. Twin of the
+    * labelled phase of [[MultiAnalyteGather]].
     */
   def labelledCandidates(raw: Column, labelRe: String, unitRe: String): Column = {
     val s1 = transform(linesOf(raw), (l, i) =>
