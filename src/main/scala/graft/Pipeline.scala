@@ -5,21 +5,23 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.extract.{AnalyteExtract, MultiAnalyteGather, SpanAssembly, TshExtract}
-import graft.media.{OcrEnginePool, OcrRun}
+import graft.media.{FirstMediaRef, OcrEnginePool, OcrRun, OcrText}
 import graft.schema._
 
 /** End-to-end extraction pipeline (SURVEY.md §3.4):
   *
-  *   docs scan -> mapPartitions(pooled OCR engine) -> UDF-free Catalyst
-  *   parse/select/assemble projection -> spans
+  *   docs scan -> one projection chain: per-level OCR columns
+  *   ([[OcrText]], pooled engine) -> UDF-free Catalyst
+  *   parse/select/assemble -> spans
   *
   * The whole thing is map-only: candidates never leave their row (array
   * HOFs instead of explode+window), the fallback gate is a row-local
   * conditional instead of an anti-join, and the auto cascade is either a
-  * per-row `when` chain (columnar) or a filter-carry union (iterative) —
-  * zero shuffles either way, so throughput scales with partition count
-  * alone (the ≥0.8 N->4N efficiency target, BASELINE.md). The only
-  * shuffle in the module is the opt-in skew path's bounded reassembly.
+  * per-row `when` chain (columnar, which also gates each later level's
+  * OCR call) or a filter-carry union (iterative) — zero shuffles either
+  * way, so throughput scales with partition count alone (the ≥0.8
+  * N->4N efficiency target, BASELINE.md). The only shuffle in the module
+  * is the opt-in skew path's bounded reassembly.
   *
   * Expression-tree hygiene: every doc-level intermediate (candidate
   * array, best candidate, level result) is materialized as a named
@@ -30,7 +32,6 @@ import graft.schema._
 object Pipeline {
 
   val Modes = Seq("auto", "light", "premium", "optimum")
-  private val Levels = Seq("light", "premium", "optimum")
 
   /** Reject unknown modes up front, like the reference's `Literal` mode
     * enum (`app.py:108`) — an unvalidated string would otherwise run as
@@ -50,30 +51,26 @@ object Pipeline {
     * binarization rescue actually changes),
     * paying one string compare instead of a reparse. Helper columns
     * (`_cands`, `_best`) are left in place for downstream reuse;
-    * callers project them away.
+    * callers project them away. A NULL raw text (failed or gated-off
+    * level) parses to no candidates at the cost of one empty gather.
     */
   def withLevelResult(df: DataFrame, rawCol: String, out: String,
-      reuse: Option[(String, String)] = None,
-      skipWhen: Option[Column] = None): DataFrame = {
+      reuse: Option[(String, String)] = None): DataFrame = {
     val cands = MultiAnalyteGather.one(col(rawCol), AnalyteExtract.Tsh)
-    val nullCands = lit(null).cast(MultiAnalyteGather.schema)
     val gated = reuse match {
       case Some((rRaw, rOut)) =>
         when(col(rawCol) <=> col(rRaw), col(s"${rOut}_cands")).otherwise(cands)
       case None => cands
     }
-    // CASE branches evaluate lazily: a doc already accepted by an
-    // earlier cascade level never pays this level's parse — the
-    // reference's early-exit cost model (`app.py:153-163`) without
-    // the iterative form's persist/union machinery
-    df.withColumn(s"${out}_cands",
-        skipWhen.map(s => when(s, nullCands).otherwise(gated)).getOrElse(gated))
+    df.withColumn(s"${out}_cands", gated)
       .withColumn(s"${out}_best", TshExtract.best(col(s"${out}_cands")))
       .withColumn(out, TshExtract.levelResult(col(rawCol), col(s"${out}_best")))
   }
 
-  /** OCR all three levels per doc in one pooled-engine pass (columnar
-    * cascade input). One mapPartitions = one engine checkout per task.
+  /** OCR all three levels per doc in one pooled-engine pass, boxes
+    * included: the audit/QC surface (box statistics, fixture dumps).
+    * The extraction paths OCR through [[OcrText]] columns instead and
+    * never pay a level the cascade does not reach.
     */
   def ocrAll(docs: Dataset[DocRow]): Dataset[DocOcrAll] = {
     import docs.sparkSession.implicits._
@@ -89,7 +86,7 @@ object Pipeline {
     }
   }
 
-  /** OCR a single level (explicit modes / iterative cascade stages).
+  /** OCR a single level (iterative cascade stages).
     * Carries the original spans so later cascade stages need no join
     * back to the source (filter-carry instead of the anti-join form,
     * SURVEY.md §2.4.1).
@@ -105,27 +102,40 @@ object Pipeline {
     }
   }
 
-  /** All three level results of a frame with `light_raw` /
-    * `premium_raw` / `optimum_raw` staged as columns r_l / r_p / r_o;
-    * each later level's parse is skipped per-row once an earlier level
-    * is accepted (the skipped column degrades to a cheap placeholder
-    * the cascade never reads).
+  /** `docs` with `first_media_ref` staged: the map-only input of every
+    * [[OcrText]] level column (no typed round-trip).
     */
-  private def autoStaged(ocr: DataFrame): DataFrame = {
-    val d1 = withLevelResult(ocr, "light_raw", "r_l")
+  private def ocrInput(docs: Dataset[DocRow]): DataFrame =
+    docs.toDF().withColumn("first_media_ref", FirstMediaRef.of(col("spans")))
+
+  private def ocrText(level: String): Column = OcrText.of(col("spans"), level)
+
+  /** All three level results r_l / r_p / r_o of `df`, each level's raw
+    * text staged as `<level>_raw` from `raw(level)`. A later level's raw
+    * text sits behind a CASE gate on the earlier levels' acceptance, and
+    * CASE branches evaluate lazily: a doc light accepts never reaches
+    * premium or optimum OCR — the reference's early exit
+    * (`app.py:153-189`) with no persist, union or join. A gated-off
+    * level reads NULL (an empty parse); the cascade never reads it.
+    */
+  private def autoStaged(df: DataFrame, raw: String => Column): DataFrame = {
+    val nullRaw = lit(null).cast("string")
+    val d1 = withLevelResult(df.withColumn("light_raw", raw("light")), "light_raw", "r_l")
     val accL = TshExtract.acceptWithRange(col("r_l"))
-    val d2 = withLevelResult(d1, "premium_raw", "r_p",
-      reuse = Some(("light_raw", "r_l")), skipWhen = Some(accL))
+    val d2 = withLevelResult(
+      d1.withColumn("premium_raw", when(accL, nullRaw).otherwise(raw("premium"))),
+      "premium_raw", "r_p", reuse = Some(("light_raw", "r_l")))
     val accP = TshExtract.acceptWithRange(col("r_p"))
-    withLevelResult(d2, "optimum_raw", "r_o",
-      reuse = Some(("premium_raw", "r_p")), skipWhen = Some(accL || accP))
+    withLevelResult(
+      d2.withColumn("optimum_raw", when(accL || accP, nullRaw).otherwise(raw("optimum"))),
+      "optimum_raw", "r_o", reuse = Some(("premium_raw", "r_p")))
   }
 
   /** Audit metric: which cascade level resolves each doc (`app.py`
     * acceptance order) — the realized level mix of auto mode.
     */
   def levelMix(docs: Dataset[DocRow]): DataFrame =
-    autoStaged(ocrAll(docs).toDF())
+    autoStaged(ocrInput(docs), ocrText)
       .withColumn("resolved_level",
         when(TshExtract.acceptWithRange(col("r_l")), "light")
           .when(TshExtract.acceptWithRange(col("r_p")), "premium")
@@ -140,12 +150,12 @@ object Pipeline {
     requireMode(mode)
     mode match {
       case "auto" =>
-        autoStaged(ocrAll(docs).toDF())
+        autoStaged(ocrInput(docs), ocrText)
           .withColumn("r",
             TshExtract.cascadeAuto(col("r_l"), col("r_p"), col("r_o")))
           .select("doc_id", "first_media_ref", "r")
       case level =>
-        withLevelResult(ocrLevel(docs, level).toDF(), "raw", "r")
+        withLevelResult(ocrInput(docs).withColumn("raw", ocrText(level)), "raw", "r")
           .select("doc_id", "first_media_ref", "r")
     }
   }
@@ -215,15 +225,17 @@ object Pipeline {
     * re-assembled with one bounded groupBy — so one monster doc cannot
     * pin a task. Normal docs take the map-only path; results are
     * unioned. Only the requested mode's levels are OCR'd: an explicit
-    * `light` run pays ONE ocrPage call per heavy-doc page, not three
-    * (auto computes all three for its columnar cascade).
+    * `light` run pays ONE ocrPage call per heavy-doc page, not three.
+    * In auto mode the heavy per-page stage still OCRs all three levels
+    * (a page cannot see its doc's light verdict before the reassembly);
+    * only the normal docs' map-only path exits early.
     */
   def extractSkewAware(docs: Dataset[DocRow], mode: String,
       threshold: Int = 16): DataFrame = {
     requireMode(mode)
     import docs.sparkSession.implicits._
     val spark = docs.sparkSession
-    val neededLevels = if (mode == "auto") Levels else Seq(mode)
+    val neededLevels = if (mode == "auto") OcrText.Levels else Seq(mode)
     val withCount = docs
       .withColumn("n_media", size(filter(col("spans"), s => s("kind") === lit("media"))))
     val normal = withCount.filter(col("n_media") <= threshold)
@@ -275,7 +287,7 @@ object Pipeline {
 
     val heavyRes = mode match {
       case "auto" =>
-        autoStaged(assembled).withColumn("r",
+        autoStaged(assembled, lv => col(s"${lv}_raw")).withColumn("r",
           TshExtract.cascadeAuto(col("r_l"), col("r_p"), col("r_o")))
       case lv =>
         withLevelResult(assembled, s"${lv}_raw", "r")

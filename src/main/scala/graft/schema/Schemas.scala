@@ -29,12 +29,14 @@ final case class OcrBox(text: String, left: Int, top: Int, width: Int, height: I
   */
 final case class LevelOcr(rawText: Option[String], boxes: Seq[OcrBox])
 
-/** Per-document OCR output for all three levels (columnar cascade input).
+/** Per-document OCR output for all three levels, boxes included — the
+  * audit/QC surface of `Pipeline.ocrAll` (the extraction paths OCR
+  * through `OcrText` columns and never build this row).
   * `first_media_ref` = media_ref of the first media span in offset order
   * ("" if the doc has no media spans); it tags the raw_text output span.
   * Box content (not just a count) is carried per `ocr_engine.py:88-97`;
   * Catalyst prunes the box columns from any plan that doesn't read them
-  * (the parse path doesn't — quirk Q1), so the hot path pays nothing.
+  * (a parse over these raw texts doesn't — quirk Q1).
   */
 final case class DocOcrAll(
     doc_id: String,

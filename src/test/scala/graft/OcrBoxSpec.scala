@@ -33,8 +33,12 @@ class OcrBoxSpec extends AnyFunSuite {
   }
 
   test("Q1: the parse plan never reads box columns (pruned before OCR output)") {
+    // the extraction paths OCR through OcrText columns and never build
+    // box structs; the box-carrying ocrAll is where pruning must hold
     val docs = Corpus.generate(spark, 16)
-    val plan = Pipeline.results(docs, "auto").queryExecution.optimizedPlan.toString
+    val plan = Pipeline.withLevelResult(Pipeline.ocrAll(docs).toDF(), "premium_raw", "r")
+      .select("doc_id", "first_media_ref", "r").queryExecution.optimizedPlan.toString
+    assert(plan.contains("premium_raw"), plan)
     assert(!plan.contains("premium_boxes") && !plan.contains("optimum_boxes"),
       "box columns leaked into the parse plan — ObjectSerializerPruning regressed")
   }
