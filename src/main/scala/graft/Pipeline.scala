@@ -86,22 +86,6 @@ object Pipeline {
     }
   }
 
-  /** OCR a single level (iterative cascade stages).
-    * Carries the original spans so later cascade stages need no join
-    * back to the source (filter-carry instead of the anti-join form,
-    * SURVEY.md §2.4.1).
-    */
-  def ocrLevel(docs: Dataset[DocRow], level: String): Dataset[DocOcrOne] = {
-    import docs.sparkSession.implicits._
-    docs.mapPartitions { it =>
-      val eng = OcrEnginePool.engine
-      it.map { d =>
-        val r = OcrRun.ocrDoc(eng, level, d.spans)
-        DocOcrOne(d.doc_id, OcrRun.firstMediaRef(d.spans), r.rawText, r.boxes, d.spans)
-      }
-    }
-  }
-
   /** `docs` with `first_media_ref` staged: the map-only input of every
     * [[OcrText]] level column (no typed round-trip).
     */
@@ -160,34 +144,31 @@ object Pipeline {
     }
   }
 
-  /** Iterative auto cascade (SURVEY.md §2.4.1 option 2): run each level
-    * only over still-pending docs — matches the reference's lazy
-    * early-exit cost model (`app.py:153-189`), the right choice when OCR
-    * dominates. Join-free: pending rows carry their spans forward, so
-    * each stage is filter + map. Persisting the stage outputs
+  /** Iterative auto cascade (SURVEY.md §2.4.1 option 2): each level's
+    * [[OcrText]] column runs only over the docs the earlier levels left
+    * pending. Join-free: pending rows carry their spans forward, so each
+    * stage is filter + projection. Persisting the stage outputs
     * (MEMORY_AND_DISK) bounds the recomputation the two downstream
-    * consumers (accepted / pending) would otherwise trigger.
+    * consumers (accepted / pending) would otherwise trigger. Reached
+    * through `extract(..., iterative = true)`; it makes the same OCR
+    * calls as the columnar cascade's gates.
     */
-  def resultsAutoIterative(docs: Dataset[DocRow]): DataFrame = {
-    import docs.sparkSession.implicits._
-
-    def stage(in: Dataset[DocRow], level: String): DataFrame =
-      withLevelResult(ocrLevel(in, level).toDF(), "raw", "r")
-        .select(col("doc_id"), col("first_media_ref"), col("spans"), col("r"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    val s1 = stage(docs, "light")
-    val pend1 = s1.filter(!TshExtract.acceptWithRange(col("r")))
-      .select(col("doc_id"), col("spans")).as[DocRow]
-    val s2 = stage(pend1, "premium")
-    val pend2 = s2.filter(!TshExtract.acceptWithRange(col("r")))
-      .select(col("doc_id"), col("spans")).as[DocRow]
+  private def resultsAutoIterative(docs: Dataset[DocRow]): DataFrame = {
+    val carry = Seq("doc_id", "first_media_ref", "spans").map(col)
+    def stage(in: DataFrame, level: String): DataFrame =
+      withLevelResult(in.withColumn("raw", ocrText(level)), "raw", "r")
+        .select(carry :+ col("r"): _*)
+    def persisted(in: DataFrame, level: String): DataFrame =
+      stage(in, level).persist(StorageLevel.MEMORY_AND_DISK)
+    def pending(s: DataFrame): DataFrame =
+      s.filter(!TshExtract.acceptWithRange(col("r"))).select(carry: _*)
+    val s1 = persisted(ocrInput(docs), "light")
+    val s2 = persisted(pending(s1), "premium")
     // optimum: accepted if parsed at all; otherwise the failure row keeps
     // optimum's error/raw_text (`app.py:179-196`)
     val o = col("r")
-    val s3 = withLevelResult(ocrLevel(pend2, "optimum").toDF(), "raw", "r")
-      .select(col("doc_id"), col("first_media_ref"),
-        when(o("ok"), o).otherwise(
-          TshExtract.failure(o("error"), o("raw_text"))).as("r"))
+    val s3 = stage(pending(s2), "optimum")
+      .withColumn("r", when(o("ok"), o).otherwise(TshExtract.failure(o("error"), o("raw_text"))))
 
     val sel = Seq("doc_id", "first_media_ref", "r").map(col)
     s1.filter(TshExtract.acceptWithRange(col("r"))).select(sel: _*)
@@ -219,66 +200,63 @@ object Pipeline {
       .select(col("doc_id"), col("s.kind"), col("s.text"),
         col("s.media_ref"), col("s.order"))
 
-  /** Skew-aware variant (SURVEY.md §4.8): docs whose media-span count
-    * exceeds `threshold` (oversized multi-page PDFs) have their spans
-    * exploded to rows, hashed across the cluster, OCR'd per page, and
-    * re-assembled with one bounded groupBy — so one monster doc cannot
-    * pin a task. Normal docs take the map-only path; results are
-    * unioned. Only the requested mode's levels are OCR'd: an explicit
-    * `light` run pays ONE ocrPage call per heavy-doc page, not three.
-    * In auto mode the heavy per-page stage still OCRs all three levels
-    * (a page cannot see its doc's light verdict before the reassembly);
-    * only the normal docs' map-only path exits early.
+  /** Media-span count above which [[extractSkewAware]] routes a doc
+    * through the page-exploded path. Normal docs have at most 3 media
+    * spans and oversized multi-page PDFs 50-200 (`Corpus.spanKinds`),
+    * so any value in between routes the same docs.
     */
-  def extractSkewAware(docs: Dataset[DocRow], mode: String,
-      threshold: Int = 16): DataFrame = {
+  val SkewMediaSpans = 16
+
+  /** Skew-aware variant (SURVEY.md §4.8): docs with more than
+    * [[SkewMediaSpans]] media spans (oversized multi-page PDFs) have
+    * their spans exploded to rows, hashed across the cluster, OCR'd per
+    * page, and re-assembled with one bounded groupBy — so one monster
+    * doc cannot pin a task. Normal docs take the map-only path; results
+    * are unioned. Only the requested mode's levels are OCR'd: an
+    * explicit `light` run pays ONE ocrPage call per heavy-doc page, not
+    * three. In auto mode the heavy per-page stage still OCRs all three
+    * levels (a page cannot see its doc's light verdict before the
+    * reassembly); only the normal docs' map-only path exits early.
+    */
+  def extractSkewAware(docs: Dataset[DocRow], mode: String): DataFrame = {
     requireMode(mode)
     import docs.sparkSession.implicits._
     val spark = docs.sparkSession
     val neededLevels = if (mode == "auto") OcrText.Levels else Seq(mode)
     val withCount = docs
       .withColumn("n_media", size(filter(col("spans"), s => s("kind") === lit("media"))))
-    val normal = withCount.filter(col("n_media") <= threshold)
-      .select(col("doc_id"), col("spans")).as[DocRow]
-    val heavy = withCount.filter(col("n_media") > threshold)
+    val normal = withCount.filter(col("n_media") <= SkewMediaSpans)
       .select(col("doc_id"), col("spans")).as[DocRow]
 
-    // one row per (doc, span), spread by (doc_id, offset)
-    val perSpan = heavy.flatMap(d => d.spans.map(s =>
-        (d.doc_id, s.offset, s.kind, s.media_ref, s.text)))
-      .toDF("doc_id", "offset", "kind", "media_ref", "text")
+    // one row per (doc, span), spread by (doc_id, offset); the doc's
+    // first_media_ref rides along as part of the reassembly key
+    val perSpan = withCount.filter(col("n_media") > SkewMediaSpans)
+      .select(col("doc_id"), FirstMediaRef.of(col("spans")).as("first_media_ref"),
+        explode_outer(col("spans")).as("span"))
       .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("doc_id"), col("offset"))
-    val ocrd = perSpan.as[(String, Int, String, String, String)].mapPartitions { it =>
+        col("doc_id"), col("span.offset"))
+    // heavy docs carry box COUNTS only (the failure rule's requirement)
+    // — shuffling a 200-page doc's full box structs would defeat the
+    // bounded-shuffle point; box content for QC is available via ocrAll
+    val ocrd = perSpan.as[(String, String, DocSpan)].mapPartitions { it =>
       val eng = OcrEnginePool.engine
-      it.map { case (docId, off, kind, ref, text) =>
-        val (texts, boxes) =
-          if (kind == "media") {
-            val rs = neededLevels.map(lv => eng.ocrPage(lv, ref))
-            (rs.map(_._1), rs.map(_._2.length))
-          } else (neededLevels.map(_ => text), neededLevels.map(_ => 0))
-        (docId, off, kind, ref, texts, boxes)
+      it.map { case (docId, firstRef, s) =>
+        val parts = neededLevels.map { lv =>
+          val (text, boxes) = OcrRun.spanPart(eng, lv, s)
+          (text, boxes.length)
+        }
+        (docId, firstRef, s.offset, parts.map(_._1), parts.map(_._2))
       }
-    }.toDF("doc_id", "offset", "kind", "media_ref", "texts", "n_boxes")
+    }.toDF("doc_id", "first_media_ref", "offset", "texts", "n_boxes")
 
     // the one (bounded, balanced) shuffle: reassemble per-doc raw texts
-    val assembled = ocrd.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("offset"), col("kind"),
-        col("media_ref"), col("texts"), col("n_boxes")))).as("parts"))
-      .as[(String, Seq[(Int, String, String, Seq[String], Seq[Int])])]
-      .map { case (docId, parts) =>
-        val firstRef = parts.collectFirst { case p if p._2 == "media" => p._3 }
-          .getOrElse("")
-        // heavy docs reassemble box COUNTS only (the failure rule's
-        // requirement) — shuffling a 200-page doc's full box structs
-        // would defeat the bounded-shuffle point; box content for QC is
-        // available via ocrAll on the doc in question
-        val raws = neededLevels.zipWithIndex.map { case (lv, li) =>
-          val raw = parts.map(_._4(li)).mkString("\n")
-          val nb = parts.map(_._5(li)).sum
-          if (OcrRun.isFailed(lv, raw, nb)) null else raw
-        }
-        (docId, firstRef, raws)
+    val assembled = ocrd.groupBy(col("doc_id"), col("first_media_ref"))
+      .agg(collect_list(struct(col("offset"), col("texts"), col("n_boxes"))).as("parts"))
+      .as[(String, String, Seq[(Int, Seq[String], Seq[Int])])]
+      .map { case (docId, firstRef, parts) =>
+        (docId, firstRef, neededLevels.indices.map { li =>
+          OcrRun.docText(neededLevels(li), parts.map(p => (p._1, p._2(li), p._3(li)))).orNull
+        })
       }.toDF("doc_id", "first_media_ref", "raws")
       .select(col("doc_id") +: col("first_media_ref") +:
         neededLevels.zipWithIndex.map { case (lv, li) =>

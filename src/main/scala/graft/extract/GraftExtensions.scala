@@ -25,184 +25,68 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftFunctions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+  import org.apache.spark.sql.types.{IntegerType, StringType}
+  import org.apache.spark.unsafe.types.UTF8String
 
-  /** SQL-path builder: the same one-config gather the DataFrame path
-    * builds (`MultiAnalyteGather.one`), so a null input behaves like the
-    * reference's `_normalize_text(None) -> ''` (empty candidate array,
-    * tsh.py:39-40). Arity is validated here — `args.head` alone would
-    * silently drop extras and throw an opaque error on zero args.
+  import graft.analysis._
+  import graft.media.DHash64
+
+  /** One SQL call's arguments; `int` / `string` read a plan-time literal
+    * (it sizes an output array or heap, or compiles a regex).
     */
-  private def build(args: Seq[Expression]): Expression = {
-    if (args.length != 1)
-      throw new IllegalArgumentException(
-        s"tsh_gather_candidates expects exactly 1 argument, got ${args.length}")
-    MultiAnalyteGather.one(args.head, AnalyteExtract.Tsh)
+  private final class Args(fn: String, exprs: Seq[Expression]) {
+    def apply(i: Int): Expression = exprs(i)
+    def int(i: Int): Int = literal(i, "an integer") { case Literal(v: Int, IntegerType) => v }
+    def string(i: Int): String =
+      literal(i, "a string") { case Literal(v: UTF8String, _: StringType) => v.toString }
+
+    private def literal[T](i: Int, kind: String)(read: PartialFunction[Expression, T]): T =
+      read.applyOrElse(exprs(i), (other: Expression) => throw new IllegalArgumentException(
+        s"$fn: argument ${i + 1} must be $kind literal, got $other"))
   }
 
-  val tshGatherCandidates: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("tsh_gather_candidates"),
-    new ExpressionInfo(classOf[MultiAnalyteGather].getName,
-      "tsh_gather_candidates"),
-    build(_))
-
-  /** Second argument of the sketch functions must be a literal int
-    * (it sizes the output array at plan time).
+  /** (SQL name, implementing class, arity, builder). Every builder returns
+    * the same catalyst tree as the DataFrame path: `tsh_gather_candidates`
+    * and `analyte_gather_candidates` are the one-config gather
+    * (`MultiAnalyteGather.one`, NULL raw -> `[]` like the reference's
+    * `_normalize_text(None) -> ''`, tsh.py:39-40); strip_markup,
+    * redact_pii and url_host are compositions of built-ins shared with
+    * TextOps, so SQL users inherit their codegen and null propagation;
+    * `bounded_top_k` returns the bare AggregateFunction, which the
+    * analyzer wraps like any built-in aggregate.
     */
-  private def litInt(args: Seq[Expression], fn: String): Int = args(1) match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: second argument must be an integer literal, got $other")
-  }
+  private val table: Seq[(String, Class[_], Int, Args => Expression)] = Seq(
+    ("tsh_gather_candidates", classOf[MultiAnalyteGather], 1,
+      a => MultiAnalyteGather.one(a(0), AnalyteExtract.Tsh)),
+    ("analyte_gather_candidates", classOf[MultiAnalyteGather], 3,
+      a => MultiAnalyteGather.one(a(0),
+        AnalyteConfig("analyte_gather_candidates", a.string(1), a.string(2)))),
+    ("shingle_hashes", classOf[ShingleHashes], 2, a => ShingleHashes(a(0), a.int(1))),
+    ("minhash_signature", classOf[MinhashSignature], 2,
+      a => MinhashSignature(a(0), a.int(1))),
+    ("minhash_band_keys", classOf[MinhashBandKeys], 2, a => MinhashBandKeys(a(0), a.int(1))),
+    ("simhash64", classOf[Simhash64], 1, a => Simhash64(a(0))),
+    ("cosine_sim", classOf[CosineSim], 2, a => CosineSim(a(0), a(1))),
+    ("sign_buckets", classOf[SignBuckets], 3, a => SignBuckets(a(0), a.int(1), a.int(2))),
+    ("strip_markup", TextOps.getClass, 1, a => TextOps.stripMarkupExpr(a(0))),
+    ("redact_pii", TextOps.getClass, 1, a => TextOps.redactPiiExpr(a(0))),
+    ("url_host", TextOps.getClass, 1, a => TextOps.urlHostExpr(a(0))),
+    ("bounded_top_k", classOf[BoundedTopKAgg], 3, a => BoundedTopKAgg(a(0), a(1), a.int(2))),
+    ("dhash64", classOf[DHash64], 1, a => DHash64(a(0))))
 
-  private def buildShingles(args: Seq[Expression]): Expression = {
-    if (args.length != 2)
-      throw new IllegalArgumentException(
-        s"shingle_hashes expects (tokens, n), got ${args.length} arguments")
-    graft.analysis.ShingleHashes(args.head, litInt(args, "shingle_hashes"))
-  }
-
-  private def buildMinhash(args: Seq[Expression]): Expression = {
-    if (args.length != 2)
-      throw new IllegalArgumentException(
-        s"minhash_signature expects (hashes, m), got ${args.length} arguments")
-    graft.analysis.MinhashSignature(args.head, litInt(args, "minhash_signature"))
-  }
-
-  val shingleHashes: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingle_hashes"),
-    new ExpressionInfo(classOf[graft.analysis.ShingleHashes].getName,
-      "shingle_hashes"),
-    buildShingles(_))
-
-  val minhashSignature: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_signature"),
-    new ExpressionInfo(classOf[graft.analysis.MinhashSignature].getName,
-      "minhash_signature"),
-    buildMinhash(_))
-
-  private def arity(args: Seq[Expression], n: Int, fn: String): Unit =
-    if (args.length != n)
-      throw new IllegalArgumentException(
-        s"$fn expects exactly $n argument(s), got ${args.length}")
-
-  private def litStr(args: Seq[Expression], i: Int, fn: String): String =
-    args(i) match {
-      case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString
-      case other => throw new IllegalArgumentException(
-        s"$fn: argument ${i + 1} must be a string literal, got $other")
+  /** The full fused-expression SQL surface. Arity is checked before the
+    * builder runs: `args.head` alone would silently drop extras and
+    * throw an opaque error on zero args.
+    */
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    table.map { case (name, cls, arity, build) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => {
+          if (args.length != arity) throw new IllegalArgumentException(
+            s"$name expects exactly $arity argument(s), got ${args.length}")
+          build(new Args(name, args))
+        })
     }
-
-  private def buildSimhash(args: Seq[Expression]): Expression = {
-    arity(args, 1, "simhash64")
-    graft.analysis.Simhash64(args.head)
-  }
-
-  private def buildCosine(args: Seq[Expression]): Expression = {
-    arity(args, 2, "cosine_sim")
-    graft.analysis.CosineSim(args.head, args(1))
-  }
-
-  private def buildSignBuckets(args: Seq[Expression]): Expression = {
-    arity(args, 3, "sign_buckets")
-    graft.analysis.SignBuckets(args.head,
-      litInt(args, "sign_buckets"), args(2) match {
-        case Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"sign_buckets: third argument must be an integer literal, got $other")
-      })
-  }
-
-  private def buildBandKeys(args: Seq[Expression]): Expression = {
-    arity(args, 2, "minhash_band_keys")
-    graft.analysis.MinhashBandKeys(args.head, litInt(args, "minhash_band_keys"))
-  }
-
-  private def buildAnalyteGather(args: Seq[Expression]): Expression = {
-    arity(args, 3, "analyte_gather_candidates")
-    MultiAnalyteGather.one(args.head, AnalyteConfig("analyte_gather_candidates",
-      litStr(args, 1, "analyte_gather_candidates"),
-      litStr(args, 2, "analyte_gather_candidates")))
-  }
-
-  /** strip_markup is a COMPOSITION of built-in expressions, not a
-    * native one — both surfaces return the SAME catalyst chain
-    * (TextOps.stripMarkupExpr), so SQL users inherit its codegen and
-    * null propagation (null -> null) unchanged.
-    */
-  private def buildStripMarkup(args: Seq[Expression]): Expression = {
-    arity(args, 1, "strip_markup")
-    graft.analysis.TextOps.stripMarkupExpr(args.head)
-  }
-
-  /** redact_pii / url_host: compositions sharing the DataFrame path's
-    * catalyst chain, same contract as strip_markup.
-    */
-  private def buildRedactPii(args: Seq[Expression]): Expression = {
-    arity(args, 1, "redact_pii")
-    graft.analysis.TextOps.redactPiiExpr(args.head)
-  }
-
-  private def buildUrlHost(args: Seq[Expression]): Expression = {
-    arity(args, 1, "url_host")
-    graft.analysis.TextOps.urlHostExpr(args.head)
-  }
-
-  /** bounded_top_k(quality, id, k): the capped top-k AGGREGATE — the
-    * registry builder returns the bare AggregateFunction; the analyzer
-    * wraps it in an AggregateExpression like any built-in agg. k sizes
-    * the heap, so it must be a literal.
-    */
-  private def buildBoundedTopK(args: Seq[Expression]): Expression = {
-    arity(args, 3, "bounded_top_k")
-    graft.analysis.BoundedTopKAgg(args.head, args(1), args(2) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"bounded_top_k: third argument must be an integer literal, got $other")
-    })
-  }
-
-  private def buildDHash(args: Seq[Expression]): Expression = {
-    arity(args, 1, "dhash64")
-    graft.media.DHash64(args.head)
-  }
-
-  private def info(cls: Class[_], name: String) =
-    new ExpressionInfo(cls.getName, name)
-
-  /** The full fused-expression SQL surface. */
-  val all: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    tshGatherCandidates, shingleHashes, minhashSignature,
-    (FunctionIdentifier("simhash64"),
-      info(classOf[graft.analysis.Simhash64], "simhash64"), buildSimhash(_)),
-    (FunctionIdentifier("cosine_sim"),
-      info(classOf[graft.analysis.CosineSim], "cosine_sim"), buildCosine(_)),
-    (FunctionIdentifier("sign_buckets"),
-      info(classOf[graft.analysis.SignBuckets], "sign_buckets"),
-      buildSignBuckets(_)),
-    (FunctionIdentifier("minhash_band_keys"),
-      info(classOf[graft.analysis.MinhashBandKeys], "minhash_band_keys"),
-      buildBandKeys(_)),
-    (FunctionIdentifier("analyte_gather_candidates"),
-      info(classOf[MultiAnalyteGather], "analyte_gather_candidates"),
-      buildAnalyteGather(_)),
-    (FunctionIdentifier("strip_markup"),
-      info(graft.analysis.TextOps.getClass, "strip_markup"),
-      buildStripMarkup(_)),
-    (FunctionIdentifier("redact_pii"),
-      info(graft.analysis.TextOps.getClass, "redact_pii"),
-      buildRedactPii(_)),
-    (FunctionIdentifier("url_host"),
-      info(graft.analysis.TextOps.getClass, "url_host"),
-      buildUrlHost(_)),
-    (FunctionIdentifier("bounded_top_k"),
-      info(classOf[graft.analysis.BoundedTopKAgg], "bounded_top_k"),
-      buildBoundedTopK(_)),
-    (FunctionIdentifier("dhash64"),
-      info(classOf[graft.media.DHash64], "dhash64"), buildDHash(_)))
 
   /** Imperative registration on an already-built session. */
   def register(spark: SparkSession): Unit = {

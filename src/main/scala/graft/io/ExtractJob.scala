@@ -12,16 +12,16 @@ import graft.schema.DocRow
   *
   * The work unit is a doc_id hash bucket (`pmod(xxhash64(doc_id), B)`).
   * Per bucket the job writes results and then commits one audit record;
-  * both go through the [[DocTableIO]] seam (Parquet + JSON-manifest
-  * here, `.format("iceberg")` on a real cluster — the commit protocol
-  * is identical). Resume = re-run with the same run_id: committed
+  * both go through the [[DocTableIO]] seam ([[ParquetTableIO]] here,
+  * an Iceberg implementation of the trait on a real cluster — the
+  * commit protocol is identical). Resume = re-run with the same run_id: committed
   * buckets are skipped exactly; a half-written bucket without its audit
   * record is rewritten (overwrite), so results are exactly-once per
   * doc_id.
   *
   * Extraction takes the skew-aware path: oversized multi-page docs
-  * (media-span count > `skewThreshold`) are page-exploded across the
-  * cluster and reassembled with one bounded shuffle, so a single
+  * (more than `Pipeline.SkewMediaSpans` media spans) are page-exploded
+  * across the cluster and reassembled with one bounded shuffle, so a single
   * 200-page doc cannot pin a whole bucket's wall time to one task
   * (GoldenSpec proves the path span-identical to the map-only one).
   *
@@ -36,30 +36,21 @@ object ExtractJob {
       n_ocr_failed: Long, n_not_found: Long, wall_ms: Long,
       committed_at_ms: Long)
 
-  def committedBuckets(outDir: String, runId: String,
-      io: DocTableIO = ParquetTableIO): Set[Int] =
-    io.committedBuckets(outDir, runId)
-
-  def readAudit(outDir: String, runId: String,
-      io: DocTableIO = ParquetTableIO): Seq[AuditRecord] =
-    io.readAudit(outDir, runId)
-
   /** Run (or resume) an extraction over `docs`. Returns the audit
-    * records committed by THIS invocation. `failAfterBucket` injects a
-    * crash after the k-th processed bucket commits (resume tests).
+    * records committed by THIS invocation. Committed buckets and the
+    * audit trail are read through the seam (`io.committedBuckets`,
+    * `io.readAudit`).
     */
   def run(spark: SparkSession, docs: Dataset[DocRow], mode: String,
       outDir: String, runId: String, buckets: Int = 16,
-      failAfterBuckets: Int = -1, skewThreshold: Int = 16,
       io: DocTableIO = ParquetTableIO): Seq[AuditRecord] = {
     val done = io.committedBuckets(outDir, runId)
     val pending = (0 until buckets).filterNot(done)
-    var processed = 0
     val out = Seq.newBuilder[AuditRecord]
     pending.foreach { k =>
       val t0 = System.nanoTime()
       val subset = docs.filter(pmod(xxhash64(col("doc_id")), lit(buckets)) === k)
-      val spansDf = Pipeline.extractSkewAware(subset, mode, skewThreshold)
+      val spansDf = Pipeline.extractSkewAware(subset, mode)
       io.writeBucket(spansDf, outDir, k)
       // metrics from the just-written bucket (no recompute)
       val written = io.readBucket(spark, outDir, k)
@@ -80,10 +71,6 @@ object ExtractJob {
         (System.nanoTime() - t0) / 1000000, System.currentTimeMillis())
       io.commitAudit(outDir, rec)
       out += rec
-      processed += 1
-      if (failAfterBuckets > 0 && processed >= failAfterBuckets)
-        throw new RuntimeException(
-          s"injected failure after $processed buckets (resume test)")
     }
     out.result()
   }

@@ -28,7 +28,7 @@ object ExtractJobMain {
     try {
       val docs = Corpus.generate(spark, nDocs, skew = true)
       val recs = ExtractJob.run(spark, docs, mode, outDir, runId, buckets)
-      val all = ExtractJob.readAudit(outDir, runId)
+      val all = ParquetTableIO.readAudit(outDir, runId)
       println(s"[extract-job] committed ${recs.size} buckets this run; " +
         s"${all.size}/$buckets total; docs=${all.map(_.n_docs).sum} " +
         s"ok=${all.map(_.n_ok).sum} ocr_failed=${all.map(_.n_ocr_failed).sum} " +

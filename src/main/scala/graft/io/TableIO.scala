@@ -12,7 +12,7 @@ import graft.io.ExtractJob.AuditRecord
 /** Storage seam for the audited extraction job (SURVEY.md §7.1): the
   * job talks to `read / append(bucket write) / snapshotCommit(audit)`
   * and never to paths or formats directly, so the Iceberg-or-Parquet
-  * choice is a constructor argument, not a code change.
+  * choice is which implementation is passed, not a code change.
   *
   * The sandbox ships no Iceberg runtime jar, so the default
   * implementation is Parquet + a JSON-manifest audit "table" whose
@@ -21,7 +21,7 @@ import graft.io.ExtractJob.AuditRecord
   * manifest listing for resume (Iceberg's snapshot list), idempotent
   * per-bucket overwrite (Iceberg's overwrite-partition).
   *
-  * Scope of the default impl (be honest about the seam): FormatTableIO
+  * Scope of the default impl (be honest about the seam): ParquetTableIO
   * is parquet-over-a-path + local-filesystem audit. Its `readResults`
   * path glob and java.nio atomic rename do NOT transfer to an Iceberg
   * table or to object storage (no atomic rename on S3); a real Iceberg
@@ -53,27 +53,25 @@ trait DocTableIO extends Serializable {
   def readAudit(outDir: String, runId: String): Seq[AuditRecord]
 }
 
-/** Path-based DataSource implementation ("parquet" here; any V1/V2
-  * path-addressed format works). The audit manifest is written and read
-  * with the Jackson shipped in Spark — real JSON both ways, so an
-  * AuditRecord field containing quotes/backslashes/newlines round-trips
+/** Parquet-over-a-path implementation, one directory per bucket. The
+  * audit manifest is written and read with the Jackson shipped in
+  * Spark — real JSON both ways, so an AuditRecord field containing quotes/backslashes/newlines round-trips
   * (a ResumeSpec property test pins this).
   */
-class FormatTableIO(format: String = "parquet") extends DocTableIO {
+object ParquetTableIO extends DocTableIO {
 
   @transient private lazy val mapper =
     new com.fasterxml.jackson.databind.ObjectMapper()
 
   override def writeBucket(df: DataFrame, outDir: String, bucket: Int): Unit =
-    df.write.mode("overwrite").format(format).save(s"$outDir/bucket=$bucket")
+    df.write.mode("overwrite").parquet(s"$outDir/bucket=$bucket")
 
   override def readBucket(spark: SparkSession, outDir: String,
       bucket: Int): DataFrame =
-    spark.read.format(format).load(s"$outDir/bucket=$bucket")
+    spark.read.parquet(s"$outDir/bucket=$bucket")
 
   override def readResults(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("basePath", outDir).format(format)
-      .load(s"$outDir/bucket=*")
+    spark.read.option("basePath", outDir).parquet(s"$outDir/bucket=*")
 
   private def auditDir(outDir: String, runId: String): Path =
     Paths.get(outDir, "_audit", runId)
@@ -122,5 +120,3 @@ class FormatTableIO(format: String = "parquet") extends DocTableIO {
       }.sortBy(_.bucket)
   }
 }
-
-object ParquetTableIO extends FormatTableIO("parquet")

@@ -1,7 +1,7 @@
 package graft.media
 
 import graft.corpus.Corpus
-import graft.schema.{LevelOcr, OcrBox}
+import graft.schema.{DocSpan, LevelOcr, OcrBox}
 
 /** Boundary to the opaque media/OCR stack (reference `ocr_engine.py`).
   *
@@ -100,45 +100,47 @@ object OcrEnginePool {
 }
 
 object OcrRun {
-  /** Reference level-failure semantics (`app.py:91-92` via
-    * `ocr_engine.py`): light fails on blank text
-    * (`ocr_engine.py:142-144`); premium/optimum fail only when text and
-    * boxes are both empty (`ocr_engine.py:197-199,266-268`).
+  /** One span's part of a document at one level: a media span's OCR'd
+    * page (text, boxes), a text span's inline text verbatim (no boxes).
     */
-  /** Level-failure predicate over (text, box count) — shared by the
-    * full-box path below and the skew path's count-only reassembly.
+  def spanPart(engine: OcrEngine, level: String, s: DocSpan): (String, Seq[OcrBox]) =
+    if (s.kind == "media") engine.ocrPage(level, s.media_ref) else (s.text, Seq.empty)
+
+  /** One document's raw text at one level from its span parts' texts
+    * in offset order and their total box count: the texts joined with
+    * '\n', None when the level fails (`app.py:91-92` via
+    * `ocr_engine.py`): light on blank text (`ocr_engine.py:142-144`),
+    * premium/optimum only when text and boxes are both empty
+    * (`ocr_engine.py:197-199,266-268`).
     */
-  def isFailed(level: String, rawText: String, nBoxes: Int): Boolean = {
-    val blank = rawText.trim.isEmpty
-    if (level == "light") blank else blank && nBoxes == 0
+  def levelText(level: String, texts: Seq[String], nBoxes: Int): Option[String] = {
+    val raw = texts.mkString("\n")
+    val blank = raw.trim.isEmpty
+    val failed = if (level == "light") blank else blank && nBoxes == 0
+    if (failed) None else Some(raw)
   }
 
-  def levelResult(level: String, rawText: String,
-      boxes: Seq[OcrBox]): LevelOcr =
-    LevelOcr(if (isFailed(level, rawText, boxes.length)) None else Some(rawText),
-      boxes)
-
-  /** Assemble one document's OCR output at one level: spans in offset
-    * order; text spans contribute their inline text verbatim, media
-    * spans their OCR'd page text; joined with '\n'. Boxes concatenate
-    * in the same span order (`ocr_engine.py` emits them in token order
-    * per page).
+  /** One document's OCR output at one level; boxes concatenate in span
+    * order (`ocr_engine.py` emits them in token order per page).
     */
-  def ocrDoc(engine: OcrEngine, level: String,
-      spans: Seq[graft.schema.DocSpan]): LevelOcr = {
-    val ordered = spans.sortBy(_.offset)
-    val allBoxes = Seq.newBuilder[OcrBox]
-    val parts = ordered.map { s =>
-      if (s.kind == "media") {
-        val (t, boxes) = engine.ocrPage(level, s.media_ref)
-        allBoxes ++= boxes
-        t
-      } else s.text
+  def ocrDoc(engine: OcrEngine, level: String, spans: Seq[DocSpan]): LevelOcr = {
+    val boxes = Seq.newBuilder[OcrBox]
+    val texts = spans.sortBy(_.offset).map { s =>
+      val (t, b) = spanPart(engine, level, s)
+      boxes ++= b
+      t
     }
-    levelResult(level, parts.mkString("\n"), allBoxes.result())
+    val all = boxes.result()
+    LevelOcr(levelText(level, texts, all.length), all)
   }
 
-  def firstMediaRef(spans: Seq[graft.schema.DocSpan]): String =
+  /** [[levelText]] over one level's span parts (offset, text, box
+    * count) in any order: the skew path's per-page reassembly.
+    */
+  def docText(level: String, parts: Seq[(Int, String, Int)]): Option[String] =
+    levelText(level, parts.sortBy(_._1).map(_._2), parts.map(_._3).sum)
+
+  def firstMediaRef(spans: Seq[DocSpan]): String =
     spans.sortBy(_.offset).collectFirst { case s if s.kind == "media" => s.media_ref }
       .getOrElse("")
 }

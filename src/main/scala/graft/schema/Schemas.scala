@@ -46,11 +46,3 @@ final case class DocOcrAll(
     premium_boxes: Seq[OcrBox],
     optimum_raw: Option[String],
     optimum_boxes: Seq[OcrBox])
-
-/** Per-document OCR output for a single level (iterative cascade input). */
-final case class DocOcrOne(
-    doc_id: String,
-    first_media_ref: String,
-    raw: Option[String],
-    boxes: Seq[OcrBox],
-    spans: Seq[DocSpan])

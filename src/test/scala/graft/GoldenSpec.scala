@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
 import graft.extract.{AnalyteExtract, HofTwins, MultiAnalyteGather}
+import graft.schema.DocRow
 
 /** The correctness contract (BASELINE.json `metric`): 100% span-sequence
   * equality (kind, text, media_ref, order) per (doc, mode) against
@@ -27,6 +28,19 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+}
+
+/** Both branches of `Pipeline.extractSkewAware` over a test corpus. */
+object SkewBranches {
+  /** `docs` holds a doc on each side of `Pipeline.SkewMediaSpans`, so a
+    * skew-path test runs the map-only AND the page-exploded branch.
+    */
+  def assertBoth(docs: Dataset[DocRow]): Unit = {
+    val nMedia = docs.collect().map(_.spans.count(_.kind == "media"))
+    org.scalatest.Assertions.assert(
+      nMedia.exists(_ > Pipeline.SkewMediaSpans) && nMedia.exists(_ <= Pipeline.SkewMediaSpans),
+      s"media-span counts ${nMedia.distinct.sorted.mkString(",")} miss a skew branch")
   }
 }
 
@@ -108,9 +122,10 @@ class GoldenSpec extends AnyFunSuite {
 
   test("skew-aware path produces identical spans") {
     val skewDocs = Corpus.generate(spark, 300, skew = true)
+    SkewBranches.assertBoth(skewDocs)
     val base = Pipeline.extract(skewDocs, "auto").orderBy("doc_id")
       .as[(String, Seq[graft.schema.OutSpan])].collect().toSeq
-    val skew = Pipeline.extractSkewAware(skewDocs, "auto", threshold = 8)
+    val skew = Pipeline.extractSkewAware(skewDocs, "auto")
       .orderBy("doc_id")
       .as[(String, Seq[graft.schema.OutSpan])].collect().toSeq
     assert(skew == base)
@@ -126,6 +141,7 @@ class GoldenSpec extends AnyFunSuite {
       }
     }
     val skewDocs = Corpus.generate(spark, 120, skew = true).cache()
+    SkewBranches.assertBoth(skewDocs)
     val nMedia = skewDocs.collect()
       .map(_.spans.count(_.kind == "media")).sum.toLong
     // NO orderBy before collect here: range partitioning runs a sampling
@@ -135,7 +151,7 @@ class GoldenSpec extends AnyFunSuite {
       .as[(String, Seq[graft.schema.OutSpan])].collect().toSeq.sortBy(_._1)
     OcrEnginePool.install(() => new CountingEngine)
     try {
-      val got = Pipeline.extractSkewAware(skewDocs, "light", threshold = 8)
+      val got = Pipeline.extractSkewAware(skewDocs, "light")
         .as[(String, Seq[graft.schema.OutSpan])].collect().toSeq.sortBy(_._1)
       assert(got == expected, "mode-aware skew path changed the spans")
       // before the fix heavy docs paid 3 levels per page regardless of

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
-import graft.media.{OcrRun, SimulatedOcr}
-import graft.schema.OcrBox
+import graft.media.{OcrEngine, OcrRun, SimulatedOcr}
+import graft.schema.{DocSpan, OcrBox}
 
 /** O2: OCR token boxes (`ocr_engine.py:88-97`) are carried as
   * array<struct> through the pipeline schema — real content for the
@@ -68,8 +68,14 @@ class OcrBoxSpec extends AnyFunSuite {
   test("both-empty failure rule is driven by boxes, not a stale count") {
     // blank text + nonempty boxes => premium/optimum level does NOT fail
     val box = OcrBox("x", 0, 0, 8, 14, 90.0)
-    assert(OcrRun.levelResult("premium", "  ", Seq(box)).rawText.contains("  "))
-    assert(OcrRun.levelResult("premium", "  ", Seq.empty).rawText.isEmpty)
-    assert(OcrRun.levelResult("light", "  ", Seq(box)).rawText.isEmpty)
+    val blankPage = new OcrEngine {
+      override def ocrPage(level: String, ref: String) =
+        ("  ", if (ref == "boxed") Seq(box) else Seq.empty)
+    }
+    def raw(level: String, ref: String) =
+      OcrRun.ocrDoc(blankPage, level, Seq(DocSpan("media", "", ref, 0))).rawText
+    assert(raw("premium", "boxed").contains("  "))
+    assert(raw("premium", "bare").isEmpty)
+    assert(raw("light", "boxed").isEmpty)
   }
 }

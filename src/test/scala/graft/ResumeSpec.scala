@@ -4,51 +4,106 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.corpus.Corpus
-import graft.io.ExtractJob
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** §7.6 checkpoint/resume: kill after k buckets, re-run, assert exact
-  * same results table and no duplicate audit rows.
+import graft.corpus.Corpus
+import graft.io.{DocTableIO, ExtractJob, ParquetTableIO}
+import graft.io.ExtractJob.AuditRecord
+
+/** [[ParquetTableIO]] that crashes the job right after the `n`-th call
+  * of `method` ("writeBucket" or "commitAudit") has taken effect.
+  */
+class CrashingIO(method: String, n: Int) extends DocTableIO {
+  private var calls = 0
+  private def after(m: String): Unit =
+    if (m == method) {
+      calls += 1
+      if (calls == n) throw new RuntimeException(s"injected failure after $m #$n")
+    }
+
+  override def writeBucket(df: DataFrame, outDir: String, bucket: Int): Unit = {
+    ParquetTableIO.writeBucket(df, outDir, bucket)
+    after("writeBucket")
+  }
+  override def readBucket(spark: SparkSession, outDir: String, bucket: Int): DataFrame =
+    ParquetTableIO.readBucket(spark, outDir, bucket)
+  override def readResults(spark: SparkSession, outDir: String): DataFrame =
+    ParquetTableIO.readResults(spark, outDir)
+  override def commitAudit(outDir: String, rec: AuditRecord): Unit = {
+    ParquetTableIO.commitAudit(outDir, rec)
+    after("commitAudit")
+  }
+  override def committedBuckets(outDir: String, runId: String): Set[Int] =
+    ParquetTableIO.committedBuckets(outDir, runId)
+  override def readAudit(outDir: String, runId: String): Seq[AuditRecord] =
+    ParquetTableIO.readAudit(outDir, runId)
+}
+
+/** §7.6 checkpoint/resume: crash mid-run, re-run, assert exact same
+  * results table and no duplicate audit rows.
   */
 class ResumeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+  lazy val docs = Corpus.generate(spark, 300).cache()
 
-  test("kill after 3 buckets, resume completes exactly, no dup docs") {
-    val docs = Corpus.generate(spark, 300).cache()
-    val out = Files.createTempDirectory("graft-resume").toString
-    val crashed = intercept[RuntimeException] {
-      ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8,
-        failAfterBuckets = 3)
-    }
-    assert(crashed.getMessage.contains("injected failure"))
-    assert(ExtractJob.committedBuckets(out, "r1").size == 3)
-
-    // resume: processes exactly the 5 remaining buckets
-    val resumed = ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8)
-    assert(resumed.size == 5)
-    assert(ExtractJob.committedBuckets(out, "r1") == (0 until 8).toSet)
-
-    // second resume is a no-op (0 already-committed partitions reprocessed)
-    assert(ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8).isEmpty)
-
-    // combined results == single-pass pipeline output, no dups
+  /** The combined results hold every doc once and equal the single-pass
+    * pipeline output.
+    */
+  private def assertExactlyOnce(out: String): Unit = {
     val got = ExtractJob.readResults(spark, out)
     assert(got.count() == 300)
     assert(got.select("doc_id").distinct().count() == 300)
     val direct = Pipeline.extract(docs, "auto")
     assert(got.select("doc_id", "spans").except(direct).count() == 0)
     assert(direct.except(got.select("doc_id", "spans")).count() == 0)
+  }
+
+  test("kill after 3 buckets, resume completes exactly, no dup docs") {
+    val out = Files.createTempDirectory("graft-resume").toString
+    val crashed = intercept[RuntimeException] {
+      ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8,
+        io = new CrashingIO("commitAudit", 3))
+    }
+    assert(crashed.getMessage.contains("injected failure"))
+    assert(ParquetTableIO.committedBuckets(out, "r1").size == 3)
+
+    // resume: processes exactly the 5 remaining buckets
+    val resumed = ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8)
+    assert(resumed.size == 5)
+    assert(ParquetTableIO.committedBuckets(out, "r1") == (0 until 8).toSet)
+
+    // second resume is a no-op (0 already-committed partitions reprocessed)
+    assert(ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8).isEmpty)
+
+    // combined results == single-pass pipeline output, no dups
+    assertExactlyOnce(out)
 
     // audit metrics add up
-    val audit = ExtractJob.readAudit(out, "r1")
+    val audit = ParquetTableIO.readAudit(out, "r1")
     assert(audit.size == 8)
     assert(audit.map(_.n_docs).sum == 300)
     assert(audit.map(_.n_ok).sum +
       audit.map(_.n_ocr_failed).sum + audit.map(_.n_not_found).sum == 300)
   }
 
+  test("crash between a bucket's write and its audit commit: resume rewrites that bucket") {
+    val out = Files.createTempDirectory("graft-resume-write").toString
+    intercept[RuntimeException] {
+      ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8,
+        io = new CrashingIO("writeBucket", 2))
+    }
+    // bucket 1's results are on disk, but only bucket 0 committed
+    assert(ParquetTableIO.committedBuckets(out, "r1") == Set(0))
+    assert(ParquetTableIO.readBucket(spark, out, 1).count() > 0)
+
+    val resumed = ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8)
+    assert(resumed.map(_.bucket) == (1 until 8))
+    assertExactlyOnce(out)
+    assert(ParquetTableIO.readAudit(out, "r1").map(_.n_docs).sum == 300)
+  }
+
   test("audit records round-trip through real JSON (hostile run_id survives)") {
-    val io = new graft.io.FormatTableIO("parquet")
+    val io = ParquetTableIO
     val out = Files.createTempDirectory("graft-audit-rt").toString
     // strings a regex-based parser chokes on: quotes, backslashes,
     // newlines, braces — must round-trip byte-identically (run_id also
@@ -68,21 +123,21 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("job through an explicit TableIO seam, skewed corpus, skew-aware path") {
-    val io = new graft.io.FormatTableIO("parquet")
-    // skew=true plants ~1% oversized multi-page docs; threshold 16 routes
-    // them through the page-explode path inside the audited job
+    val io = ParquetTableIO
+    // skew=true plants ~1% oversized multi-page docs, which the audited
+    // job routes through the page-explode path
     val docs = Corpus.generate(spark, 400, skew = true).cache()
+    SkewBranches.assertBoth(docs)
     val out = Files.createTempDirectory("graft-seam").toString
-    val recs = ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 4,
-      skewThreshold = 16, io = io)
+    val recs = ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 4, io = io)
     assert(recs.size == 4)
-    assert(ExtractJob.committedBuckets(out, "r1", io) == (0 until 4).toSet)
+    assert(io.committedBuckets(out, "r1") == (0 until 4).toSet)
     val got = ExtractJob.readResults(spark, out, io)
     assert(got.count() == 400)
     // skew-aware job output == plain map-only extract, byte-identical
     val direct = Pipeline.extract(docs, "auto")
     assert(got.select("doc_id", "spans").except(direct).count() == 0)
     assert(direct.except(got.select("doc_id", "spans")).count() == 0)
-    assert(ExtractJob.readAudit(out, "r1", io).map(_.n_docs).sum == 400)
+    assert(io.readAudit(out, "r1").map(_.n_docs).sum == 400)
   }
 }

@@ -8,10 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The product keeps ONE encoding per operator: the UDF-free twins of
   * the native expressions live in test scope (graft.extract.HofTwins)
-  * as oracles. This scan keeps a second encoding, or a per-call switch
-  * between two, from creeping back into src/main.
+  * as oracles, and OCR on the extraction paths has one reader. This scan
+  * keeps a second encoding, a per-call switch between two, or a
+  * test-only knob from creeping back into src/main.
   */
 class SingleEncodingSpec extends AnyFunSuite {
+
+  private def mainSources(root: String = "src/main") =
+    Files.walk(Paths.get(root)).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
 
   /** Names defined in HofTwins (or deleted outright) that src/main must
     * not define again, plus any `*Hof` definition.
@@ -27,8 +32,7 @@ class SingleEncodingSpec extends AnyFunSuite {
     ("""\bdef\s+(?:""" + Moved.mkString("|") + """)\b""").r)
 
   test("src/main holds no fused switch and no test-scope twin") {
-    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val sources = mainSources()
     assert(sources.size > 20, s"scan found only ${sources.size} sources")
     val hits = for {
       f <- sources
@@ -40,10 +44,34 @@ class SingleEncodingSpec extends AnyFunSuite {
 
   test("src/main/scala/graft/extract defines one gather expression") {
     val unary = """\bextends\s+UnaryExpression\b""".r
-    val defs = Files.walk(Paths.get("src/main/scala/graft/extract")).iterator()
-      .asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val defs = mainSources("src/main/scala/graft/extract")
       .flatMap(f => unary.findAllIn(new String(Files.readAllBytes(f), "UTF-8"))
         .map(_ => f.getFileName.toString))
     assert(defs.size == 1, s"UnaryExpression definitions: $defs")
+  }
+
+  test("src/main reads the OCR engine at three sites: OcrText, ocrAll, the skew page stage") {
+    val defName = """\bdef\s+(\w+)""".r
+    val sites = for {
+      f <- mainSources()
+      lines = Files.readAllLines(f).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex if line.contains("OcrEnginePool.engine")
+    } yield {
+      val enclosing = (i to 0 by -1).iterator
+        .flatMap(j => defName.findFirstMatchIn(lines(j)).map(_.group(1))).nextOption()
+      s"${f.getFileName}:${enclosing.getOrElse("?")}"
+    }
+    assert(sites.sorted == Seq("OcrExpr.scala:evalCore", "Pipeline.scala:extractSkewAware",
+      "Pipeline.scala:ocrAll"), sites.mkString("\n", "\n", ""))
+  }
+
+  test("src/main names no second OCR operator and no test-only job knob") {
+    val gone = """\b(ocrLevel|DocOcrOne|failAfterBuckets|skewThreshold|FormatTableIO)\b""".r
+    val hits = for {
+      f <- mainSources()
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if gone.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }
