@@ -1,6 +1,6 @@
 package graft.extract
 
-import java.util.regex.Pattern
+import java.util.regex.{Matcher, Pattern}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,6 +12,17 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** A gather regex compiled once per JVM, with its label scan table.
+  *
+  * `starts` is null unless the pattern is a recognized label (see
+  * [[GatherCore.startTable]]); then it is a bitmap over BMP chars of
+  * every char a match can start at, and [[GatherCore.findLabel]] tries
+  * `lookingAt()` only there instead of running `find()` at every char.
+  */
+private[extract] final class GatherRegex(val pattern: Pattern) {
+  lazy val starts: Array[Long] = GatherCore.startTable(pattern.pattern)
+}
+
 /** Shared compiled core of the candidate gather — the single place the
   * N1/N3/N4/E1-E11 JVM semantics live, run by [[MultiAnalyteGather]].
   * Byte-equal to the HOF chain (the test-scope
@@ -21,8 +32,130 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 private[extract] object GatherCore {
 
-  private val wsRe = Pattern.compile(TshPatterns.WsRun)
-  private val nlRe = Pattern.compile("\n+")
+  val numP: Pattern = Pattern.compile(TshPatterns.Num)
+  val rangeP: Pattern = Pattern.compile(TshPatterns.Range)
+  val unitFbP: Pattern = Pattern.compile(TshPatterns.UnitFallback)
+
+  /** Label/unit regexes by source string. Bounded: the SQL
+    * `analyte_gather_candidates` takes arbitrary user patterns.
+    */
+  val CacheCap = 64
+  private val cache = new java.util.LinkedHashMap[String, GatherRegex](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, GatherRegex]): Boolean =
+      size > CacheCap
+  }
+
+  def regex(source: String): GatherRegex = cache.synchronized {
+    cache.computeIfAbsent(source, s => new GatherRegex(Pattern.compile(s)))
+  }
+
+  def cacheSize: Int = cache.synchronized(cache.size)
+
+  private val LeadingFlags = """(?s)(\(\?[iuU]+\))?(.*)""".r
+
+  /** The top-level alternatives of `body` (inside one `(?:…)` group
+    * spanning all of it, if there is one), or None when the body holds
+    * something this split cannot see through: `\Q` quoting, a class
+    * opening with `]`, an inline flag group, or unbalanced brackets.
+    */
+  private def alternatives(body: String): Option[Seq[String]] = {
+    val alts = Seq.newBuilder[String]
+    var depth = 0
+    var inClass = 0
+    var from = 0
+    var spanningGroup = body.startsWith("(?:")
+    var i = 0
+    while (i < body.length) {
+      val c = body.charAt(i)
+      if (c == '\\') {
+        if (i + 1 < body.length && body.charAt(i + 1) == 'Q') return None
+        i += 1
+      } else if (inClass > 0) {
+        if (c == '[') inClass += 1
+        else if (c == ']') inClass -= 1
+      } else if (c == '[') {
+        if (body.startsWith("]", i + 1) || body.startsWith("^]", i + 1)) return None
+        inClass = 1
+      } else if (c == '(') {
+        if (body.startsWith("?", i + 1) && i + 2 < body.length &&
+            "idmsucxU-".indexOf(body.charAt(i + 2)) >= 0) return None
+        depth += 1
+      } else if (c == ')') {
+        depth -= 1
+        if (depth < 0) return None
+        if (depth == 0 && i < body.length - 1) spanningGroup = false
+      } else if (c == '|' && depth == 0) {
+        alts += body.substring(from, i)
+        from = i + 1
+        spanningGroup = false
+      }
+      i += 1
+    }
+    if (depth != 0 || inClass != 0) None
+    else if (spanningGroup) alternatives(body.substring(3, body.length - 1))
+    else Some((alts += body.substring(from)).result())
+  }
+
+  /** The label scan table of `label`, or null when it is not recognized.
+    *
+    * Recognized: optional leading inline flags drawn from `i`, `u`, `U`,
+    * then top-level alternatives (optionally inside one spanning
+    * `(?:…)` group) that each start with an ASCII letter or digit not
+    * followed by `?`, `*` or `{`. Every match then starts at a char the
+    * leading literal matches, so the table holds each BMP char `c` for
+    * which `Pattern.compile(flags + atom).matcher(c).matches()` holds
+    * for some leading atom: Java's own case folding decides.
+    */
+  private[extract] def startTable(label: String): Array[Long] = {
+    val LeadingFlags(flagGroup, body) = label
+    val flags = if (flagGroup == null) "" else flagGroup
+    val atoms = alternatives(body) match {
+      case Some(alts) if alts.forall(a => a.nonEmpty &&
+          a.charAt(0) < 128 && Character.isLetterOrDigit(a.charAt(0)) &&
+          (a.length == 1 || "?*{".indexOf(a.charAt(1)) < 0)) =>
+        alts.map(_.charAt(0)).distinct
+      case _ => return null
+    }
+    val bits = new Array[Long](1024)
+    atoms.foreach { atom =>
+      val m = Pattern.compile(flags + atom).matcher("")
+      var c = 0
+      while (c <= Character.MAX_VALUE) {
+        if (m.reset(String.valueOf(c.toChar)).matches())
+          bits(c >>> 6) |= 1L << c
+        c += 1
+      }
+    }
+    java.util.Arrays.copyOf(bits, bits.lastIndexWhere(_ != 0L) + 1)
+  }
+
+  /** `m.reset(line).find()`, as fast as the label allows: with a scan
+    * table, `lookingAt()` runs only at positions whose char is in the
+    * table or is a surrogate, over a transparent, non-anchoring region
+    * (set by [[labelMatcher]]), so lookbehind and `\b` see the whole
+    * line. The first success is the leftmost match, with the same
+    * start, end and groups `find()` would give.
+    */
+  private[extract] def findLabel(m: Matcher, starts: Array[Long],
+      line: String): Boolean = {
+    if (starts == null) return m.reset(line).find()
+    m.reset(line)
+    val n = line.length
+    var p = 0
+    while (p < n) {
+      val c = line.charAt(p)
+      val w = c >>> 6
+      if ((w < starts.length && (starts(w) & (1L << c)) != 0L) ||
+          Character.isSurrogate(c)) {
+        if (m.region(p, n).lookingAt()) return true
+      }
+      p += 1
+    }
+    false
+  }
+
+  private[extract] def labelMatcher(p: Pattern): Matcher =
+    p.matcher("").useTransparentBounds(true).useAnchoringBounds(false)
 
   private def toFloat(s: String): java.lang.Double = {
     if (s == null || s.isEmpty) return null
@@ -63,37 +196,67 @@ private[extract] object GatherCore {
       value, if (unit == null) null else UTF8String.fromString(unit),
       refMin, refMax, UTF8String.fromString(label)))
 
-  /** N1 normalize + N2 split (exactly `TshExtract.linesOf`). */
-  private[extract] def linesOf(raw: String): Array[String] =
-    nlRe.matcher(
-      wsRe.matcher(raw.replace('\r', '\n')).replaceAll(" ")).replaceAll("\n")
-      .split("\n", -1)
+  private def isWs(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\f' || c == '\u000B'
+
+  private def isBreak(c: Char): Boolean = c == '\n' || c == '\r'
+
+  /** N1 normalize + N2 split in one pass, exactly `TshExtract.normalize`
+    * then `split("\n", -1)`:
+    * `\r` is a line break, each run of `[ \t\f\x0B]` becomes one space,
+    * each run of line breaks one split; leading and trailing empty lines
+    * are kept, as `split("\n", -1)` keeps them. Text between rewrites is
+    * copied in bulk, and a line with nothing to rewrite is a substring.
+    */
+  private[extract] def linesOf(raw: String): Array[String] = {
+    val lines = new java.util.ArrayList[String]()
+    val sb = new java.lang.StringBuilder()
+    val n = raw.length
+    var from = 0 // first char not yet copied to sb
+    var i = 0
+    while (i <= n) {
+      val c = if (i < n) raw.charAt(i) else '\n'
+      if (c <= ' ') { // every break and whitespace char is <= ' '
+        if (isBreak(c)) {
+          lines.add(if (sb.length == 0) raw.substring(from, i)
+            else sb.append(raw, from, i).toString)
+          sb.setLength(0)
+          while (i + 1 < n && isBreak(raw.charAt(i + 1))) i += 1
+          from = i + 1
+        } else if (isWs(c) && (c != ' ' || (i + 1 < n && isWs(raw.charAt(i + 1))))) {
+          sb.append(raw, from, i).append(' ')
+          while (i + 1 < n && isWs(raw.charAt(i + 1))) i += 1
+          from = i + 1
+        }
+      }
+      i += 1
+    }
+    lines.toArray(new Array[String](lines.size))
+  }
 
   /** E1-E6 labelled candidates over the given lines, appended to `out`
-    * in line order (`HofTwins.labelledCandidates` semantics).
+    * in line order (`HofTwins.labelledCandidates` semantics). `lm` comes
+    * from [[labelMatcher]] and `starts` is its label's scan table.
     */
-  private[extract] def labelled(lines: Array[String], labelRe: Pattern,
-      numRe: Pattern, rangeRe: Pattern, unitRe: Pattern,
+  private[extract] def labelled(lines: Array[String], lm: Matcher,
+      starts: Array[Long], nm: Matcher, rm: Matcher, um: Matcher,
       out: java.util.ArrayList[InternalRow]): Unit = {
     var i = 0
     while (i < lines.length) {
       val line = lines(i)
-      val lm = labelRe.matcher(line)
-      if (lm.find()) {
+      if (findLabel(lm, starts, line)) {
         val label = lm.group(0)
         val snippet = line.substring(lm.end())
-        val nm = numRe.matcher(snippet)
-        if (nm.find()) {
+        if (nm.reset(snippet).find()) {
           val value = toFloat(nm.group(0))
           if (value != null) {
             val numEnd = nm.end()
             // E4: unit in 25-char window after the value (Q10)
             val window = snippet.substring(numEnd,
               math.min(snippet.length, numEnd + 25))
-            val um = unitRe.matcher(window)
-            val unit = if (um.find()) um.group(0) else null
+            val unit = if (um.reset(window).find()) um.group(0) else null
             // E5: range search from the value end (tsh.py:167)
-            val rm = rangeRe.matcher(snippet)
+            rm.reset(snippet)
             var refMin: java.lang.Double = null
             var refMax: java.lang.Double = null
             if (rm.find(numEnd)) {
@@ -115,26 +278,24 @@ private[extract] object GatherCore {
     * the reference runs only for docs with zero labelled candidates
     * (tsh.py:259-264; `HofTwins.fallbackCandidates` semantics).
     */
-  private[extract] def muiFallback(lines: Array[String], numRe: Pattern,
-      rangeRe: Pattern, unitFbRe: Pattern,
-      out: java.util.ArrayList[InternalRow]): Unit = {
+  private[extract] def muiFallback(lines: Array[String], nm: Matcher,
+      rm: Matcher, um: Matcher, out: java.util.ArrayList[InternalRow]): Unit = {
     var j = 0
     while (j < lines.length) {
       val line = lines(j)
       val low = lowerRoot(line)
       if (low.contains("mui") || low.contains("ui/l")) {
-        val um = unitFbRe.matcher(line)
-        if (um.find()) {
+        if (um.reset(line).find()) {
           val unit = um.group(0)
           val before = line.substring(0, um.start())
           val after = line.substring(um.end())
           // E9: LAST number before the unit (Q8)
-          val nm = numRe.matcher(before)
+          nm.reset(before)
           var lastNum: String = null
           while (nm.find()) lastNum = nm.group(0)
           val value = toFloat(lastNum)
           if (value != null) {
-            val rm = rangeRe.matcher(after)
+            rm.reset(after)
             var refMin: java.lang.Double = null
             var refMax: java.lang.Double = null
             if (rm.find()) {
@@ -156,7 +317,7 @@ private[extract] object GatherCore {
   * Catalyst Expression for TSH and every analyte: each configured
   * analyte is evaluated against a single normalize+split line walk per
   * document (O(text + lines · analytes), where one pass per analyte
-  * would re-run the N1 regex normalize per analyte). This is preference
+  * would re-run the N1 normalize per analyte). This is preference
   * order (b) of SURVEY.md §7.5: a custom Expression (not a UDF) fusing
   * the ~10-regex-op per-line chain into one compiled pass, because the
   * interpreted HOF chain is allocation-bound and stops scaling with
@@ -201,12 +362,10 @@ case class MultiAnalyteGather(child: Expression, configs: Seq[AnalyteConfig])
         s"$ref.evalCore($c);"
     })
 
-  @transient private lazy val labelPs = configs.map(c => Pattern.compile(c.label)).toArray
-  @transient private lazy val unitPs = configs.map(c => Pattern.compile(c.unit)).toArray
+  // compiled once per JVM (GatherCore's bounded cache), not per instance
+  @transient private lazy val labels = configs.map(c => GatherCore.regex(c.label)).toArray
+  @transient private lazy val units = configs.map(c => GatherCore.regex(c.unit).pattern).toArray
   @transient private lazy val fallbacks = configs.map(_.muiFallback).toArray
-  @transient private lazy val numP = Pattern.compile(TshPatterns.Num)
-  @transient private lazy val rangeP = Pattern.compile(TshPatterns.Range)
-  @transient private lazy val unitFbP = Pattern.compile(TshPatterns.UnitFallback)
 
   override def nullSafeEval(input: Any): Any =
     evalCore(input.asInstanceOf[UTF8String])
@@ -214,14 +373,18 @@ case class MultiAnalyteGather(child: Expression, configs: Seq[AnalyteConfig])
   /** Shared by interpreted eval and generated code (public for janino). */
   def evalCore(input: UTF8String): GenericArrayData = {
     val lines = GatherCore.linesOf(input.toString) // ONCE, not per analyte
-    val arr = new Array[Any](labelPs.length)
+    // one Matcher per pattern per document, reset per line
+    val nm = GatherCore.numP.matcher("")
+    val rm = GatherCore.rangeP.matcher("")
+    val arr = new Array[Any](labels.length)
     var i = 0
-    while (i < labelPs.length) {
+    while (i < labels.length) {
       val out = new java.util.ArrayList[InternalRow]()
-      GatherCore.labelled(lines, labelPs(i), numP, rangeP, unitPs(i), out)
+      GatherCore.labelled(lines, GatherCore.labelMatcher(labels(i).pattern),
+        labels(i).starts, nm, rm, units(i).matcher(""), out)
       // two-phase gather: fallback only if no labelled candidate
       if (fallbacks(i) && out.isEmpty)
-        GatherCore.muiFallback(lines, numP, rangeP, unitFbP, out)
+        GatherCore.muiFallback(lines, nm, rm, GatherCore.unitFbP.matcher(""), out)
       arr(i) = new GenericArrayData(out.toArray)
       i += 1
     }

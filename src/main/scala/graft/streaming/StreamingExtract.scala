@@ -11,7 +11,7 @@ import graft.schema.DocRow
   * a synchronous request/response service, so no event-time semantics
   * are required — this is the continuous-ingest form of the same
   * pipeline). Because the whole extraction is a stateless map-side
-  * projection (pooled OCR mapPartitions + Catalyst parse, zero
+  * projection (the `OcrText` OCR columns + Catalyst parse, zero
   * shuffles), it lifts to a streaming query unchanged: each micro-batch
   * is extracted exactly like a batch partition, checkpointed by the
   * engine.
