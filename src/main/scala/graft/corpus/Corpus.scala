@@ -17,16 +17,149 @@ import graft.schema.{DocRow, DocSpan}
   */
 object Det {
   val Seed = 42
-  /** Stable non-negative hash of a composite key. */
-  def h(parts: Any*): Long =
-    (MurmurHash3.stringHash(parts.mkString("\u0000"), Seed).toLong & 0x7fffffffL)
+  /** Stable non-negative hash of a composite key: MurmurHash3 (seed 42)
+    * of the parts rendered as `String.valueOf` renders them and joined
+    * with '\u0000', masked to 31 bits — the value of
+    * `stringHash(parts.mkString("\u0000"), Seed) & 0x7fffffff`, streamed
+    * through a [[Key]] so no joined string is built (the joined formula
+    * stays in src/test as the oracle, `DetOracle`).
+    */
+  def h(parts: Any*): Long = {
+    val key = new Key
+    val it = parts.iterator
+    if (!it.hasNext) return key.value
+    var p = it.next()
+    while (it.hasNext) { key.part(p); p = it.next() }
+    key.hash(p)
+  }
   def pick[A](xs: IndexedSeq[A], parts: Any*): A = xs((h(parts: _*) % xs.length).toInt)
+
+  /** The MurmurHash3 state of a key's leading parts (each rendered and
+    * followed by '\u0000'), fed two chars per `mix` exactly as
+    * `MurmurHash3.stringHash` does. Keys sharing a prefix hash it once:
+    * `new Key().part(a).part(b).hash(c) == h(a, b, c)`, and `copy` forks
+    * a prefix. Mutable and not thread-safe: one per use.
+    */
+  final class Key private (private var acc: Int, private var pending: Int,
+      private var len: Int) {
+    def this() = this(Seed, -1, 0)
+
+    def copy: Key = new Key(acc, pending, len)
+
+    /** Append one leading part: its rendering, then '\u0000'. */
+    def part(x: Any): this.type = { render(x); char('\u0000'); this }
+    def part(v: Long): this.type = { long(v); char('\u0000'); this }
+    /** Append `s.substring(from, until)` as a part, without the substring. */
+    def part(s: String, from: Int, until: Int): this.type = {
+      chars(s, from, until); char('\u0000'); this
+    }
+
+    /** The hash of this key's parts followed by `last`; the key is left
+      * as it was, so one prefix can finish several keys.
+      */
+    def hash(last: Any): Long = {
+      val a = acc; val p = pending; val n = len
+      render(last)
+      val v = value
+      acc = a; pending = p; len = n
+      v
+    }
+
+    private[Det] def value: Long = {
+      val a = if (pending >= 0) MurmurHash3.mixLast(acc, pending) else acc
+      MurmurHash3.finalizeHash(a, len).toLong & 0x7fffffffL
+    }
+
+    private def render(x: Any): Unit = x match {
+      case s: String => chars(s, 0, s.length)
+      case v: java.lang.Long => long(v.longValue)
+      case v: java.lang.Integer => long(v.longValue)
+      case v => val s = String.valueOf(v); chars(s, 0, s.length)
+    }
+
+    private def char(c: Char): Unit = {
+      if (pending < 0) pending = c
+      else { acc = MurmurHash3.mix(acc, (pending << 16) + c); pending = -1 }
+      len += 1
+    }
+
+    private def chars(s: String, from: Int, until: Int): Unit = {
+      var i = from
+      if (pending >= 0 && i < until) {
+        acc = MurmurHash3.mix(acc, (pending << 16) + s.charAt(i)); pending = -1; i += 1
+      }
+      while (i + 1 < until) {
+        acc = MurmurHash3.mix(acc, (s.charAt(i) << 16) + s.charAt(i + 1)); i += 2
+      }
+      if (i < until) pending = s.charAt(i)
+      len += until - from
+    }
+
+    // decimal digits as Long.toString writes them, split into groups by
+    // constant divisors (which the JIT turns into multiplies)
+    private def long(v: Long): Unit =
+      if (v == Long.MinValue) chars("-9223372036854775808", 0, 20)
+      else if (v < 0) { char('-'); digits(-v) }
+      else digits(v)
+
+    private def digits(v: Long): Unit =
+      if (v < 100000000L) digits8(v.toInt, lead = true)
+      else if (v < 10000000000000000L) {
+        val hi = v / 100000000L
+        digits8(hi.toInt, lead = true); digits8((v - hi * 100000000L).toInt, lead = false)
+      } else {
+        val top = v / 10000000000000000L
+        val rest = v - top * 10000000000000000L
+        val hi = rest / 100000000L
+        digits8(top.toInt, lead = true)
+        digits8(hi.toInt, lead = false); digits8((rest - hi * 100000000L).toInt, lead = false)
+      }
+
+    /** x < 10^8: all 8 digits, or without leading zeros when `lead`. */
+    private def digits8(x: Int, lead: Boolean): Unit = {
+      val hi = x / 10000
+      if (lead && hi == 0) digits4(x, lead = true)
+      else { digits4(hi, lead); digits4(x - hi * 10000, lead = false) }
+    }
+    private def digits4(x: Int, lead: Boolean): Unit = {
+      val hi = x / 100
+      if (lead && hi == 0) digits2(x, lead = true)
+      else { digits2(hi, lead); digits2(x - hi * 100, lead = false) }
+    }
+    private def digits2(x: Int, lead: Boolean): Unit = {
+      val t = x / 10
+      if (!lead || t != 0) char(('0' + t).toChar)
+      char(('0' + x - 10 * t).toChar)
+    }
+  }
 }
 
 object Corpus {
   import Det._
 
-  def docId(i: Long): String = f"doc$i%08d"
+  def docId(i: Long): String = "doc" + zeroPad(i, 8)
+
+  // Renderings use integer arithmetic, never java.util.Formatter: its
+  // digits follow the JVM default locale (th-TH-u-nu-thai renders Thai
+  // digits), and the corpus must be a pure function of (seed, index).
+
+  /** `n` as the `%0<width>d` conversion renders it (sign, then zeros). */
+  private[corpus] def zeroPad(n: Long, width: Int): String = {
+    val s = java.lang.Long.toString(n)
+    if (s.length >= width) s
+    else if (n < 0) "-" + "0" * (width - s.length) + s.substring(1)
+    else "0" * (width - s.length) + s
+  }
+
+  /** A value of `cents / 100` to two decimals with a decimal comma, as
+    * `%.2f` renders `cents / 100.0` (cents >= 0).
+    */
+  private[corpus] def fr(cents: Int): String =
+    s"${cents / 100},${cents / 10 % 10}${cents % 10}"
+
+  /** dd/MM/yyyy, as `%02d/%02d/%04d` renders (d, m, y). */
+  private[corpus] def dateText(d: Int, m: Int, y: Int): String =
+    s"${zeroPad(d, 2)}/${zeroPad(m, 2)}/${zeroPad(y, 4)}"
 
   /** Media refs are self-describing so the pooled OCR engine can resolve
     * them without the doc row: `media://doc00000007/3` plus a `#tsh`
@@ -53,16 +186,15 @@ object Corpus {
   def family(i: Long): Int = (i % NumFamilies).toInt
   val FamQ2 = 14 // light parses (no range), optimum corrupts the line (quirk Q2)
 
-  private def fr(v: Double): String = f"$v%.2f".replace('.', ',')
-
   /** Seeded TSH value for doc i: 0.10 .. 5.09, two decimals. */
-  def tshValue(i: Long): Double = (10 + h(i, "val") % 500) / 100.0
+  def tshValue(i: Long): Double = tshCents(i) / 100.0
+  private def tshCents(i: Long): Int = 10 + (h(i, "val") % 500).toInt
 
   /** The TSH line(s) a doc's carrier span contains, possibly level-dependent
     * (family 14 simulates optimum binarization corrupting the digits).
     */
   def tshLines(i: Long, level: String): Seq[String] = {
-    val v = tshValue(i)
+    val v = tshCents(i)
     family(i) match {
       case 0  => Seq(s"TSH ${fr(v)} mUI/L (0,27 - 4,20)")
       case 1  => Seq(s"T.S.H  ${fr(v).replace(',', '.')} µUI/mL  0.4 à 4.0")
@@ -75,7 +207,7 @@ object Corpus {
       case 8  => Seq(s"Résultat : ${fr(v)} mUI/L  0,4 - 4000") // fallback; N4 >=4-digit
       case 9  => Seq(s".... ${fr(v)} UI/L")
       case 10 => Seq(s"thyrotropine ${fr(v)} mUI/L 0,5 - 4,0", "TSH 2,1")
-      case 11 => Seq(s"TSH ${fr(v)}", s"TSH ${fr(v + 1.0)}") // tie -> line order (Q7)
+      case 11 => Seq(s"TSH ${fr(v)}", s"TSH ${fr(v + 100)}") // tie -> line order (Q7)
       case 12 => Seq.empty // negative: no TSH anywhere
       case 13 => Seq(s"TSH\t\t4 000,5  pUI/mL  1 a 5") // NBSP/tabs noise, Q6 unit
       case 14 => if (level == "optimum") Seq("TSH") else Seq(s"TSH ${fr(v)}")
@@ -98,29 +230,34 @@ object Corpus {
 
   // ---- secondary analytes + report date (generic lab-entity surface) -----
   /** Seeded glycemia value: 0.70 .. 1.29 g/L. */
-  def glyValue(i: Long, k: Int, j: Int): Double =
-    (70 + h(i, k, j, "gly") % 60) / 100.0
+  def glyValue(i: Long, k: Int, j: Int): Double = glyCents(slot(i, k, j)) / 100.0
   /** Seeded hemoglobin value: 11.5 .. 17.4 g/dL. */
-  def hbValue(i: Long, k: Int, j: Int): Double =
-    (115 + h(i, k, j, "hb") % 60) / 10.0
+  def hbValue(i: Long, k: Int, j: Int): Double = hbTenths(slot(i, k, j)) / 10.0
   /** Seeded per-doc report date, French dd/MM/yyyy rendering. */
   def reportDate(i: Long): String = {
-    val d = 1 + (h(i, "rd_day") % 28).toInt
-    val m = 1 + (h(i, "rd_mon") % 12).toInt
-    val y = 2023 + (h(i, "rd_yr") % 2).toInt
-    f"$d%02d/$m%02d/$y%04d"
+    val doc = new Key().part(i)
+    dateText(1 + (doc.hash("rd_day") % 28).toInt, 1 + (doc.hash("rd_mon") % 12).toInt,
+      2023 + (doc.hash("rd_yr") % 2).toInt)
   }
 
-  /** One filler line: the glycemia / hemoglobin templates render a
-    * seeded per-(doc,span,slot) value so a second (and third) analyte
-    * family exists in the corpus with varied values, like TSH.
+  /** The key prefix of slot j of span k of doc i. */
+  private def slot(i: Long, k: Int, j: Int): Key = new Key().part(i).part(k).part(j)
+  private def glyCents(slot: Key): Int = 70 + (slot.hash("gly") % 60).toInt
+  private def hbTenths(slot: Key): Int = 115 + (slot.hash("hb") % 60).toInt
+
+  /** One filler line of a span (`span` is the key prefix of (i, k)): the
+    * glycemia / hemoglobin templates render a seeded per-(doc,span,slot)
+    * value so a second (and third) analyte family exists in the corpus
+    * with varied values, like TSH.
     */
-  private def fillerLine(i: Long, k: Int, j: Int, salt: String): String =
-    pick(Fillers, i, k, j, salt) match {
-      case f if f.startsWith("Glycémie") => s"Glycémie ${fr(glyValue(i, k, j))} g/L"
-      case f if f.startsWith("Hémoglobine") => s"Hémoglobine ${fr(hbValue(i, k, j))} g/dL"
+  private def fillerLine(span: Key, j: Int, salt: String): String = {
+    val slot = span.copy.part(j)
+    Fillers((slot.hash(salt) % Fillers.length).toInt) match {
+      case f if f.startsWith("Glycémie") => s"Glycémie ${fr(glyCents(slot))} g/L"
+      case f if f.startsWith("Hémoglobine") => s"Hémoglobine ${fr(10 * hbTenths(slot))} g/dL"
       case f => f
     }
+  }
 
   // ---- document structure -------------------------------------------------
   /** Span kinds in offset order. Unreadable docs are media-only so the
@@ -155,8 +292,9 @@ object Corpus {
     // sits in the top 35%, so light/premium lose it to the crop and the
     // date entity is an optimum/full-text extraction
     val header = Seq(s"Prélèvement du ${reportDate(i)}")
-    val nf = 4 + (h(i, k, "nf") % 6).toInt
-    val fillers = (0 until nf).map(j => fillerLine(i, k, j, "fill"))
+    val span = new Key().part(i).part(k)
+    val nf = 4 + (span.hash("nf") % 6).toInt
+    val fillers = (0 until nf).map(j => fillerLine(span, j, "fill"))
     val tsh =
       if (!isCarrier) Seq.empty
       else if (isHard(i) && family(i) != FamQ2 && level != "optimum") Seq.empty
@@ -182,8 +320,9 @@ object Corpus {
     * are not OCR'd).
     */
   def textSpanText(i: Long, k: Int, isCarrier: Boolean): String = {
-    val nf = 1 + (h(i, k, "tf") % 3).toInt
-    val fillers = (0 until nf).map(j => fillerLine(i, k, j, "tfill"))
+    val span = new Key().part(i).part(k)
+    val nf = 1 + (span.hash("tf") % 3).toInt
+    val fillers = (0 until nf).map(j => fillerLine(span, j, "tfill"))
     val tsh = if (isCarrier) tshLines(i, "text") else Seq.empty
     (fillers ++ tsh).mkString("\n")
   }

@@ -1,6 +1,8 @@
 package graft.media
 
-import graft.corpus.Corpus
+import scala.collection.immutable.ArraySeq
+
+import graft.corpus.{Corpus, Det}
 import graft.schema.{DocSpan, LevelOcr, OcrBox}
 
 /** Boundary to the opaque media/OCR stack (reference `ocr_engine.py`).
@@ -34,6 +36,12 @@ trait OcrEngine extends Serializable {
   *    upscales + binarizes instead); binarization-rescue analog sees
   *    the lines the `hard` tag hides from light/premium; for the Q2
   *    family the binarization instead corrupts the TSH digits.
+  *
+  * Like the corpus, the output is locale-free: a pure function of
+  * (level, media_ref). Box hashes are `Det.h(mediaRef, tok, "top")` and
+  * `Det.h(mediaRef, tok, "conf")`, continued from one `mediaRef` key per
+  * page and one token key per token; the regex-split, hash-per-box form
+  * is the twin in src/test (OcrTwin).
   */
 object SimulatedOcr extends OcrEngine {
   override def ocrPage(level: String, mediaRef: String): (String, Seq[OcrBox]) = {
@@ -49,20 +57,35 @@ object SimulatedOcr extends OcrEngine {
     val full = Corpus.pageLines(i, k, level, carrier)
     val lines = if (level == "optimum") full else Corpus.crop(full)
     val text = lines.mkString("\n")
-    val boxes =
-      if (level == "light") Seq.empty
-      else {
-        var left = 0
-        text.split("\\s+").filter(_.nonEmpty).toSeq.map { tok =>
-          val w = 8 * tok.length
-          val b = OcrBox(tok, left, (graft.corpus.Det.h(mediaRef, tok, "top") % 900).toInt,
-            w, 14, 50.0 + (graft.corpus.Det.h(mediaRef, tok, "conf") % 50).toInt)
-          left += w + 8
-          b
-        }
-      }
-    (text, boxes)
+    (text, if (level == "light") Seq.empty else pageBoxes(mediaRef, text))
   }
+
+  /** One box per token of `text`, left to right. A token is a maximal run
+    * of chars outside Java's `\s` class (`[ \t\n\x0B\f\r]`), as
+    * `split("\\s+")` cuts them.
+    */
+  private[media] def pageBoxes(mediaRef: String, text: String): Seq[OcrBox] = {
+    val page = new Det.Key().part(mediaRef)
+    val boxes = Array.newBuilder[OcrBox]
+    var left = 0
+    var i = 0
+    while (i < text.length) {
+      if (isSpace(text.charAt(i))) i += 1
+      else {
+        val start = i
+        while (i < text.length && !isSpace(text.charAt(i))) i += 1
+        val tok = page.copy.part(text, start, i)
+        val w = 8 * (i - start)
+        boxes += OcrBox(text.substring(start, i), left, (tok.hash("top") % 900).toInt,
+          w, 14, 50.0 + (tok.hash("conf") % 50).toInt)
+        left += w + 8
+      }
+    }
+    ArraySeq.unsafeWrapArray(boxes.result())
+  }
+
+  private def isSpace(c: Char): Boolean =
+    c <= ' ' && (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r')
 }
 
 /** Per-executor engine pool (north_star: "mapPartitions over a pooled

@@ -74,4 +74,16 @@ class SingleEncodingSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  test("the corpus generator and the OCR stand-in never call java.util.Formatter") {
+    // Formatter renders digits in the JVM default locale; the corpus and
+    // SimulatedOcr must be pure functions of (seed, index)
+    val formatter = """\bf"|\.format\(|String\.format""".r
+    val hits = for {
+      f <- Seq("src/main/scala/graft/corpus/Corpus.scala", "src/main/scala/graft/media/OcrEngine.scala")
+      (line, i) <- Files.readAllLines(Paths.get(f)).asScala.zipWithIndex
+      if formatter.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }
