@@ -106,7 +106,7 @@ def minhash_pairs(docs, min_jaccard=0.5):
             buckets.setdefault(key, []).append(i)
     # q69 oracle precondition: its restriction argument ("the q25 pair
     # set restricted to base ids == the base-only pair set") holds only
-    # while Buckets.saltOversized never fires — i.e. no (band, bucket)
+    # while Buckets.selfPairs's salt never fires — i.e. no (band, bucket)
     # exceeds the Spark side's maxBucket default in ANY mirrored corpus.
     # Fail the generation loudly if a corpus change ever breaks that.
     oversized = {k: len(v) for k, v in buckets.items() if len(v) > 4096}

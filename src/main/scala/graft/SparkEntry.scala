@@ -521,7 +521,7 @@ object SparkEntry {
       // the base-only pair set: extra docs add buckets, never remove
       // a base pair's shared band, and the Jaccard rerank is per-pair.
       // PRECONDITION: holds only while no (band, bucket) exceeds
-      // maxBucket in EITHER corpus — Buckets.saltOversized could split
+      // maxBucket in EITHER corpus — Buckets.selfPairs's salt could split
       // a hot bucket in the larger q25 corpus and sever a base pair the
       // base-only run would emit; gen_hash_expected.py asserts both
       // corpora are salt-free so a corpus change cannot silently

@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   * hot side itself large), and deterministically hash-salt their
   * members into ceil(n/maxBucket) sub-buckets — the self-join on
   * (keys, salt) is then bounded to O(n * maxBucket) candidate pairs
-  * per bucket.
+  * per bucket. [[selfPairs]] is the one banded self-join: the MinHash,
+  * banded-Hamming and cosine pair paths all call it, and no other module
+  * knows the salt column, so every dup-pair self-join is bounded by
+  * construction.
   *
   * Recall contract (NOT silent): pairs crossing salt boundaries inside
   * an oversized bucket are not generated. The supported composition is
@@ -33,6 +36,21 @@ import org.apache.spark.sql.functions._
   */
 object Buckets {
 
+  /** The banded self-join of every LSH near-dup path: `keyed` rows (one
+    * per (row, bucket key)) joined to themselves on `keys` plus the
+    * hot-bucket salt, each pair kept once per shared bucket as
+    * `id_a < id_b`. Returns the join rows — `keys`, the salt, `id_a`,
+    * `<feature>_a`, `id_b`, `<feature>_b` — for the caller's own tail
+    * (which of score and pair-dedup runs first is the caller's call).
+    */
+  def selfPairs(keyed: DataFrame, keys: Seq[String], id: String,
+      feature: String, maxBucket: Int): DataFrame = {
+    val salted = saltOversized(keyed, keys, col(id), maxBucket)
+    def side(half: String) = salted.select(keys.map(col) ++ Seq(col("__salt"),
+      col(id).as(s"id_$half"), col(feature).as(s"${feature}_$half")): _*)
+    side("a").join(side("b"), keys :+ "__salt").filter(col("id_a") < col("id_b"))
+  }
+
   /** Adds `__salt` (0 for buckets at or under `maxBucket`); self-join on
     * `keys :+ "__salt"`. The hot side holds one row per OVERSIZED
     * bucket only — usually zero to a handful, so AQE converts the join
@@ -41,7 +59,7 @@ object Buckets {
     * (unbroadcastable at 10^12 docs) and the join must then survive as
     * a shuffle join rather than OOM the driver inside its own guard.
     */
-  def saltOversized(keyed: DataFrame, keys: Seq[String], id: Column,
+  private def saltOversized(keyed: DataFrame, keys: Seq[String], id: Column,
       maxBucket: Int): DataFrame = {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     // internal working columns: a caller schema already carrying either
@@ -49,7 +67,7 @@ object Buckets {
     // produce wrong salts
     Seq("n_splits", "__salt").foreach(c =>
       require(!keyed.columns.contains(c),
-        s"saltOversized input must not contain a '$c' column"))
+        s"selfPairs input must not contain a '$c' column"))
     val hot = hotBuckets(keyed, keys, maxBucket)
       .select(keys.map(col) :+ col("n_splits"): _*)
     keyed.join(hot, keys, "left")
@@ -59,7 +77,7 @@ object Buckets {
       .drop("n_splits")
   }
 
-  /** Audit of what [[saltOversized]] splits: one row per oversized
+  /** Audit of what [[selfPairs]] salts: one row per oversized
     * bucket — (keys..., n, n_splits, pairs_unbounded, pairs_kept_est).
     * `pairs_unbounded - pairs_kept_est` is the candidate volume the
     * bound forgoes; run and log this wherever the cap may bite.

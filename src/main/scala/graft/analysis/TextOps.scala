@@ -474,13 +474,12 @@ object TextOps {
       stagingName = "simhash_base")
 
   /** The banded chunk keys of a 64-bit hash: array of (band, bucket)
-    * structs — ONE encoding shared by the batch self-join
-    * ([[bandedHammingPairs]]) and the streaming per-bucket state
-    * (`StreamingExtract.simhashDupStream`/`dhashDupStream`), so the
-    * two surfaces cannot drift. Validates the band arithmetic
-    * (bands=1 would wrap the mask to 0 — one global bucket, a full
-    * quadratic self-join; a non-divisor of 64 would silently leave
-    * the top 64 % bands bits out of every key).
+    * structs — the one band encoding, read by the batch self-join
+    * ([[bandedHammingPairs]]) and by the streaming bucket machine
+    * (`StreamingExtract.simhashDupStream`/`dhashDupStream`). Validates
+    * the band arithmetic (bands=1 would wrap the mask to 0 — one global
+    * bucket, a full quadratic self-join; a non-divisor of 64 would
+    * silently leave the top 64 % bands bits out of every key).
     */
   def hammingBandKeys(hash: Column, bands: Int): Column = {
     require(bands >= 2 && 64 % bands == 0,
@@ -502,8 +501,8 @@ object TextOps {
     * maxHamming < bands — deterministic, unlike probabilistic LSH);
     * exact-Hamming rerank once per deduped pair. Ids may be any
     * orderable type (longs for docs, "ref#frame" strings for media).
-    * Same hot-bucket salt + staging/cache barrier semantics as the
-    * MinHash path.
+    * The self-join is [[Buckets.selfPairs]] and the staging/cache
+    * barrier is the MinHash path's.
     */
   def bandedHammingPairs(hashes: DataFrame, id: Column, hash: Column,
       bands: Int = 4, maxHamming: Int = 3, maxBucket: Int = 4096,
@@ -517,12 +516,6 @@ object TextOps {
         .withColumn("bk", explode_outer(hammingBandKeys(col("sh"), bands)))
         .select(col("id"), col("sh"), col("bk.band"), col("bk.bucket")),
       staging, stagingName, scope) // lifecycle: see minhashDupPairs / Staging
-    val salted =
-      Buckets.saltOversized(base, Seq("band", "bucket"), col("id"), maxBucket)
-    val a = salted.select(col("band"), col("bucket"), col("__salt"),
-      col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = salted.select(col("band"), col("bucket"), col("__salt"),
-      col("id").as("id_b"), col("sh").as("sh_b"))
     // rerank BEFORE the pair-dedup exchange: hamming is two codegen
     // instructions (bit_count(xor)), so re-evaluating it per band
     // collision is ~free, while the dropDuplicates exchange then
@@ -536,8 +529,7 @@ object TextOps {
     // dropDuplicates keeps the same (id_a, id_b, hamming) content.
     // (The MinHash path keeps the opposite order deliberately — its
     // rerank is a full set intersection, far dearer than an exchange.)
-    a.join(b, Seq("band", "bucket", "__salt"))
-      .filter(col("id_a") < col("id_b"))
+    Buckets.selfPairs(base, Seq("band", "bucket"), "id", "sh", maxBucket)
       .select(col("id_a"), col("id_b"),
         hamming(col("sh_a"), col("sh_b")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -615,22 +607,15 @@ object TextOps {
       .withColumn("bk", explode_outer(MinhashBandKeys.of(col("sig"), bands)))
       .select(col("id"), col("hs"), col("bk.band"), col("bk.bucket"))
 
-  /** Banded self-join + exact-Jaccard rerank over a MATERIALIZED
-    * (id, hs, band, bucket) base frame (hot buckets salted, pairs
-    * deduped across bands before the rerank). Shared by the one-corpus
+  /** Banded self-join ([[Buckets.selfPairs]]) + exact-Jaccard rerank
+    * over a MATERIALIZED (id, hs, band, bucket) base frame, pairs
+    * deduped across bands before the rerank. Shared by the one-corpus
     * path ([[minhashDupPairs]]) and the incremental new-vs-new half of
     * [[dedupAgainstBase]].
     */
   private def minhashSelfPairs(base: DataFrame, minJaccard: Double,
-      maxBucket: Int): DataFrame = {
-    val salted =
-      Buckets.saltOversized(base, Seq("band", "bucket"), col("id"), maxBucket)
-    val a = salted.select(col("band"), col("bucket"), col("__salt"),
-      col("id").as("id_a"), col("hs").as("hs_a"))
-    val b = salted.select(col("band"), col("bucket"), col("__salt"),
-      col("id").as("id_b"), col("hs").as("hs_b"))
-    a.join(b, Seq("band", "bucket", "__salt"))
-      .filter(col("id_a") < col("id_b"))
+      maxBucket: Int): DataFrame =
+    Buckets.selfPairs(base, Seq("band", "bucket"), "id", "hs", maxBucket)
       // dedupe pairs BEFORE the exact-Jaccard rerank: a pair colliding
       // in k bands pays ONE set intersection, not k (the shingle-hash
       // arrays ride along; they are identical per pair)
@@ -638,7 +623,6 @@ object TextOps {
       .select(col("id_a"), col("id_b"),
         jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-  }
 
   // ---- deterministic dataset splitting ---------------------------------
   /** Deterministic hash split — train/validation/test assignment that
@@ -1287,7 +1271,7 @@ object TextOps {
     * LSH near-dup join over unique texts only. A 10^6-identical-
     * boilerplate cluster costs one aggregation group here instead of a
     * quadratically hot LSH bucket — the exact pre-pass is what keeps
-    * [[Buckets.saltOversized]]'s salt a backstop rather than a recall
+    * [[Buckets.selfPairs]]'s salt a backstop rather than a recall
     * tax. Returns
     *   (nearPairs among exact-group keepers: (id_a, id_b, jaccard),
     *    exactGroups: (dup_key, n_dups, keeper_id))

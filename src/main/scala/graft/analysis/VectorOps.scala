@@ -172,18 +172,12 @@ object VectorOps {
     // embeddings shares every sign bit, so ONE bucket per table holds the
     // whole cluster — exactly the M^2 blowup the salt bounds. Collapse
     // bit-identical vectors first where the data allows it.
-    val salted =
-      Buckets.saltOversized(keyed, Seq("table", "bucket"), col("vec_id"), maxBucket)
-    val a = salted.select(col("table"), col("bucket"), col("__salt"),
-      col("vec_id").as("id_a"), col("embedding").as("v_a"))
-    val b = salted.select(col("table"), col("bucket"), col("__salt"),
-      col("vec_id").as("id_b"), col("embedding").as("v_b"))
-    a.join(b, Seq("table", "bucket", "__salt"))
-      .filter(col("id_a") < col("id_b"))
+    Buckets.selfPairs(keyed, Seq("table", "bucket"), "vec_id", "embedding", maxBucket)
       // score + threshold BEFORE the pair-dedup exchange (see annTopK):
       // the exchange then carries the thresholded (id_a, id_b, cos)
       // rows instead of two full vectors per band collision
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos"))
+      .select(col("id_a"), col("id_b"),
+        cosine(col("embedding_a"), col("embedding_b")).as("cos"))
       .filter(col("cos") >= minCos)
       .dropDuplicates("id_a", "id_b")
   }

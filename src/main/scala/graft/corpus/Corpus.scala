@@ -32,7 +32,6 @@ object Det {
     while (it.hasNext) { key.part(p); p = it.next() }
     key.hash(p)
   }
-  def pick[A](xs: IndexedSeq[A], parts: Any*): A = xs((h(parts: _*) % xs.length).toInt)
 
   /** The MurmurHash3 state of a key's leading parts (each rendered and
     * followed by '\u0000'), fed two chars per `mix` exactly as

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 import graft.Pipeline
@@ -96,14 +97,10 @@ object StreamingExtract {
   def dedupStream(spark: SparkSession, inDir: String,
       stateTtlMs: Long = 0L) = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val timeout =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     spark.readStream.schema(docsSchema).parquet(inDir).as[DocRow]
       .groupByKey(_.doc_id)
       .flatMapGroupsWithState[Boolean, DocRow](
-        OutputMode.Append(), timeout) {
+        OutputMode.Append(), stateTimeout(stateTtlMs)) {
         (_: String, rows: Iterator[DocRow], state: GroupState[Boolean]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else if (state.exists) {
@@ -132,14 +129,18 @@ object StreamingExtract {
     * bucket runs. An arriving doc is compared against its bucket's
     * stored signatures by estimated Jaccard (matching signature slots /
     * m — the standard MinHash estimator; the stream cannot keep full
-    * shingle sets): a hit emits (doc_id, dup_of, est_jaccard) and the
-    * doc is not stored IN THAT BUCKET; a miss is stored if the bucket
-    * has room. The keeper guarantee is PER (band, bucket): state is
-    * partitioned by bucket with no cross-group coordination, so a doc
-    * that matched in one band's bucket may still be stored as a keeper
-    * in another band's bucket, and later arrivals can be reported as
-    * dup_of a doc that is itself a dup (a non-canonical transitive
-    * chain). Consumers needing canonical cluster keepers run the batch
+    * shingle sets): the best hit >= `minEstJaccard` (ties to the lower
+    * id) emits (doc_id, dup_of, est_jaccard) and the doc is not stored
+    * IN THAT BUCKET; a miss is stored if the bucket has room. All four
+    * near-dup streams run this one bucket state machine and differ only
+    * in keyed input and score, so the rules below hold for each.
+    *
+    * Keepers are PER (band, bucket): state is partitioned by bucket with
+    * no cross-group coordination, so a doc that matched in one band's
+    * bucket may still be stored as a keeper in another band's bucket,
+    * and later arrivals can be reported as dup_of a doc that is itself
+    * a dup (a non-canonical transitive chain). Consumers needing
+    * canonical cluster keepers run the batch
     * [[graft.analysis.TextOps.dupClusters]] min-id propagation over the
     * emitted pair stream. A doc colliding with the same keeper in
     * several bands emits once per band — consumers dedupe by (doc_id,
@@ -147,7 +148,7 @@ object StreamingExtract {
     * rerank.
     *
     * Determinism: rows within a (bucket, micro-batch) are processed in
-    * doc_id order (the per-bucket batch is buffered — bounded by the
+    * id order (the per-bucket batch is buffered — bounded by the
     * micro-batch, not the stream). Re-ingests of a stored keeper are
     * dropped silently. Compose exact dedup upstream for the same reason
     * the batch cascade does.
@@ -169,6 +170,24 @@ object StreamingExtract {
     * trigger would spin batches back-to-back while any timeout is
     * pending.
     */
+  def nearDupStream(spark: SparkSession, inDir: String, n: Int = 3,
+      m: Int = 16, bands: Int = 4, minEstJaccard: Double = 0.5,
+      maxPerBucket: Int = 64, stateTtlMs: Long = 0L): DataFrame = {
+    import spark.implicits._
+    import graft.analysis.{MinhashBandKeys, MinhashSignature, ShingleHashes, TextOps}
+    val keyed = spark.readStream.schema(textDocsSchema).parquet(inDir)
+      // null rows drop like the batch twin's join drops them (see
+      // simhashDupStream — one dirty record must not kill the query)
+      .filter(col("doc_id").isNotNull && col("text").isNotNull)
+      .withColumn("hs", ShingleHashes.of(TextOps.tokens(col("text")), n))
+      .withColumn("sig", MinhashSignature.of(col("hs"), m))
+      .withColumn("bk", explode_outer(MinhashBandKeys.of(col("sig"), bands)))
+      .select(col("bk.band"), col("bk.bucket"), col("doc_id"), col("sig"))
+      .as[(Int, Long, Long, Seq[Long])]
+    bucketDedup(keyed, estJaccard(m, minEstJaccard), maxPerBucket, stateTtlMs)
+      .toDF("doc_id", "dup_of", "est_jaccard")
+  }
+
   /** embeddings-table-shaped stream input (vec_id, embedding). Two
     * declared schemas because a file-source schema is fixed per query
     * and parquet will not silently widen float->double: pass
@@ -187,32 +206,21 @@ object StreamingExtract {
     * and the continuous form of `VectorOps.cosineDupPairs`: sign-LSH
     * keys are the same fused map-side SignBuckets expression as the
     * batch path, and the bucketed self-join becomes per-(table, bucket)
-    * custom state. Each bucket stores at most `maxPerBucket`
-    * (vec_id, vector) entries; an arriving vector is scored by EXACT
-    * cosine against its bucket's stored vectors (the stream keeps the
-    * full vectors — unlike the text path, which can only afford
-    * signatures): the best hit >= `minCos` (ties to the lower id) emits
-    * (vec_id, dup_of, cos) and the vector is not stored IN THAT BUCKET;
-    * a miss is stored if the bucket has room. Identical vectors share
-    * every sign bucket in every table, so exact duplicates are caught
-    * with certainty; near vectors with the multi-table probability the
-    * batch path documents.
-    *
-    * Keeper semantics, determinism (vec_id order within a bucket's
-    * micro-batch slice), re-ingest silent drop, multi-table duplicate
-    * emissions (consumers dedupe by (vec_id, dup_of)), and the
-    * `stateTtlMs` processing-time eviction contract — including the
-    * no-data-micro-batches deployment note — are EXACTLY
-    * [[nearDupStream]]'s; see its doc. State per bucket is
-    * maxPerBucket * (8 + 8 * dim) bytes, the TTL bounds the bucket
-    * keyspace to recently-active buckets.
+    * custom state on [[nearDupStream]]'s bucket machine (see its doc
+    * for the keeper, tie-break, cap and TTL rules). The score is EXACT
+    * cosine against the stored vectors (the stream keeps the full
+    * vectors — the text path can only afford signatures); a hit is
+    * cos >= `minCos` and emits (vec_id, dup_of, cos). Identical vectors
+    * share every sign bucket in every table, so exact duplicates are
+    * caught with certainty; near vectors with the multi-table
+    * probability the batch path documents. State per bucket is
+    * maxPerBucket * (8 + 8 * dim) bytes.
     */
   def vectorNearDupStream(spark: SparkSession, inDir: String,
       nPlanes: Int = 16, tables: Int = 4, minCos: Double = 0.99,
       maxPerBucket: Int = 64, stateTtlMs: Long = 0L,
       schema: StructType = vecDocsSchema): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.analysis.SignBuckets
     val keyed = spark.readStream.schema(schema).parquet(inDir)
       // null id/vector rows drop up front: decoded into a non-nullable
@@ -223,66 +231,21 @@ object StreamingExtract {
       .withColumn("bk", explode_outer(SignBuckets.of(col("embedding"), nPlanes, tables)))
       .select(col("bk.table"), col("bk.bucket"), col("vec_id"), col("embedding"))
       .as[(Int, Long, Long, Array[Double])]
-    val timeout =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      // dimension mismatch -> NaN (never >= minCos): the batch twin's
-      // CosineSim returns null there, which the cos >= minCos filter
-      // drops — a truncated malformed vector must not score 1.0
-      if (a.length != b.length) return Double.NaN
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-    }
-    keyed.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[List[(Long, Array[Double])], (Long, Long, Double)](
-        OutputMode.Append(), timeout) {
-        case (_, rows, state: GroupState[List[(Long, Array[Double])]]) =>
-          if (state.hasTimedOut) { // idle past the TTL: evict wholesale
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = List.newBuilder[(Long, Long, Double)]
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, vec) =>
-              if (!seen.exists(_._1 == id)) { // keeper re-ingest: silent drop
-                val best = seen.iterator.map { case (sid, svec) =>
-                  (sid, cos(vec, svec))
-                }.filter(_._2 >= minCos)
-                  .reduceOption((a, b) =>
-                    if (b._2 > a._2 || (b._2 == a._2 && b._1 < a._1)) b else a)
-                best match {
-                  case Some((sid, c)) => out += ((id, sid, c))
-                  case None =>
-                    if (seen.size < maxPerBucket) seen = seen :+ ((id, vec))
-                }
-              }
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }.toDF("vec_id", "dup_of", "cos")
+    bucketDedup(keyed, cosine(minCos), maxPerBucket, stateTtlMs)
+      .toDF("vec_id", "dup_of", "cos")
   }
 
   /** Streaming banded-Hamming near-dup over the text SimHash — the
     * continuous twin of `TextOps.simhashDupPairs`: the fused Simhash64
     * expression and the SAME `TextOps.hammingBandKeys` band encoding
-    * feed per-(band, bucket) custom state holding at most
-    * `maxPerBucket` (doc_id, hash) entries — 16 bytes each, the
-    * cheapest state of any dedup stream here. An arriving doc is
-    * scored by EXACT Hamming distance against its bucket's stored
-    * hashes; the best hit <= `maxHamming` (ties to the lower id)
-    * emits (doc_id, dup_of, hamming) and the doc is not stored IN
-    * THAT BUCKET; a miss is stored if the bucket has room. The batch
-    * path's pigeonhole guarantee carries over PER STORED KEEPER: a
-    * pair within `maxHamming` shares some band, so it is caught
-    * whenever the earlier doc was stored in that shared band's bucket
-    * (the bounded-state and TTL recall caveats are exactly
-    * [[nearDupStream]]'s — see its doc for keeper semantics,
-    * determinism, multi-band duplicate emissions, and the
-    * no-data-micro-batches deployment note).
+    * feed [[nearDupStream]]'s bucket machine (see its doc for the
+    * keeper, tie-break, cap and TTL rules), whose (doc_id, hash)
+    * entries are 16 bytes each, the cheapest state of any dedup stream
+    * here. The score is EXACT Hamming distance; a hit is <= `maxHamming`
+    * and emits (doc_id, dup_of, hamming). The batch path's pigeonhole
+    * guarantee carries over PER STORED KEEPER: a pair within
+    * `maxHamming` shares some band, so it is caught whenever the
+    * earlier doc was stored in that shared band's bucket.
     */
   def simhashDupStream(spark: SparkSession, inDir: String, bands: Int = 4,
       maxHamming: Int = 3, maxPerBucket: Int = 64,
@@ -300,68 +263,8 @@ object StreamingExtract {
       .withColumn("bk", explode_outer(TextOps.hammingBandKeys(col("sh"), bands)))
       .select(col("bk.band"), col("bk.bucket"), col("doc_id"), col("sh"))
       .as[(Int, Long, Long, Long)]
-    hammingDedupState[Long](keyed, maxHamming, maxPerBucket, stateTtlMs)
+    bucketDedup(keyed, hamming(maxHamming), maxPerBucket, stateTtlMs)
       .toDF("doc_id", "dup_of", "hamming")
-  }
-
-  /** The bounded-bucket exact-Hamming state machine shared by
-    * [[simhashDupStream]] (long doc ids) and [[dhashDupStream]]
-    * (string frame ids) — ONE implementation so keeper / tiebreak /
-    * TTL semantics cannot drift between the text and media surfaces
-    * (the same reason `hammingBandKeys` is shared with the batch
-    * join). Generic over the id type: needs its Encoder (for state
-    * and output rows) and Ordering (within-micro-batch determinism
-    * and the lower-id tiebreak).
-    */
-  private def hammingDedupState[I](
-      keyed: org.apache.spark.sql.Dataset[(Int, Long, I, Long)],
-      maxHamming: Int, maxPerBucket: Int, stateTtlMs: Long)(
-      implicit ord: Ordering[I],
-      stateEnc: org.apache.spark.sql.Encoder[List[(I, Long)]],
-      outEnc: org.apache.spark.sql.Encoder[(I, I, Int)],
-      keyEnc: org.apache.spark.sql.Encoder[(Int, Long)])
-      : org.apache.spark.sql.Dataset[(I, I, Int)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val timeout =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    keyed.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[List[(I, Long)], (I, I, Int)](
-        OutputMode.Append(), timeout) {
-        case (_, rows, state: GroupState[List[(I, Long)]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // state shape: a List scanned linearly per arriving row
-            // (membership + best-match) and rebuilt with :+ — O(n) per
-            // row, deliberately so: n is capped at maxPerBucket (64 by
-            // default) where a list of 8-byte pairs beats any keyed
-            // structure on constant factors. A caller raising
-            // maxPerBucket into the thousands should switch `seen` to
-            // a LinkedHashMap keyed by id (the Hamming scan itself is
-            // irreducibly O(n) — banding, not the container, is what
-            // keeps buckets small).
-            var seen = state.getOption.getOrElse(Nil)
-            val out = List.newBuilder[(I, I, Int)]
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, h) =>
-              if (!seen.exists(_._1 == id)) { // keeper re-ingest: silent drop
-                val best = seen.iterator.map { case (sid, sh) =>
-                  (sid, java.lang.Long.bitCount(h ^ sh))
-                }.filter(_._2 <= maxHamming)
-                  .reduceOption((a, b) =>
-                    if (b._2 < a._2 || (b._2 == a._2 && ord.lt(b._1, a._1))) b
-                    else a)
-                best match {
-                  case Some((sid, d)) => out += ((id, sid, d))
-                  case None =>
-                    if (seen.size < maxPerBucket) seen = seen :+ ((id, h))
-                }
-              }
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }
   }
 
   /** Asset-table-shaped stream input (media_ref, mime, content). */
@@ -373,12 +276,13 @@ object StreamingExtract {
   /** Streaming PERCEPTUAL media near-dup — the continuous twin of
     * `BinaryOps.dhashDupPairs`: pooled-codec 9x8 grayscale frames
     * (mapPartitions lifts to streams unchanged), the fused DHash64,
-    * the shared `hammingBandKeys` encoding, and the same per-bucket
-    * bounded-Hamming state machine as [[simhashDupStream]], keyed by
-    * "media_ref#frame_idx" strings. A re-encoded or snap-resized copy
-    * arriving in a later micro-batch is flagged against its stored
-    * original (BinaryOpsSpec semantics; StreamingSpec proves it
-    * across batches). State per entry is one (id, 8-byte hash) pair.
+    * the shared `hammingBandKeys` encoding, and the same exact-Hamming
+    * score as [[simhashDupStream]] on the same bucket state machine,
+    * keyed by "media_ref#frame_idx" strings. A re-encoded or
+    * snap-resized copy arriving in a later micro-batch is flagged
+    * against its stored original (BinaryOpsSpec semantics;
+    * StreamingSpec proves it across batches). State per entry is one
+    * (id, 8-byte hash) pair.
     */
   def dhashDupStream(spark: SparkSession, inDir: String, maxFrames: Int = 4,
       bands: Int = 8, maxHamming: Int = 7, maxPerBucket: Int = 64,
@@ -400,58 +304,105 @@ object StreamingExtract {
       .withColumn("bk", explode_outer(TextOps.hammingBandKeys(col("sh"), bands)))
       .select(col("bk.band"), col("bk.bucket"), col("id"), col("sh"))
       .as[(Int, Long, String, Long)]
-    hammingDedupState[String](keyed, maxHamming, maxPerBucket, stateTtlMs)
+    bucketDedup(keyed, hamming(maxHamming), maxPerBucket, stateTtlMs)
       .toDF("id", "dup_of", "hamming")
   }
 
-  def nearDupStream(spark: SparkSession, inDir: String, n: Int = 3,
-      m: Int = 16, bands: Int = 4, minEstJaccard: Double = 0.5,
-      maxPerBucket: Int = 64, stateTtlMs: Long = 0L): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.analysis.{MinhashBandKeys, MinhashSignature, ShingleHashes, TextOps}
-    val keyed = spark.readStream.schema(textDocsSchema).parquet(inDir)
-      // null rows drop like the batch twin's join drops them (see
-      // simhashDupStream — one dirty record must not kill the query)
-      .filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .withColumn("hs", ShingleHashes.of(TextOps.tokens(col("text")), n))
-      .withColumn("sig", MinhashSignature.of(col("hs"), m))
-      .withColumn("bk", explode_outer(MinhashBandKeys.of(col("sig"), bands)))
-      .select(col("bk.band"), col("bk.bucket"), col("doc_id"), col("sig"))
-      .as[(Int, Long, Long, Seq[Long])]
-    val timeout =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
+  // ---- the bounded-bucket state machine --------------------------------
+
+  /** A near-dup stream's score of an arriving feature against a stored
+    * one, which scores are hits (`near`), and which hit wins:
+    * `nearer.lt(a, b)` when `a` is strictly nearer, `equiv` on a tie.
+    */
+  private[streaming] final case class Nearness[F, S](score: (F, F) => S,
+      near: S => Boolean, nearer: Ordering[S])
+
+  /** Higher is nearer, by IEEE `>`/`==` (TotalOrdering splits -0.0). */
+  private val Higher: Ordering[Double] = Ordering.Double.IeeeOrdering.reverse
+
+  /** MinHash estimated Jaccard: matching signature slots / m. */
+  private[streaming] def estJaccard(m: Int,
+      minEstJaccard: Double): Nearness[Seq[Long], Double] =
+    Nearness((sig, ssig) =>
+      sig.iterator.zip(ssig.iterator).count { case (a, b) => a == b }.toDouble / m,
+      _ >= minEstJaccard, Higher)
+
+  /** Exact cosine. A dimension mismatch scores NaN (never >= minCos):
+    * the batch twin's CosineSim returns null there, which its
+    * cos >= minCos filter drops — a truncated malformed vector must not
+    * score 1.0. A zero-norm vector scores 0.0.
+    */
+  private[streaming] def cosine(minCos: Double): Nearness[Array[Double], Double] =
+    Nearness({ (a, b) =>
+      if (a.length != b.length) Double.NaN
+      else {
+        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+        while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+        if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+      }
+    }, _ >= minCos, Higher)
+
+  /** Exact Hamming distance of two 64-bit hashes; lower is nearer. */
+  private[streaming] def hamming(maxHamming: Int): Nearness[Long, Int] =
+    Nearness((h, sh) => java.lang.Long.bitCount(h ^ sh), _ <= maxHamming,
+      Ordering.Int)
+
+  /** Processing-time timeout when `stateTtlMs > 0`, none otherwise. */
+  private def stateTimeout(stateTtlMs: Long): GroupStateTimeout =
+    if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
+    else GroupStateTimeout.NoTimeout()
+
+  /** The ONE bounded-bucket state machine behind every near-dup stream:
+    * `keyed` rows are (band or table, bucket, id, feature); a bucket's
+    * state is its stored (id, feature) keepers. This adapter does only
+    * the timeout, the eviction and the state update; [[bucketStep]]
+    * decides the rest. Ids need an Ordering (batch order, tie-break).
+    */
+  private def bucketDedup[I, F, S](keyed: Dataset[(Int, Long, I, F)],
+      rule: Nearness[F, S], maxPerBucket: Int, stateTtlMs: Long)(
+      implicit ord: Ordering[I], stateEnc: Encoder[List[(I, F)]],
+      outEnc: Encoder[(I, I, S)], keyEnc: Encoder[(Int, Long)]): Dataset[(I, I, S)] =
     keyed.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[List[(Long, Seq[Long])], (Long, Long, Double)](
-        OutputMode.Append(), timeout) {
-        case (_, rows, state: GroupState[List[(Long, Seq[Long])]]) =>
-          if (state.hasTimedOut) { // idle past the TTL: evict wholesale
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = List.newBuilder[(Long, Long, Double)]
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, sig) =>
-              if (!seen.exists(_._1 == id)) { // keeper re-ingest: silent drop
-                val best = seen.iterator.map { case (sid, ssig) =>
-                  val matches = sig.iterator.zip(ssig.iterator)
-                    .count { case (a, b) => a == b }
-                  (sid, matches.toDouble / m)
-                }.filter(_._2 >= minEstJaccard)
-                  .reduceOption((a, b) =>
-                    if (b._2 > a._2 || (b._2 == a._2 && b._1 < a._1)) b else a)
-                best match {
-                  case Some((sid, est)) => out += ((id, sid, est))
-                  case None =>
-                    if (seen.size < maxPerBucket) seen = seen :+ ((id, sig))
-                }
-              }
-            }
+      .flatMapGroupsWithState[List[(I, F)], (I, I, S)](
+        OutputMode.Append(), stateTimeout(stateTtlMs)) {
+        case (_, rows, state: GroupState[List[(I, F)]]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty } // idle: evict
+          else {
+            val (seen, out) = bucketStep(state.getOption.getOrElse(Nil),
+              rows.map(r => (r._3, r._4)).toSeq.sortBy(_._1), rule, maxPerBucket)
             state.update(seen)
             if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
+            out.iterator
           }
-      }.toDF("doc_id", "dup_of", "est_jaccard")
+      }
+
+  /** One bucket's micro-batch, pure: the stored keepers `seen` and the
+    * arriving `batch` (in id order) give the keepers after the batch and
+    * the emitted (id, dup_of, score) rows. An id already stored is
+    * dropped silently (a keeper re-ingest); otherwise the nearest `near`
+    * keeper, ties to the lower id, is its dup_of; a doc with no near
+    * keeper is stored while the bucket holds fewer than `maxPerBucket`.
+    */
+  private[streaming] def bucketStep[I, F, S](seen: List[(I, F)],
+      batch: Seq[(I, F)], rule: Nearness[F, S], maxPerBucket: Int)(
+      implicit ord: Ordering[I]): (List[(I, F)], List[(I, I, S)]) = {
+    // a List scanned per arriving row and rebuilt with :+ is O(n) per
+    // row, deliberately: n <= maxPerBucket (64 by default) is where a
+    // list beats a keyed map; the score scan is O(n) regardless
+    var kept = seen
+    val out = List.newBuilder[(I, I, S)]
+    batch.foreach { case (id, f) =>
+      if (!kept.exists(_._1 == id)) {
+        val best = kept.iterator.map { case (sid, sf) => (sid, rule.score(f, sf)) }
+          .filter(hit => rule.near(hit._2))
+          .reduceOption((a, b) => if (rule.nearer.lt(b._2, a._2) ||
+            (rule.nearer.equiv(b._2, a._2) && ord.lt(b._1, a._1))) b else a)
+        best match {
+          case Some((sid, s)) => out += ((id, sid, s))
+          case None => if (kept.size < maxPerBucket) kept = kept :+ ((id, f))
+        }
+      }
+    }
+    (kept, out.result())
   }
 }

@@ -18,6 +18,20 @@ class SingleEncodingSpec extends AnyFunSuite {
     Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
 
+  /** `file:enclosing def` of every line of `sources` matching `re`. */
+  private def sitesOf(sources: Seq[java.nio.file.Path], re: scala.util.matching.Regex) = {
+    val defName = """\bdef\s+(\w+)""".r
+    for {
+      f <- sources
+      lines = Files.readAllLines(f).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex if re.findFirstIn(line).isDefined
+    } yield {
+      val enclosing = (i to 0 by -1).iterator
+        .flatMap(j => defName.findFirstMatchIn(lines(j)).map(_.group(1))).nextOption()
+      s"${f.getFileName}:${enclosing.getOrElse("?")}"
+    }
+  }
+
   /** Names defined in HofTwins (or deleted outright) that src/main must
     * not define again, plus any `*Hof` definition.
     */
@@ -51,18 +65,23 @@ class SingleEncodingSpec extends AnyFunSuite {
   }
 
   test("src/main reads the OCR engine at three sites: OcrText, ocrAll, the skew page stage") {
-    val defName = """\bdef\s+(\w+)""".r
-    val sites = for {
-      f <- mainSources()
-      lines = Files.readAllLines(f).asScala.toIndexedSeq
-      (line, i) <- lines.zipWithIndex if line.contains("OcrEnginePool.engine")
-    } yield {
-      val enclosing = (i to 0 by -1).iterator
-        .flatMap(j => defName.findFirstMatchIn(lines(j)).map(_.group(1))).nextOption()
-      s"${f.getFileName}:${enclosing.getOrElse("?")}"
-    }
+    val sites = sitesOf(mainSources(), """OcrEnginePool\.engine""".r)
     assert(sites.sorted == Seq("OcrExpr.scala:evalCore", "Pipeline.scala:extractSkewAware",
       "Pipeline.scala:ocrAll"), sites.mkString("\n", "\n", ""))
+  }
+
+  test("graft/streaming keeps state at two sites: dedupStream and the near-dup bucket machine") {
+    val stateful = """\.(?:flatMapGroupsWithState|mapGroupsWithState|transformWithState)\b""".r
+    val sites = sitesOf(mainSources("src/main/scala/graft/streaming"), stateful)
+    assert(sites.sorted == Seq("StreamingExtract.scala:bucketDedup",
+      "StreamingExtract.scala:dedupStream"), sites.mkString("\n", "\n", ""))
+  }
+
+  test("only Buckets knows the hot-bucket salt column") {
+    val files = mainSources()
+      .filter(f => new String(Files.readAllBytes(f), "UTF-8").contains("__salt"))
+      .map(_.getFileName.toString)
+    assert(files == Seq("Buckets.scala"), files.mkString("\n", "\n", ""))
   }
 
   test("src/main names no second OCR operator and no test-only job knob") {
