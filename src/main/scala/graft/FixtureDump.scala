@@ -20,8 +20,7 @@ object FixtureDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "fixtures/ocr_dump.jsonl"
     val n = if (args.length > 1) args(1).toLong else 200L
-    val spark = BenchUtil.localSession("local[8]", 8,
-      "spark.app.name" -> "graft-fixture-dump")
+    val spark = BenchUtil.localSession("graft-fixture-dump")
     try {
       val docs = Corpus.generate(spark, n)
       val lines = Pipeline.ocrAll(docs).orderBy("doc_id").toJSON.collect()

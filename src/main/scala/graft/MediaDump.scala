@@ -22,8 +22,7 @@ object MediaDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "fixtures/assets_dump.jsonl"
     val n = if (args.length > 1) args(1).toLong else 2000L
-    val spark = BenchUtil.localSession("local[8]", 8,
-      "spark.app.name" -> "graft-media-dump")
+    val spark = BenchUtil.localSession("graft-media-dump")
     try {
       val assets = BinaryOps.assetsFor(Corpus.generate(spark, n))
       val lines = assets.orderBy("media_ref").toJSON.collect()

@@ -971,7 +971,7 @@ object TextOps {
     * since r08 the cache-mode barriers materialize EAGERLY at call
     * time, like the staged mode always has — see [[Staging]]) — but a
     * 100 TB job should run and log it alongside the dedup itself
-    * (CurateVolumeBench shows the shape).
+    * (the 1M-doc volume artifact in BENCH.md's history shows the shape).
     */
   def curate(docs: DataFrame, id: Column, text: Column,
       lang: String = "en", minTokens: Int = 30, maxPunctRatio: Double = 0.2,
@@ -1354,7 +1354,8 @@ object TextOps {
     * Cost shape: O(new docs) signatures + one equi-join whose base side
     * is a column-pruned parquet scan of 8-byte ids and hash arrays —
     * snapshot k never pays snapshot 1..k-1's minhash chain again
-    * (CurateVolumeBench's incremental phase is the measured evidence).
+    * (the incremental phase of the 1M-doc volume artifact in BENCH.md's
+    * history is the measured evidence).
     * The new-vs-base join is a plain equi-join (not a self-join), so
     * the hot-bucket salt does not apply to it; a curated base keeps its
     * buckets bounded by construction ([[curate]] collapses exact dups

@@ -10,7 +10,7 @@ import graft.extract.HofTwins
   * queries): MinHash-LSH recall on injected near-dups, ANN consistency
   * vs brute force, SimHash locality, known-value Jaccard, exact dedup.
   */
-class AnalysisSpec extends AnyFunSuite {
+class AnalysisSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -201,8 +201,8 @@ class AnalysisSpec extends AnyFunSuite {
 
   test("staged dup-join base: parquet staging == cache, base readable back") {
     // fresh dir per invocation — the Staging fail-fast contract
-    val dir = java.nio.file.Files.createTempDirectory("graft-staging").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-staging2").toString
+    val dir = tempDir("graft-staging")
+    val dir2 = tempDir("graft-staging2")
     val base = documents.select(col("doc_id"), col("text")).filter(col("doc_id") < 100)
     val dups = base.select((col("doc_id") + 100000).as("doc_id"),
       concat(col("text"), lit(" zz")).as("text"))
@@ -301,7 +301,7 @@ class AnalysisSpec extends AnyFunSuite {
   }
 
   test("engine-wide spark.graft.stagingDir: dupClusters rounds stage to parquet") {
-    val root = java.nio.file.Files.createTempDirectory("graft-conf-staging").toString
+    val root = tempDir("graft-conf-staging")
     spark.conf.set(graft.analysis.StagingConf.Key, root)
     try {
       val pairs = Seq((1L, 3L, 0.9), (2L, 3L, 0.9), (10L, 11L, 0.9))
@@ -1220,7 +1220,7 @@ class AnalysisSpec extends AnyFunSuite {
       (1L, w.mkString(" ")),
       (2L, ("pad1 pad2 pad3 " + w.slice(5, 15).mkString(" ") + " pad4"))
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-runs-").toString
+    val dir = tempDir("graft-runs-")
     val staged = TextOps.duplicatedRuns(docs, col("doc_id"), col("text"),
       minRun = 5, staging = Some(dir))
     val got = staged.as[(Long, Int, Int)].collect().toSeq.sorted
@@ -1884,7 +1884,7 @@ class AnalysisSpec extends AnyFunSuite {
   }
 
   test("incremental dedup: cross recall, snapshot-internal recall, keeper rule") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-incbase").toString
+    val dir = tempDir("graft-incbase")
     val docs = documents.select(col("doc_id"), col("text"))
     val baseDocs = docs.filter(col("doc_id") < 100)
     TextOps.buildMinhashBase(baseDocs, col("doc_id"), col("text"), dir)
@@ -1927,7 +1927,7 @@ class AnalysisSpec extends AnyFunSuite {
   }
 
   test("appendToBase: next snapshot dedups against prior keepers; curate dir is a base") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-incbase2").toString
+    val dir = tempDir("graft-incbase2")
     val docs = documents.select(col("doc_id"), col("text"))
     TextOps.buildMinhashBase(docs.filter(col("doc_id") < 50),
       col("doc_id"), col("text"), dir)
@@ -1949,7 +1949,7 @@ class AnalysisSpec extends AnyFunSuite {
     assert(r2.keepers.count() == 0)
     // a staged curate run's dir IS a valid base: its minhash_base is
     // this exact table over the exact-collapse keepers
-    val curDir = java.nio.file.Files.createTempDirectory("graft-incbase3").toString
+    val curDir = tempDir("graft-incbase3")
     TextOps.curate(docs.filter(col("doc_id") < 50), col("doc_id"), col("text"),
       staging = Some(curDir)).kept.count()
     val r3 = TextOps.dedupAgainstBase(

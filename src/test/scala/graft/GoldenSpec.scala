@@ -24,7 +24,7 @@ object SparkTestSession {
       // static conf: bucketed-table tests saveAsTable into a temp
       // warehouse instead of polluting the repo dir
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        TempDirs.forJvm("graft-warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -11,7 +11,7 @@ import graft.schema.{DocSpan, OcrBox}
   * array<struct> through the pipeline schema — real content for the
   * audit/QC surface — while the parser (quirk Q1) never reads them.
   */
-class OcrBoxSpec extends AnyFunSuite {
+class OcrBoxSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -57,7 +57,7 @@ class OcrBoxSpec extends AnyFunSuite {
     // reproduced here as an OOM when first written with plain explode)
     val doc = graft.schema.DocRow("docbad",
       Seq(graft.schema.DocSpan("media", "", "media://broken", 0)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-badref").toString
+    val dir = tempDir("graft-badref")
     spark.createDataset(Seq(doc)).write.mode("overwrite").parquet(dir)
     val ds = spark.read.parquet(dir).as[graft.schema.DocRow]
     val spans = Pipeline.extractRows(ds, "auto")

@@ -38,7 +38,7 @@ class RecordingOcr(throwFor: Set[String]) extends OcrEngine {
   * unresolved — the reference's early exit (`app.py:153-189`), the same
   * calls the iterative encoding makes, inside one map-only projection.
   */
-class OcrCascadeSpec extends AnyFunSuite {
+class OcrCascadeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -157,7 +157,7 @@ class OcrCascadeSpec extends AnyFunSuite {
   }
 
   test("auto extractRows is map-only: no Exchange, MapPartitions or DeserializeToObject") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-maponly").toString
+    val dir = tempDir("graft-maponly")
     docs.write.mode("overwrite").parquet(dir)
     val plan = Pipeline.extractRows(spark.read.parquet(dir).as[DocRow], "auto")
       .queryExecution.executedPlan

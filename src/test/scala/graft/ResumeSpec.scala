@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -42,7 +40,7 @@ class CrashingIO(method: String, n: Int) extends DocTableIO {
 /** §7.6 checkpoint/resume: crash mid-run, re-run, assert exact same
   * results table and no duplicate audit rows.
   */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   lazy val docs = Corpus.generate(spark, 300).cache()
 
@@ -59,7 +57,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("kill after 3 buckets, resume completes exactly, no dup docs") {
-    val out = Files.createTempDirectory("graft-resume").toString
+    val out = tempDir("graft-resume")
     val crashed = intercept[RuntimeException] {
       ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8,
         io = new CrashingIO("commitAudit", 3))
@@ -87,7 +85,7 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   test("crash between a bucket's write and its audit commit: resume rewrites that bucket") {
-    val out = Files.createTempDirectory("graft-resume-write").toString
+    val out = tempDir("graft-resume-write")
     intercept[RuntimeException] {
       ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 8,
         io = new CrashingIO("writeBucket", 2))
@@ -104,7 +102,7 @@ class ResumeSpec extends AnyFunSuite {
 
   test("audit records round-trip through real JSON (hostile run_id survives)") {
     val io = ParquetTableIO
-    val out = Files.createTempDirectory("graft-audit-rt").toString
+    val out = tempDir("graft-audit-rt")
     // strings a regex-based parser chokes on: quotes, backslashes,
     // newlines, braces — must round-trip byte-identically (run_id also
     // names the audit directory, so it stays within path-legal bytes)
@@ -128,7 +126,7 @@ class ResumeSpec extends AnyFunSuite {
     // job routes through the page-explode path
     val docs = Corpus.generate(spark, 400, skew = true).cache()
     SkewBranches.assertBoth(docs)
-    val out = Files.createTempDirectory("graft-seam").toString
+    val out = tempDir("graft-seam")
     val recs = ExtractJob.run(spark, docs, "auto", out, "r1", buckets = 4, io = io)
     assert(recs.size == 4)
     assert(io.committedBuckets(out, "r1") == (0 until 4).toSet)

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The product keeps ONE encoding per operator: the UDF-free twins of
   * the native expressions live in test scope (graft.extract.HofTwins)
   * as oracles, and OCR on the extraction paths has one reader. This scan
-  * keeps a second encoding, a per-call switch between two, or a
-  * test-only knob from creeping back into src/main.
+  * keeps a second encoding, a per-call switch between two, a test-only
+  * knob, a bench main or a fixed thread count from creeping back into
+  * src/main.
   */
 class SingleEncodingSpec extends AnyFunSuite {
 
@@ -18,19 +19,30 @@ class SingleEncodingSpec extends AnyFunSuite {
     Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
 
-  /** `file:enclosing def` of every line of `sources` matching `re`. */
-  private def sitesOf(sources: Seq[java.nio.file.Path], re: scala.util.matching.Regex) = {
-    val defName = """\bdef\s+(\w+)""".r
+  /** `file:enclosing definition` of every line of `sources` matching
+    * `re`; the definition is the nearest line at or above matching
+    * `enclosing` (group 1 names it).
+    */
+  private def sitesOf(sources: Seq[java.nio.file.Path], re: scala.util.matching.Regex,
+      enclosing: scala.util.matching.Regex = """\bdef\s+(\w+)""".r) = {
     for {
       f <- sources
       lines = Files.readAllLines(f).asScala.toIndexedSeq
       (line, i) <- lines.zipWithIndex if re.findFirstIn(line).isDefined
     } yield {
-      val enclosing = (i to 0 by -1).iterator
-        .flatMap(j => defName.findFirstMatchIn(lines(j)).map(_.group(1))).nextOption()
-      s"${f.getFileName}:${enclosing.getOrElse("?")}"
+      val name = (i to 0 by -1).iterator
+        .flatMap(j => enclosing.findFirstMatchIn(lines(j)).map(_.group(1))).nextOption()
+      s"${f.getFileName}:${name.getOrElse("?")}"
     }
   }
+
+  /** `file:line: text` of every line of `sources` matching `re`. */
+  private def hitsOf(sources: Seq[java.nio.file.Path], re: scala.util.matching.Regex) =
+    for {
+      f <- sources
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if re.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
 
   /** Names defined in HofTwins (or deleted outright) that src/main must
     * not define again, plus any `*Hof` definition.
@@ -41,18 +53,13 @@ class SingleEncodingSpec extends AnyFunSuite {
     "lshBucket", "planeComponent", "projections", "projMatrix",
     "centroidDots", "dot", "norm", "\\w+Hof")
 
-  private val Forbidden = Seq(
-    """fused\s*:\s*Boolean""".r,
-    ("""\bdef\s+(?:""" + Moved.mkString("|") + """)\b""").r)
+  private val Forbidden =
+    ("""fused\s*:\s*Boolean|\bdef\s+(?:""" + Moved.mkString("|") + """)\b""").r
 
   test("src/main holds no fused switch and no test-scope twin") {
     val sources = mainSources()
     assert(sources.size > 20, s"scan found only ${sources.size} sources")
-    val hits = for {
-      f <- sources
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if Forbidden.exists(_.findFirstIn(line).isDefined)
-    } yield s"$f:${i + 1}: ${line.trim}"
+    val hits = hitsOf(sources, Forbidden)
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
@@ -86,11 +93,7 @@ class SingleEncodingSpec extends AnyFunSuite {
 
   test("src/main names no second OCR operator and no test-only job knob") {
     val gone = """\b(ocrLevel|DocOcrOne|failAfterBuckets|skewThreshold|FormatTableIO)\b""".r
-    val hits = for {
-      f <- mainSources()
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if gone.findFirstIn(line).isDefined
-    } yield s"$f:${i + 1}: ${line.trim}"
+    val hits = hitsOf(mainSources(), gone)
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
@@ -98,11 +101,22 @@ class SingleEncodingSpec extends AnyFunSuite {
     // Formatter renders digits in the JVM default locale; the corpus and
     // SimulatedOcr must be pure functions of (seed, index)
     val formatter = """\bf"|\.format\(|String\.format""".r
-    val hits = for {
-      f <- Seq("src/main/scala/graft/corpus/Corpus.scala", "src/main/scala/graft/media/OcrEngine.scala")
-      (line, i) <- Files.readAllLines(Paths.get(f)).asScala.zipWithIndex
-      if formatter.findFirstIn(line).isDefined
-    } yield s"$f:${i + 1}: ${line.trim}"
+    val hits = hitsOf(Seq("src/main/scala/graft/corpus/Corpus.scala",
+      "src/main/scala/graft/media/OcrEngine.scala").map(Paths.get(_)), formatter)
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("src/main defines exactly the bench, job and fixture mains") {
+    // measurement harnesses beyond these live in perfbench
+    val mains = sitesOf(mainSources(), """\bdef\s+main\s*\(""".r, """\bobject\s+(\w+)""".r)
+      .map(_.split(':').last)
+    assert(mains.sorted == Seq("Bench", "ExtractJobMain", "FixtureDump", "LangProfileDump",
+      "MediaDump", "ScalingBench", "Verify"), mains.sorted.mkString("\n", "\n", ""))
+  }
+
+  test("src/main hard-codes no local[<n>] master") {
+    // a fixed thread count oversubscribes any smaller host
+    val hits = hitsOf(mainSources(), """local\[\d+\]""".r)
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

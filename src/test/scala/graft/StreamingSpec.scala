@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +9,12 @@ import graft.streaming.StreamingExtract
 /** The stateless map-only pipeline lifted to Structured Streaming:
   * batch output == streaming output over the same files.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("streaming extraction over a file source equals batch extraction") {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream")
     val docs = Corpus.generate(spark, 100)
     docs.write.mode("overwrite").parquet(s"$dir/in")
 
@@ -35,7 +33,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful streaming dedup: first-seen-wins per doc_id across micro-batches") {
-    val dir = Files.createTempDirectory("graft-sdedup").toString
+    val dir = tempDir("graft-sdedup")
     // batch 1: docs 0-59; batch 2 (arrives later): docs 40-99 — 40-59 are re-ingests
     Corpus.generate(spark, 60).write.parquet(s"$dir/in/b1")
     val q = StreamingExtract.dedupStream(spark, s"$dir/in/*")
@@ -56,7 +54,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup: injected dups flagged across micro-batches, state bounded") {
-    val dir = Files.createTempDirectory("graft-sneardup").toString
+    val dir = tempDir("graft-sneardup")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 50).cache()
     // batch 1: 50 base docs (the keepers)
@@ -112,7 +110,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming simhash near-dup: copies flagged across micro-batches at exact Hamming") {
-    val dir = Files.createTempDirectory("graft-ssimhash").toString
+    val dir = tempDir("graft-ssimhash")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 100)
     docs.write.parquet(s"$dir/in/b1")
@@ -157,7 +155,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dhash media near-dup: re-encoded copies flagged across micro-batches") {
-    val dir = Files.createTempDirectory("graft-sdhash").toString
+    val dir = tempDir("graft-sdhash")
     import graft.media.BinaryOps
     val images = BinaryOps.assetsFor(Corpus.generate(spark, 60))
       .filter(a => a.mime.startsWith("image/"))
@@ -189,7 +187,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming hamming-dedup TTL: idle buckets evict, then re-learn (shared machine)") {
     // exercises the hasTimedOut branch of hammingDedupState — the ONE
     // state machine behind both simhashDupStream and dhashDupStream
-    val dir = Files.createTempDirectory("graft-shttl").toString
+    val dir = tempDir("graft-shttl")
     import spark.implicits._
     val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).filter(col("doc_id") === 0).cache()
@@ -235,7 +233,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming embedding near-dup: planted duplicates resolve across micro-batches") {
-    val dir = Files.createTempDirectory("graft-svdup").toString
+    val dir = tempDir("graft-svdup")
     import spark.implicits._
     val base = vecs(0L until 20L)
     // batch 1: 20 base vectors become their buckets' keepers
@@ -275,7 +273,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming embedding near-dup reads the native float-typed table") {
-    val dir = Files.createTempDirectory("graft-svfloat").toString
+    val dir = tempDir("graft-svfloat")
     import spark.implicits._
     // the canonical embeddings table stores array<float>
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -300,7 +298,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming embedding near-dup TTL: idle buckets evict, then re-learn") {
-    val dir = Files.createTempDirectory("graft-svttl").toString
+    val dir = tempDir("graft-svttl")
     import spark.implicits._
     val keeper = vecs(Seq(0L))
     keeper.toDF("vec_id", "embedding").write.parquet(s"$dir/in/b1")
@@ -341,7 +339,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming session windows: gap merges, watermark finalizes, matches batch sessionize") {
-    val dir = Files.createTempDirectory("graft-ssess").toString
+    val dir = tempDir("graft-ssess")
     import spark.implicits._
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     // user 1: three events 10s apart, then a 100s silence -> 2 sessions
@@ -382,7 +380,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming exact-dedup state TTL: idle keys evict, re-ingest re-emits") {
-    val dir = Files.createTempDirectory("graft-dttl").toString
+    val dir = tempDir("graft-dttl")
     import spark.implicits._
     Corpus.generate(spark, 3).write.parquet(s"$dir/in/b1")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
@@ -418,7 +416,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup state TTL: idle buckets evict, then re-learn cleanly") {
-    val dir = Files.createTempDirectory("graft-sttl").toString
+    val dir = tempDir("graft-sttl")
     import spark.implicits._
     val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).filter(col("doc_id") === 0).cache()
