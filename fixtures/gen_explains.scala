@@ -49,7 +49,7 @@ def audit(name: String, claim: String, dfThunk: => org.apache.spark.sql.DataFram
   sb ++= "\n"
 }
 audit("flagship auto-cascade extraction (Pipeline.extractRows)",
-  "Map-only: each cascade level's OCR is an ocr_text column of one Project chain (premium and optimum behind CASE gates on the earlier levels' acceptance) + Generate — no MapPartitions, ZERO Exchange and zero shuffle bytes, so throughput scales with partition count alone (the >=0.8 N->4N claim).",
+  "Map-only: each cascade level's OCR is an ocr_text column inside ONE whole-stage-codegen stage (premium and optimum behind CASE gates on the earlier levels' acceptance; no CodegenFallback, so no bare Project between stages) + Generate — no MapPartitions, ZERO Exchange and zero shuffle bytes, so throughput scales with partition count alone (the >=0.8 N->4N claim).",
   Pipeline.extractRows(Corpus.generate(spark, 100), "auto"), Seq("AS light_raw"))
 audit("multi-analyte entity extraction (q43)",
   "ALL analyte configs + best-pick in ONE map-side gather projection (single fused pass per doc, not one per analyte) — zero Exchange below the final small agg.",

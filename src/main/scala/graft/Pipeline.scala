@@ -10,12 +10,16 @@ import graft.schema._
 
 /** End-to-end extraction pipeline (SURVEY.md §3.4):
   *
-  *   docs scan -> one projection chain: per-level OCR columns
+  *   docs scan -> one whole-stage-codegen stage: per-level OCR columns
   *   ([[OcrText]], pooled engine) -> UDF-free Catalyst
   *   parse/select/assemble -> spans
   *
+  * Every expression on that path has its own codegen (no
+  * `CodegenFallback`, so no lambda HOF): a fallback would cut the stage
+  * with a bare projection that generates its code again on every task.
+  *
   * The whole thing is map-only: candidates never leave their row (array
-  * HOFs instead of explode+window), the fallback gate is a row-local
+  * expressions instead of explode+window), the fallback gate is a row-local
   * conditional instead of an anti-join, and the auto cascade is either a
   * per-row `when` chain (columnar, which also gates each later level's
   * OCR call) or a filter-carry union (iterative) — zero shuffles either

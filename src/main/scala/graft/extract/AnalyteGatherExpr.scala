@@ -12,15 +12,18 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A gather regex compiled once per JVM, with its label scan table.
+/** A gather regex compiled once per JVM, with its label scan tables.
   *
   * `starts` is null unless the pattern is a recognized label (see
   * [[GatherCore.startTable]]); then it is a bitmap over BMP chars of
   * every char a match can start at, and [[GatherCore.findLabel]] tries
   * `lookingAt()` only there instead of running `find()` at every char.
+  * `seconds` ([[GatherCore.secondTable]]) narrows that further to the
+  * chars a match can continue with.
   */
 private[extract] final class GatherRegex(val pattern: Pattern) {
   lazy val starts: Array[Long] = GatherCore.startTable(pattern.pattern)
+  lazy val seconds: Array[Long] = GatherCore.secondTable(pattern, starts)
 }
 
 /** Shared compiled core of the candidate gather — the single place the
@@ -129,24 +132,62 @@ private[extract] object GatherCore {
     java.util.Arrays.copyOf(bits, bits.lastIndexWhere(_ != 0L) + 1)
   }
 
+  /** The second-char table of a label with scan table `starts`: every
+    * BMP char `d` such that, for some start char `c`, a match can begin
+    * with `c` then `d` — `lookingAt()` on the two-char string succeeds
+    * or hits its end — plus every surrogate. Null (no second check)
+    * without a scan table, or when the label has a lookbehind, which
+    * could read chars before the match that the two-char probe lacks.
+    */
+  private[extract] def secondTable(p: Pattern, starts: Array[Long]): Array[Long] = {
+    if (starts == null || p.pattern.contains("(?<=") || p.pattern.contains("(?<!"))
+      return null
+    val bits = new Array[Long](1024)
+    val m = p.matcher("")
+    var c = 0
+    while (c < starts.length * 64) {
+      if (inTable(starts, c.toChar) && !Character.isSurrogate(c.toChar)) {
+        val buf = new Array[Char](2)
+        buf(0) = c.toChar
+        var d = 0
+        while (d <= Character.MAX_VALUE) {
+          buf(1) = d.toChar
+          if (Character.isSurrogate(d.toChar) || m.reset(new String(buf)).lookingAt() || m.hitEnd())
+            bits(d >>> 6) |= 1L << d
+          d += 1
+        }
+      }
+      c += 1
+    }
+    java.util.Arrays.copyOf(bits, bits.lastIndexWhere(_ != 0L) + 1)
+  }
+
+  private def inTable(table: Array[Long], c: Char): Boolean = {
+    val w = c >>> 6
+    w < table.length && (table(w) & (1L << c)) != 0L
+  }
+
   /** `m.reset(line).find()`, as fast as the label allows: with a scan
-    * table, `lookingAt()` runs only at positions whose char is in the
-    * table or is a surrogate, over a transparent, non-anchoring region
-    * (set by [[labelMatcher]]), so lookbehind and `\b` see the whole
-    * line. The first success is the leftmost match, with the same
-    * start, end and groups `find()` would give.
+    * table, `lookingAt()` runs only at positions whose char is in
+    * `starts` (or is a surrogate) and whose next char, if any, is in
+    * `seconds` (when that is not null), over a transparent,
+    * non-anchoring region (set by [[labelMatcher]]), so lookbehind and
+    * `\b` see the whole line. The first success is the leftmost match,
+    * with the same start, end and groups `find()` would give. A line
+    * with no such position never resets `m`: its state is read only
+    * after a success.
     */
   private[extract] def findLabel(m: Matcher, starts: Array[Long],
-      line: String): Boolean = {
+      seconds: Array[Long], line: String): Boolean = {
     if (starts == null) return m.reset(line).find()
-    m.reset(line)
     val n = line.length
+    var onLine = false
     var p = 0
     while (p < n) {
       val c = line.charAt(p)
-      val w = c >>> 6
-      if ((w < starts.length && (starts(w) & (1L << c)) != 0L) ||
-          Character.isSurrogate(c)) {
+      if (Character.isSurrogate(c) || (inTable(starts, c) &&
+          (seconds == null || p + 1 == n || inTable(seconds, line.charAt(p + 1))))) {
+        if (!onLine) { m.reset(line); onLine = true }
         if (m.region(p, n).lookingAt()) return true
       }
       p += 1
@@ -236,15 +277,17 @@ private[extract] object GatherCore {
 
   /** E1-E6 labelled candidates over the given lines, appended to `out`
     * in line order (`HofTwins.labelledCandidates` semantics). `lm` comes
-    * from [[labelMatcher]] and `starts` is its label's scan table.
+    * from [[labelMatcher]] over `labelRe`'s pattern.
     */
   private[extract] def labelled(lines: Array[String], lm: Matcher,
-      starts: Array[Long], nm: Matcher, rm: Matcher, um: Matcher,
+      labelRe: GatherRegex, nm: Matcher, rm: Matcher, um: Matcher,
       out: java.util.ArrayList[InternalRow]): Unit = {
+    val starts = labelRe.starts
+    val seconds = labelRe.seconds
     var i = 0
     while (i < lines.length) {
       val line = lines(i)
-      if (findLabel(lm, starts, line)) {
+      if (findLabel(lm, starts, seconds, line)) {
         val label = lm.group(0)
         val snippet = line.substring(lm.end())
         if (nm.reset(snippet).find()) {
@@ -381,7 +424,7 @@ case class MultiAnalyteGather(child: Expression, configs: Seq[AnalyteConfig])
     while (i < labels.length) {
       val out = new java.util.ArrayList[InternalRow]()
       GatherCore.labelled(lines, GatherCore.labelMatcher(labels(i).pattern),
-        labels(i).starts, nm, rm, units(i).matcher(""), out)
+        labels(i), nm, rm, units(i).matcher(""), out)
       // two-phase gather: fallback only if no labelled candidate
       if (fallbacks(i) && out.isEmpty)
         GatherCore.muiFallback(lines, nm, rm, GatherCore.unitFbP.matcher(""), out)

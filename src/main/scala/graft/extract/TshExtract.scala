@@ -11,11 +11,12 @@ import TshPatterns._
   *
   * Candidates come from [[MultiAnalyteGather]] with the
   * `AnalyteExtract.Tsh` config (one compiled pass per document);
-  * everything here is built from built-in expressions, so
-  * the rest of a document's parse — best-pick, level-result assembly,
-  * the auto cascade — stays a single map-side projection: no UDF, no
-  * explode, no shuffle. Best-pick is an `array_sort` on the candidate
-  * struct, whose leading fields are the reference's sort key
+  * everything here is built from built-in expressions with their own
+  * codegen, so the rest of a document's parse — best-pick, level-result
+  * assembly, the auto cascade — runs inside the flagship's one
+  * whole-stage-codegen stage: no UDF, no lambda, no explode, no
+  * shuffle. Best-pick is an `array_min` over the candidate structs,
+  * whose leading fields are the reference's sort key
   * `(has_range, label_penalty, span_start)` plus the `line_no` tiebreak
   * that replaces Python's stable sort (quirk Q7,
   * `parsers/tsh.py:295-301`).
@@ -67,10 +68,12 @@ object TshExtract {
   }
 
   /** G3 — best-pick: min by (has_range, penalty, span_start, line_no) —
-    * the leading struct fields, so plain array_sort is the comparator.
+    * the leading struct fields, so the struct ordering is the comparator.
+    * `array_min` skips NULL elements, is NULL for an empty or NULL
+    * array and keeps the first of equal elements: the head of a stable
+    * sort (the test-scope twin `HofTwins.bestBySort`).
     */
-  def best(cands: Column): Column =
-    when(size(cands) > 0, get(array_sort(cands), lit(0)))
+  def best(cands: Column): Column = array_min(cands)
 
   /** G4/G5/C1 — level result from a (nullable) raw text and its
     * materialized best candidate: replicates `premium_parse_tsh`

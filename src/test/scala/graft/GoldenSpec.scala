@@ -15,10 +15,12 @@ import graft.schema.DocRow
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
+    // as many task threads as the host has cores, never more
+    val cores = Runtime.getRuntime.availableProcessors
     val s = SparkSession.builder()
-      .master("local[8]")
+      .master(s"local[$cores]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // static conf: bucketed-table tests saveAsTable into a temp

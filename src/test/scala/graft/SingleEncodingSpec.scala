@@ -51,7 +51,7 @@ class SingleEncodingSpec extends AnyFunSuite {
     "fallbackCandidates", "gatherCandidates", "labelPenalty", "shingles",
     "shingleHashes", "minhashSignature", "minhashSignature0", "lshBandKeys",
     "lshBucket", "planeComponent", "projections", "projMatrix",
-    "centroidDots", "dot", "norm", "\\w+Hof")
+    "centroidDots", "dot", "norm", "bestBySort", "assembleByFilter", "\\w+Hof")
 
   private val Forbidden =
     ("""fused\s*:\s*Boolean|\bdef\s+(?:""" + Moved.mkString("|") + """)\b""").r

@@ -185,7 +185,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
   }
 
   test("streaming hamming-dedup TTL: idle buckets evict, then re-learn (shared machine)") {
-    // exercises the hasTimedOut branch of hammingDedupState — the ONE
+    // exercises the hasTimedOut branch of bucketDedup — the ONE
     // state machine behind both simhashDupStream and dhashDupStream
     val dir = tempDir("graft-shttl")
     import spark.implicits._

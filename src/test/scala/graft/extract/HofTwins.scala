@@ -161,6 +161,45 @@ object HofTwins {
     df.withColumn(s"${out}_lab", tshLabelledCandidates(col(rawCol)))
       .withColumn(out, gatherCandidates(col(rawCol), col(s"${out}_lab")))
 
+  // ---- best-pick and span assembly (twins of TshExtract.best and
+  //      SpanAssembly.assemble) ---------------------------------------------
+
+  /** G3 as a stable sort: the head of `array_sort` over the candidate
+    * structs (NULL elements sort last; equal elements keep their order).
+    */
+  def bestBySort(cands: Column): Column =
+    when(size(cands) > 0, get(array_sort(cands), lit(0)))
+
+  private def span(kind: String, text: Column, mediaRef: Column): Column =
+    struct(lit(kind).as("kind"), text.as("text"), mediaRef.as("media_ref"))
+
+  /** G6 as filter + transform: every possible span in emission order,
+    * absent ones NULL, then the NULLs dropped and each survivor numbered
+    * by its position.
+    */
+  def assembleByFilter(r: Column, firstMediaRef: Column): Column = {
+    val noRef = lit("")
+    val rawSpan = when(r("raw_text").isNotNull,
+      span("raw_text", r("raw_text"), coalesce(firstMediaRef, lit(""))))
+    val items = when(r("ok"),
+      array(
+        span("marker", lit("TSH"), noRef),
+        span("value", r("value").cast("string"), noRef),
+        when(r("unit").isNotNull, span("unit", r("unit"), noRef)),
+        when(r("ref_min").isNotNull, span("ref_min", r("ref_min").cast("string"), noRef)),
+        when(r("ref_max").isNotNull, span("ref_max", r("ref_max").cast("string"), noRef)),
+        span("confidence", r("confidence"), noRef),
+        rawSpan))
+      .otherwise(array(
+        span("marker", lit("TSH"), noRef),
+        span("error", r("error"), noRef),
+        rawSpan))
+    val present = filter(items, s => s.isNotNull)
+    transform(present, (s, i) =>
+      struct(s("kind").as("kind"), s("text").as("text"),
+        s("media_ref").as("media_ref"), i.cast("int").as("order")))
+  }
+
   // ---- curation features (twin of TextOps.curationFeatures) --------------
 
   /** (doc_id, text, lang_pred, n_tokens, punct_ratio) from the regex chain. */

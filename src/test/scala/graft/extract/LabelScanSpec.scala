@@ -46,7 +46,7 @@ class LabelScanSpec extends AnyFunSuite {
       val m = GatherCore.labelMatcher(r.pattern)
       lines.count { line =>
         val got =
-          if (GatherCore.findLabel(m, r.starts, line)) Some((m.start(), m.end(), m.group()))
+          if (GatherCore.findLabel(m, r.starts, r.seconds, line)) Some((m.start(), m.end(), m.group()))
           else None
         val want = viaFind(r.pattern, line)
         assert(got == want, s"label $label on line ${escaped(line)}")
@@ -98,6 +98,16 @@ class LabelScanSpec extends AnyFunSuite {
     (builtIns ++ folding).foreach(l => assert(GatherCore.startTable(l) != null, s"$l lost the scan"))
     val tsh = GatherCore.startTable(AnalyteExtract.Tsh.label)
     assert("Tt".forall(c => (tsh(c >>> 6) & (1L << c)) != 0L))
+  }
+
+  test("the second-char table narrows the scan for built-in labels, and lookbehind drops it") {
+    def has(t: Array[Long], c: Char) = (c >>> 6) < t.length && (t(c >>> 6) & (1L << c)) != 0L
+    builtIns.foreach(l => assert(GatherCore.regex(l).seconds != null, s"$l has no second table"))
+    val tsh = GatherCore.regex(AnalyteExtract.Tsh.label).seconds
+    assert("Ss. \t hH\uD835".forall(has(tsh, _)))   // T[.\s]*S…, th…, a surrogate
+    assert(!"aeiour:0".exists(has(tsh, _)))   // "matin", "résultat :"
+    assert(GatherCore.regex("(?i)T(?<=xT)SH").seconds == null)
+    unrecognized.foreach(l => assert(GatherCore.regex(l).seconds == null, l))
   }
 
   test("the gather regex cache stays within its cap under many distinct SQL labels") {
