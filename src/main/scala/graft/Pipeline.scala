@@ -241,13 +241,16 @@ object Pipeline {
         col("doc_id"), col("span.offset"))
     // heavy docs carry box COUNTS only (the failure rule's requirement)
     // — shuffling a 200-page doc's full box structs would defeat the
-    // bounded-shuffle point; box content for QC is available via ocrAll
+    // bounded-shuffle point; box content for QC is available via ocrAll.
+    // Only a blank page's count can decide a level's failure (the rule
+    // reads boxes only when the doc's whole text is blank), so a page
+    // with text carries 0 and its boxes are never read
     val ocrd = perSpan.as[(String, String, DocSpan)].mapPartitions { it =>
       val eng = OcrEnginePool.engine
       it.map { case (docId, firstRef, s) =>
         val parts = neededLevels.map { lv =>
           val (text, boxes) = OcrRun.spanPart(eng, lv, s)
-          (text, boxes.length)
+          (text, if (OcrRun.blank(text)) boxes.length else 0)
         }
         (docId, firstRef, s.offset, parts.map(_._1), parts.map(_._2))
       }

@@ -628,8 +628,11 @@ object SparkEntry {
       // generic lab-entity surface (north_star): best candidate per
       // secondary analyte from full-page (optimum) text, hash-checked
       // against an independent Python re-implementation over the same
-      // corpus (fixtures/gen_analyte_expected.py)
-      val ocr = Pipeline.ocrAll(Corpus.generate(s, 200)).toDF()
+      // corpus (fixtures/gen_analyte_expected.py). The text comes from
+      // the extraction paths' text-only OCR column (no boxes, no typed
+      // mapPartitions), so the query is one whole-stage-codegen stage
+      val ocr = Corpus.generate(s, 200).toDF().select(col("doc_id"),
+        graft.media.OcrText.of(col("spans"), "optimum").as("optimum_raw"))
       graft.extract.AnalyteExtract.withEntities(ocr, "optimum_raw", "ents")
         .select(col("doc_id"), explode_outer(col("ents")).as("e"))
         .filter(col("e").isNotNull)

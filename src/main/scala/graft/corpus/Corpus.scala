@@ -249,7 +249,7 @@ object Corpus {
     * value so a second (and third) analyte family exists in the corpus
     * with varied values, like TSH.
     */
-  private def fillerLine(span: Key, j: Int, salt: String): String = {
+  private[graft] def fillerLine(span: Key, j: Int, salt: String): String = {
     val slot = span.copy.part(j)
     Fillers((slot.hash(salt) % Fillers.length).toInt) match {
       case f if f.startsWith("Glycémie") => s"Glycémie ${fr(glyCents(slot))} g/L"
@@ -280,40 +280,48 @@ object Corpus {
     else (h(i, "carrier") % nSpans).toInt
   }
 
-  /** Full (uncropped) page lines for media span k of doc i at a level.
-    * Level only matters for family 14 (Q2) and the `hard` tag, which
-    * hides the TSH lines from light+premium (optimum's binarization
-    * rescue analog, `ocr_engine.py:234-246`).
+  /** The text of media span k of doc i at a level: the page's lines
+    * joined with '\n'. A page is a header line carrying the report date
+    * (like a real lab report), then 4-9 fillers with a carrier span's
+    * TSH lines inserted among them. Level only matters for family 14
+    * (Q2) and the `hard` tag, which hides the TSH lines from
+    * light+premium (optimum's binarization rescue analog,
+    * `ocr_engine.py:234-246`), and for the crop: light AND premium keep
+    * the bottom 65% of lines, the `preprocess_for_bio` analog
+    * (`ocr_engine.py:39`; both call it, `ocr_engine.py:127,171`), so
+    * they lose the header in the top 35% and the date entity is an
+    * optimum/full-text extraction; optimum does not crop
+    * (`ocr_engine.py:219-246` upscales + binarizes the full page).
+    * Only the kept lines are rendered. The whole-page line list, cropped
+    * afterwards, is the twin in src/test (OcrTwin.pageLines / crop).
     */
-  def pageLines(i: Long, k: Int, level: String, isCarrier: Boolean): Seq[String] = {
-    if (isUnreadable(i)) return Seq.empty
-    // page header carries the report date (like a real lab report); it
-    // sits in the top 35%, so light/premium lose it to the crop and the
-    // date entity is an optimum/full-text extraction
-    val header = Seq(s"Prélèvement du ${reportDate(i)}")
+  def pageText(i: Long, k: Int, level: String, isCarrier: Boolean): String = {
+    if (isUnreadable(i)) return ""
     val span = new Key().part(i).part(k)
     val nf = 4 + (span.hash("nf") % 6).toInt
-    val fillers = (0 until nf).map(j => fillerLine(span, j, "fill"))
     val tsh =
-      if (!isCarrier) Seq.empty
-      else if (isHard(i) && family(i) != FamQ2 && level != "optimum") Seq.empty
+      if (!isCarrier) Nil
+      else if (isHard(i) && family(i) != FamQ2 && level != "optimum") Nil
       else tshLines(i, level)
-    if (tsh.isEmpty) header ++ fillers
-    else {
-      val p =
-        if (family(i) == FamQ2) nf // keep inside the light/premium bottom-65% crop
-        else (h(i, "pos") % (nf + 1)).toInt
-      val (a, b) = fillers.splitAt(p)
-      header ++ a ++ tsh ++ b
+    // lines: 0 the header, 1..p fillers, then the TSH lines, then the
+    // remaining fillers; Q2 keeps its TSH inside the crop
+    val p =
+      if (tsh.isEmpty || family(i) == FamQ2) nf
+      else (h(i, "pos") % (nf + 1)).toInt
+    val n = 1 + nf + tsh.length
+    val first = if (level == "optimum") 0 else (0.35 * n).toInt
+    val sb = new java.lang.StringBuilder
+    var j = first
+    while (j < n) {
+      if (j > first) sb.append('\n')
+      if (j == 0) sb.append("Prélèvement du ").append(reportDate(i))
+      else if (j <= p) sb.append(fillerLine(span, j - 1, "fill"))
+      else if (j <= p + tsh.length) sb.append(tsh(j - p - 1))
+      else sb.append(fillerLine(span, j - 1 - tsh.length, "fill"))
+      j += 1
     }
+    sb.toString
   }
-
-  /** Bottom-crop analog of `preprocess_for_bio` (`ocr_engine.py:39`):
-    * light AND premium keep the bottom 65% of lines (both call
-    * `preprocess_for_bio`, `ocr_engine.py:127,171`); optimum does not
-    * crop (`ocr_engine.py:219-246` upscales + binarizes the full page).
-    */
-  def crop(lines: Seq[String]): Seq[String] = lines.drop((0.35 * lines.length).toInt)
 
   /** Inline text of text-span k (identical at every level — text spans
     * are not OCR'd).

@@ -69,12 +69,23 @@ object AnalyteExtract {
         .withColumn(s"${out}_${cfg.name}_best",
           best(col(s"${out}_${cfg.name}_cands")))
     }
-    staged.withColumn(out, filter(array(cfgs.map { cfg =>
-      val b = col(s"${out}_${cfg.name}_best")
-      when(b.isNotNull, struct(lit(cfg.name).as("analyte"),
-        b("value").as("value"), b("unit").as("unit"),
-        b("ref_min").as("ref_min"), b("ref_max").as("ref_max")))
-    }: _*), e => e.isNotNull))
+    // an absent analyte contributes an empty array: no lambda, so the
+    // projection stays inside whole-stage codegen (a `filter` of the
+    // NULLs is the test-scope twin, HofTwins.entitiesByFilter)
+    staged.withColumn(out, concat(cfgs.map { cfg =>
+      array_repeat(entity(out, cfg),
+        when(col(s"${out}_${cfg.name}_best").isNotNull, 1).otherwise(0))
+    }: _*))
+  }
+
+  /** One analyte's entity struct from its staged best candidate, NULL
+    * when the analyte is absent.
+    */
+  private[graft] def entity(out: String, cfg: AnalyteConfig): Column = {
+    val b = col(s"${out}_${cfg.name}_best")
+    when(b.isNotNull, struct(lit(cfg.name).as("analyte"),
+      b("value").as("value"), b("unit").as("unit"),
+      b("ref_min").as("ref_min"), b("ref_max").as("ref_max")))
   }
 
   /** French lab-report date `dd/MM/yyyy`, shape-validated: day 1-31,

@@ -1,6 +1,6 @@
 package graft.media
 
-import scala.collection.immutable.ArraySeq
+import scala.collection.immutable.{AbstractSeq, ArraySeq}
 
 import graft.corpus.{Corpus, Det}
 import graft.schema.{DocSpan, LevelOcr, OcrBox}
@@ -38,10 +38,13 @@ trait OcrEngine extends Serializable {
   *    family the binarization instead corrupts the TSH digits.
   *
   * Like the corpus, the output is locale-free: a pure function of
-  * (level, media_ref). Box hashes are `Det.h(mediaRef, tok, "top")` and
+  * (level, media_ref). The page text is `Corpus.pageText`, which renders
+  * only the lines the level keeps. Premium/optimum boxes are built on
+  * first read ([[PageBoxes]]), so a caller that reads only the text
+  * never pays for them. Box hashes are `Det.h(mediaRef, tok, "top")` and
   * `Det.h(mediaRef, tok, "conf")`, continued from one `mediaRef` key per
-  * page and one token key per token; the regex-split, hash-per-box form
-  * is the twin in src/test (OcrTwin).
+  * page and one token key per token; the line-list, regex-split,
+  * hash-per-box form is the twin in src/test (OcrTwin).
   */
 object SimulatedOcr extends OcrEngine {
   override def ocrPage(level: String, mediaRef: String): (String, Seq[OcrBox]) = {
@@ -54,17 +57,15 @@ object SimulatedOcr extends OcrEngine {
       catch { case _: RuntimeException => None }
     if (parsed.isEmpty) return ("", Seq.empty)
     val (i, k, carrier) = parsed.get
-    val full = Corpus.pageLines(i, k, level, carrier)
-    val lines = if (level == "optimum") full else Corpus.crop(full)
-    val text = lines.mkString("\n")
-    (text, if (level == "light") Seq.empty else pageBoxes(mediaRef, text))
+    val text = Corpus.pageText(i, k, level, carrier)
+    (text, if (level == "light") Seq.empty else new PageBoxes(mediaRef, text))
   }
 
   /** One box per token of `text`, left to right. A token is a maximal run
     * of chars outside Java's `\s` class (`[ \t\n\x0B\f\r]`), as
     * `split("\\s+")` cuts them.
     */
-  private[media] def pageBoxes(mediaRef: String, text: String): Seq[OcrBox] = {
+  private[media] def pageBoxes(mediaRef: String, text: String): ArraySeq[OcrBox] = {
     val page = new Det.Key().part(mediaRef)
     val boxes = Array.newBuilder[OcrBox]
     var left = 0
@@ -86,6 +87,17 @@ object SimulatedOcr extends OcrEngine {
 
   private def isSpace(c: Char): Boolean =
     c <= ' ' && (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r')
+}
+
+/** One page's boxes ([[SimulatedOcr.pageBoxes]]), built on first read
+  * and kept: equal element for element to the eagerly built seq, while a
+  * page whose boxes nobody reads never builds them.
+  */
+private final class PageBoxes(mediaRef: String, text: String)
+    extends AbstractSeq[OcrBox] with IndexedSeq[OcrBox] {
+  private lazy val boxes = SimulatedOcr.pageBoxes(mediaRef, text)
+  override def apply(i: Int): OcrBox = boxes(i)
+  override def length: Int = boxes.length
 }
 
 /** Per-executor engine pool (north_star: "mapPartitions over a pooled
@@ -130,17 +142,27 @@ object OcrRun {
     if (s.kind == "media") engine.ocrPage(level, s.media_ref) else (s.text, Seq.empty)
 
   /** One document's raw text at one level from its span parts' texts
-    * in offset order and their total box count: the texts joined with
-    * '\n', None when the level fails (`app.py:91-92` via
-    * `ocr_engine.py`): light on blank text (`ocr_engine.py:142-144`),
-    * premium/optimum only when text and boxes are both empty
-    * (`ocr_engine.py:197-199,266-268`).
+    * in offset order: the texts joined with '\n', None when the level
+    * fails (`app.py:91-92` via `ocr_engine.py`): light on blank text
+    * (`ocr_engine.py:142-144`), premium/optimum only when text and boxes
+    * are both empty (`ocr_engine.py:197-199,266-268`). `hasBoxes` is
+    * evaluated only for blank text at premium/optimum, the one case the
+    * rule reads boxes.
     */
-  def levelText(level: String, texts: Seq[String], nBoxes: Int): Option[String] = {
+  def levelText(level: String, texts: Seq[String], hasBoxes: => Boolean): Option[String] = {
     val raw = texts.mkString("\n")
-    val blank = raw.trim.isEmpty
-    val failed = if (level == "light") blank else blank && nBoxes == 0
-    if (failed) None else Some(raw)
+    if (!blank(raw) || level != "light" && hasBoxes) Some(raw) else None
+  }
+
+  /** True when `s` is empty or whitespace only, as `s.trim.isEmpty`
+    * tells (every char at or below ' '); a null text is not blank (it
+    * joins as "null").
+    */
+  def blank(s: String): Boolean = {
+    if (s == null) return false
+    var i = 0
+    while (i < s.length && s.charAt(i) <= ' ') i += 1
+    i == s.length
   }
 
   /** One document's OCR output at one level; boxes concatenate in span
@@ -154,14 +176,25 @@ object OcrRun {
       t
     }
     val all = boxes.result()
-    LevelOcr(levelText(level, texts, all.length), all)
+    LevelOcr(levelText(level, texts, all.nonEmpty), all)
+  }
+
+  /** The `rawText` of [[ocrDoc]] for the extraction paths, which read
+    * only the text: a page's boxes are read only when the doc's joined
+    * text is blank at premium/optimum.
+    */
+  def ocrText(engine: OcrEngine, level: String, spans: Seq[DocSpan]): Option[String] = {
+    val parts = spans.sortBy(_.offset).map(spanPart(engine, level, _))
+    levelText(level, parts.map(_._1), parts.exists(_._2.nonEmpty))
   }
 
   /** [[levelText]] over one level's span parts (offset, text, box
-    * count) in any order: the skew path's per-page reassembly.
+    * count) in any order: the skew path's per-page reassembly. Only a
+    * doc whose every part is blank reads the counts, so a part with text
+    * may carry 0.
     */
   def docText(level: String, parts: Seq[(Int, String, Int)]): Option[String] =
-    levelText(level, parts.sortBy(_._1).map(_._2), parts.map(_._3).sum)
+    levelText(level, parts.sortBy(_._1).map(_._2), parts.exists(_._3 > 0))
 
   def firstMediaRef(spans: Seq[DocSpan]): String =
     spans.sortBy(_.offset).collectFirst { case s if s.kind == "media" => s.media_ref }

@@ -17,12 +17,23 @@ import graft.schema.DocSpan
 /** Reads a `spans` column (array<struct<kind, text, media_ref, offset>>,
   * fields matched by name) back into the [[DocSpan]]s that [[OcrRun]]
   * takes, so span order and the level-failure rules stay in OcrRun.
+  * Only the fields OcrRun reads are decoded: a media span's `media_ref`,
+  * any other span's `text`; the other one is left null.
   */
 private[media] final case class SpanFields(kind: Int, text: Int,
     mediaRef: Int, offset: Int, width: Int) {
 
   private def str(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** True when the span's kind is "media", compared as bytes. */
+  def isMedia(s: InternalRow): Boolean =
+    !s.isNullAt(kind) && s.getUTF8String(kind) == SpanFields.Media
+
+  private def kindOf(s: InternalRow): String =
+    if (s.isNullAt(kind)) null
+    else if (s.getUTF8String(kind) == SpanFields.Text) "text"
+    else s.getUTF8String(kind).toString
 
   /** NULL elements carry no span and are skipped. */
   def spans(arr: ArrayData): Seq[DocSpan] = {
@@ -31,15 +42,39 @@ private[media] final case class SpanFields(kind: Int, text: Int,
     while (i < arr.numElements()) {
       if (!arr.isNullAt(i)) {
         val s = arr.getStruct(i, width)
-        out += DocSpan(str(s, kind), str(s, text), str(s, mediaRef), s.getInt(offset))
+        out += (
+          if (isMedia(s)) DocSpan("media", null, str(s, mediaRef), s.getInt(offset))
+          else DocSpan(kindOf(s), str(s, text), null, s.getInt(offset)))
       }
       i += 1
     }
     ArraySeq.unsafeWrapArray(out.result())
   }
+
+  /** [[OcrRun.firstMediaRef]] without building the spans: the
+    * `media_ref` of the media span with the lowest offset (the earliest
+    * of equals), not decoded; "" when there is none.
+    */
+  def firstMediaRef(arr: ArrayData): UTF8String = {
+    var first: InternalRow = null
+    var i = 0
+    while (i < arr.numElements()) {
+      if (!arr.isNullAt(i)) {
+        val s = arr.getStruct(i, width)
+        if (isMedia(s) && (first == null || s.getInt(offset) < first.getInt(offset))) first = s
+      }
+      i += 1
+    }
+    if (first == null) UTF8String.EMPTY_UTF8
+    else if (first.isNullAt(mediaRef)) null
+    else first.getUTF8String(mediaRef)
+  }
 }
 
 private[media] object SpanFields {
+  private val Media = UTF8String.fromString("media")
+  private val Text = UTF8String.fromString("text")
+
   def of(dt: DataType): Option[SpanFields] = dt match {
     case ArrayType(st: StructType, _) =>
       def idx(name: String, ok: DataType => Boolean) =
@@ -62,7 +97,7 @@ private[media] object SpanFields {
 }
 
 /** One OCR level's raw document text from a doc's spans: the executor's
-  * pooled engine ([[OcrEnginePool]]) through [[OcrRun.ocrDoc]], NULL
+  * pooled engine ([[OcrEnginePool]]) through [[OcrRun.ocrText]], NULL
   * when the level fails (OCR_FAILED) or the spans are NULL. As a
   * projection column it sits behind the cascade's CASE gates, whose
   * branches evaluate lazily, so a doc an earlier level accepted never
@@ -97,7 +132,7 @@ case class OcrText(child: Expression, level: String) extends UnaryExpression {
 
   /** Shared by interpreted eval and generated code (public for janino). */
   def evalCore(spans: ArrayData): UTF8String =
-    OcrRun.ocrDoc(OcrEnginePool.engine, level, fields.spans(spans)).rawText
+    OcrRun.ocrText(OcrEnginePool.engine, level, fields.spans(spans))
       .map(UTF8String.fromString).orNull
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -131,8 +166,7 @@ case class FirstMediaRef(child: Expression) extends UnaryExpression {
   override def nullSafeEval(spans: Any): Any = evalCore(spans.asInstanceOf[ArrayData])
 
   /** Shared by interpreted eval and generated code (public for janino). */
-  def evalCore(spans: ArrayData): UTF8String =
-    UTF8String.fromString(OcrRun.firstMediaRef(fields.spans(spans)))
+  def evalCore(spans: ArrayData): UTF8String = fields.firstMediaRef(spans)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -71,6 +71,23 @@ class AnalyteSpec extends AnyFunSuite {
     assert(nullRow == Seq.fill(cfgs.length)("[]").mkString("[", ", ", "]"))
   }
 
+  test("withEntities' lambda-free concat == the filter twin, schema and nullability included") {
+    val cfgs = AnalyteExtract.Secondary
+    val df = AnalyteExtract.withEntities(
+        Pipeline.ocrAll(Corpus.generate(spark, 200)).toDF(), "optimum_raw", "ents")
+      .withColumn("twin", HofTwins.entitiesByFilter("ents", cfgs))
+    assert(df.schema("ents") == df.schema("twin").copy(name = "ents"))
+    val both = df.select(col("ents").cast("string"), col("twin").cast("string"),
+        size(col("ents"))).as[(String, String, Int)].collect()
+    assert(both.length == 200 && both.forall { case (e, t, _) => e == t })
+    // non-vacuous: docs with no entity, some and all of them
+    val sizes = both.map(_._3).toSet
+    assert(sizes.contains(0) && sizes.contains(cfgs.length) &&
+      sizes.exists(n => n > 0 && n < cfgs.length), sizes)
+    val plan = df.drop("twin").queryExecution.executedPlan.toString
+    assert(!plan.contains("lambdafunction"), plan)
+  }
+
   test("secondary analytes recover the seeded corpus values") {
     val docs = Corpus.generate(spark, 200)
     val ents = AnalyteExtract.withEntities(

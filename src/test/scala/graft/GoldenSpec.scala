@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,17 +50,37 @@ object SkewBranches {
 case class Fx(doc_id: String, mode: String, kind: String, text: String,
     media_ref: String, order: Int)
 
-class GoldenSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  lazy val golden: Map[String, Seq[Fx]] = {
+/** The golden spans of the 200-doc corpus (`Corpus.generate(spark, 200)`). */
+object Goldens {
+  /** fixtures/golden.json's spans, by mode. */
+  def byMode(spark: SparkSession): Map[String, Seq[Fx]] = {
+    import spark.implicits._
     val df = spark.read.option("multiLine", true).json("fixtures/golden.json")
     df.select(col("doc_id"), col("mode"), explode(col("spans")).as("s"))
       .select(col("doc_id"), col("mode"), col("s.kind"), col("s.text"),
         col("s.media_ref"), col("s.order").cast("int").as("order"))
       .as[Fx].collect().toSeq.groupBy(_.mode)
   }
+
+  /** `Pipeline.extract`'s (doc_id, spans) as [[Fx]] rows of `mode`, in
+    * (doc_id, order) order. explode_outer, as in `Pipeline.extractRows`:
+    * a plain explode over the computed spans re-inlines the assembly
+    * tree into an inferred filter.
+    */
+  def rows(extracted: DataFrame, mode: String): Seq[Fx] = {
+    import extracted.sparkSession.implicits._
+    extracted.select(col("doc_id"), lit(mode).as("mode"), explode_outer(col("spans")).as("s"))
+      .select(col("doc_id"), col("mode"), col("s.kind"), col("s.text"),
+        col("s.media_ref"), col("s.order"))
+      .as[Fx].collect().toSeq.sortBy(f => (f.doc_id, f.order))
+  }
+}
+
+class GoldenSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  lazy val golden: Map[String, Seq[Fx]] = Goldens.byMode(spark)
 
   lazy val docs = Corpus.generate(spark, 200).cache()
 

@@ -51,7 +51,8 @@ class SingleEncodingSpec extends AnyFunSuite {
     "fallbackCandidates", "gatherCandidates", "labelPenalty", "shingles",
     "shingleHashes", "minhashSignature", "minhashSignature0", "lshBandKeys",
     "lshBucket", "planeComponent", "projections", "projMatrix",
-    "centroidDots", "dot", "norm", "bestBySort", "assembleByFilter", "\\w+Hof")
+    "centroidDots", "dot", "norm", "bestBySort", "assembleByFilter", "entitiesByFilter",
+    "\\w+Hof")
 
   private val Forbidden =
     ("""fused\s*:\s*Boolean|\bdef\s+(?:""" + Moved.mkString("|") + """)\b""").r
@@ -75,6 +76,18 @@ class SingleEncodingSpec extends AnyFunSuite {
     val sites = sitesOf(mainSources(), """OcrEnginePool\.engine""".r)
     assert(sites.sorted == Seq("OcrExpr.scala:evalCore", "Pipeline.scala:extractSkewAware",
       "Pipeline.scala:ocrAll"), sites.mkString("\n", "\n", ""))
+  }
+
+  test("the extraction paths read OCR text only: OcrRun.ocrDoc's one src/main caller is ocrAll") {
+    // ocrDoc carries every page's boxes; the audit surface is its only user
+    val sites = sitesOf(mainSources(), """(?<!def )\bocrDoc\(""".r)
+    assert(sites.nonEmpty && sites.distinct == Seq("Pipeline.scala:ocrAll"),
+      sites.mkString("\n", "\n", ""))
+  }
+
+  test("pages render one way: pageLines and crop are test-scope twins only") {
+    val hits = hitsOf(mainSources(), """\bdef\s+(?:pageLines|crop)\b""".r)
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
   test("graft/streaming keeps state at two sites: dedupStream and the near-dup bucket machine") {

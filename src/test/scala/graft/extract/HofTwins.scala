@@ -200,6 +200,14 @@ object HofTwins {
         s("media_ref").as("media_ref"), i.cast("int").as("order")))
   }
 
+  // ---- entity list (twin of AnalyteExtract.withEntities' concat) ---------
+
+  /** The entity array of `withEntities` as a `filter` over every
+    * analyte's entity struct, the absent ones (NULL) dropped.
+    */
+  def entitiesByFilter(out: String, cfgs: Seq[AnalyteConfig]): Column =
+    filter(array(cfgs.map(AnalyteExtract.entity(out, _)): _*), e => e.isNotNull)
+
   // ---- curation features (twin of TextOps.curationFeatures) --------------
 
   /** (doc_id, text, lang_pred, n_tokens, punct_ratio) from the regex chain. */

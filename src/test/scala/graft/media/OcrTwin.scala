@@ -1,11 +1,12 @@
 package graft.media
 
-import graft.corpus.{Corpus, DetOracle}
+import graft.corpus.{Corpus, Det, DetOracle}
 import graft.schema.OcrBox
 
-/** The regex-split, hash-per-box form of [[SimulatedOcr]], kept as the
-  * test oracle: tokens from `split("\\s+")`, each box hashing the joined
-  * key `mediaRef\u0000tok\u0000top` (and `...conf`) from scratch.
+/** The line-list, regex-split, hash-per-box form of [[SimulatedOcr]],
+  * kept as the test oracle: each page built as its whole line list and
+  * cropped afterwards, tokens from `split("\\s+")`, each box hashing the
+  * joined key `mediaRef\u0000tok\u0000top` (and `...conf`) from scratch.
   */
 object OcrTwin {
   def ocrPage(level: String, mediaRef: String): (String, Seq[OcrBox]) = {
@@ -14,11 +15,42 @@ object OcrTwin {
       catch { case _: RuntimeException => None }
     if (parsed.isEmpty) return ("", Seq.empty)
     val (i, k, carrier) = parsed.get
-    val full = Corpus.pageLines(i, k, level, carrier)
-    val lines = if (level == "optimum") full else Corpus.crop(full)
-    val text = lines.mkString("\n")
+    val text = pageText(i, k, level, carrier)
     (text, if (level == "light") Seq.empty else pageBoxes(mediaRef, text))
   }
+
+  /** Twin of `Corpus.pageText`: the full line list, cropped, joined. */
+  def pageText(i: Long, k: Int, level: String, isCarrier: Boolean): String = {
+    val full = pageLines(i, k, level, isCarrier)
+    (if (level == "optimum") full else crop(full)).mkString("\n")
+  }
+
+  /** Full (uncropped) page lines for media span k of doc i at a level. */
+  def pageLines(i: Long, k: Int, level: String, isCarrier: Boolean): Seq[String] = {
+    import Corpus._
+    if (isUnreadable(i)) return Seq.empty
+    val header = Seq(s"Prélèvement du ${reportDate(i)}")
+    val span = new Det.Key().part(i).part(k)
+    val nf = 4 + (span.hash("nf") % 6).toInt
+    val fillers = (0 until nf).map(j => fillerLine(span, j, "fill"))
+    val tsh =
+      if (!isCarrier) Seq.empty
+      else if (isHard(i) && family(i) != FamQ2 && level != "optimum") Seq.empty
+      else tshLines(i, level)
+    if (tsh.isEmpty) header ++ fillers
+    else {
+      val p =
+        if (family(i) == FamQ2) nf
+        else (Det.h(i, "pos") % (nf + 1)).toInt
+      val (a, b) = fillers.splitAt(p)
+      header ++ a ++ tsh ++ b
+    }
+  }
+
+  /** Bottom-crop analog of `preprocess_for_bio` (`ocr_engine.py:39`):
+    * light and premium keep the bottom 65% of lines.
+    */
+  def crop(lines: Seq[String]): Seq[String] = lines.drop((0.35 * lines.length).toInt)
 
   def pageBoxes(mediaRef: String, text: String): Seq[OcrBox] = {
     var left = 0

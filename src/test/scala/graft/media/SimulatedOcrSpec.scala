@@ -7,20 +7,64 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
+import graft.schema.{DocRow, DocSpan, OcrBox}
 
-/** SimulatedOcr (char-loop tokens, prefix-shared box hashes) against its
-  * regex-split twin [[OcrTwin]], and the corpus + engine output against
-  * the JVM default locale.
+/** SimulatedOcr (kept lines only, char-loop tokens, prefix-shared box
+  * hashes, boxes built on first read) against its line-list, regex-split
+  * twin [[OcrTwin]], the text-only OcrRun.ocrText against ocrDoc, and
+  * the corpus + engine output against the JVM default locale.
   */
 class SimulatedOcrSpec extends AnyFunSuite {
 
   private val Levels = Seq("light", "premium", "optimum")
 
-  private def mediaRefs(docs: Seq[graft.schema.DocRow]): Seq[String] =
+  private def mediaRefs(docs: Seq[DocRow]): Seq[String] =
     docs.flatMap(_.spans.filter(_.kind == "media").map(_.media_ref))
 
+  private lazy val skewed: Seq[DocRow] = (0L until 2000L).map(Corpus.doc(_, skew = true))
+
+  private val Malformed = Seq("", "garbage", "media://nope", "media://docXX/9",
+    "media://doc1/notanint#tsh")
+
+  test("pageText == the twin's pageLines -> crop -> mkString on every skewed-corpus page") {
+    val pages = mediaRefs(skewed).map(Corpus.parseMediaRef)
+    for ((i, k, carrier) <- pages; level <- Levels)
+      assert(Corpus.pageText(i, k, level, carrier) == OcrTwin.pageText(i, k, level, carrier),
+        s"$level doc $i span $k carrier=$carrier")
+    // non-vacuous: every page shape the renderer branches on occurs
+    val docs = pages.map(_._1).distinct
+    assert(docs.exists(Corpus.isUnreadable) && docs.exists(Corpus.isHard), "unreadable/hard")
+    for (f <- Seq(12, 13, Corpus.FamQ2))
+      assert(pages.exists { case (i, _, c) => c && Corpus.family(i) == f }, s"family $f carrier")
+    assert(pages.exists(!_._3) && pages.count(_._3) > 100, "carrier and plain pages")
+  }
+
+  test("OcrRun.ocrText == ocrDoc(...).rawText, boxes read only for blank text") {
+    val odd = DocRow("odd", Malformed.zipWithIndex.map { case (r, k) => DocSpan("media", "", r, k) })
+    val mixed = DocRow("mixed", Seq(DocSpan("media", "", "blank", 1), DocSpan("text", "  ", "", 0)))
+    // blank text, boxes only on the refs named "boxed*"
+    val box = OcrBox("x", 0, 0, 8, 14, 90.0)
+    val blankPages = new OcrEngine {
+      override def ocrPage(level: String, ref: String) =
+        (" \t", if (ref.startsWith("boxed")) Seq(box) else Seq.empty)
+    }
+    val blankDocs = Seq(Seq("boxed"), Seq("bare"), Seq("bare", "boxed2"), Seq("bare", "bare2"))
+      .map(refs => DocRow("blank", refs.zipWithIndex.map { case (r, k) => DocSpan("media", "", r, k) }))
+    for (level <- Levels) {
+      for (d <- skewed :+ odd :+ mixed)
+        assert(OcrRun.ocrText(SimulatedOcr, level, d.spans) ==
+          OcrRun.ocrDoc(SimulatedOcr, level, d.spans).rawText, s"$level ${d.doc_id}")
+      for (d <- blankDocs)
+        assert(OcrRun.ocrText(blankPages, level, d.spans) ==
+          OcrRun.ocrDoc(blankPages, level, d.spans).rawText, s"$level ${d.spans}")
+    }
+    // non-vacuous: the box rule decides both ways at premium
+    val rule = blankDocs.map(d => OcrRun.ocrText(blankPages, "premium", d.spans).isDefined)
+    assert(rule == Seq(true, false, true, false), rule)
+  }
+
   test("ocrPage == its regex-split twin on every page of a 2,000-doc skewed corpus") {
-    val refs = mediaRefs((0L until 2000L).map(Corpus.doc(_, skew = true)))
+    val refs = mediaRefs(skewed)
     assert(refs.size > 4000, s"only ${refs.size} media pages")
     var boxes = 0L
     for (ref <- refs; level <- Levels) {
@@ -32,8 +76,7 @@ class SimulatedOcrSpec extends AnyFunSuite {
   }
 
   test("ocrPage == its twin on malformed refs") {
-    for (bad <- Seq("", "garbage", "media://nope", "media://docXX/9",
-        "media://doc1/notanint#tsh"); level <- Levels) {
+    for (bad <- Malformed; level <- Levels) {
       assert(SimulatedOcr.ocrPage(level, bad) == OcrTwin.ocrPage(level, bad), s"'$bad'")
     }
   }
