@@ -9,13 +9,14 @@ sb ++= "# EXPLAINS — physical-plan + executed-work audit (generated by fixture
 sb ++= s"""Plan-shape and executed-work evidence for the 100 TB design claims.
 Per query: `plan exchanges` counts Exchange OCCURRENCES in the printed
 pre-execution plan — an upper bound that double-counts every reprint of
-a cached/reused subtree (a dedup semi-join prints its input twice; an
-InMemoryTableScan prints its child per reference), so compositions like
-q48/q50 show large numbers here while executing a fraction of them.
+a reused subtree (a dedup semi-join prints its input twice), and that
+stops at each barrier: a materialized barrier is a leaf (`Scan
+ExistingRDD` for a local checkpoint, a parquet scan when staged), so
+the work behind it shows only in the EXECUTED columns.
 The EXECUTED columns are the truth: stages actually run, shuffle bytes
-actually written, input bytes actually read — counted from caches-clear
-through query BUILD (since r08 the barrier materializations run eagerly
-at build time and are included) and one execution into the noop sink,
+actually written, input bytes actually read — counted from query BUILD
+(the barrier materializations run eagerly at build time and are
+included) through one execution into the noop sink,
 so no column is pruned from the audited work (AQE on, sf0.01,
 ${spark.sparkContext.master}).
 """
@@ -30,8 +31,8 @@ val listener = new SparkListener {
 }
 spark.sparkContext.addSparkListener(listener)
 def audit(name: String, claim: String, dfThunk: => org.apache.spark.sql.DataFrame, keep: Seq[String]) = {
-  // clear FIRST, then build: the r08 eager barrier materializations run
-  // at build time and must be inside the counted window
+  // reset FIRST, then build: the eager barrier materializations run at
+  // build time and must be inside the counted window
   spark.catalog.clearCache()
   stages = 0; shuffleMB = 0.0; inputMB = 0.0
   val df = dfThunk
@@ -64,7 +65,7 @@ audit("window top-1 (q05)",
   "Single hash-partitioned Exchange on the window key — the minimal plan for a global per-group top-1.",
   SparkEntry.queries("q05_window_top1")(spark, sf), Seq("Window"))
 audit("minhash near-dup pairs (q25)",
-  "Banded LSH self-join on (band,bucket) over a cached one-pass base (fused ShingleHashes+MinhashSignature); pairs deduped BEFORE the exact-Jaccard rerank.",
+  "Banded LSH self-join on (band,bucket) over a materialized one-pass base (fused ShingleHashes+MinhashSignature); pairs deduped BEFORE the exact-Jaccard rerank.",
   SparkEntry.queries("q25_minhash_pairs")(spark, sf), Seq("Join"))
 audit("cosine near-dup (q46)",
   "Sign-LSH bucket self-join; at sf scale AQE broadcasts one side, at 100 TB it is a co-partitioned SMJ on (table,bucket) with ~N/65k vectors per bucket. Hot buckets are salt-split (join key includes __salt).",
@@ -79,7 +80,7 @@ audit("curation filter (q49)",
   "Language gate + quality features are ONE map-side projection; rejects drop before anything shuffles, and the only shuffles are the exact-dedup partial agg + keeper semi-join on 8-byte hash keys.",
   SparkEntry.queries("q49_curation")(spark, sf), Seq("Filter", "HashAggregate"))
 audit("full curate pass (q50)",
-  "Filter -> exact collapse -> banded near-dup join -> left_anti drop, in one plan; the near stage sees keepers only (curate's keepers are cached/staged, so the regex-heavy hygiene projection executes once however many consumers).",
+  "Filter -> exact collapse -> banded near-dup join -> left_anti drop, in one plan; the near stage sees keepers only (curate's keepers are a barrier, so the regex-heavy hygiene projection executes once however many consumers).",
   SparkEntry.queries("q50_curate_full")(spark, sf), Seq("Join"))
 audit("line-frequency boilerplate strip (q53)",
   "Two partial-agg shuffles on 8-byte line hashes ((line_key, doc_id) collapse, then count per line_key) + anti-join back — no text column in any exchange; the boilerplate side is tiny by construction, so AQE broadcasts it.",

@@ -45,15 +45,14 @@ object Pack {
 
   def packSequences(docs: DataFrame, id: Column, text: Column,
       vocab: Broadcast[Bpe.TokenVocab], seqLen: Int,
-      staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
+      staging: Option[String] = None): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
     val spark = docs.sparkSession
     val toks = Staging.materialize(
       docs.select(id.as("doc_id"), Bpe.tokenIds(text, vocab).as("tids"))
         .withColumn("n", size(col("tids")).cast("long"))
         .filter(col("n") > 0),
-      staging, "pack_tokens", scope)
+      staging, "pack_tokens")
     // the counts-only prefix-sum path. The prefix buckets are a
     // DETERMINISTIC monotone function of the order key — the top
     // ceil(log2(parallelism)) bits of the signed `ord` (an arithmetic

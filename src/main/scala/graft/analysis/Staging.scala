@@ -2,74 +2,10 @@ package graft.analysis
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Materialization seam for the dup-join bases (the exploded
-  * (id, features, band, bucket) DataFrames that feed both sides of an
-  * LSH self-join). Two encodings of the same barrier:
-  *
-  *  - `staging = None` (default): `.cache()` — right for jobs that fit
-  *    executor storage; the BlockManager entry lives until the caller
-  *    releases it (`spark.catalog.clearCache()`, as Bench does, or a
-  *    per-call [[CacheScope]]).
-  *  - `staging = Some(dir)`: write/read a parquet staging table — the
-  *    100 TB encoding: nothing rides executor memory, the barrier
-  *    survives executor loss, a long-lived session accumulates no
-  *    BlockManager storage, and the staged base is independently
-  *    inspectable/resumable. Caller owns the directory's lifecycle —
-  *    and must pass a FRESH dir per invocation: table names under the
-  *    dir are fixed per operator ("minhash_base", "curate_keepers",
-  *    ...), so the write mode is error-if-exists and a reused dir
-  *    FAILS FAST instead of two invocations silently overwriting each
-  *    other's staging tables.
-  */
-/** Per-call registry for the `.cache()` barriers the dup-join /
-  * curation operators create when no `staging` dir is passed: pass a
-  * fresh `new CacheScope` to the operator, run the terminal action on
-  * its result, then `release()` — exactly that call's BlockManager
-  * entries are dropped, without `spark.catalog.clearCache()`'s nuclear
-  * option (which would also evict every OTHER caller's caches in a
-  * shared long-lived session). The default (`CacheScope.unmanaged`)
-  * registers nothing and preserves the caller-owns-lifecycle contract.
-  *
-  * Scope: tracks `Staging.materialize(None)` caches only.
-  * `dupClusters`' in-memory rounds are localCheckpoints (lineage cuts,
-  * not caches) — their blocks die with the session, or run that
-  * operator with `staging`/`spark.graft.stagingDir` to keep round
-  * state off executors entirely.
-  */
-final class CacheScope private (tracking: Boolean) {
-  def this() = this(true)
-  private val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private[analysis] def register(df: DataFrame): DataFrame = {
-    if (tracking) synchronized { caches += df }
-    df
-  }
-
-  /** Unpersist (blocking) every cache this scope's call registered.
-    * Idempotent; the scope can be reused afterwards.
-    *
-    * Caveat (inherent to Spark's CacheManager): caches are keyed by
-    * LOGICAL PLAN and deduped, so if a concurrent caller cached the
-    * IDENTICAL plan (same input, same parameters), both scopes share
-    * one entry and this release drops it for both — the same sharing
-    * `spark.catalog.clearCache()` has, just scoped to matching plans
-    * instead of everything. Distinct inputs/parameters never collide.
-    */
-  def release(): Unit = synchronized {
-    caches.foreach(_.unpersist(blocking = true))
-    caches.clear()
-  }
-}
-
-object CacheScope {
-  /** No-op sentinel: nothing registered, caller owns the lifecycle. */
-  val unmanaged: CacheScope = new CacheScope(false)
-}
-
 /** Engine-wide default staging root: set
   * `spark.conf.set(StagingConf.Key, dir)` and operators that would
   * otherwise hold round state in executor memory
-  * ([[TextOps.dupClusters]]'s localCheckpoint) auto-select parquet
+  * ([[TextOps.dupClusters]]'s rounds) auto-select parquet
   * staging under a PER-INVOCATION unique subdir (no two calls ever
   * share one, so the fail-fast contract cannot trip). Retention: each
   * finished call keeps only the table its returned DataFrame reads
@@ -83,7 +19,40 @@ object StagingConf {
   val Key = "spark.graft.stagingDir"
 }
 
-private[analysis] object Staging {
+/** The one materialization barrier: every operator frame that several
+  * consumers read (the exploded (id, features, band, bucket) bases both
+  * sides of an LSH self-join read, curate's keepers, release's
+  * intermediate sets, dupClusters' rounds, the media demo's assets)
+  * goes through [[Staging.materialize]]. Both encodings are eager (one
+  * job at call time) and return a leaf, so downstream plans scan the
+  * barrier instead of recomputing or re-analyzing its lineage:
+  *
+  *  - `staging = None` (default): a local checkpoint — the rows are
+  *    computed once into executor block storage (memory, spilling to
+  *    disk) and the returned frame reads them through a lineage-cut
+  *    RDD leaf sized by its measured bytes, so joins over it plan
+  *    from the real size (`Bridge.checkpointLeaf`). Nothing is
+  *    registered with the SQL CacheManager, so there is nothing to
+  *    release: the blocks are freed by Spark's ContextCleaner once the
+  *    returned frames (and everything built on them) are unreachable.
+  *  - `staging = Some(dir)`: write/read a parquet staging table — the
+  *    100 TB encoding: nothing rides executor memory, the barrier
+  *    survives executor loss, and the staged base is independently
+  *    inspectable/resumable. Caller owns the directory's lifecycle —
+  *    and must pass a FRESH dir per invocation: table names under the
+  *    dir are fixed per operator ("minhash_base", "curate_keepers",
+  *    ...), so the write mode is error-if-exists and a reused dir
+  *    FAILS FAST instead of two invocations silently overwriting each
+  *    other's staging tables.
+  *
+  * The trade: a local checkpoint is not recomputable. A cache barrier
+  * fell back to its lineage when an executor holding its blocks died;
+  * a checkpoint block is lost with its executor, and a later read
+  * fails the job with "Checkpoint block ... not found". Jobs that must
+  * survive executor loss pass `staging` (or set
+  * `spark.graft.stagingDir` for dupClusters' rounds).
+  */
+private[graft] object Staging {
 
   private lazy val logger =
     org.slf4j.LoggerFactory.getLogger("graft.analysis.Staging")
@@ -101,8 +70,8 @@ private[analysis] object Staging {
         dir
       })
 
-  def materialize(df: DataFrame, staging: Option[String], name: String,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = staging match {
+  def materialize(df: DataFrame, staging: Option[String],
+      name: String): DataFrame = staging match {
     case Some(dir) =>
       val path = s"$dir/$name"
       // default ErrorIfExists: a concurrent (or repeated) invocation
@@ -110,33 +79,6 @@ private[analysis] object Staging {
       // call's staged table
       df.write.parquet(path)
       df.sparkSession.read.parquet(path)
-    case None =>
-      val cached = scope.register(df.cache())
-      // populate EAGERLY (one cheap count job, like the staged branch's
-      // write): a lazy cache is no barrier against AQE's concurrent
-      // query-stage materialization — an LSH self-join's three
-      // downstream exchanges (hot-bucket agg, a side, b side) are
-      // submitted together, each finds the cache cold, and each
-      // recomputes the full upstream chain (measured in the r08 stage
-      // audit: the fused shingle+minhash map stage executed 3x per
-      // query, with "Block already exists; not re-adding" churn).
-      // Caching materializes every column regardless of the count's
-      // pruning, so downstream stages all read the one materialization.
-      cached.count()
-      // ... and hand downstream compositions the InMemoryRelation LEAF
-      // (what execution substitutes anyway): deep barrier chains
-      // (curate -> release) otherwise re-analyze and re-print the full
-      // child tree per reference — analyzer time multiplicative in
-      // composition depth, measured in seconds of the release bench
-      // entry. Lifecycle: scope.release()/clearCache() evicts the
-      // blocks as before (scope holds the original cached frame).
-      // SHARPENED contract vs the lazy-cache era: re-EXECUTING a
-      // returned frame AFTER its release rebuilds the relation's
-      // buffers and re-persists them with no CacheManager entry left
-      // to evict them — consume results before releasing (the
-      // CacheScope scaladoc's documented order); don't resurrect
-      // frames after release.
-      org.apache.spark.sql.graftbridge.Bridge.cachedLeaf(cached)
-        .getOrElse(cached)
+    case None => org.apache.spark.sql.graftbridge.Bridge.checkpointLeaf(df)
   }
 }

@@ -467,10 +467,9 @@ object TextOps {
     */
   def simhashDupPairs(docs: DataFrame, id: Column, text: Column,
       bands: Int = 4, maxHamming: Int = 3, maxBucket: Int = 4096,
-      staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame =
+      staging: Option[String] = None): DataFrame =
     bandedHammingPairs(docs.select(id.as("id"), simhash(text).as("sh")),
-      col("id"), col("sh"), bands, maxHamming, maxBucket, staging, scope,
+      col("id"), col("sh"), bands, maxHamming, maxBucket, staging,
       stagingName = "simhash_base")
 
   /** The banded chunk keys of a 64-bit hash: array of (band, bucket)
@@ -501,13 +500,12 @@ object TextOps {
     * maxHamming < bands — deterministic, unlike probabilistic LSH);
     * exact-Hamming rerank once per deduped pair. Ids may be any
     * orderable type (longs for docs, "ref#frame" strings for media).
-    * The self-join is [[Buckets.selfPairs]] and the staging/cache
-    * barrier is the MinHash path's.
+    * The self-join is [[Buckets.selfPairs]] and the barrier is the
+    * MinHash path's ([[Staging]]).
     */
   def bandedHammingPairs(hashes: DataFrame, id: Column, hash: Column,
       bands: Int = 4, maxHamming: Int = 3, maxBucket: Int = 4096,
       staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged,
       stagingName: String = "hamming_base"): DataFrame = {
     require(maxHamming < bands,
       s"pigeonhole guarantee needs maxHamming < bands ($maxHamming vs $bands)")
@@ -515,7 +513,7 @@ object TextOps {
       hashes.select(id.as("id"), hash.as("sh"))
         .withColumn("bk", explode_outer(hammingBandKeys(col("sh"), bands)))
         .select(col("id"), col("sh"), col("bk.band"), col("bk.bucket")),
-      staging, stagingName, scope) // lifecycle: see minhashDupPairs / Staging
+      staging, stagingName)
     // rerank BEFORE the pair-dedup exchange: hamming is two codegen
     // instructions (bit_count(xor)), so re-evaluating it per band
     // collision is ~free, while the dropDuplicates exchange then
@@ -555,34 +553,25 @@ object TextOps {
   def minhashDupPairs(docs: DataFrame, id: Column, text: Column,
       n: Int = 3, m: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.5, maxBucket: Int = 4096,
-      staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame =
+      staging: Option[String] = None): DataFrame =
     minhashPairsAndBase(docs, id, text, n, m, bands, minJaccard, maxBucket,
-      staging, scope)._1
+      staging)._1
 
   /** [[minhashDupPairs]] plus its materialized (id, hs, band, bucket)
     * base — what the hot-bucket audit reads ([[curate]] returns
     * `Buckets.hotBuckets` over exactly this frame, so auditing costs a
-    * re-scan of the staged/cached base, never a recompute of the
+    * re-scan of the materialized base, never a recompute of the
     * minhash chain).
     */
   private def minhashPairsAndBase(docs: DataFrame, id: Column, text: Column,
       n: Int, m: Int, bands: Int, minJaccard: Double, maxBucket: Int,
-      staging: Option[String],
-      scope: CacheScope): (DataFrame, DataFrame) = {
+      staging: Option[String]): (DataFrame, DataFrame) = {
     // Materialization barrier ([[Staging]]): the self-join would
     // otherwise recompute the minhash chain per side AND pull inlined
-    // copies of it into pushed-down join-key constraints. Default is
-    // `.cache()` with a CALLER-owned lifecycle (pass a fresh
-    // [[CacheScope]] and `release()` after the terminal action to drop
-    // exactly this call's caches; spark.catalog.clearCache(), as Bench
-    // uses, is the session-wide hammer); pass `staging` to
-    // write/read a parquet staging table instead — the 100 TB encoding,
-    // and the one long-lived sessions should use so repeated invocations
-    // accumulate no BlockManager storage.
+    // copies of it into pushed-down join-key constraints
     val base = Staging.materialize(
       minhashExploded(docs, id, text, n, m, bands),
-      staging, "minhash_base", scope)
+      staging, "minhash_base")
     (minhashSelfPairs(base, minJaccard, maxBucket), base)
   }
 
@@ -964,13 +953,13 @@ object TextOps {
     * kept (doc_id, lang_pred, n_tokens, punct_ratio), nearPairs (id_a,
     * id_b, jaccard), and the hot-bucket audit frame — no-silent-caps
     * wired in, not bolted on: `hotBuckets` over the SAME materialized
-    * minhash base the join read (staged parquet or the cached frame),
-    * so running the audit re-scans the barrier instead of recomputing
-    * the minhash chain. The audit frame is lazy — an unconsumed audit
-    * costs nothing beyond the barriers the dedup itself needs (note:
-    * since r08 the cache-mode barriers materialize EAGERLY at call
-    * time, like the staged mode always has — see [[Staging]]) — but a
-    * 100 TB job should run and log it alongside the dedup itself
+    * minhash base the join read (staged parquet or the local
+    * checkpoint), so running the audit re-scans the barrier instead of
+    * recomputing the minhash chain. The audit frame is lazy — an
+    * unconsumed audit costs nothing beyond the barriers the dedup
+    * itself needs (those materialize eagerly at call time, see
+    * [[Staging]]) — but a 100 TB job should run and log it alongside
+    * the dedup itself
     * (the 1M-doc volume artifact in BENCH.md's history shows the shape).
     */
   def curate(docs: DataFrame, id: Column, text: Column,
@@ -979,7 +968,6 @@ object TextOps {
       maxBucket: Int = 4096,
       exactClusters: Boolean = false,
       staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged,
       langId: Option[Column => Column] = None,
       extra: Seq[String] = Nil): CurationResult = {
     val staged =
@@ -987,16 +975,16 @@ object TextOps {
         langId, extra)
     // keepers feed BOTH the near-dup join and the final anti-join:
     // materialize so the regex-heavy hygiene projection and the
-    // exact-dedup shuffle run once (default cache, lifecycle is the
-    // caller's; `staging` switches every barrier in the composition —
-    // this one, the minhash base, the cluster-propagation rounds — to
-    // parquet staging tables, see [[Staging]]). Keeper ids come from
-    // the raw table ([[dedupStaged]]) so the hygiene regexes run once.
+    // exact-dedup shuffle run once (`staging` switches every barrier in
+    // the composition — this one, the minhash base, the
+    // cluster-propagation rounds — to parquet staging tables, see
+    // [[Staging]]). Keeper ids come from the raw table ([[dedupStaged]])
+    // so the hygiene regexes run once.
     val keepers = Staging.materialize(
       dedupStaged(staged, docs, id, text),
-      staging, "curate_keepers", scope)
+      staging, "curate_keepers")
     val (pairs, base) = minhashPairsAndBase(keepers, col("doc_id"), col("text"),
-      n, m, bands, minJaccard, maxBucket, staging, scope)
+      n, m, bands, minJaccard, maxBucket, staging)
     // no .distinct() on the drop side: left_anti ignores right-side
     // multiplicity, and the anti-join's own hash build dedups keys —
     // a pre-distinct was one spare exchange (r08)
@@ -1022,7 +1010,7 @@ object TextOps {
     * pre-training pipeline runs them:
     *
     *  1. [[curate]] — hygiene filter, exact collapse, near-dup drop
-    *     (all of that operator's staging/caching/audit semantics apply
+    *     (all of that operator's staging/barrier/audit semantics apply
     *     unchanged; ONE staging dir serves the whole composition);
     *  2. benchmark DECONTAMINATION — [[contaminationHits]] over the
     *     curated keepers (broadcast n-gram semi-join; `minHits`
@@ -1072,8 +1060,7 @@ object TextOps {
         Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
       splitOn: String = "doc_id",
       exactClusters: Boolean = false,
-      staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): ReleaseResult = {
+      staging: Option[String] = None): ReleaseResult = {
     require(splitOn == "doc_id" || splitOn == "source",
       s"splitOn must be 'doc_id' or 'source', got '$splitOn'")
     val named = docs.select(id.as("doc_id"), text.as("text"), source.as("source"))
@@ -1082,12 +1069,12 @@ object TextOps {
     // recover it (r08: one join + one raw-union re-scan removed)
     val cur = curate(named, col("doc_id"), col("text"), lang, minTokens,
       maxPunctRatio, n, m, bands, minJaccard, maxBucket, exactClusters,
-      staging, scope, extra = Seq("source"))
+      staging, extra = Seq("source"))
     // BARRIER the curate output: it feeds the decontamination semi-join
     // AND the clean anti-join, and is itself the result of the LSH
     // near-dup drop — unmaterialized, each downstream reference would
     // re-execute that banded join (measured ~3x the stage cost)
-    val curated = Staging.materialize(cur.kept, staging, "release_curated", scope)
+    val curated = Staging.materialize(cur.kept, staging, "release_curated")
     // regain text for the kept ids only (column-pruned raw re-scan +
     // 8-byte-id semi-join) — the decontamination input
     val keptDocs = named.select(col("doc_id"), col("text"))
@@ -1098,13 +1085,13 @@ object TextOps {
     val contaminated = Staging.materialize(
       contaminationHits(keptDocs, col("doc_id"), col("text"),
         benchmark, benchText, contamN, minHits),
-      staging, "release_contaminated", scope)
+      staging, "release_contaminated")
     // BARRIER the decontaminated set: the quota aggregates it AND
     // semi-joins back against it (two references = two n-gram
     // decontamination passes without this)
     val clean = Staging.materialize(
       curated.join(contaminated, Seq("doc_id"), "left_anti"),
-      staging, "release_clean", scope)
+      staging, "release_clean")
     // the Int.MaxValue default means "no quota": skip the stage rather
     // than rank every source's full membership through a top-(2^31)
     // aggregate
@@ -1129,9 +1116,9 @@ object TextOps {
     * flags (what stage 2 dropped and why), and the publishable
     * per-(source, split) volume report. The returned frames are lazy,
     * but the composition's BARRIERS (curated set, contamination flags,
-    * clean set) materialize eagerly at call time — cache mode and
-    * staged mode alike since r08 (see [[Staging]]); what remains lazy
-    * is only the final quota/split/report layer on top of them.
+    * clean set) materialize eagerly at call time (see [[Staging]]);
+    * what remains lazy is only the final quota/split/report layer on
+    * top of them.
     */
   final case class ReleaseResult(shards: DataFrame, nearPairs: DataFrame,
       hotBuckets: DataFrame, contaminated: DataFrame, report: DataFrame)
@@ -1159,13 +1146,13 @@ object TextOps {
     * plain propagation could not finish inside any sane cap). Labels
     * only ever decrease, and the loop stops at fixpoint.
     *
-    * ONE Spark action per round: lineage is cut per round
-    * (localCheckpoint, or a parquet staging table when `staging` is
-    * passed / `spark.graft.stagingDir` is set engine-wide — the
-    * executor-loss-tolerant encoding a 100 TB job should run), and the
-    * convergence signal rides THAT action via an accumulator counting
-    * label changes inside the materializing scan — never a second
-    * `count()` job re-reading the round. (Task retries can only
+    * ONE Spark action per round: lineage is cut per round by the
+    * [[Staging]] barrier (a local checkpoint, or a parquet staging
+    * table when `staging` is passed / `spark.graft.stagingDir` is set
+    * engine-wide — the executor-loss-tolerant encoding a 100 TB job
+    * should run), and the convergence signal rides THAT action via an
+    * accumulator counting label changes inside the materializing scan
+    * — never a second `count()` job re-reading the round. (Task retries can only
     * over-count the accumulator, which is safe: the loop tests
     * changed == 0, and a retried task of an all-unchanged round adds
     * nothing.) Returns (doc_id, cluster_keeper), one row per distinct
@@ -1176,12 +1163,8 @@ object TextOps {
       staging: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
     // explicit staging, else the engine-wide conf root (per-call subdir),
-    // else in-memory localCheckpoint (each round needs lineage CUT, not
-    // reuse across consumers — so checkpoint, not cache)
+    // else the in-memory barrier
     val stage = Staging.resolve(spark, staging, "dup_clusters")
-    def cut(df: DataFrame, name: String): DataFrame =
-      if (stage.isDefined) Staging.materialize(df, stage, name)
-      else df.localCheckpoint()
     val acc = spark.sparkContext.longAccumulator("graft.dupClusters.changed")
     // counts rows whose label decreased DURING the cut's own scan —
     // the one action of the round doubles as the convergence check
@@ -1192,7 +1175,8 @@ object TextOps {
         // "changed" is exactly inequality — type-generic
         it.map { r => if (r.get(1) != r.get(2)) acc.add(1); r }
       }(Encoders.row(df.schema))
-      cut(counted, name).select(col("doc_id"), col("new_label").as("label"))
+      Staging.materialize(counted, stage, name)
+        .select(col("doc_id"), col("new_label").as("label"))
     }
     // symmetrize in ONE pass over `pairs` (explode of the two
     // directions), not a self-union: an unmaterialized pair frame is
@@ -1200,18 +1184,18 @@ object TextOps {
     // re-execute it — measured as a doubled set of base exchanges in
     // the q51 stage audit (r08). explode_outer per the house rule for
     // computed arrays.
-    val edges = cut(pairs.select(explode_outer(array(
+    val edges = Staging.materialize(pairs.select(explode_outer(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct(), "edges")
+      .distinct(), stage, "edges")
     // round 1 reads the label table three times (neighbor join, left
     // join, jump dereference) — cut the seed so those are scans, not
     // three recomputations of the seed aggregation
-    var labels = cut(edges.groupBy(col("src").as("doc_id"))
+    var labels = Staging.materialize(edges.groupBy(col("src").as("doc_id"))
       .agg(min(col("dst")).as("mn"))
       .select(col("doc_id"), least(col("doc_id"), col("mn")).as("label")),
-      "labels_0")
+      stage, "labels_0")
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxIters) {
@@ -1242,9 +1226,7 @@ object TextOps {
     // parquet, so the intermediate tables (edges, labels_0..r-1) are
     // dead weight — delete them now rather than letting a long job's
     // staging grow O(rounds * |labels|). (The in-memory rounds need no
-    // analog: unreferenced localCheckpoint blocks are reclaimed by
-    // Spark's ContextCleaner once the per-round Datasets go out of
-    // scope here.)
+    // analog: the ContextCleaner frees unreachable checkpoint blocks.)
     stage.foreach { dir =>
       val hconf = spark.sparkContext.hadoopConfiguration
       (Seq("edges") ++ (0 until round).map(r => s"labels_$r")).foreach { nm =>
@@ -1282,12 +1264,11 @@ object TextOps {
   def dedupCascade(docs: DataFrame, id: Column, text: Column,
       n: Int = 3, m: Int = 16, bands: Int = 4, minJaccard: Double = 0.5,
       maxBucket: Int = 4096,
-      staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): (DataFrame, DataFrame) = {
+      staging: Option[String] = None): (DataFrame, DataFrame) = {
     val named = docs.select(id.as("id"), text.as("text"))
     val reps = dedupExact(named, xxhash64(col("text")), col("id"))
     val pairs = minhashDupPairs(reps, col("id"), col("text"),
-      n, m, bands, minJaccard, maxBucket, staging, scope)
+      n, m, bands, minJaccard, maxBucket, staging)
     (pairs, exactDupGroups(named, xxhash64(col("text")), col("id")))
   }
 
@@ -1364,7 +1345,7 @@ object TextOps {
     * (provided the text has >= n tokens); run [[dedupCascade]] first if
     * the snapshot may carry mega-clusters of identical text.
     *
-    * `staging`/`scope` control the SNAPSHOT-side barriers only (the new
+    * `staging` controls the SNAPSHOT-side barriers only (the new
     * base + the two pair frames, each consumed twice); the base table
     * is read-only here — fold survivors in with [[appendToBase]] once
     * the results are consumed.
@@ -1372,14 +1353,13 @@ object TextOps {
   def dedupAgainstBase(newDocs: DataFrame, id: Column, text: Column,
       baseDir: String, n: Int = 3, m: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.5, maxBucket: Int = 4096,
-      staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): IncrementalDedupResult = {
+      staging: Option[String] = None): IncrementalDedupResult = {
     val spark = newDocs.sparkSession
     val base = spark.read.parquet(s"$baseDir/minhash_base")
     val named = newDocs.select(id.as("doc_id"), text.as("text"))
     val newBase = Staging.materialize(
       minhashExploded(named, col("doc_id"), col("text"), n, m, bands),
-      staging, "minhash_base_new", scope)
+      staging, "minhash_base_new")
     // barrier both pair frames: each feeds the keeper anti-join AND is
     // returned for the caller to consume — unmaterialized, reading both
     // would re-run its join (the q64 release lesson)
@@ -1392,10 +1372,10 @@ object TextOps {
         .select(col("new_id"), col("base_id"),
           jaccard(col("hs_n"), col("hs_b")).as("jaccard"))
         .filter(col("jaccard") >= minJaccard),
-      staging, "inc_cross_pairs", scope)
+      staging, "inc_cross_pairs")
     val newPairs = Staging.materialize(
       minhashSelfPairs(newBase, minJaccard, maxBucket),
-      staging, "inc_new_pairs", scope)
+      staging, "inc_new_pairs")
     // no .distinct(): left_anti ignores right-side multiplicity and
     // its hash build dedups keys (see [[curate]]'s dropIds)
     val dropIds = crossPairs.select(col("new_id").as("doc_id"))
@@ -1461,8 +1441,7 @@ object TextOps {
     * hash is also evidence no collision fired at this scale.
     */
   def duplicatedRuns(docs: DataFrame, id: Column, text: Column,
-      minRun: Int = 10, staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
+      minRun: Int = 10, staging: Option[String] = None): DataFrame = {
     require(minRun >= 2, s"minRun must be >= 2, got $minRun")
     val toked = docs.select(id.as("doc_id"), tokens(text).as("toks"))
       .withColumn("nt", size(col("toks")))
@@ -1478,7 +1457,7 @@ object TextOps {
         .select(col("doc_id"),
           posexplode_outer(PosShingleHashes.of(col("toks"), minRun)))
         .toDF("doc_id", "pos", "h"),
-      staging, "run_hashes", scope)
+      staging, "run_hashes")
     val dup = sh.groupBy(col("h")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2)
     // 100 TB note (no-silent-caps house rule applied to run hashes): at

@@ -158,16 +158,14 @@ object VectorOps {
     */
   def cosineDupPairs(corpus: DataFrame, minCos: Double,
       nPlanes: Int = 16, tables: Int = 4, maxBucket: Int = 4096,
-      staging: Option[String] = None,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
+      staging: Option[String] = None): DataFrame = {
     requirePlanes(nPlanes)
-    // barrier default .cache(), caller-owned; `staging` stages through
-    // parquet instead (see TextOps.minhashDupPairs / Staging)
+    // barrier: both sides of the self-join read it (see Staging)
     val keyed = Staging.materialize(
       vecAsDouble(corpus, "embedding").select(col("vec_id"), col("embedding"))
         .withColumn("bk", explode_outer(SignBuckets.of(col("embedding"), nPlanes, tables)))
         .select(col("vec_id"), col("embedding"), col("bk.table"), col("bk.bucket")),
-      staging, "cosine_base", scope)
+      staging, "cosine_base")
     // hot-bucket bound (see Buckets): a cluster of identical/mirrored
     // embeddings shares every sign bit, so ONE bucket per table holds the
     // whole cluster — exactly the M^2 blowup the salt bounds. Collapse

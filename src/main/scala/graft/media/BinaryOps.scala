@@ -190,14 +190,12 @@ object BinaryOps {
     */
   def dhashDupPairs(assets: Dataset[Asset], maxFrames: Int = 4,
       bands: Int = 8, maxHamming: Int = 7, maxBucket: Int = 4096,
-      staging: Option[String] = None,
-      scope: graft.analysis.CacheScope = graft.analysis.CacheScope.unmanaged)
-      : DataFrame = {
+      staging: Option[String] = None): DataFrame = {
     val hashes = sampleGrayFrames(assets, maxFrames).toDF()
       .select(concat(col("media_ref"), lit("#"), col("frame_idx")).as("id"),
         DHash64.of(col("gray")).as("sh"))
     graft.analysis.TextOps.bandedHammingPairs(hashes, col("id"), col("sh"),
-      bands, maxHamming, maxBucket, staging, scope,
+      bands, maxHamming, maxBucket, staging,
       stagingName = "dhash_base")
   }
 
@@ -221,7 +219,10 @@ object BinaryOps {
 
   /** Full demo: corpus -> assets -> decode + frame features, joined. */
   def mediaPipeline(spark: SparkSession, nDocs: Long): DataFrame = {
-    val assets = assetsFor(Corpus.generate(spark, nDocs)).cache()
+    import spark.implicits._
+    // barrier: the decode and the frame sampling both read the assets
+    val assets = graft.analysis.Staging.materialize(
+      assetsFor(Corpus.generate(spark, nDocs)).toDF(), None, "media_assets").as[Asset]
     val meta = decodeAll(assets).toDF()
     val frames = sampleFrames(assets).toDF()
       .groupBy("media_ref").agg(count(lit(1)).as("n_sampled_frames"))

@@ -1,37 +1,38 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column <-> catalyst Expression bridge. Spark 4 made Column wrap a
   * ColumnNode and gated the conversion helpers private[sql]; custom
   * native Expressions (preference (b) in SURVEY.md §7.5) still need the
-  * two conversions, so this exposes exactly those and nothing else.
+  * two conversions, so this exposes those, the expected-input-type
+  * alias, and the one plan rewrite the barrier needs (a checkpoint leaf
+  * with measured statistics, read only by `graft.analysis.Staging`).
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** A MATERIALIZED cached DataFrame re-rooted at its InMemoryRelation
-    * LEAF — the plan CacheManager substitutes at execution time anyway,
-    * surfaced at the LOGICAL level so downstream compositions analyze a
-    * one-node leaf instead of re-walking (and re-printing) the cached
-    * frame's entire child tree per reference. Deep barrier chains
-    * (curate -> release) otherwise pay analyzer time multiplicative in
-    * composition depth. None when the frame is not in the cache (the
-    * caller should then use the frame as-is). Execution semantics are
-    * unchanged: the same InMemoryTableScan, the same unpersist
-    * lifecycle (an unpersisted relation recomputes through its cached
-    * child plan like any RDD whose persistence was dropped).
+  /** A local checkpoint of `df` (eager, one job, lineage cut) whose
+    * leaf carries the checkpoint's MEASURED block bytes as statistics. Spark's
+    * leaf keeps the optimizer's estimate for the plan it replaced, and
+    * join estimates multiply: a 1 MB minhash base read as 77 MB, so the
+    * self-join over it planned a sort-merge join, shuffling both sides,
+    * where a broadcast fits.
     */
-  def cachedLeaf(df: org.apache.spark.sql.DataFrame)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val spark = classic.sparkSession
-    spark.sharedState.cacheManager.lookupCachedData(spark, classic.logicalPlan)
-      .map(cd => org.apache.spark.sql.classic.Dataset.ofRows(spark,
-        cd.cachedRepresentation))
+  def checkpointLeaf(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint().asInstanceOf[Dataset[_]]
+    val r = cp.logicalPlan.asInstanceOf[LogicalRDD]
+    val spark = cp.sparkSession
+    val bytes = spark.sparkContext.getRDDStorageInfo
+      .filter(_.id == r.rdd.id).map(i => i.memSize + i.diskSize).sum
+    Dataset.ofRows(spark, LogicalRDD(r.output, r.rdd, r.outputPartitioning,
+      r.outputOrdering, r.isStreaming)(spark,
+      Some(Statistics(sizeInBytes = BigInt(math.max(bytes, 1L)))), Some(r.constraints)))
   }
 
   /** AbstractDataType is private[sql], but ExpectsInputTypes /

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +18,33 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
 
   lazy val docsPath = "/root/testdata/sf0.001"
   lazy val documents = spark.read.parquet(s"$docsPath/documents.parquet").cache()
+
+  /** The executed plans of the actions `body` runs. A barrier's output
+    * is a leaf in any plan built on it, so a property of the work
+    * behind a barrier is read from the action that materialized it.
+    */
+  private def executedPlans(body: => Any): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val marker = "graft_plans_marker"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
+        else plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once the marker action's event
+      // is in, so is every event of `body`
+      spark.range(1).toDF(marker).collect()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
 
   test("minhash LSH finds every injected near-duplicate (recall 1.0 at j~0.95)") {
     val base = documents.select(col("doc_id"), col("text")).filter(col("doc_id") < 100)
@@ -248,32 +277,90 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
     assert(stagedCur.hotBuckets.count() == 0)
   }
 
-  test("CacheScope: releasing a call drops exactly its barrier caches") {
-    import graft.analysis.CacheScope
+  test("in-memory barriers: no CacheManager entry, blocks freed once unreachable") {
+    import graft.analysis.{Bpe, Pack}
+    import graft.media.BinaryOps
+    import org.apache.spark.sql.DataFrame
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Millis, Seconds, Span}
     val sc = spark.sparkContext
-    documents.count() // materialize the suite-level cache first
-    // compare the SET of persistent-RDD ids, not the count: Spark's
-    // ContextCleaner asynchronously drops earlier tests' unreferenced
-    // caches, so totals are racy in a full-suite run
-    val baseline = sc.getPersistentRDDs.keySet
-    // a plan no other test caches: Spark's CacheManager dedupes cache()
-    // on an already-cached plan, which would make `added` empty here
-    val docs = documents.select(col("doc_id"), col("text"))
-      .filter(col("doc_id") =!= 424242L)
-    val scope = new CacheScope
-    val res = TextOps.curate(docs, col("doc_id"), col("text"),
-      scope = scope)
-    val (kept, pairs) = (res.kept, res.nearPairs)
-    kept.count(); pairs.count()
-    val added = sc.getPersistentRDDs.keySet -- baseline
-    assert(added.nonEmpty,
-      "curate's barriers did not register as caches (vacuous test)")
-    scope.release()
-    assert((sc.getPersistentRDDs.keySet & added).isEmpty,
-      "scope.release() left this call's caches in the BlockManager")
-    // release is idempotent and scope-local: the suite cache survives
-    scope.release()
-    assert(documents.count() > 0)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // an uncached read: the suite-level `documents` frame is a cache entry
+    val docs = spark.read.parquet(s"$docsPath/documents.parquet")
+      .select(col("doc_id"), col("text"), col("source")).filter(col("doc_id") < 200)
+    val text = docs.select(col("doc_id"), col("text"))
+    val baseDir = tempDir("graft-barrier-base")
+    TextOps.buildMinhashBase(text.filter(col("doc_id") < 100), col("doc_id"),
+      col("text"), baseDir)
+    val vocab = sc.broadcast(Bpe.buildTokenVocab(text, col("text"), nMerges = 20))
+    val assets = BinaryOps.assetsFor(graft.corpus.Corpus.generate(spark, 20))
+    val emb = spark.read.parquet(s"$docsPath/embeddings.parquet")
+    def drain(dfs: DataFrame*): Unit =
+      dfs.foreach(_.write.format("noop").mode("overwrite").save())
+    // every barrier operator SparkEntry reaches, each run to completion;
+    // no returned frame escapes its closure
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "curate" -> { () =>
+        val r = TextOps.curate(text, col("doc_id"), col("text"))
+        drain(r.kept, r.nearPairs, r.hotBuckets) },
+      "release" -> { () =>
+        val r = TextOps.release(docs, col("doc_id"), col("text"), col("source"),
+          text.filter(col("doc_id") < 5).select(col("text")), col("text"))
+        drain(r.shards, r.nearPairs, r.hotBuckets, r.contaminated, r.report) },
+      "dedupAgainstBase" -> { () =>
+        val r = TextOps.dedupAgainstBase(text.filter(col("doc_id") >= 100),
+          col("doc_id"), col("text"), baseDir)
+        drain(r.keepers, r.crossPairs, r.newPairs, r.newBase) },
+      "dedupCascade" -> { () =>
+        val (pairs, groups) = TextOps.dedupCascade(text, col("doc_id"), col("text"))
+        drain(pairs, groups) },
+      "minhashDupPairs" -> (() =>
+        drain(TextOps.minhashDupPairs(text, col("doc_id"), col("text")))),
+      "simhashDupPairs" -> (() =>
+        drain(TextOps.simhashDupPairs(text, col("doc_id"), col("text")))),
+      "cosineDupPairs" -> (() => drain(VectorOps.cosineDupPairs(emb, 0.99))),
+      "dhashDupPairs" -> (() => drain(BinaryOps.dhashDupPairs(assets))),
+      "packSequences" -> (() =>
+        drain(Pack.packSequences(text, col("doc_id"), col("text"), vocab, 64))),
+      "duplicatedRuns" -> (() =>
+        drain(TextOps.duplicatedRuns(text, col("doc_id"), col("text"), minRun = 5))),
+      "dupClusters" -> (() => drain(TextOps.dupClusters(
+        Seq((1L, 3L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")))),
+      "mediaPipeline" -> (() => drain(BinaryOps.mediaPipeline(spark, 20))))
+    // compare SETS of persistent-RDD ids: the ContextCleaner drops
+    // earlier unreferenced RDDs asynchronously, so totals are racy. The
+    // ids are copied out: the map's keySet view holds the RDDs strongly
+    def persistentIds(): Set[Int] = sc.getPersistentRDDs.keysIterator.toSet
+    spark.catalog.clearCache()
+    try ops.foreach { case (op, run) =>
+      val before = persistentIds()
+      run()
+      assert(cacheManager.isEmpty, s"$op left a CacheManager entry")
+      val barriers = persistentIds() -- before
+      assert(barriers.nonEmpty, s"$op materialized no in-memory barrier (vacuous)")
+      eventually(timeout(Span(30, Seconds)), interval(Span(200, Millis))) {
+        System.gc()
+        assert((persistentIds() & barriers).isEmpty,
+          s"$op: barrier blocks outlived the frames that read them")
+      }
+    } finally documents.cache()
+  }
+
+  test("an in-memory barrier's leaf is sized by its measured bytes") {
+    // a cross join the optimizer sizes at rows x rows, whose filter
+    // keeps 10 rows: planned from the estimate, a join over it would
+    // shuffle both sides instead of broadcasting the 10 rows
+    val small = spark.range(2000).crossJoin(spark.range(2000).toDF("j"))
+      .filter(col("id") === col("j") && col("id") < 10)
+    val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    assert(small.queryExecution.optimizedPlan.stats.sizeInBytes > threshold)
+    val barrier = graft.analysis.Staging.materialize(small, None, "small")
+    assert(barrier.queryExecution.optimizedPlan.stats.sizeInBytes < threshold)
+    // the other side is over the threshold too (planned, never run)
+    val plan = spark.range(100000000L).join(barrier, "id").queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"), plan)
   }
 
   test("dupClusters runs ONE action per round (convergence rides the cut)") {
@@ -1178,7 +1265,9 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
         TextOps.duplicatedRuns(documents, col("doc_id"), col("text"),
           minRun = 5))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
+    // duplicatedRuns' own flag semi-join sits above its barrier leaf and
+    // broadcasts too, so a BroadcastHashJoin alone does not pin this join
+    assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
       s"runs side no longer broadcasts:\n$plan")
   }
 
@@ -1286,7 +1375,9 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
     assert(shards.columns.toSet == Set("doc_id", "lang_pred", "n_tokens",
       "punct_ratio", "source", "split"))
     // the default (no quota) skips the quota stage instead of ranking
-    // every source through a top-(2^31) aggregate
+    // every source through a top-(2^31) aggregate; the quota runs above
+    // the barriers, so its aggregate shows in the shards plan when set
+    assert(shards.queryExecution.executedPlan.toString.contains("bounded_top_k"))
     val unq = TextOps.release(docs, col("doc_id"), col("text"), col("source"),
       bench, col("text"))
     assert(unq.shards.count() >= shards.count())
@@ -1921,9 +2012,12 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
     assert((500000L until 500010L).forall(i => !keepers.contains(i)))
     assert((600100L until 600110L).forall(i => !keepers.contains(i)))
     // the base side of the cross join is a PARQUET SCAN of the staged
-    // base — snapshot k never pays the base corpus's minhash chain
-    val plan = r.crossPairs.queryExecution.executedPlan.toString
-    assert(plan.contains(dir), s"cross join must read the staged base:\n$plan")
+    // base — snapshot k never pays the base corpus's minhash chain. The
+    // returned frame reads a barrier leaf, so check the plans the call
+    // itself executed (its barrier actions)
+    val plans = executedPlans(TextOps.dedupAgainstBase(snap, col("doc_id"), col("text"), dir))
+    assert(plans.exists(p => p.contains(s"$dir/minhash_base") && p.contains("Join")),
+      s"cross join must read the staged base:\n${plans.mkString("\n\n")}")
   }
 
   test("appendToBase: next snapshot dedups against prior keepers; curate dir is a base") {

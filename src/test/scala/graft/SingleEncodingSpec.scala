@@ -127,6 +127,26 @@ class SingleEncodingSpec extends AnyFunSuite {
       "MediaDump", "ScalingBench", "Verify"), mains.sorted.mkString("\n", "\n", ""))
   }
 
+  /** A top-level member `def` (two-space indent), for sites inside nested defs. */
+  private val MemberDef = """^  (?:(?:private|protected|final|override)(?:\[\w+\])?\s+)*def\s+(\w+)""".r
+
+  test("one in-memory barrier: localCheckpoint only behind Staging and in the query-entry spread") {
+    val checkpoints = sitesOf(mainSources(), """\.localCheckpoint\(""".r, MemberDef)
+    assert(checkpoints.sorted == Seq("Bridge.scala:checkpointLeaf", "SparkEntry.scala:spread"),
+      checkpoints.mkString("\n", "\n", ""))
+    val leaves = sitesOf(mainSources(), """(?<!def )\bcheckpointLeaf\(""".r, MemberDef)
+    assert(leaves == Seq("Staging.scala:materialize"), leaves.mkString("\n", "\n", ""))
+    // the iterative cascade's persist leaves with that encoding
+    val caches = sitesOf(mainSources(), """\.(?:cache|persist)\(""".r, MemberDef)
+    assert(caches.distinct == Seq("Pipeline.scala:resultsAutoIterative"),
+      caches.mkString("\n", "\n", ""))
+  }
+
+  test("src/main has no cache registry, no scope parameter and no cached-leaf bridge") {
+    val hits = hitsOf(mainSources(), """\bCacheScope\b|\bcachedLeaf\b|\bscope\s*:""".r)
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
   test("src/main hard-codes no local[<n>] master") {
     // a fixed thread count oversubscribes any smaller host
     val hits = hitsOf(mainSources(), """local\[\d+\]""".r)
