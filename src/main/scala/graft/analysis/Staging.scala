@@ -28,8 +28,8 @@ object StagingConf {
   * barrier instead of recomputing or re-analyzing its lineage:
   *
   *  - `staging = None` (default): a local checkpoint — the rows are
-  *    computed once into executor block storage (memory, spilling to
-  *    disk) and the returned frame reads them through a lineage-cut
+  *    computed once into executor block storage (serialized, in memory,
+  *    spilling to disk) and the returned frame reads them through a lineage-cut
   *    RDD leaf sized by its measured bytes, so joins over it plan
   *    from the real size (`Bridge.checkpointLeaf`). Nothing is
   *    registered with the SQL CacheManager, so there is nothing to

@@ -348,19 +348,55 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
   }
 
   test("an in-memory barrier's leaf is sized by its measured bytes") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.graftbridge.Bridge
+    def leaf(df: org.apache.spark.sql.DataFrame): LogicalRDD =
+      df.queryExecution.optimizedPlan.collectLeaves() match {
+        case Seq(r: LogicalRDD) => r
+        case other => fail(s"expected one checkpoint leaf, got $other")
+      }
+    def measured(df: org.apache.spark.sql.DataFrame): Long = {
+      val bytes = Bridge.blockBytes(leaf(df).rdd)
+      assert(bytes.exists(_ > 1), s"no complete block measure: $bytes")
+      assert(leaf(df).stats.sizeInBytes == BigInt(bytes.get))
+      bytes.get
+    }
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val configured = spark.conf.get(thresholdKey)
+    val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(configured)
     // a cross join the optimizer sizes at rows x rows, whose filter
     // keeps 10 rows: planned from the estimate, a join over it would
     // shuffle both sides instead of broadcasting the 10 rows
     val small = spark.range(2000).crossJoin(spark.range(2000).toDF("j"))
       .filter(col("id") === col("j") && col("id") < 10)
-    val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
     assert(small.queryExecution.optimizedPlan.stats.sizeInBytes > threshold)
     val barrier = graft.analysis.Staging.materialize(small, None, "small")
-    assert(barrier.queryExecution.optimizedPlan.stats.sizeInBytes < threshold)
+    assert(measured(barrier) < threshold)
     // the other side is over the threshold too (planned, never run)
     val plan = spark.range(100000000L).join(barrier, "id").queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"), plan)
+    // and a barrier over the threshold stays out of a broadcast: an
+    // undercount (a missed measure read as a few bytes) would collect
+    // it to the driver whatever its size
+    val big = graft.analysis.Staging.materialize(
+      spark.range(20000).select(col("id"), lit("x" * 100).as("pad")), None, "big")
+    val bigBytes = measured(big)
+    spark.conf.set(thresholdKey, (bigBytes / 2).toString)
+    try {
+      val bigPlan = spark.range(100000000L).join(big, "id").queryExecution.executedPlan.toString
+      assert(bigPlan.contains("SortMergeJoin") && !bigPlan.contains("BroadcastHashJoin"), bigPlan)
+    } finally spark.conf.set(thresholdKey, configured)
+  }
+
+  test("block measure: None until every partition has a block") {
+    val rdd = spark.sparkContext.parallelize(1 to 1000, 2).persist()
+    try {
+      val sizeOf = (it: Iterator[Int]) => it.size
+      spark.sparkContext.runJob(rdd, sizeOf, Seq(0))
+      assert(org.apache.spark.sql.graftbridge.Bridge.blockBytes(rdd).isEmpty)
+      rdd.count()
+      assert(org.apache.spark.sql.graftbridge.Bridge.blockBytes(rdd).exists(_ > 1))
+    } finally rdd.unpersist(blocking = true)
   }
 
   test("dupClusters runs ONE action per round (convergence rides the cut)") {
