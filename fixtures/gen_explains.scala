@@ -104,8 +104,8 @@ audit("composed corpus release (q64)",
   "The four-stage release in one plan: curate's staged shapes (map-side hygiene, partial-agg exact collapse, salted banded join), the benchmark broadcast LEFT-SEMI decontamination + anti-join, the bounded-top-k quota keeper (no Window), and the map-only hash split — every inter-stage join is on 8-byte ids against already-bounded frames, and the raw table re-scans column-pruned instead of materializing a text-carrying intermediate (visible as input-read, the dedupStaged trade).",
   SparkEntry.queries("q64_release")(spark, sf), Seq("ObjectHashAggregate", "BroadcastHashJoin"))
 audit("BPE token count (q65)",
-  "Map-only: the fused bpe_word_count expression consumes the merge-rank table from a TorrentBroadcast (never a plan literal) inside whole-stage codegen; the only exchange in the query is none — per-doc counts are a pure projection over the scan.",
-  SparkEntry.queries("q65_bpe_tokens")(spark, sf), Seq("bpe_word_count"))
+  "Map-only: the count is size() of the fused bpe_token_ids expression, which consumes the merge-rank table from a TorrentBroadcast (never a plan literal) inside whole-stage codegen; the vocab carries no alphabet (an unknown symbol is one UNK id), so the only job besides training is the scan itself — per-doc counts are a pure projection over it.",
+  SparkEntry.queries("q65_bpe_tokens")(spark, sf), Seq("bpe_token_ids"))
 audit("perceptual media dedup (q66)",
   "dHash64 (fused) over pooled-codec 9x8 rasters, then the SAME banded-Hamming self-join class as q45 (8 bands x 8 bits, hot-bucket salt in the join key, pair-dedup before the exact-Hamming rerank) — copies collide in some band with certainty (pigeonhole), so recall needs no all-pairs compare.",
   SparkEntry.queries("q66_media_dedup")(spark, sf), Seq("Join"))

@@ -177,7 +177,7 @@ def lang_pred(text):
     best_l, best_s = LANG_RES[0][0], len(LANG_RES[0][1].findall(low))
     for l, r in LANG_RES[1:]:
         s = len(r.findall(low))
-        if s > best_s:  # strict: declaration-order tiebreak like langIdBest
+        if s > best_s:  # strict: declaration-order tiebreak like markerLang
             best_l, best_s = l, s
     return best_l
 
@@ -457,7 +457,7 @@ def main(sf_dir):
           sorted((i, sum(bpe_count_word(w, ranks) for w in tokens(t))
                   # symbols scan lower(t) — the same string tokenIds
                   # walks, so count == len(ids) even when lowering
-                  # expands a code point (Bpe.tokenCount mirrors this)
+                  # expands a code point (BpeCountTwin mirrors this)
                   + len(SYMBOL_RE.findall(t.lower())))
                  for i, t in base.items()))
 

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.analysis.Staging
 import graft.extract.{AnalyteExtract, MultiAnalyteGather, SpanAssembly, TshExtract}
 import graft.media.{FirstMediaRef, OcrEnginePool, OcrRun, OcrText}
 import graft.schema._
@@ -151,23 +151,23 @@ object Pipeline {
   /** Iterative auto cascade (SURVEY.md §2.4.1 option 2): each level's
     * [[OcrText]] column runs only over the docs the earlier levels left
     * pending. Join-free: pending rows carry their spans forward, so each
-    * stage is filter + projection. Persisting the stage outputs
-    * (MEMORY_AND_DISK) bounds the recomputation the two downstream
-    * consumers (accepted / pending) would otherwise trigger. Reached
-    * through `extract(..., iterative = true)`; it makes the same OCR
-    * calls as the columnar cascade's gates.
+    * stage is filter + projection. The light and premium outputs each
+    * have two consumers (accepted / pending), so each goes through the
+    * in-memory [[Staging]] barrier, which computes it once, when
+    * called. Reached through `extract(..., iterative = true)`; it makes
+    * the same OCR calls as the columnar cascade's gates.
     */
   private def resultsAutoIterative(docs: Dataset[DocRow]): DataFrame = {
     val carry = Seq("doc_id", "first_media_ref", "spans").map(col)
     def stage(in: DataFrame, level: String): DataFrame =
       withLevelResult(in.withColumn("raw", ocrText(level)), "raw", "r")
         .select(carry :+ col("r"): _*)
-    def persisted(in: DataFrame, level: String): DataFrame =
-      stage(in, level).persist(StorageLevel.MEMORY_AND_DISK)
+    def staged(in: DataFrame, level: String): DataFrame =
+      Staging.materialize(stage(in, level), None, s"ocr_$level")
     def pending(s: DataFrame): DataFrame =
       s.filter(!TshExtract.acceptWithRange(col("r"))).select(carry: _*)
-    val s1 = persisted(ocrInput(docs), "light")
-    val s2 = persisted(pending(s1), "premium")
+    val s1 = staged(ocrInput(docs), "light")
+    val s2 = staged(pending(s1), "premium")
     // optimum: accepted if parsed at all; otherwise the failure row keeps
     // optimum's error/raw_text (`app.py:179-196`)
     val o = col("r")
@@ -180,7 +180,10 @@ object Pipeline {
       .unionByName(s3.select(sel: _*))
   }
 
-  /** Final output: (doc_id, spans array<struct<kind,text,media_ref,order>>). */
+  /** Final output: (doc_id, spans array<struct<kind,text,media_ref,order>>).
+    * Lazy, except `iterative = true` in auto mode: that encoding runs
+    * its light and premium levels (two jobs) when called.
+    */
   def extract(docs: Dataset[DocRow], mode: String,
       iterative: Boolean = false): DataFrame = {
     val res =

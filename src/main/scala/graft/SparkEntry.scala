@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.analysis.{TextOps, VectorOps}
+import graft.analysis.{CurationFeatures, TextOps, VectorOps}
 import graft.corpus.Corpus
 import graft.extract.TshExtract
 
@@ -261,19 +261,22 @@ object SparkEntry {
         TextOps.bpeishTokenCount(col("text")).as("n_bpeish"))),
 
     "q20_quality_score" -> ((s, d) => {
-      val f = TextOps.qualityFeatures(col("text"))
-      t(s, d, "documents").withColumn("f", f)
-        .select(col("doc_id"), col("f.n_tokens").as("n_tokens"),
-          col("f.n_stopwords").as("n_stopwords"),
-          col("f.stopword_ratio").as("stopword_ratio"),
-          col("f.punct_ratio").as("punct_ratio"))
+      val f = col("f")
+      def ratio(x: String, n: String) =
+        when(f(n) > 0, f(x).cast("double") / f(n)).otherwise(0.0)
+      t(s, d, "documents").withColumn("f", CurationFeatures.of(col("text")))
+        .select(col("doc_id"), f("n_tokens").as("n_tokens"),
+          f("n_stopwords").as("n_stopwords"),
+          ratio("n_stopwords", "n_tokens").as("stopword_ratio"),
+          ratio("n_punct", "n_chars").as("punct_ratio"))
     }),
 
     "q21_lang_id" -> ((s, d) => {
-      val scores = TextOps.langIdScores(col("text"))
-      val cols = scores.map { case (l, c) => c.as(s"s_$l") }
-      t(s, d, "documents").select(
-        (col("doc_id") +: cols :+ TextOps.langIdBest(col("text")).as("lang_pred")): _*)
+      val f = col("f")
+      val langs = TextOps.LangMarkerWords.map(_._1)
+      t(s, d, "documents").withColumn("f", CurationFeatures.of(col("text")))
+        .select((col("doc_id") +: langs.map(l => f(s"s_$l").as(s"s_$l")) :+
+          TextOps.markerLang(f).as("lang_pred")): _*)
     }),
 
     "q52_strip_markup" -> ((s, d) => {
@@ -742,12 +745,13 @@ object SparkEntry {
       // applied as a fused broadcast expression; hash-checked against
       // the Python mirror's independent train + greedy-apply
       // (fixtures/gen_hash_expected.py, expected_bpe.parquet)
+      // (a count needs no alphabet: an unknown symbol is one UNK id)
       import graft.analysis.Bpe
       val docs = t(s, d, "documents")
       val vocab = s.sparkContext.broadcast(
-        Bpe.train(docs, col("text"), nMerges = 200))
+        Bpe.TokenVocab(Seq.empty, Bpe.train(docs, col("text"), nMerges = 200)))
       docs.select(col("doc_id"),
-        Bpe.tokenCount(col("text"), vocab).as("n_bpe"))
+        size(Bpe.tokenIds(col("text"), vocab)).as("n_bpe"))
     }),
 
     "q73_pack_sequences" -> ((s, d) => {

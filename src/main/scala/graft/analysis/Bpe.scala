@@ -21,9 +21,9 @@ import org.apache.spark.sql.types._
   *
   * Tokenization contract (shared with [[TextOps.tokens]]): words are
   * `[\p{L}0-9']+` runs of `lower(text)`; BPE merges happen INSIDE
-  * words only (no cross-word merges, no end-of-word marker — counts
-  * are what matter here, not decodability); every non-word non-space
-  * character is one token (the same symbol rule as
+  * words only (no cross-word merges, no end-of-word marker — ids and
+  * their counts are what matter here, not decodability); every
+  * non-word non-space character is one token (the same symbol rule as
   * `bpeishTokenCount`). Symbols are Unicode CODE POINTS (not UTF-16
   * chars), so astral-plane text counts like the Python mirror; the
   * lexicographic tiebreaks also compare by CODE POINT ([[cpLess]]),
@@ -36,58 +36,11 @@ import org.apache.spark.sql.types._
   * by a deterministic (count desc, word asc) top-N, then a driver-side
   * merge loop over that bounded table (like k-means' seed collect:
   * the ONLY collect, explicitly bounded). APPLICATION is map-only: the
-  * merge ranks ride a TorrentBroadcast into [[BpeWordCount]] (the
+  * merge ranks ride a TorrentBroadcast into [[BpeTokenIds]] (the
   * [[BroadcastDotProducts]] pattern — never a plan literal), one
-  * compiled pass per row.
+  * compiled pass per row; a token count is `size(tokenIds)`.
   */
 object Bpe {
-
-  /** Ordered merge list (rank = position). Serializable; the rank map
-    * and per-word memo rebuild lazily per executor.
-    */
-  final case class Vocab(merges: Seq[(String, String)]) extends Serializable {
-    @transient private[analysis] lazy val ranks: java.util.HashMap[String, Integer] = {
-      val m = new java.util.HashMap[String, Integer](merges.size * 2)
-      merges.zipWithIndex.foreach { case ((a, b), r) =>
-        // the \u0000 separator never occurs inside a token (regex classes exclude it)
-        m.put(a + "\u0000" + b, r)
-      }
-      m
-    }
-    // Zipfian text re-tokenizes the same words endlessly: memoize
-    // word -> count per executor, bounded (insert-only once full —
-    // the frequent head is what matters, eviction churn is not worth
-    // it). ConcurrentHashMap: tasks share the JVM.
-    @transient private[analysis] lazy val memo =
-      new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-    /** BPE token count of ONE word (no symbols, no whitespace). */
-    def countWord(word: String): Int = {
-      val cached = memo.get(word)
-      if (cached != null) return cached.intValue()
-      var syms = codePointStrings(word)
-      var done = false
-      while (!done && syms.length >= 2) {
-        // lowest-rank pair TYPE present in the word
-        var bestRank = Int.MaxValue
-        var bestL: String = null
-        var bestR: String = null
-        var i = 0
-        while (i < syms.length - 1) {
-          val r = ranks.get(syms(i) + "\u0000" + syms(i + 1))
-          if (r != null && r.intValue() < bestRank) {
-            bestRank = r.intValue(); bestL = syms(i); bestR = syms(i + 1)
-          }
-          i += 1
-        }
-        if (bestL == null) done = true
-        else syms = mergeAll(syms, bestL, bestR)
-      }
-      val n = syms.length
-      if (memo.size < (1 << 16)) memo.put(word, Integer.valueOf(n))
-      n
-    }
-  }
 
   /** One string per Unicode code point. */
   private[analysis] def codePointStrings(s: String): Array[String] = {
@@ -142,9 +95,10 @@ object Bpe {
     * symbols) below U+E000..U+FFFF, diverging from the Python
     * mirror's tuple compare — so every choice is deterministic AND
     * engine-agreed for the full Unicode range. Stops early when no
-    * pair repeats.
+    * pair repeats. Returns the merge list in rank order.
     */
-  def trainFromCounts(wordCounts: Seq[(String, Long)], nMerges: Int): Vocab = {
+  def trainFromCounts(wordCounts: Seq[(String, Long)],
+      nMerges: Int): Seq[(String, String)] = {
     require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     val words = wordCounts.map { case (w, c) => (codePointStrings(w), c) }
       .filter(_._1.length >= 2).toArray
@@ -182,7 +136,7 @@ object Bpe {
         round += 1
       }
     }
-    Vocab(merges.result())
+    merges.result()
   }
 
   /** Distributed vocab training: word-type counts (one partial-agg
@@ -193,7 +147,9 @@ object Bpe {
     * of a Zipf distribution cannot win a merge anyway).
     */
   def train(docs: DataFrame, text: Column, nMerges: Int,
-      maxWordTypes: Int = 100000): Vocab = {
+      maxWordTypes: Int = 100000): Seq[(String, String)] = {
+    // reject before the corpus scan, not after it
+    require(nMerges >= 0, s"nMerges must be >= 0, got $nMerges")
     import docs.sparkSession.implicits._
     val wc = docs.select(explode_outer(TextOps.tokens(text)).as("w"))
       .filter(col("w").isNotNull)
@@ -203,19 +159,6 @@ object Bpe {
       .as[(String, Long)].collect().toSeq
     trainFromCounts(wc, nMerges)
   }
-
-  /** Full-text BPE token count: fused per-word counts over the word
-    * array + the symbol tokens (one per non-word non-space char, the
-    * `bpeishTokenCount` rule). The symbol scan runs over `lower(text)`
-    * — the SAME string [[tokenIds]] walks — so `size(tokenIds) ==
-    * tokenCount` holds by construction even for code points whose
-    * lowercase EXPANDS (U+0130 'İ' lowers to "i" + combining U+0307,
-    * a non-letter that both paths then count as one symbol token; a
-    * raw-text scan would see one letter and zero symbols).
-    */
-  def tokenCount(text: Column, vocab: Broadcast[Vocab]): Column =
-    BpeWordCount.of(TextOps.tokens(text), vocab) +
-      size(regexp_extract_all(lower(text), lit("[^\\p{L}0-9'\\s]"), lit(0)))
 
   /** Token-ID vocabulary: the merge list plus an explicit base
     * alphabet, so tokenization can EMIT ids instead of counting.
@@ -227,7 +170,10 @@ object Bpe {
     *    merges can produce the same string (("a","bc") and ("ab","c")
     *    both yield "abc");
     *  - any symbol outside the alphabet maps to `unkId = A + M` (text
-    *    tokenized against a vocab trained elsewhere).
+    *    tokenized against a vocab trained elsewhere). A symbol is one
+    *    id whether or not the alphabet holds it, so a token COUNT needs
+    *    no alphabet: `TokenVocab(Seq.empty, merges)` counts like the
+    *    full vocab (every base symbol UNK).
     */
   final case class TokenVocab(alphabet: Seq[String],
       merges: Seq[(String, String)]) extends Serializable {
@@ -247,8 +193,10 @@ object Bpe {
     @transient private[analysis] lazy val memo =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Int]]()
 
-    /** Token ids of ONE word — [[Vocab.countWord]]'s loop carrying a
-      * parallel id array through the merges.
+    /** Token ids of ONE word: greedy lowest-rank-first merging (the
+      * pair TYPE with the lowest merge rank present in the word merges
+      * everywhere, left to right), carrying a parallel id array through
+      * the merges. The one BPE merge loop in the product.
       */
     def idsOfWord(word: String): Array[Int] = {
       val cached = memo.get(word)
@@ -302,7 +250,11 @@ object Bpe {
     // (optimization guide §2.6 "overlap independent jobs"): at corpus
     // scale that overlaps two full scans, and the driver-side merge
     // loop in train() overlaps the alphabet job too. Job submission is
-    // thread-safe; a failure in either propagates via Await.
+    // thread-safe; an alphabet failure propagates via Await, and a
+    // train() failure cancels the alphabet job's group (unique per
+    // call, so nothing else is cancelled) until the thread is done: an
+    // adaptive query stage submitted after a group cancel escapes it
+    // (map-stage submission does not check cancelled groups).
     //
     // per-doc array_distinct BEFORE the explode: the exploded row count
     // drops from corpus-characters to docs x alphabet-size (identical
@@ -311,19 +263,34 @@ object Bpe {
     // not the text volume (r08)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val sc = docs.sparkSession.sparkContext
+    val phase = "graft:buildTokenVocab:alphabet"
+    val group = s"$phase:${java.util.UUID.randomUUID()}"
     val alphaF = Future {
-      docs.select(explode_outer(array_distinct(
+      // a pooled thread: the group is set for this job only
+      sc.setJobGroup(group, phase, interruptOnCancel = true)
+      try docs.select(explode_outer(array_distinct(
           regexp_extract_all(lower(text),
             lit("[^ \\t\\n\\x0B\\f\\r]"), lit(0)))).as("ch"))
         .filter(col("ch").isNotNull).distinct().as[String].collect()
+      finally sc.clearJobGroup()
     }
-    val merges = train(docs, text, nMerges, maxWordTypes).merges
-    val alpha = Await.result(alphaF, scala.concurrent.duration.Duration.Inf)
+    val merges =
+      try train(docs, text, nMerges, maxWordTypes)
+      catch { case e: Throwable =>
+        while (!alphaF.isCompleted) {
+          sc.cancelJobGroupAndFutureJobs(group, "graft:buildTokenVocab: training failed")
+          scala.util.Try(Await.ready(alphaF, 100.millis))
+        }
+        throw e
+      }
+    val alpha = Await.result(alphaF, Duration.Inf)
     TokenVocab(alpha.sortWith(cpLess).toSeq, merges)
   }
 
-  /** Full-text token IDS in text order (what [[tokenCount]] counts,
-    * [[Pack.packSequences]] consumes): fused scan of `lower(text)` —
+  /** Full-text token IDS in text order (q65 counts them,
+    * [[Pack.packSequences]] consumes them): fused scan of `lower(text)` —
     * word runs (`[\p{L}0-9']+`, the [[TextOps.tokens]] class) BPE-merge
     * to subword ids, every other non-ASCII-whitespace code point is one
     * alphabet (or UNK) token.
@@ -332,62 +299,15 @@ object Bpe {
     BpeTokenIds.of(lower(text), vocab)
 }
 
-/** Sum of per-word BPE token counts over a word array, against a
-  * BROADCAST merge-rank table (the [[BroadcastDotProducts]] pattern:
-  * a 50k-merge vocab as a plan literal would ride every serialized
-  * task). Real `doGenCode` calling the public `evalCore` — the child
-  * array stays inside whole-stage codegen.
-  */
-case class BpeWordCount(child: Expression, vocab: Broadcast[Bpe.Vocab])
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "bpe_word_count"
-
-  @transient private lazy val v: Bpe.Vocab = vocab.value
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ref = ctx.addReferenceObj("bpeCount", this)
-      s"${ev.value} = $ref.evalCore($c);"
-    })
-
-  override def nullSafeEval(arr: Any): Any =
-    evalCore(arr.asInstanceOf[ArrayData])
-
-  /** Shared by interpreted eval and generated code (public for janino). */
-  def evalCore(words: ArrayData): Int = {
-    var total = 0
-    var i = 0
-    val n = words.numElements()
-    while (i < n) {
-      if (!words.isNullAt(i)) {
-        total += v.countWord(words.getUTF8String(i).toString)
-      }
-      i += 1
-    }
-    total
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BpeWordCount {
-  def of(words: Column, vocab: Broadcast[Bpe.Vocab]): Column =
-    Bridge.column(BpeWordCount(Bridge.expression(words), vocab))
-}
-
-/** Token IDS of a full (already-lowered) text, in text order — the
-  * emitting sibling of [[BpeWordCount]], against a broadcast
-  * [[Bpe.TokenVocab]]. One code-point scan: word runs ([\p{L}0-9']+,
-  * matching `Character.isLetter` + ASCII digits + apostrophe) merge to
-  * subword ids via [[Bpe.TokenVocab.idsOfWord]]; ASCII whitespace
-  * (space, tab, LF, VT, FF, CR — the Java regex `\s` set) separates;
-  * every OTHER code point (punctuation, and e.g. NBSP, which Java `\s`
-  * does not match) is one alphabet-or-UNK token. `size(tokenIds) ==
-  * tokenCount` by construction (a spec pins it). The child must be
+/** Token IDS of a full (already-lowered) text, in text order, against
+  * a broadcast [[Bpe.TokenVocab]]. One code-point scan: word runs
+  * ([\p{L}0-9']+, matching `Character.isLetter` + ASCII digits +
+  * apostrophe) merge to subword ids via [[Bpe.TokenVocab.idsOfWord]];
+  * ASCII whitespace (space, tab, LF, VT, FF, CR — the Java regex `\s`
+  * set) separates; every OTHER code point (punctuation, and e.g. NBSP,
+  * which Java `\s` does not match) is one alphabet-or-UNK token. The
+  * test-scope counting twin (`BpeCountTwin`: per-word merge counts
+  * plus a symbol regex) pins `size(tokenIds)`. The child must be
   * pre-lowered ([[Bpe.tokenIds]] wraps `lower(text)`) so word
   * detection uses Spark's own lowering, like [[TextOps.tokens]].
   */

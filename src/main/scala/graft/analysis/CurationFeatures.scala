@@ -8,16 +8,17 @@ import org.apache.spark.sql.graftbridge.Bridge.{ADT => AbstractDataType}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused one-pass curation feature extractor — the performance path
-  * for the hygiene projection ([[TextOps.curationFeatures]], q49/q50 and
-  * the 1M volume job): the HOF/regex encoding pays SEVEN separate
+/** Fused one-pass curation feature extractor — the one text-feature
+  * encoding (the hygiene projection [[TextOps.curationFeatures]],
+  * q20/q21/q49/q50/q59): its regex twin, kept in test scope
+  * (`HofTwins.qualityFeatures` / `langIdScores`), pays SEVEN separate
   * regex passes per document (token count, punct count, stopword
   * count, four language-marker counts); this computes all of them in
   * three plain character walks (token/boundary walk over the lowered
   * text, punct walk over the original, one marker scan per word list
   * over the lowered text — scans, not NFA regex machinery).
   *
-  * Semantics are EXACTLY the regex chain's (a test pins byte-equality
+  * Semantics are EXACTLY the regex twin's (a test pins byte-equality
   * against it over the corpus plus adversarial inputs):
   *
   *  - n_tokens: maximal `[\p{L}0-9']+` runs over lower(text) —
@@ -40,8 +41,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Null text -> null struct (standard UnaryExpression null handling);
   * the word lists come from TextOps ([[TextOps.Stopwords]],
-  * [[TextOps.LangMarkerWords]]) — the same source the regexes are
-  * built from, so the two encodings cannot drift by edit.
+  * [[TextOps.LangMarkerWords]]) — the same source the twin's regexes
+  * are built from, so the two encodings cannot drift by edit.
   */
 case class CurationFeatures(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {

@@ -28,8 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[LangProfiles.Languages]].
   *
   * This is the >=20-language classifier the corpus reports bin by;
-  * [[TextOps.langIdBest]] stays as the 4-language marker-regex cheap
-  * twin. Both are PURE functions of the text column, so either can be
+  * the 4-language marker-word pick ([[TextOps.markerLang]] over the
+  * fused [[CurationFeatures]] counts) stays the cheap default. Both
+  * are PURE functions of the text column, so either can be
   * passed to [[TextOps.corpusStats]]/[[TextOps.curate]]'s `langId`
   * parameter without breaking the staged-dedup purity invariant.
   *
@@ -311,14 +312,14 @@ object LangId {
       LangNgramScores(Bridge.expression(text), profiles, Languages.length))
 
   /** Argmax over a [[scores]] vector: first-declared language wins
-    * ties (same rule as [[TextOps.langIdBest]]); all-zero scores (no
+    * ties (same rule as [[TextOps.markerLang]]); all-zero scores (no
     * letters / nothing shared with any profile) -> `"und"`.
     *
     * Encoded as `array_position(scores, array_max(scores))` — the
     * FIRST index holding the max, which IS the first-declared
-    * tiebreak. NOT [[TextOps.langArgmax]]: that fold references its
-    * accumulator twice per step, so its tree doubles per language —
-    * fine at 4 marker languages, a 2^26-node driver OOM here. Double
+    * tiebreak. Never a nested `when` fold over the languages: it
+    * references its accumulator twice per step, so its tree doubles
+    * per language — a 2^26-node driver OOM at 26 languages. Double
     * equality is exact because array_max returns one of the array's
     * own elements and no score is ever NaN or -0.0 (sums of
     * non-negative weights from 0.0).

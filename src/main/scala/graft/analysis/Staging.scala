@@ -1,23 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-/** Engine-wide default staging root: set
-  * `spark.conf.set(StagingConf.Key, dir)` and operators that would
-  * otherwise hold round state in executor memory
-  * ([[TextOps.dupClusters]]'s rounds) auto-select parquet
-  * staging under a PER-INVOCATION unique subdir (no two calls ever
-  * share one, so the fail-fast contract cannot trip). Retention: each
-  * finished call keeps only the table its returned DataFrame reads
-  * (dupClusters deletes its round intermediates on convergence); the
-  * subdirs are the caller's to delete once the result has been
-  * consumed — each resolved subdir is logged at INFO ("graft staging:
-  * ...") and listable under the root, so a maintenance sweep can map
-  * and clear them without guessing.
-  */
-object StagingConf {
-  val Key = "spark.graft.stagingDir"
-}
+import org.apache.spark.sql.DataFrame
 
 /** The one materialization barrier: every operator frame that several
   * consumers read (the exploded (id, features, band, bucket) bases both
@@ -49,26 +32,9 @@ object StagingConf {
   * fell back to its lineage when an executor holding its blocks died;
   * a checkpoint block is lost with its executor, and a later read
   * fails the job with "Checkpoint block ... not found". Jobs that must
-  * survive executor loss pass `staging` (or set
-  * `spark.graft.stagingDir` for dupClusters' rounds).
+  * survive executor loss pass `staging`.
   */
 private[graft] object Staging {
-
-  private lazy val logger =
-    org.slf4j.LoggerFactory.getLogger("graft.analysis.Staging")
-
-  /** Explicit per-call staging wins; else the engine-wide conf dir
-    * (namespaced per call); else None (in-memory barrier).
-    */
-  def resolve(spark: SparkSession, staging: Option[String],
-      op: String): Option[String] =
-    staging.orElse(spark.conf.getOption(StagingConf.Key)
-      .map { d =>
-        val dir = s"$d/$op-${java.util.UUID.randomUUID()}"
-        // surface the generated name: it is the caller's to delete
-        logger.info(s"graft staging: $op rounds staged under $dir")
-        dir
-      })
 
   def materialize(df: DataFrame, staging: Option[String],
       name: String): DataFrame = staging match {

@@ -61,31 +61,19 @@ object TextOps {
   }
 
   // ---- quality / language heuristics (pure projections) -------------------
-  /** Word lists are the single source of truth: the regexes below AND
-    * the fused [[CurationFeatures]] scanner are built from these — the
-    * two encodings must count identically (byte-equality test).
+  /** Word lists are the single source of truth: the fused
+    * [[CurationFeatures]] scanner AND its test-scope regex twin are
+    * built from these — the two encodings must count identically
+    * (byte-equality test).
     */
-  private[analysis] val Stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
-
-  /** Length / punctuation / stopword-ratio quality score in [0,1]. */
-  def qualityFeatures(text: Column): Column = {
-    val len = length(text)
-    val toks = tokenCount(text)
-    val punct = size(regexp_extract_all(text, lit("[^\\p{L}0-9\\s]"), lit(0)))
-    val stop = size(regexp_extract_all(lower(text),
-      lit(Stopwords.mkString("\\b(?:", "|", ")\\b")), lit(0)))
-    struct(len.as("n_chars"), toks.as("n_tokens"), punct.as("n_punct"),
-      stop.as("n_stopwords"),
-      when(toks > 0, stop.cast("double") / toks).otherwise(0.0).as("stopword_ratio"),
-      when(len > 0, punct.cast("double") / len).otherwise(0.0).as("punct_ratio"))
-  }
+  private[graft] val Stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
   /** Repetition / composition quality signals (the published web-corpus
     * filtering rule family: duplicate-line fraction, mean word length,
     * symbol-to-word ratio, ellipsis-line fraction, alphabetic-word
     * fraction) as ONE map-side struct projection — the standard gates a
-    * pre-training pipeline applies alongside [[qualityFeatures]]'
-    * length/stopword/punct rules. Every sub-expression is
+    * pre-training pipeline applies alongside [[CurationFeatures]]'
+    * length/stopword/punct counts. Every sub-expression is
     * DuckDB-expressible with identical IEEE arithmetic, so the whole
     * struct is exactly oracled (q57).
     */
@@ -112,33 +100,28 @@ object TextOps {
       ellipsisLineFrac.as("ellipsis_line_frac"), alphaWordFrac.as("alpha_word_frac"))
   }
 
-  /** Marker-word language-ID heuristic (n-gram-lite): counts per-language
-    * marker hits and argmaxes with a fixed language order tiebreak.
+  /** Marker-word language-ID heuristic (n-gram-lite): per-language
+    * marker-word hit counts ([[CurationFeatures]]' `s_<lang>` fields),
+    * argmaxed with a fixed language-order tiebreak ([[markerLang]]).
     */
-  private[analysis] val LangMarkerWords: Seq[(String, Seq[String])] = Seq(
+  private[graft] val LangMarkerWords: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "is", "was"),
     "fr" -> Seq("le", "la", "les", "des", "est", "une"),
     "de" -> Seq("der", "die", "das", "und", "ist"),
     "es" -> Seq("el", "los", "las", "es", "una"))
-  val LangMarkers: Seq[(String, String)] =
-    LangMarkerWords.map { case (l, ws) =>
-      l -> ws.mkString("\\b(?:", "|", ")\\b")
-    }
-  def langIdScores(text: Column): Seq[(String, Column)] =
-    LangMarkers.map { case (l, re) =>
-      l -> size(regexp_extract_all(lower(text), lit(re), lit(0)))
-    }
-  def langIdBest(text: Column): Column = langArgmax(langIdScores(text))
 
-  /** argmax with declaration-order tiebreak, expression-only — shared
-    * by the regex scores and the fused [[CurationFeatures]] fields.
+  /** The marker language of a [[CurationFeatures]] struct: the first
+    * declared language holding the top score, so all-zero scores give
+    * the first language ("en"), and so does null text (null struct).
+    * Encoded like [[LangId.best]], as `array_position(scores,
+    * array_max(scores))`, whose tree stays linear in the languages.
     */
-  private[analysis] def langArgmax(scores: Seq[(String, Column)]): Column =
-    scores.tail.foldLeft(
-      struct(scores.head._2.as("s"), lit(scores.head._1).as("l"))) {
-      case (acc, (l, s)) =>
-        when(s > acc("s"), struct(s.as("s"), lit(l).as("l"))).otherwise(acc)
-    }("l")
+  private[graft] def markerLang(cf: Column): Column = {
+    val scores = array(LangMarkerWords.map { case (l, _) => cf.getField(s"s_$l") }: _*)
+    coalesce(element_at(typedlit(LangMarkerWords.map(_._1)),
+        array_position(scores, array_max(scores)).cast("int")),
+      lit(LangMarkerWords.head._1))
+  }
 
   // ---- markup strip / boilerplate removal (main-content extraction) --------
   /** HTML/markup -> main-content text, expression-only (north_rule's
@@ -362,7 +345,7 @@ object TextOps {
     * output row itself — so unlike a cross-doc collect this cannot
     * concentrate a corpus on one task (one doc = one output row; a
     * single pathologically-huge document is an input-hygiene problem,
-    * which is what [[qualityFeatures]]' length gate is for).
+    * which is what [[CurationFeatures]]' length counts are for).
     */
   def reassemble(lines: DataFrame, sep: String = "\n"): DataFrame =
     lines.groupBy(col("doc_id"))
@@ -827,7 +810,7 @@ object TextOps {
     * en-fraction) from the exact fields.
     */
   def corpusStats(docs: DataFrame, source: Column, text: Column,
-      langId: Column => Column = langIdBest): DataFrame =
+      langId: Column => Column = t => markerLang(CurationFeatures.of(t))): DataFrame =
     docs.select(source.as("source"), text.as("text"))
       .withColumn("n_tokens", tokenCount(col("text")))
       .withColumn("n_chars", length(col("text")))
@@ -885,9 +868,9 @@ object TextOps {
   /** (doc_id, text, lang_pred, n_tokens, punct_ratio, extra...): the
     * hygiene features of every doc from ONE fused [[CurationFeatures]]
     * walk instead of seven regex passes. Byte-identical to the regex
-    * chain ([[qualityFeatures]] + [[langIdBest]]; test-scope twin, plus
-    * the q49/q50 oracles, whose DuckDB side mirrors the regex
-    * semantics). `extra`: caller-named metadata columns carried through
+    * chain (the test-scope twin `HofTwins.curationFeatures`, plus the
+    * q49/q50 oracles, whose DuckDB side mirrors the regex semantics).
+    * `extra`: caller-named metadata columns carried through
     * UNTOUCHED — they never feed the verdict (see [[curationStage]]'s
     * INVARIANT), they just ride so compositions like [[release]] need
     * no re-join against the raw table to recover them.
@@ -899,9 +882,7 @@ object TextOps {
     docs.select(id.as("doc_id") +: text.as("text") +: extraCols: _*)
       .withColumn("__cf", CurationFeatures.of(col("text")))
       .select(col("doc_id") +: col("text") +:
-        langArgmax(TextOps.LangMarkerWords.map { case (l, _) =>
-          l -> cf.getField(s"s_$l")
-        }).as("lang_pred") +:
+        markerLang(cf).as("lang_pred") +:
         cf.getField("n_tokens").as("n_tokens") +:
         (when(cf.getField("n_chars") > 0,
           cf.getField("n_punct").cast("double") / cf.getField("n_chars"))
@@ -1148,11 +1129,11 @@ object TextOps {
     *
     * ONE Spark action per round: lineage is cut per round by the
     * [[Staging]] barrier (a local checkpoint, or a parquet staging
-    * table when `staging` is passed / `spark.graft.stagingDir` is set
-    * engine-wide — the executor-loss-tolerant encoding a 100 TB job
-    * should run), and the convergence signal rides THAT action via an
-    * accumulator counting label changes inside the materializing scan
-    * — never a second `count()` job re-reading the round. (Task retries can only
+    * table when `staging` is passed — the executor-loss-tolerant
+    * encoding a 100 TB job should run), and the convergence signal
+    * rides THAT action via an accumulator counting label changes
+    * inside the materializing scan — never a second `count()` job
+    * re-reading the round. (Task retries can only
     * over-count the accumulator, which is safe: the loop tests
     * changed == 0, and a retried task of an all-unchanged round adds
     * nothing.) Returns (doc_id, cluster_keeper), one row per distinct
@@ -1162,9 +1143,6 @@ object TextOps {
   def dupClusters(pairs: DataFrame, maxIters: Int = 64,
       staging: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
-    // explicit staging, else the engine-wide conf root (per-call subdir),
-    // else the in-memory barrier
-    val stage = Staging.resolve(spark, staging, "dup_clusters")
     val acc = spark.sparkContext.longAccumulator("graft.dupClusters.changed")
     // counts rows whose label decreased DURING the cut's own scan —
     // the one action of the round doubles as the convergence check
@@ -1175,7 +1153,7 @@ object TextOps {
         // "changed" is exactly inequality — type-generic
         it.map { r => if (r.get(1) != r.get(2)) acc.add(1); r }
       }(Encoders.row(df.schema))
-      Staging.materialize(counted, stage, name)
+      Staging.materialize(counted, staging, name)
         .select(col("doc_id"), col("new_label").as("label"))
     }
     // symmetrize in ONE pass over `pairs` (explode of the two
@@ -1188,14 +1166,14 @@ object TextOps {
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct(), stage, "edges")
+      .distinct(), staging, "edges")
     // round 1 reads the label table three times (neighbor join, left
     // join, jump dereference) — cut the seed so those are scans, not
     // three recomputations of the seed aggregation
     var labels = Staging.materialize(edges.groupBy(col("src").as("doc_id"))
       .agg(min(col("dst")).as("mn"))
       .select(col("doc_id"), least(col("doc_id"), col("mn")).as("label")),
-      stage, "labels_0")
+      staging, "labels_0")
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxIters) {
@@ -1227,7 +1205,7 @@ object TextOps {
     // dead weight — delete them now rather than letting a long job's
     // staging grow O(rounds * |labels|). (The in-memory rounds need no
     // analog: the ContextCleaner frees unreachable checkpoint blocks.)
-    stage.foreach { dir =>
+    staging.foreach { dir =>
       val hconf = spark.sparkContext.hadoopConfiguration
       (Seq("edges") ++ (0 until round).map(r => s"labels_$r")).foreach { nm =>
         val p = new org.apache.hadoop.fs.Path(s"$dir/$nm")

@@ -133,51 +133,58 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
 
   test("fused CurationFeatures == regex chain (corpus + adversarial edges)") {
     import graft.analysis.CurationFeatures
+    import org.apache.spark.sql.DataFrame
     // adversarial inputs for the exact-Java-regex semantics: \b's
     // word test is _|isLetterOrDigit on code points (NOT ASCII \w —
     // 'a' does not match inside 'aß', 'the' not inside 'theé'),
     // apostrophe tokens, digit runs, unicode whitespace (NBSP is NOT
     // Java \s, so it counts as punct), empty and markup-ish strings,
-    // list-order alternation (le vs les)
+    // list-order alternation (le vs les); a text with no marker word
+    // and null text (both pick the first language)
+    val noMarker = "xyz 123 qrs"
     val edge = Seq(
       "", " ", "the", "thé", "xthé the_x the-x the", "l'été c'est",
       "a1'2b  3", "le les des le", "was is\tand\nof",
       "ist das der die und", "¡es una! ¿los las es?",
       "the the the", "it it of of a a", "#@| ~^_ 123",
       "ThE AnD oF iS wAs", "x_the_x the",
-      "aß a ßa theé éthe the带 带the", "is' 'is ß_the_ß the")
+      "aß a ßa theé éthe the带 带the", "is' 'is ß_the_ß the", noMarker, null)
     val corpus = documents.select(col("text")).as[String].collect().toSeq
     val all = (edge ++ corpus).zipWithIndex.map { case (t, i) => (i.toLong, t) }
     val df = all.toDF("id", "text")
-    val fused = df.select(col("id"), CurationFeatures.of(col("text")).as("cf"))
+    // (id, counts...) rows by id; the null text's counts are all null
+    def byId(d: DataFrame) = d.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+    val fused = byId(df.select(col("id"), CurationFeatures.of(col("text")).as("cf"))
       .select(col("id"), col("cf.n_tokens"), col("cf.n_punct"),
         col("cf.n_stopwords"), col("cf.s_en"), col("cf.s_fr"), col("cf.s_de"),
-        col("cf.s_es"), col("cf.n_chars"))
-      .as[(Long, Int, Int, Int, Int, Int, Int, Int, Int)].collect().sortBy(_._1)
-    val scores = TextOps.langIdScores(col("text"))
-    val hof = df.select(col("id"),
-        TextOps.qualityFeatures(col("text")).as("f"),
+        col("cf.s_es"), col("cf.n_chars")))
+    val scores = HofTwins.langIdScores(col("text"))
+    val hof = byId(df.select(col("id"),
+        HofTwins.qualityFeatures(col("text")).as("f"),
         scores(0)._2.as("en"), scores(1)._2.as("fr"),
         scores(2)._2.as("de"), scores(3)._2.as("es"),
         length(col("text")).as("len"))
       .select(col("id"), col("f.n_tokens"), col("f.n_punct"),
         col("f.n_stopwords"), col("en"), col("fr"), col("de"), col("es"),
-        col("len"))
-      .as[(Long, Int, Int, Int, Int, Int, Int, Int, Int)].collect().sortBy(_._1)
+        col("len")))
     assert(fused.length == hof.length && fused.nonEmpty)
     fused.zip(hof).foreach { case (f, h) =>
-      assert(f == h, s"mismatch on input <${all(f._1.toInt)._2}>: fused $f vs regex $h")
+      assert(f == h, s"mismatch on input <${all(f.head.asInstanceOf[Long].toInt)._2}>: " +
+        s"fused $f vs regex $h")
     }
     // null text -> null struct, like the regex chain
     assert(Seq(Option.empty[String]).toDF("text")
       .select(CurationFeatures.of(col("text"))).collect().head.isNullAt(0))
     // the hygiene projection the curation verdict reads agrees per doc
-    def feats(d: org.apache.spark.sql.DataFrame) =
+    def feats(d: DataFrame) =
       d.select("doc_id", "lang_pred", "n_tokens", "punct_ratio")
-        .as[(Long, String, Int, Double)].collect().sortBy(_._1).toSeq
+        .as[(Long, String, Option[Int], Double)].collect().sortBy(_._1).toSeq
     val pf = feats(TextOps.curationFeatures(df, col("id"), col("text")))
     val ph = feats(HofTwins.curationFeatures(df, col("id"), col("text")))
     assert(pf.length == all.length && pf == ph)
+    // all-zero marker scores and null text give the first language
+    for (f <- Seq(pf, ph); t <- Seq(noMarker, null))
+      assert(f(edge.indexOf(t))._2 == "en", s"lang_pred of <$t>: ${f(edge.indexOf(t))}")
   }
 
   test("curationFilter: min-id keeper per duplicate text, rejects never leak") {
@@ -327,7 +334,9 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
         drain(TextOps.duplicatedRuns(text, col("doc_id"), col("text"), minRun = 5))),
       "dupClusters" -> (() => drain(TextOps.dupClusters(
         Seq((1L, 3L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")))),
-      "mediaPipeline" -> (() => drain(BinaryOps.mediaPipeline(spark, 20))))
+      "mediaPipeline" -> (() => drain(BinaryOps.mediaPipeline(spark, 20))),
+      "extractRows iterative" -> (() => drain(Pipeline.extractRows(
+        graft.corpus.Corpus.generate(spark, 20), "auto", iterative = true))))
     // compare SETS of persistent-RDD ids: the ContextCleaner drops
     // earlier unreferenced RDDs asynchronously, so totals are racy. The
     // ids are copied out: the map's keySet view holds the RDDs strongly
@@ -423,26 +432,19 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("engine-wide spark.graft.stagingDir: dupClusters rounds stage to parquet") {
-    val root = tempDir("graft-conf-staging")
-    spark.conf.set(graft.analysis.StagingConf.Key, root)
-    try {
-      val pairs = Seq((1L, 3L, 0.9), (2L, 3L, 0.9), (10L, 11L, 0.9))
-        .toDF("id_a", "id_b", "jaccard")
-      val got = TextOps.dupClusters(pairs).as[(Long, Long)].collect().sortBy(_._1).toSeq
-      assert(got == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      // rounds were staged under a per-call subdir of the conf root, and
-      // the intermediates (edges, labels_0..r-1) were cleaned up — only
-      // the final round's labels table, which the result reads, remains
-      val subdirs = new java.io.File(root).listFiles().filter(_.isDirectory)
-      assert(subdirs.length == 1 && subdirs.head.getName.startsWith("dup_clusters-"))
-      val tables = subdirs.head.listFiles().filter(_.isDirectory).map(_.getName)
-      assert(tables.length == 1 && tables.head.matches("labels_[1-9]\\d*"),
-        s"expected only the final labels table, got ${tables.toSeq}")
-      // a second call gets its OWN subdir (no fail-fast clash)
-      TextOps.dupClusters(pairs).count()
-      assert(new java.io.File(root).listFiles().count(_.isDirectory) == 2)
-    } finally spark.conf.unset(graft.analysis.StagingConf.Key)
+  test("dupClusters staged rounds: only the final labels table remains") {
+    val dir = tempDir("graft-dup-clusters-staging")
+    val pairs = Seq((1L, 3L, 0.9), (2L, 3L, 0.9), (10L, 11L, 0.9))
+      .toDF("id_a", "id_b", "jaccard")
+    val got = TextOps.dupClusters(pairs, staging = Some(dir))
+      .as[(Long, Long)].collect().sortBy(_._1).toSeq
+    assert(got == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // rounds were staged to parquet under `dir`, and the intermediates
+    // (edges, labels_0..r-1) were cleaned up — only the final round's
+    // labels table, which the result reads, remains
+    val tables = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
+    assert(tables.length == 1 && tables.head.matches("labels_[1-9]\\d*"),
+      s"expected only the final labels table, got ${tables.toSeq}")
   }
 
   test("fused ShingleHashes == HOF chain (hash sets identical, order too)") {
@@ -943,22 +945,24 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
     //   round 1: (e,s)=9 ties (s,t)=9 -> smaller pair (e,s)
     //   round 2: (es,t)=9; round 3: (l,o)=7 ties (o,w)=7 -> (l,o)
     //   round 4: (lo,w)=7
-    val v = Bpe.trainFromCounts(
+    val merges = Bpe.trainFromCounts(
       Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L), 4)
-    assert(v.merges == Seq("e" -> "s", "es" -> "t", "l" -> "o", "lo" -> "w"),
-      s"got ${v.merges}")
-    // greedy lowest-rank application
-    assert(v.countWord("low") == 1)        // lo -> low
-    assert(v.countWord("lowest") == 2)     // low + est
-    assert(v.countWord("newest") == 4)     // n, e, w, est
-    assert(v.countWord("unseen") == 6)     // nothing merges
+    assert(merges == Seq("e" -> "s", "es" -> "t", "l" -> "o", "lo" -> "w"),
+      s"got $merges")
+    // greedy lowest-rank application; a count reads no alphabet (every
+    // base symbol is one UNK id)
+    val v = Bpe.TokenVocab(Seq.empty, merges)
+    assert(v.idsOfWord("low").length == 1)        // lo -> low
+    assert(v.idsOfWord("lowest").length == 2)     // low + est
+    assert(v.idsOfWord("newest").length == 4)     // n, e, w, est
+    assert(v.idsOfWord("unseen").length == 6)     // nothing merges
     // training exhausts when no pair repeats (stops early, no padding)
-    assert(Bpe.trainFromCounts(Seq("ab" -> 1L, "cd" -> 1L), 10).merges.isEmpty)
+    assert(Bpe.trainFromCounts(Seq("ab" -> 1L, "cd" -> 1L), 10).isEmpty)
     // the fused expression: words through the vocab + one token per
     // symbol char; matches the per-word counts above
     val bc = spark.sparkContext.broadcast(v)
     val got = Seq("the lowest newest low", "low, lower!", null)
-      .toDF("t").select(Bpe.tokenCount(col("t"), bc).as("n"))
+      .toDF("t").select(size(Bpe.tokenIds(col("t"), bc)).as("n"))
       .as[Option[Int]].collect().toSeq
     // "the"(t,h,e->3) lowest(2) newest(4) low(1) = 10;
     // low(1) lower(l,o,w,e,r -> lo,w,e,r -> low,e,r = 3) + ',' + '!' = 6;
@@ -969,7 +973,7 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
       "newest newest newest newest newest newest",
       "widest widest widest").toDF("text")
     val dv = Bpe.train(docs, col("text"), nMerges = 4)
-    assert(dv.merges == v.merges, s"got ${dv.merges}")
+    assert(dv == merges, s"got $dv")
   }
 
   test("BPE: tiebreaks are code-point-ordered (astral symbols included)") {
@@ -983,8 +987,8 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
     val pua = "\uE000"
     assert(astral < pua, "vacuous: Java order must disagree here")
     assert(Bpe.cpLess(pua, astral) && !Bpe.cpLess(astral, pua))
-    val v = Bpe.trainFromCounts(Seq(astral + "a" -> 3L, pua + "a" -> 3L), 1)
-    assert(v.merges == Seq(pua -> "a"), s"got ${v.merges}")
+    val merges = Bpe.trainFromCounts(Seq(astral + "a" -> 3L, pua + "a" -> 3L), 1)
+    assert(merges == Seq(pua -> "a"), s"got $merges")
     // property: cpLess == lexicographic compare of code-point arrays
     // (Python str order, definitionally) over random mixed strings
     val rnd = new scala.util.Random(7)
@@ -1009,9 +1013,9 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
   }
 
   test("BPE token ids: worked example, merge-rank layout, UNK, size == tokenCount") {
-    import graft.analysis.Bpe
+    import graft.analysis.{Bpe, BpeCountTwin}
     val merges = Bpe.trainFromCounts(
-      Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L), 4).merges
+      Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L), 4)
     // alphabet ids 0..10: , d e i l n o r s t w; merges 11..14; UNK 15
     val v = Bpe.TokenVocab(Seq(",", "d", "e", "i", "l", "n", "o", "r",
       "s", "t", "w"), merges)
@@ -1028,24 +1032,31 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
       .as[Option[Seq[Int]]].collect().toSeq
     assert(got == Seq(Some(Seq(14, 0, 14, 12, 15)),
       Some(Seq(10, 15, 10)), None), s"got $got")
+    // the counting twin on the worked example: per-word merge counts
+    // plus one token per symbol
+    val twin = BpeCountTwin(merges)
+    assert(Seq("low", "lowest", "newest", "unseen", "the").map(twin.countWord) ==
+      Seq(1, 2, 4, 6, 3))
     // over a real corpus with its own trained vocab: the emitting
-    // scanner and the counting twin agree everywhere
+    // scanner, the same merges over an empty alphabet (q65's count) and
+    // the counting twin agree everywhere
     val docs = documents.select(col("doc_id"), col("text"))
     val tv = spark.sparkContext.broadcast(
       Bpe.buildTokenVocab(docs, col("text"), nMerges = 50))
-    val cv = spark.sparkContext.broadcast(
-      Bpe.train(docs, col("text"), nMerges = 50))
-    val off = docs.select(size(Bpe.tokenIds(col("text"), tv))
-        .as("a"), Bpe.tokenCount(col("text"), cv).as("b"))
-      .filter(col("a") =!= col("b")).count()
+    val cv = spark.sparkContext.broadcast(Bpe.TokenVocab(Seq.empty,
+      Bpe.train(docs, col("text"), nMerges = 50)))
+    assert(cv.value.merges == tv.value.merges)
+    val count = BpeCountTwin(tv.value.merges).tokenCount(col("text"))
+    val off = docs.select(size(Bpe.tokenIds(col("text"), tv)).as("a"),
+        size(Bpe.tokenIds(col("text"), cv)).as("c"), count.as("b"))
+      .filter(col("a") =!= col("b") || col("c") =!= col("b")).count()
     assert(off == 0, s"$off docs where size(tokenIds) != tokenCount")
     // ... including on EXPANDING lowercase: 'İ' lowers to i + U+0307,
     // and both the emitter and the count scan lower(text), so each
     // sees one word token plus one symbol token (a raw-text symbol
     // scan would miss the combining mark and break the invariant)
     val exp = Seq("İ low", "STRASSE ẞ x").toDF("text")
-      .select(size(Bpe.tokenIds(col("text"), tv)).as("a"),
-        Bpe.tokenCount(col("text"), cv).as("b"))
+      .select(size(Bpe.tokenIds(col("text"), tv)).as("a"), count.as("b"))
       .as[(Int, Int)].collect().toSeq
     exp.foreach { case (a, b) => assert(a == b, s"ids $a != count $b") }
     // every id is in range; UNK never fires when the vocab was built
@@ -1054,6 +1065,41 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
       .filter(col("id").isNull || col("id") < 0 ||
         col("id") >= tv.value.unkId).count()
     assert(bad == 0, s"$bad out-of-range/UNK ids on the training corpus")
+  }
+
+  test("buildTokenVocab: a training failure cancels the alphabet job") {
+    import graft.analysis.Bpe
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Millis, Seconds, Span}
+    val sc = spark.sparkContext
+    // the alphabet phase's groups seen, and their jobs not yet ended
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val active = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("graft:buildTokenVocab:alphabet"))
+          .foreach { g => groups.add(g); active.add(e.jobId) }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = active.remove(e.jobId)
+    }
+    // a scan of ~20 s per task: uncancelled, the alphabet job outlives the wait
+    val rows = sc.longAccumulator("graft.test.slowRows")
+    val slow = udf { (i: Long) => Thread.sleep(200); rows.add(1); s"w$i" }
+    val docs = spark.range(0, 400, 1, 4).select(slow(col("id")).as("text"))
+    sc.addSparkListener(listener)
+    try {
+      intercept[IllegalArgumentException](
+        Bpe.buildTokenVocab(docs, col("text"), nMerges = -1))
+      Thread.sleep(2000) // time for a late submission to start
+      eventually(timeout(Span(10, Seconds)), interval(Span(200, Millis))) {
+        assert(active.isEmpty, s"alphabet jobs still active: $active")
+      }
+      assert(rows.value < 400, "the alphabet scan ran to completion")
+    } finally {
+      sc.removeSparkListener(listener)
+      groups.forEach(g => sc.cancelJobGroup(g))
+    }
   }
 
   test("packSequences: exact tiling, provenance spans, repartition invariance") {

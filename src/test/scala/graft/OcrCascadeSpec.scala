@@ -70,13 +70,9 @@ class OcrCascadeSpec extends AnyFunSuite with TempDirs {
   private def ocrCalls(throwFor: Set[String] = Set.empty)(run: => Unit)
       : Map[String, Seq[String]] = {
     val eng = new RecordingOcr(throwFor)
-    spark.catalog.clearCache()
     OcrEnginePool.install(() => eng)
     try run
-    finally {
-      OcrEnginePool.install(() => SimulatedOcr)
-      spark.catalog.clearCache()
-    }
+    finally OcrEnginePool.install(() => SimulatedOcr)
     eng.calls.asScala.toSeq.groupMap(_._1)(_._2).view.mapValues(_.sorted).toMap
   }
 

@@ -144,7 +144,7 @@ class PropertySpec extends AnyFunSuite {
     import java.util.regex.Pattern
     val tokRe = Pattern.compile("[\\p{L}0-9']+")
     val punctRe = Pattern.compile("[^\\p{L}0-9\\s]")
-    val markerRes = (graft.analysis.TextOps.LangMarkers.map(_._2) :+
+    val markerRes = (graft.extract.HofTwins.LangMarkers.map(_._2) :+
       Seq("the", "a", "of", "and", "to", "in", "is", "it")
         .mkString("\\b(?:", "|", ")\\b")).map(Pattern.compile)
     def count(p: Pattern, s: String): Int = {

@@ -52,6 +52,7 @@ class SingleEncodingSpec extends AnyFunSuite {
     "shingleHashes", "minhashSignature", "minhashSignature0", "lshBandKeys",
     "lshBucket", "planeComponent", "projections", "projMatrix",
     "centroidDots", "dot", "norm", "bestBySort", "assembleByFilter", "entitiesByFilter",
+    "qualityFeatures", "langIdScores", "langIdBest", "langArgmax", "countWord",
     "\\w+Hof")
 
   private val Forbidden =
@@ -136,10 +137,17 @@ class SingleEncodingSpec extends AnyFunSuite {
       checkpoints.mkString("\n", "\n", ""))
     val leaves = sitesOf(mainSources(), """(?<!def )\bcheckpointLeaf\(""".r, MemberDef)
     assert(leaves == Seq("Staging.scala:materialize"), leaves.mkString("\n", "\n", ""))
-    // the iterative cascade's persist leaves with that encoding
-    val caches = sitesOf(mainSources(), """\.(?:cache|persist)\(""".r, MemberDef)
-    assert(caches.distinct == Seq("Pipeline.scala:resultsAutoIterative"),
-      caches.mkString("\n", "\n", ""))
+    val caches = hitsOf(mainSources(), """\.(?:cache|persist)\(""".r)
+    assert(caches.isEmpty, caches.mkString("\n", "\n", ""))
+  }
+
+  test("src/main has one BPE merge loop and one text-feature encoding") {
+    val twins = """\b(?:class|object|val|def)\s+(?:BpeWordCount|Vocab|LangMarkers|StagingConf)\b""".r
+    val hits = hitsOf(mainSources(), twins)
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+    // the merge-rank lookup of the greedy merge loop
+    val lookups = sitesOf(mainSources(), """\branks\.get\(""".r)
+    assert(lookups == Seq("Bpe.scala:idsOfWord"), lookups.mkString("\n", "\n", ""))
   }
 
   test("src/main has no cache registry, no scope parameter and no cached-leaf bridge") {

@@ -208,13 +208,50 @@ object HofTwins {
   def entitiesByFilter(out: String, cfgs: Seq[AnalyteConfig]): Column =
     filter(array(cfgs.map(AnalyteExtract.entity(out, _)): _*), e => e.isNotNull)
 
-  // ---- curation features (twin of TextOps.curationFeatures) --------------
+  // ---- curation features (twins of CurationFeatures / TextOps.curationFeatures)
+
+  /** Length / punctuation / stopword counts and ratios, one regex per count. */
+  def qualityFeatures(text: Column): Column = {
+    val len = length(text)
+    val toks = TextOps.tokenCount(text)
+    val punct = size(regexp_extract_all(text, lit("[^\\p{L}0-9\\s]"), lit(0)))
+    val stop = size(regexp_extract_all(lower(text),
+      lit(TextOps.Stopwords.mkString("\\b(?:", "|", ")\\b")), lit(0)))
+    struct(len.as("n_chars"), toks.as("n_tokens"), punct.as("n_punct"),
+      stop.as("n_stopwords"),
+      when(toks > 0, stop.cast("double") / toks).otherwise(0.0).as("stopword_ratio"),
+      when(len > 0, punct.cast("double") / len).otherwise(0.0).as("punct_ratio"))
+  }
+
+  /** Per-language marker-word regexes, built from TextOps.LangMarkerWords. */
+  val LangMarkers: Seq[(String, String)] =
+    TextOps.LangMarkerWords.map { case (l, ws) =>
+      l -> ws.mkString("\\b(?:", "|", ")\\b")
+    }
+
+  def langIdScores(text: Column): Seq[(String, Column)] =
+    LangMarkers.map { case (l, re) =>
+      l -> size(regexp_extract_all(lower(text), lit(re), lit(0)))
+    }
+
+  /** Twin of TextOps.markerLang: a `when` fold with the declaration-order
+    * tiebreak. Its tree doubles per language (fine at four; never in
+    * src/main).
+    */
+  def langIdBest(text: Column): Column = langArgmax(langIdScores(text))
+
+  private def langArgmax(scores: Seq[(String, Column)]): Column =
+    scores.tail.foldLeft(
+      struct(scores.head._2.as("s"), lit(scores.head._1).as("l"))) {
+      case (acc, (l, s)) =>
+        when(s > acc("s"), struct(s.as("s"), lit(l).as("l"))).otherwise(acc)
+    }("l")
 
   /** (doc_id, text, lang_pred, n_tokens, punct_ratio) from the regex chain. */
   def curationFeatures(docs: DataFrame, id: Column, text: Column): DataFrame =
     docs.select(id.as("doc_id"), text.as("text"))
-      .withColumn("f", TextOps.qualityFeatures(col("text")))
-      .withColumn("lang_pred", TextOps.langIdBest(col("text")))
+      .withColumn("f", qualityFeatures(col("text")))
+      .withColumn("lang_pred", langIdBest(col("text")))
       .select(col("doc_id"), col("text"), col("lang_pred"),
         col("f.n_tokens").as("n_tokens"), col("f.punct_ratio").as("punct_ratio"))
 

@@ -1,19 +1,22 @@
 #!/usr/bin/env python3
-"""A/B the barrier queries of two builds: alternate spark-shell JVMs
-running tools/barrier_bench.scala (A, B, A, B, ...), then aggregate the
-per-JVM lines into one JSON object.
+"""A/B SparkEntry queries of two builds (by default the barrier queries):
+alternate spark-shell JVMs running tools/barrier_bench.scala (A, B, A,
+B, ...), then aggregate the per-JVM lines into one JSON object.
 
     python3 tools/barrier_bench.py --jar-a parent.jar --jar-b head.jar \
         --sf /path/to/sf0.1 --jvms 3 --runs /tmp/runs.jsonl \
         --explains-a parent/EXPLAINS.md --explains-b EXPLAINS.md \
         --out PERF_barrier.json
 
+`--queries q20_quality_score,q65_bpe_tokens` times those queries
+instead of the barrier set.
+
 Per query and side: the median and range of every timed trial of every
 JVM, the join operators of one JVM's untimed pass, and, from the two
 EXPLAINS.md files (fixtures/gen_explains.scala, sf0.01), the executed
 stages and shuffle-write MB of each audit.
 """
-import argparse, json, os, re, statistics, subprocess
+import argparse, json, os, re, statistics, subprocess, sys
 
 SCRIPT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "barrier_bench.scala")
 
@@ -21,7 +24,10 @@ SCRIPT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "barrier_bench
 def run_jvm(jar, label, args):
     env = dict(os.environ, BARRIER_SF=args.sf, BARRIER_OUT=args.runs,
                BARRIER_LABEL=label, BARRIER_TRIALS=str(args.trials))
+    if args.queries:
+        env["BARRIER_QUERIES"] = args.queries
     cpus = str(os.cpu_count())
+    before = n_lines(args.runs)
     subprocess.run([args.spark_shell, "--master", f"local[{cpus}]",
                     "--driver-memory", "4g",
                     "--conf", "spark.ui.enabled=false",
@@ -30,6 +36,17 @@ def run_jvm(jar, label, args):
                     "--jars", jar, "-I", SCRIPT],
                    env=env, check=True, stdout=subprocess.DEVNULL,
                    stderr=subprocess.DEVNULL)
+    # spark-shell exits 0 when the script fails to compile
+    if n_lines(args.runs) != before + 1:
+        sys.exit(f"{label} JVM wrote no line to {args.runs}; run "
+                 f"tools/barrier_bench.scala alone to see its error")
+
+
+def n_lines(path):
+    if not os.path.exists(path):
+        return 0
+    with open(path) as f:
+        return sum(1 for l in f if l.strip())
 
 
 def explains(path):
@@ -51,6 +68,8 @@ def main():
     ap.add_argument("--sf", required=True)
     ap.add_argument("--jvms", type=int, default=3)
     ap.add_argument("--trials", type=int, default=2)
+    ap.add_argument("--queries", help="comma-separated SparkEntry query names "
+                    "(default: the barrier queries)")
     ap.add_argument("--runs", required=True, help="JSON-lines file the JVMs append to")
     ap.add_argument("--explains-a")
     ap.add_argument("--explains-b")
@@ -80,7 +99,8 @@ def main():
     for q, r in per_query.items():
         r["b_median_within_a_range"] = r[b]["median_s"] <= r[a]["max_s"]
     result = {
-        "what": "barrier queries at " + os.path.basename(args.sf.rstrip("/")) +
+        "what": ("queries " + args.queries if args.queries else "barrier queries") +
+                " at " + os.path.basename(args.sf.rstrip("/")) +
                 " into the noop sink; per JVM one warm-up then timed trials, "
                 "JVMs alternating between the two builds",
         "host_cpus": os.cpu_count(), "master": lines[0]["master"],

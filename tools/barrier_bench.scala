@@ -1,7 +1,9 @@
-// Times the barrier queries (the SparkEntry queries that materialize an
-// operator barrier) into the noop sink, one JVM per run, and appends one
-// JSON line to $BARRIER_OUT. Run through tools/barrier_bench.py, which
-// alternates JVMs between two builds and aggregates the lines, or alone:
+// Times SparkEntry queries into the noop sink, one JVM per run, and
+// appends one JSON line to $BARRIER_OUT. The queries are the
+// comma-separated names in $BARRIER_QUERIES, by default the barrier
+// queries (the ones that materialize an operator barrier). Run through
+// tools/barrier_bench.py, which alternates JVMs between two builds and
+// aggregates the lines, or alone:
 //
 //   BARRIER_SF=/path/to/sf0.1 BARRIER_OUT=/tmp/runs.jsonl BARRIER_LABEL=head \
 //   spark-shell --master "local[$(nproc)]" --conf spark.ui.enabled=false \
@@ -24,10 +26,14 @@ val sf = sys.env("BARRIER_SF")
 val out = sys.env("BARRIER_OUT")
 val label = sys.env.getOrElse("BARRIER_LABEL", "run")
 val trials = sys.env.getOrElse("BARRIER_TRIALS", "2").toInt
-val names = Seq("q25_minhash_pairs", "q34_media_decode", "q45_simhash_dedup",
-  "q46_cosine_dedup", "q48_dedup_cascade", "q50_curate_full", "q51_dup_clusters",
-  "q64_release", "q66_media_dedup", "q69_split_leakage", "q72_incremental_dedup",
-  "q73_pack_sequences", "q74_duplicated_runs", "q76_excise_runs")
+// (one expression per REPL line: a line may not open with `.method`)
+val names: Seq[String] = sys.env.get("BARRIER_QUERIES") match {
+  case Some(qs) => qs.split(",").toSeq
+  case None => Seq("q25_minhash_pairs", "q34_media_decode", "q45_simhash_dedup",
+    "q46_cosine_dedup", "q48_dedup_cascade", "q50_curate_full", "q51_dup_clusters",
+    "q64_release", "q66_media_dedup", "q69_split_leakage", "q72_incremental_dedup",
+    "q73_pack_sequences", "q74_duplicated_runs", "q76_excise_runs")
+}
 
 def steal(): (Long, Long) = {
   val f = scala.io.Source.fromFile("/proc/stat")
