@@ -167,12 +167,44 @@ object Corpus {
     */
   def mediaRef(i: Long, k: Int, carrier: Boolean): String =
     s"media://${docId(i)}/$k" + (if (carrier) "#tsh" else "")
-  /** Inverse of mediaRef: (doc index, span index, isCarrier). */
+  /** Inverse of mediaRef: (doc index, span index, isCarrier). The body
+    * is the ref without a leading "media://" and a trailing "#tsh"; its
+    * first three chars are skipped, the doc index runs to the body's last
+    * '/' and the span index from there, each read as `Long.parseLong` /
+    * `Integer.parseInt` read them (sign, any Unicode decimal digit,
+    * overflow rejected), without substrings. A ref it cannot read throws
+    * a RuntimeException.
+    */
   def parseMediaRef(ref: String): (Long, Int, Boolean) = {
     val carrier = ref.endsWith("#tsh")
-    val body = ref.stripPrefix("media://").stripSuffix("#tsh")
-    val slash = body.lastIndexOf('/')
-    (body.substring(3, slash).toLong, body.substring(slash + 1).toInt, carrier)
+    val from = if (ref.startsWith("media://")) 8 else 0
+    val end = if (carrier) ref.length - 4 else ref.length
+    val slash = ref.lastIndexOf('/', end - 1)
+    if (slash < from + 3) throw new NumberFormatException(s"bad media ref: $ref")
+    (decimal(ref, from + 3, slash, Long.MinValue),
+      decimal(ref, slash + 1, end, Int.MinValue).toInt, carrier)
+  }
+
+  /** `ref(from until to)` as a decimal integer no smaller than `min` and
+    * no larger than `-(min + 1)`, accumulated negatively as
+    * `Long.parseLong` does.
+    */
+  private def decimal(ref: String, from: Int, to: Int, min: Long): Long = {
+    def bad = new NumberFormatException(s"bad media ref: $ref")
+    val negative = from < to && ref.charAt(from) == '-'
+    val limit = if (negative) min else min + 1
+    var i = if (from < to && (negative || ref.charAt(from) == '+')) from + 1 else from
+    if (i == to) throw bad
+    var acc = 0L
+    while (i < to) {
+      val d = Character.digit(ref.charAt(i), 10)
+      if (d < 0 || acc < limit / 10) throw bad
+      acc *= 10
+      if (acc < limit + d) throw bad
+      acc -= d
+      i += 1
+    }
+    if (negative) acc else -acc
   }
 
   // ---- tags (FIXTURES.md §3): unreadable 2%, hard 10% --------------------

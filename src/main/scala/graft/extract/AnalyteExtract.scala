@@ -55,7 +55,7 @@ object AnalyteExtract {
     * multi-analyte extraction does not re-inline the candidate chains
     * (Column-tree hygiene, see Pipeline); callers project them away.
     * ONE compiled [[MultiAnalyteGather]] pass per document evaluates
-    * every config against a single normalize+split line walk; the q43
+    * every config against a single walk over the text's UTF-8 lines; the q43
     * oracle checks the output against the independent Python
     * implementation, and AnalyteSpec pins the gather == the test-scope
     * HOF twin and N configs in one pass == one pass per config.

@@ -87,7 +87,9 @@ object TshExtract {
   def levelResult(raw: Column, bestC: Column): Column = {
     val confidence =
       when(bestC("ref_min").isNotNull && bestC("ref_max").isNotNull, "high")
-        .when(lower(bestC("label")).contains("fallback"), "low")
+        // the label lowercases to a "fallback" one exactly when the
+        // gather gave it penalty 2 (`GatherCore.penaltyOf`)
+        .when(bestC("penalty") === 2, "low")
         .otherwise("medium") // `parsers/tsh.py:327-332`
     when(raw.isNull, failure(lit("OCR_FAILED"), nullS))
       .when(bestC.isNull, failure(lit("TSH_NOT_FOUND"), raw))

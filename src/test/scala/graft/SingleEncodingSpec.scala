@@ -155,6 +155,15 @@ class SingleEncodingSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
+  test("the gather reads the OCR text's bytes: no whole-text decode, no src/main linesOf") {
+    // the whole-text form is the test-scope oracle graft.extract.GatherTwin
+    val linesOf = hitsOf(mainSources(), """\bdef\s+linesOf\b""".r)
+    assert(linesOf.isEmpty, linesOf.mkString("\n", "\n", ""))
+    val decodes = hitsOf(Seq(Paths.get("src/main/scala/graft/extract/AnalyteGatherExpr.scala")),
+      """\binput\.toString\b""".r)
+    assert(decodes.isEmpty, decodes.mkString("\n", "\n", ""))
+  }
+
   test("src/main hard-codes no local[<n>] master") {
     // a fixed thread count oversubscribes any smaller host
     val hits = hitsOf(mainSources(), """local\[\d+\]""".r)

@@ -13,8 +13,9 @@ import graft.SparkTestSession
 
 /** The gather's label scan and one-pass line split are exact rewrites:
   * `GatherCore.findLabel` gives what `Matcher.find()` gives (found,
-  * start, end, group) and `GatherCore.linesOf` what the N1/N2 regex
-  * form gives, on the corpus and on adversarial random input.
+  * start, end, group) and the one-pass line split (the test-scope
+  * `GatherTwin.linesOf`, the oracle of the gather's byte scan) what the
+  * N1/N2 regex form gives, on the corpus and on adversarial random input.
   */
 class LabelScanSpec extends AnyFunSuite {
 
@@ -59,7 +60,7 @@ class LabelScanSpec extends AnyFunSuite {
     Files.readAllLines(Paths.get("fixtures/ocr_dump.jsonl")).asScala.toSeq.flatMap { doc =>
       val node = json.readTree(doc)
       Seq("light_raw", "premium_raw", "optimum_raw") // a null level is absent
-        .flatMap(level => Option(node.get(level)).toSeq.flatMap(t => GatherCore.linesOf(t.asText())))
+        .flatMap(level => Option(node.get(level)).toSeq.flatMap(t => GatherTwin.linesOf(t.asText())))
     }
   }
 
@@ -132,7 +133,7 @@ class LabelScanSpec extends AnyFunSuite {
     val fixed = Seq("", "\n", "\r\n", " ", "\n\n a \t\n", "a\r\rb", " \n \n ", "x\n")
     val random = Seq.fill(6000)(Seq.fill(rnd.nextInt(16))(parts(rnd.nextInt(parts.size))).mkString)
     (fixed ++ random).foreach { s =>
-      assert(GatherCore.linesOf(s).toSeq == viaRegex(s), escaped(s))
+      assert(GatherTwin.linesOf(s).toSeq == viaRegex(s), escaped(s))
     }
   }
 }

@@ -4,14 +4,23 @@ import graft.corpus.{Corpus, Det, DetOracle}
 import graft.schema.OcrBox
 
 /** The line-list, regex-split, hash-per-box form of [[SimulatedOcr]],
-  * kept as the test oracle: each page built as its whole line list and
-  * cropped afterwards, tokens from `split("\\s+")`, each box hashing the
-  * joined key `mediaRef\u0000tok\u0000top` (and `...conf`) from scratch.
+  * kept as the test oracle: refs parsed with substrings, each page built
+  * as its whole line list and cropped afterwards, tokens from
+  * `split("\\s+")`, each box hashing the joined key
+  * `mediaRef\u0000tok\u0000top` (and `...conf`) from scratch.
   */
 object OcrTwin {
+  /** Twin of `Corpus.parseMediaRef`: strip, split, `toLong`/`toInt`. */
+  def parseMediaRef(ref: String): (Long, Int, Boolean) = {
+    val carrier = ref.endsWith("#tsh")
+    val body = ref.stripPrefix("media://").stripSuffix("#tsh")
+    val slash = body.lastIndexOf('/')
+    (body.substring(3, slash).toLong, body.substring(slash + 1).toInt, carrier)
+  }
+
   def ocrPage(level: String, mediaRef: String): (String, Seq[OcrBox]) = {
     val parsed =
-      try Some(Corpus.parseMediaRef(mediaRef))
+      try Some(parseMediaRef(mediaRef))
       catch { case _: RuntimeException => None }
     if (parsed.isEmpty) return ("", Seq.empty)
     val (i, k, carrier) = parsed.get

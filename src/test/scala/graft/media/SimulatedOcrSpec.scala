@@ -81,6 +81,38 @@ class SimulatedOcrSpec extends AnyFunSuite {
     }
   }
 
+  test("parseMediaRef == its substring twin on corpus refs and on 3,000 odd refs") {
+    def parse(f: String => (Long, Int, Boolean), ref: String) =
+      try Some(f(ref)) catch { case _: RuntimeException => None }
+    val refs = mediaRefs(skewed)
+    refs.foreach(r => assert(Corpus.parseMediaRef(r) == OcrTwin.parseMediaRef(r), r))
+    // prefixes, separators, signs, Unicode digits (Arabic-Indic, fullwidth,
+    // a supplementary one) and bounds that overflow or just fit
+    val nums = IndexedSeq("", "0", "7", "42", "-", "+", "-0", "+12", "--1", "\u0663\u0661",
+      "\uff19", "\ud835\udfce", "9223372036854775807", "9223372036854775808",
+      "-9223372036854775808", "-9223372036854775809", "2147483647", "2147483648",
+      "-2147483648", "-2147483649", "1 ", "x", "00000007")
+    val prefixes = IndexedSeq("media://", "media:/", "", "#tsh")
+    val heads = IndexedSeq("doc", "doc", "xyz", "d/c", "do", "docs", "", "/")
+    val tails = IndexedSeq("", "", "#tsh", "#", "tsh", "#tsh#tsh", "/")
+    val rnd = new Random(29029L)
+    def pick(xs: IndexedSeq[String]) = xs(rnd.nextInt(xs.size))
+    val odd = Malformed ++ Seq("media://doc/1", "media://doc1/", "media:///1", "doc1/2",
+      "media://doc-5/+3#tsh", "media://doc\u0663/\u0661#tsh") ++ Seq.fill(3000) {
+        if (rnd.nextInt(4) == 0)
+          Seq.fill(1 + rnd.nextInt(7))(pick(nums ++ prefixes ++ heads ++ tails)).mkString
+        else pick(prefixes) + pick(heads) + pick(nums) + pick(Vector("/", "/", "//", "")) +
+          pick(nums) + pick(tails)
+      }
+    var accepted = 0
+    for (ref <- odd) {
+      val got = parse(Corpus.parseMediaRef, ref)
+      assert(got == parse(OcrTwin.parseMediaRef, ref), ref)
+      if (got.isDefined) accepted += 1
+    }
+    assert(accepted > 50 && accepted < odd.size - 1000, s"$accepted of ${odd.size} accepted")
+  }
+
   test("box tokens split on Java's \\s class exactly as split(\"\\\\s+\") does") {
     // \s is [ \t\n\x0B\f\r]; the look-alikes around it (file/group/record/
     // unit separators, NEL, NBSP, line/paragraph separators) are token chars

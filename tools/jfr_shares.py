@@ -8,6 +8,7 @@ Usage:
         | python3 tools/jfr_shares.py -                           # or reads its output
     python3 tools/jfr_shares.py /tmp/x.jfr --top 30 --json
     python3 tools/jfr_shares.py /tmp/x.jfr --frame 'OcrRun\\$\\.ocr' --frame 'Corpus\\$\\.page'
+    python3 tools/jfr_shares.py /tmp/x.jfr --callers 'String\\.<init>' --callers 'Matcher\\.reset'
 
 Keeps the jdk.ExecutionSample events whose sampled thread's Java name starts
 with "Executor task launch worker" (Spark's task threads) and prints, per
@@ -20,9 +21,17 @@ frame `package.Class.method`:
   `graft.`): every sample's stack holds Spark's task and thread frames.
 
 `--frame REGEX` (repeatable) adds one row per pattern: the self and
-inclusive share of the samples with a matching frame, top or anywhere. The
-events are decoded one at a time, so a long recording's JSON is never held
-in memory whole.
+inclusive share of the samples with a matching frame, top or anywhere.
+
+`--callers REGEX` (repeatable) splits a matching frame's shares by its
+immediate caller, so a self share such as `java.lang.String.<init>` says who
+pays for it. Per sample, the topmost run of consecutive matching frames
+counts once: its bottom frame is "the frame" and the first non-matching
+frame below it "the caller" (so a constructor delegating to itself is not
+its own caller); self counts the samples where the run starts at the top.
+
+The events are decoded one at a time, so a long recording's JSON is never
+held in memory whole.
 """
 
 import argparse
@@ -85,12 +94,26 @@ def frame_name(frame):
     return f"{owner}.{method.get('name', '?')}"
 
 
-def shares(stream, patterns):
-    """(kept samples, self counts, inclusive counts, per-pattern counts)."""
+def caller_run(frames, p):
+    """(frame, caller, is top) of the topmost run of frames matching p, or None."""
+    at = next((i for i, f in enumerate(frames) if p.search(f)), None)
+    if at is None:
+        return None
+    end = at
+    while end + 1 < len(frames) and p.search(frames[end + 1]):
+        end += 1
+    caller = frames[end + 1] if end + 1 < len(frames) else "(stack root)"
+    return frames[end], caller, at == 0
+
+
+def shares(stream, patterns, caller_patterns=()):
+    """(kept samples, self counts, inclusive counts, per-pattern counts,
+    per-caller-pattern {(frame, caller): [self, inclusive]})."""
     n = 0
     top = collections.Counter()
     anywhere = collections.Counter()
     matched = {p.pattern: [0, 0] for p in patterns}
+    by_caller = {p.pattern: collections.defaultdict(lambda: [0, 0]) for p in caller_patterns}
     for ev in events(stream):
         if ev.get("type") != "jdk.ExecutionSample":
             continue
@@ -109,7 +132,13 @@ def shares(stream, patterns):
                 matched[p.pattern][0] += 1
             if any(p.search(f) for f in frames):
                 matched[p.pattern][1] += 1
-    return n, top, anywhere, matched
+        for p in caller_patterns:
+            run = caller_run(frames, p)
+            if run is not None:
+                counts = by_caller[p.pattern][run[:2]]
+                counts[0] += run[2]
+                counts[1] += 1
+    return n, top, anywhere, matched, by_caller
 
 
 def main():
@@ -118,11 +147,14 @@ def main():
     ap.add_argument("--top", type=int, default=25, help="frames listed per ranking")
     ap.add_argument("--frame", action="append", default=[], metavar="REGEX",
                     help="report the share of samples with a frame matching REGEX")
+    ap.add_argument("--callers", action="append", default=[], metavar="REGEX",
+                    help="split the shares of frames matching REGEX by immediate caller")
     ap.add_argument("--within", default="graft.",
                     help="frame-name prefix of the inclusive ranking ('' for all)")
     ap.add_argument("--json", action="store_true", help="print one JSON object")
     args = ap.parse_args()
     patterns = [re.compile(p) for p in args.frame]
+    caller_patterns = [re.compile(p) for p in args.callers]
 
     proc = None
     if args.input == "-":
@@ -136,7 +168,7 @@ def main():
     else:
         stream = open(args.input)
     try:
-        n, top, anywhere, matched = shares(stream, patterns)
+        n, top, anywhere, matched, by_caller = shares(stream, patterns, caller_patterns)
     finally:
         if proc is not None:
             proc.stdout.close()
@@ -158,6 +190,9 @@ def main():
                       if f.startswith(args.within)][:args.top],
         "frames": {p: {"self": share(s), "inclusive": share(i)}
                    for p, (s, i) in matched.items()},
+        "callers": {p: [[f, c, share(s), share(i)] for (f, c), (s, i)
+                        in sorted(rows.items(), key=lambda kv: (-kv[1][1], kv[0]))]
+                    for p, rows in by_caller.items()},
     }
     if args.json:
         print(json.dumps(out))
@@ -171,6 +206,10 @@ def main():
         print("\nmatched frames (self / inclusive)")
         for p, s in out["frames"].items():
             print(f"  {100 * s['self']:6.2f}% / {100 * s['inclusive']:6.2f}%  {p}")
+    for p, rows in out["callers"].items():
+        print(f"\nby caller of '{p}' (self / inclusive)")
+        for f, c, s, i in rows[:args.top]:
+            print(f"  {100 * s:6.2f}% / {100 * i:6.2f}%  {f}  <-  {c}")
 
 
 if __name__ == "__main__":
