@@ -65,7 +65,7 @@ audit("window top-1 (q05)",
   "Single hash-partitioned Exchange on the window key — the minimal plan for a global per-group top-1.",
   SparkEntry.queries("q05_window_top1")(spark, sf), Seq("Window"))
 audit("minhash near-dup pairs (q25)",
-  "Banded LSH self-join on (band,bucket) over a materialized one-pass base (fused ShingleHashes+MinhashSignature); pairs deduped BEFORE the exact-Jaccard rerank.",
+  "Banded LSH self-join on (band,bucket) over a materialized one-pass base (fused ShingleHashes+MinhashSignature); each band collision reranked by exact Jaccard, and only (id_a, id_b, jaccard) rows over the threshold cross the pair-dedup exchange (a fixed-width hash aggregate; the shingle-hash arrays never shuffle).",
   SparkEntry.queries("q25_minhash_pairs")(spark, sf), Seq("Join"))
 audit("cosine near-dup (q46)",
   "Sign-LSH bucket self-join; at sf scale AQE broadcasts one side, at 100 TB it is a co-partitioned SMJ on (table,bucket) with ~N/65k vectors per bucket. Hot buckets are salt-split (join key includes __salt).",
@@ -80,7 +80,7 @@ audit("curation filter (q49)",
   "Language gate + quality features are ONE map-side projection; rejects drop before anything shuffles, and the only shuffles are the exact-dedup partial agg + keeper semi-join on 8-byte hash keys.",
   SparkEntry.queries("q49_curation")(spark, sf), Seq("Filter", "HashAggregate"))
 audit("full curate pass (q50)",
-  "Filter -> exact collapse -> banded near-dup join -> left_anti drop, in one plan; the near stage sees keepers only (curate's keepers are a barrier, so the regex-heavy hygiene projection executes once however many consumers).",
+  "Filter -> exact collapse -> banded near-dup join -> left_anti drop; the near stage sees keepers only. Three barriers (keepers, minhash base, near pairs), so the regex-heavy hygiene projection and the banded join each execute once however many consumers; the kept set is a keepers scan anti-joined with the pairs' drop ids.",
   SparkEntry.queries("q50_curate_full")(spark, sf), Seq("Join"))
 audit("line-frequency boilerplate strip (q53)",
   "Two partial-agg shuffles on 8-byte line hashes ((line_key, doc_id) collapse, then count per line_key) + anti-join back — no text column in any exchange; the boilerplate side is tiny by construction, so AQE broadcasts it.",
@@ -101,7 +101,7 @@ audit("bucketed range join (q61)",
   "Interval containment as an EQUI-join: intervals exploded onto covered fixed-width time buckets, hash join on the bucket id, residual exact-containment filter — ceil(L/width)+1 replicas per interval instead of a quadratic BroadcastNestedLoopJoin.",
   SparkEntry.queries("q61_range_join")(spark, sf), Seq("Join"))
 audit("composed corpus release (q64)",
-  "The four-stage release in one plan: curate's staged shapes (map-side hygiene, partial-agg exact collapse, salted banded join), the benchmark broadcast LEFT-SEMI decontamination + anti-join, the bounded-top-k quota keeper (no Window), and the map-only hash split — every inter-stage join is on 8-byte ids against already-bounded frames, and the raw table re-scans column-pruned instead of materializing a text-carrying intermediate (visible as input-read, the dedupStaged trade).",
+  "The four-stage release in one plan: curate's staged shapes (map-side hygiene, partial-agg exact collapse, salted banded join), the benchmark broadcast LEFT-SEMI decontamination + anti-join, the bounded-top-k quota keeper (no Window), and the map-only hash split — every inter-stage join is on 8-byte ids against already-bounded frames. Four barriers (curate's keepers, minhash base and near pairs, then the contamination flags): decontamination scans the keepers with their text, and the clean set is the same scan anti-joined with the drop ids and the flags, not a barrier of its own.",
   SparkEntry.queries("q64_release")(spark, sf), Seq("ObjectHashAggregate", "BroadcastHashJoin"))
 audit("BPE token count (q65)",
   "Map-only: the count is size() of the fused bpe_token_ids expression, which consumes the merge-rank table from a TorrentBroadcast (never a plan literal) inside whole-stage codegen; the vocab carries no alphabet (an unknown symbol is one UNK id), so the only job besides training is the scan itself — per-doc counts are a pure projection over it.",

@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 
 /** The one materialization barrier: every operator frame that several
   * consumers read (the exploded (id, features, band, bucket) bases both
-  * sides of an LSH self-join read, curate's keepers, release's
-  * intermediate sets, dupClusters' rounds, the media demo's assets)
+  * sides of an LSH self-join read, curate's keepers and near pairs,
+  * release's contamination flags, dupClusters' rounds, the media demo's
+  * assets)
   * goes through [[Staging.materialize]]. Both encodings are eager (one
   * job at call time) and return a leaf, so downstream plans scan the
   * barrier instead of recomputing or re-analyzing its lineage:
@@ -26,7 +27,13 @@ import org.apache.spark.sql.DataFrame
   *    dir are fixed per operator ("minhash_base", "curate_keepers",
   *    ...), so the write mode is error-if-exists and a reused dir
   *    FAILS FAST instead of two invocations silently overwriting each
-  *    other's staging tables.
+  *    other's staging tables. The table is read back with the schema
+  *    just written, so the read infers nothing (a parquet source makes
+  *    every field nullable either way; AnalysisSpec pins the equality).
+  *
+  * Each barrier's eager job runs under the description
+  * `graft:<name>:barrier`, so a listener can attribute it; the caller's
+  * description is restored afterwards.
   *
   * The trade: a local checkpoint is not recomputable. A cache barrier
   * fell back to its lineage when an executor holding its blocks died;
@@ -36,15 +43,23 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Staging {
 
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private val JobDescription = "spark.job.description"
+
   def materialize(df: DataFrame, staging: Option[String],
-      name: String): DataFrame = staging match {
-    case Some(dir) =>
-      val path = s"$dir/$name"
-      // default ErrorIfExists: a concurrent (or repeated) invocation
-      // sharing the dir errors here instead of corrupting the other
-      // call's staged table
-      df.write.parquet(path)
-      df.sparkSession.read.parquet(path)
-    case None => org.apache.spark.sql.graftbridge.Bridge.checkpointLeaf(df)
+      name: String): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(s"graft:$name:barrier")
+    try staging match {
+      case Some(dir) =>
+        val path = s"$dir/$name"
+        // default ErrorIfExists: a concurrent (or repeated) invocation
+        // sharing the dir errors here instead of corrupting the other
+        // call's staged table
+        df.write.parquet(path)
+        df.sparkSession.read.schema(df.schema).parquet(path)
+      case None => org.apache.spark.sql.graftbridge.Bridge.checkpointLeaf(df)
+    } finally sc.setLocalProperty(JobDescription, caller)
   }
 }

@@ -537,26 +537,20 @@ object TextOps {
       n: Int = 3, m: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.5, maxBucket: Int = 4096,
       staging: Option[String] = None): DataFrame =
-    minhashPairsAndBase(docs, id, text, n, m, bands, minJaccard, maxBucket,
-      staging)._1
+    minhashSelfPairs(minhashBase(docs, id, text, n, m, bands, staging),
+      minJaccard, maxBucket)
 
-  /** [[minhashDupPairs]] plus its materialized (id, hs, band, bucket)
-    * base — what the hot-bucket audit reads ([[curate]] returns
-    * `Buckets.hotBuckets` over exactly this frame, so auditing costs a
-    * re-scan of the materialized base, never a recompute of the
-    * minhash chain).
+  /** The materialized (id, hs, band, bucket) base the banded self-join
+    * reads (a [[Staging]] barrier: the self-join would otherwise
+    * recompute the minhash chain per side AND pull inlined copies of it
+    * into pushed-down join-key constraints). [[curate]]'s hot-bucket
+    * audit reads exactly this frame, so auditing costs a re-scan of the
+    * barrier, never a recompute of the minhash chain.
     */
-  private def minhashPairsAndBase(docs: DataFrame, id: Column, text: Column,
-      n: Int, m: Int, bands: Int, minJaccard: Double, maxBucket: Int,
-      staging: Option[String]): (DataFrame, DataFrame) = {
-    // Materialization barrier ([[Staging]]): the self-join would
-    // otherwise recompute the minhash chain per side AND pull inlined
-    // copies of it into pushed-down join-key constraints
-    val base = Staging.materialize(
-      minhashExploded(docs, id, text, n, m, bands),
+  private def minhashBase(docs: DataFrame, id: Column, text: Column,
+      n: Int, m: Int, bands: Int, staging: Option[String]): DataFrame =
+    Staging.materialize(minhashExploded(docs, id, text, n, m, bands),
       staging, "minhash_base")
-    (minhashSelfPairs(base, minJaccard, maxBucket), base)
-  }
 
   /** The exploded (id, hs, band, bucket) frame both sides of the LSH
     * self-join read — one row per (doc, band key). The rerank carries
@@ -581,20 +575,24 @@ object TextOps {
 
   /** Banded self-join ([[Buckets.selfPairs]]) + exact-Jaccard rerank
     * over a MATERIALIZED (id, hs, band, bucket) base frame, pairs
-    * deduped across bands before the rerank. Shared by the one-corpus
+    * deduped across bands after the rerank. Shared by the one-corpus
     * path ([[minhashDupPairs]]) and the incremental new-vs-new half of
     * [[dedupAgainstBase]].
     */
   private def minhashSelfPairs(base: DataFrame, minJaccard: Double,
       maxBucket: Int): DataFrame =
     Buckets.selfPairs(base, Seq("band", "bucket"), "id", "hs", maxBucket)
-      // dedupe pairs BEFORE the exact-Jaccard rerank: a pair colliding
-      // in k bands pays ONE set intersection, not k (the shingle-hash
-      // arrays ride along; they are identical per pair)
-      .dropDuplicates("id_a", "id_b")
+      // rerank each band collision, then dedupe the pairs that pass: a
+      // pair colliding in k bands pays k set intersections, but only
+      // (id_a, id_b, jaccard) rows over the threshold cross the dedupe
+      // exchange, never the shingle-hash arrays, and the dedupe is a
+      // fixed-width hash aggregate (deduping rows that carry the arrays
+      // planned a sort aggregate, with its sorts and its own generated
+      // classes). A pair's score is the same in every band it hits.
       .select(col("id_a"), col("id_b"),
         jaccard(col("hs_a"), col("hs_b")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
+      .distinct()
 
   // ---- deterministic dataset splitting ---------------------------------
   /** Deterministic hash split — train/validation/test assignment that
@@ -936,11 +934,13 @@ object TextOps {
     * wired in, not bolted on: `hotBuckets` over the SAME materialized
     * minhash base the join read (staged parquet or the local
     * checkpoint), so running the audit re-scans the barrier instead of
-    * recomputing the minhash chain. The audit frame is lazy — an
-    * unconsumed audit costs nothing beyond the barriers the dedup
-    * itself needs (those materialize eagerly at call time, see
-    * [[Staging]]) — but a 100 TB job should run and log it alongside
-    * the dedup itself
+    * recomputing the minhash chain. Three barriers materialize eagerly
+    * at call time ([[Staging]]): `curate_keepers`, `minhash_base` and
+    * `curate_pairs` (see [[curateKeeping]]); `nearPairs` is a scan of
+    * the last, and `kept` a scan of the first anti-joined with the
+    * drop ids. The audit frame is lazy — an unconsumed audit costs
+    * nothing beyond those barriers — but a 100 TB job should run and
+    * log it alongside the dedup itself
     * (the 1M-doc volume artifact in BENCH.md's history shows the shape).
     */
   def curate(docs: DataFrame, id: Column, text: Column,
@@ -950,31 +950,50 @@ object TextOps {
       exactClusters: Boolean = false,
       staging: Option[String] = None,
       langId: Option[Column => Column] = None,
-      extra: Seq[String] = Nil): CurationResult = {
+      extra: Seq[String] = Nil): CurationResult =
+    curateKeeping(docs, id, text, lang, minTokens, maxPunctRatio, n, m,
+      bands, minJaccard, maxBucket, exactClusters, staging, langId, extra)._2
+
+  /** [[curate]], plus its kept rows WITH their text (what [[release]]
+    * decontaminates: a scan of the keepers barrier, not a raw re-scan).
+    * Three barriers ([[Staging]]; `staging` switches them, and the
+    * cluster-propagation rounds, to parquet staging tables):
+    *  - `curate_keepers`: the hygiene-filtered exact-dedup keepers, which
+    *    feed the minhash base AND the kept set, so the hygiene projection
+    *    and the exact-dedup shuffle run once (keeper ids come from the
+    *    raw table, [[dedupStaged]], so the hygiene regexes run once);
+    *  - `minhash_base`: the banded self-join's input and the audit's;
+    *  - `curate_pairs`: the near-dup pairs, which feed the drop set AND
+    *    the returned `nearPairs`, so reading both runs the banded
+    *    self-join once.
+    * The kept set is then a scan of the keepers anti-joined with the
+    * drop ids (the pairs' greater ids, or the cluster non-keepers).
+    */
+  private def curateKeeping(docs: DataFrame, id: Column, text: Column,
+      lang: String, minTokens: Int, maxPunctRatio: Double,
+      n: Int, m: Int, bands: Int, minJaccard: Double, maxBucket: Int,
+      exactClusters: Boolean, staging: Option[String],
+      langId: Option[Column => Column],
+      extra: Seq[String]): (DataFrame, CurationResult) = {
     val staged =
       curationStage(docs, id, text, lang, minTokens, maxPunctRatio,
         langId, extra)
-    // keepers feed BOTH the near-dup join and the final anti-join:
-    // materialize so the regex-heavy hygiene projection and the
-    // exact-dedup shuffle run once (`staging` switches every barrier in
-    // the composition — this one, the minhash base, the
-    // cluster-propagation rounds — to parquet staging tables, see
-    // [[Staging]]). Keeper ids come from the raw table ([[dedupStaged]])
-    // so the hygiene regexes run once.
     val keepers = Staging.materialize(
       dedupStaged(staged, docs, id, text),
       staging, "curate_keepers")
-    val (pairs, base) = minhashPairsAndBase(keepers, col("doc_id"), col("text"),
-      n, m, bands, minJaccard, maxBucket, staging)
+    val base = minhashBase(keepers, col("doc_id"), col("text"), n, m, bands,
+      staging)
+    val pairs = Staging.materialize(minhashSelfPairs(base, minJaccard,
+      maxBucket), staging, "curate_pairs")
     // no .distinct() on the drop side: left_anti ignores right-side
     // multiplicity, and the anti-join's own hash build dedups keys —
     // a pre-distinct was one spare exchange (r08)
     val dropIds =
       if (exactClusters) clusterDropIds(pairs, staging)
       else pairs.select(greatest(col("id_a"), col("id_b")).as("doc_id"))
-    val kept = keepers.join(dropIds, Seq("doc_id"), "left_anti").drop("text")
-    CurationResult(kept, pairs,
-      Buckets.hotBuckets(base, Seq("band", "bucket"), maxBucket))
+    val keptText = keepers.join(dropIds, Seq("doc_id"), "left_anti")
+    (keptText, CurationResult(keptText.drop("text"), pairs,
+      Buckets.hotBuckets(base, Seq("band", "bucket"), maxBucket)))
   }
 
   /** What [[curate]] hands back. `hotBuckets` is the audit of what the
@@ -1011,13 +1030,18 @@ object TextOps {
     *     guard [[splitByHash]] documents; fractions are then over
     *     domains, not docs).
     *
-    * Scale shape: every inter-stage join is an 8-byte-id semi/anti/
-    * equi join against frames the stages already bounded (kept ids,
-    * flagged ids, quota keepers); the raw table is re-scanned
-    * column-pruned to (id, text) for decontamination and (id, source)
-    * for the quota — the same deliberate two-scan trade as
-    * [[dedupStaged]], cheaper at corpus scale than materializing a
-    * text-carrying intermediate. Nothing in the composition adds a
+    * Scale shape: four barriers materialize eagerly at call time
+    * ([[Staging]]): curate's `curate_keepers`, `minhash_base` and
+    * `curate_pairs`, and the contamination flags,
+    * `release_contaminated`. Every other set is a scan of those:
+    * decontamination reads the keepers (text included) anti-joined with
+    * the drop ids, and the clean set is the same scan anti-joined with
+    * the flags too (a staged scan reads only the columns it uses; an
+    * in-memory one reads whole keeper rows, text included, once per
+    * reader: the quota reads the clean set twice, and `report` again).
+    * Every inter-stage join is an 8-byte-id semi/anti/
+    * equi join against frames the stages already bounded (drop ids,
+    * flagged ids, quota keepers). Nothing in the composition adds a
     * shuffle class the pieces did not already have.
     *
     * Returns a [[ReleaseResult]]: `shards` (doc_id, lang_pred,
@@ -1045,34 +1069,23 @@ object TextOps {
     require(splitOn == "doc_id" || splitOn == "source",
       s"splitOn must be 'doc_id' or 'source', got '$splitOn'")
     val named = docs.select(id.as("doc_id"), text.as("text"), source.as("source"))
-    // `source` rides the curation projection (curationStage `extra`) so
-    // the decontaminated set needs NO re-join against the raw table to
-    // recover it (r08: one join + one raw-union re-scan removed)
-    val cur = curate(named, col("doc_id"), col("text"), lang, minTokens,
-      maxPunctRatio, n, m, bands, minJaccard, maxBucket, exactClusters,
-      staging, extra = Seq("source"))
-    // BARRIER the curate output: it feeds the decontamination semi-join
-    // AND the clean anti-join, and is itself the result of the LSH
-    // near-dup drop — unmaterialized, each downstream reference would
-    // re-execute that banded join (measured ~3x the stage cost)
-    val curated = Staging.materialize(cur.kept, staging, "release_curated")
-    // regain text for the kept ids only (column-pruned raw re-scan +
-    // 8-byte-id semi-join) — the decontamination input
-    val keptDocs = named.select(col("doc_id"), col("text"))
-      .join(curated.select("doc_id"), Seq("doc_id"), "left_semi")
+    // `source` rides the curation projection (curationStage `extra`) and
+    // the kept rows carry their text, so neither the quota nor the
+    // decontamination reads the raw table again
+    val (keptText, cur) = curateKeeping(named, col("doc_id"), col("text"),
+      lang, minTokens, maxPunctRatio, n, m, bands, minJaccard, maxBucket,
+      exactClusters, staging, None, Seq("source"))
     // BARRIER the (tiny) contamination flags: the clean anti-join AND
     // the returned `contaminated` frame both consume them — without
     // this, reading both re-runs the heavy n-gram corpus scan twice
     val contaminated = Staging.materialize(
-      contaminationHits(keptDocs, col("doc_id"), col("text"),
+      contaminationHits(keptText, col("doc_id"), col("text"),
         benchmark, benchText, contamN, minHits),
       staging, "release_contaminated")
-    // BARRIER the decontaminated set: the quota aggregates it AND
-    // semi-joins back against it (two references = two n-gram
-    // decontamination passes without this)
-    val clean = Staging.materialize(
-      curated.join(contaminated, Seq("doc_id"), "left_anti"),
-      staging, "release_clean")
+    // no barrier: every reader of the clean set (the quota reads it
+    // twice) scans the keepers barrier with two anti-joins against the
+    // small pairs and flags barriers
+    val clean = cur.kept.join(contaminated, Seq("doc_id"), "left_anti")
     // the Int.MaxValue default means "no quota": skip the stage rather
     // than rank every source's full membership through a top-(2^31)
     // aggregate
@@ -1096,10 +1109,9 @@ object TextOps {
     * evidence (near pairs + hot-bucket audit), the decontamination
     * flags (what stage 2 dropped and why), and the publishable
     * per-(source, split) volume report. The returned frames are lazy,
-    * but the composition's BARRIERS (curated set, contamination flags,
-    * clean set) materialize eagerly at call time (see [[Staging]]);
-    * what remains lazy is only the final quota/split/report layer on
-    * top of them.
+    * but the composition's four BARRIERS (see [[release]]) materialize
+    * eagerly at call time; what remains lazy is only the anti-joins and
+    * the final quota/split/report layer on top of them.
     */
   final case class ReleaseResult(shards: DataFrame, nearPairs: DataFrame,
       hotBuckets: DataFrame, contaminated: DataFrame, report: DataFrame)
@@ -1278,8 +1290,7 @@ object TextOps {
     */
   def buildMinhashBase(docs: DataFrame, id: Column, text: Column,
       baseDir: String, n: Int = 3, m: Int = 16, bands: Int = 4): DataFrame =
-    Staging.materialize(minhashExploded(docs, id, text, n, m, bands),
-      Some(baseDir), "minhash_base")
+    minhashBase(docs, id, text, n, m, bands, Some(baseDir))
 
   /** What [[dedupAgainstBase]] hands back.
     *  - `keepers`: the new snapshot's survivors (doc_id, text) — docs

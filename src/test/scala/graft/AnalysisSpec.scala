@@ -284,6 +284,34 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
     assert(stagedCur.hotBuckets.count() == 0)
   }
 
+  test("a staged barrier reads back with the schema it wrote, equal to the inferred one") {
+    import graft.analysis.Staging
+    val dir = tempDir("graft-staging-schema")
+    val docs = spark.read.parquet(s"$docsPath/documents.parquet")
+      .select(col("doc_id"), col("text"), col("source")).filter(col("doc_id") < 50)
+    // the barrier shapes a release stages: the keepers' features, a
+    // (id, hs, band, bucket) base, a pair frame and the flags, plus
+    // non-nullable, nested and map columns
+    val shapes = Seq(
+      "keepers" -> TextOps.curationFeatures(docs, col("doc_id"), col("text"), Seq("source")),
+      "base" -> docs.select(col("doc_id").as("id"), array(col("doc_id"), lit(7L)).as("hs"),
+        lit(1).as("band"), xxhash64(col("text")).as("bucket")),
+      "pairs" -> docs.select(col("doc_id").as("id_a"), (col("doc_id") + 1).as("id_b"),
+        lit(0.5).as("jaccard")),
+      "flags" -> docs.groupBy(col("source").as("doc_id")).agg(count(lit(1)).as("n_hits")),
+      "nested" -> docs.select(struct(col("doc_id"), lit("x").as("k")).as("s"),
+        map(lit("a"), col("doc_id")).as("m"), array(struct(lit(1.5).as("d"))).as("as")))
+    shapes.foreach { case (name, df) =>
+      val staged = Staging.materialize(df, Some(dir), name)
+      val inferred = spark.read.parquet(s"$dir/$name")
+      assert(staged.schema == inferred.schema, s"$name: ${staged.schema} vs ${inferred.schema}")
+      assert(staged.collect().map(_.toString).sorted.toSeq ==
+        inferred.collect().map(_.toString).sorted.toSeq, name)
+    }
+    // non-vacuous: some written column was non-nullable
+    assert(shapes.exists(_._2.schema.exists(!_.nullable)))
+  }
+
   test("in-memory barriers: no CacheManager entry, blocks freed once unreachable") {
     import graft.analysis.{Bpe, Pack}
     import graft.media.BinaryOps
@@ -1477,6 +1505,103 @@ class AnalysisSpec extends AnyFunSuite with TempDirs {
       TextOps.release(docs, col("doc_id"), col("text"), col("source"),
         bench, col("text"), splitOn = "lang_pred")
     }
+  }
+
+  /** A release corpus with near-dups: 200 docs, plus two suffixed
+    * copies of the first 30 (same source), so near pairs and, under a
+    * small `maxBucket`, oversized buckets exist. A local relation: a
+    * parquet read of the suite's corpus would scan the cached
+    * `documents`, whose first scan builds the cache.
+    */
+  private def releaseCorpus(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val base = spark.read.parquet(s"$docsPath/documents.parquet")
+      .select(col("doc_id"), col("text"), col("source")).filter(col("doc_id") < 200)
+      .as[(Long, String, String)].collect().toSeq.toDF("doc_id", "text", "source")
+    def copies(off: Long, tail: String) = base.filter(col("doc_id") < 30)
+      .select((col("doc_id") + off).as("doc_id"), concat(col("text"), lit(tail)).as("text"),
+        col("source"))
+    (base.unionByName(copies(100000L, " zz")).unionByName(copies(200000L, " yy zz")),
+      base.filter(col("doc_id") < 5).select(col("text")))
+  }
+
+  test("staged release == in-memory release: all five frames; nearPairs scans its barrier") {
+    import org.apache.spark.sql.DataFrame
+    val (docs, bench) = releaseCorpus()
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def frames(r: TextOps.ReleaseResult): Seq[(String, DataFrame)] = Seq("shards" -> r.shards,
+      "nearPairs" -> r.nearPairs, "hotBuckets" -> r.hotBuckets,
+      "contaminated" -> r.contaminated, "report" -> r.report)
+    // (maxPerSource, exactClusters, maxBucket)
+    Seq((3, false, 4096), (Int.MaxValue, false, 4096), (3, true, 2)).foreach {
+      case (quota, exact, maxBucket) =>
+        def run(staging: Option[String]) = TextOps.release(docs, col("doc_id"), col("text"),
+          col("source"), bench, col("text"), maxBucket = maxBucket, maxPerSource = quota,
+          exactClusters = exact, staging = staging)
+        val mem = run(None)
+        val staged = run(Some(tempDir("graft-release-staged")))
+        val what = s"maxPerSource=$quota exactClusters=$exact maxBucket=$maxBucket"
+        frames(mem).zip(frames(staged)).foreach { case ((name, a), (_, b)) =>
+          assert(a.columns.toSeq == b.columns.toSeq, s"$name columns, $what")
+          assert(rows(a) == rows(b), s"$name rows differ, $what")
+        }
+        // non-vacuous: every frame the corpus can fill is filled
+        assert(mem.nearPairs.count() >= 60 && mem.contaminated.count() > 0 &&
+          mem.shards.count() > 0, what)
+        assert((mem.hotBuckets.count() > 0) == (maxBucket == 2), what)
+        // the pairs are a barrier scan: reading them runs no banded join
+        Seq(mem, staged).foreach { r =>
+          val plan = r.nearPairs.queryExecution.executedPlan.toString
+          assert(!plan.contains("Join") && !plan.contains("Exchange"),
+            s"nearPairs recomputes the self-join, $what:\n$plan")
+        }
+        assert(staged.nearPairs.queryExecution.executedPlan.toString.contains("curate_pairs"))
+    }
+  }
+
+  test("a staged release: job count, and each barrier job named graft:<name>:barrier") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (docs, bench) = releaseCorpus()
+    val marker = "graft-test-jobs-marker"
+    val caller = "graft-test-caller"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d == marker) drained.countDown() else jobs.add(d)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(caller)
+      val r = TextOps.release(docs, col("doc_id"), col("text"), col("source"), bench,
+        col("text"), maxPerSource = 3, staging = Some(tempDir("graft-release-jobs")))
+      Seq(r.shards, r.nearPairs, r.hotBuckets, r.contaminated, r.report)
+        .foreach(_.write.format("noop").mode("overwrite").save())
+      // listener events arrive in order: once the marker job's is in, so
+      // is every job of the release
+      sc.setJobDescription(marker)
+      sc.parallelize(1 to 1, 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    val descs = jobs.asScala.toSeq
+    val barrier = "graft:(\\w+):barrier".r
+    val (barrierJobs, callerJobs) = descs.partition(barrier.matches)
+    // the barriers in call order; the drains ran under the caller's
+    // restored description
+    assert(barrierJobs.distinct.map { case barrier(n) => n } ==
+      Seq("curate_keepers", "minhash_base", "curate_pairs", "release_contaminated"))
+    assert(callerJobs.forall(_ == caller), s"unnamed or stray jobs: ${descs.distinct}")
+    // 38 jobs on this corpus while nearPairs re-ran the banded join,
+    // release_curated and release_clean were barriers and each staged
+    // read-back inferred its schema
+    assert(descs.size == 29,
+      s"${descs.size} jobs: ${descs.groupBy(identity).view.mapValues(_.size).toMap}")
   }
 
   test("splitLeakage: doc-keyed splits leak near pairs; group-keyed splits don't") {

@@ -12,7 +12,8 @@ B, ...), then aggregate the per-JVM lines into one JSON object.
 instead of the barrier set.
 
 Per query and side: the median and range of every timed trial of every
-JVM, the join operators of one JVM's untimed pass, and, from the two
+JVM, the Spark jobs and Janino compiles of every timed trial, the join
+operators of one JVM's untimed pass, and, from the two
 EXPLAINS.md files (fixtures/gen_explains.scala, sf0.01), the executed
 stages and shuffle-write MB of each audit.
 """
@@ -93,6 +94,8 @@ def main():
             per_query.setdefault(q, {})[s] = {
                 "median_s": round(med, 3), "min_s": min(walls), "max_s": max(walls),
                 "n": len(walls),
+                "jobs": [j for l in ls for j in l["queries"][q].get("jobs", [])],
+                "compiles": [c for l in ls for c in l["queries"][q].get("compiles", [])],
                 "build_joins": ls[0]["queries"][q]["build_joins"],
                 "final_joins": ls[0]["queries"][q]["final_joins"],
                 "build_actions": ls[0]["queries"][q]["build_actions"]}

@@ -12,9 +12,10 @@
 //
 // Per query: one warm-up, then BARRIER_TRIALS timed trials (query build,
 // which runs the eager barriers, through one noop write), interleaved
-// across queries; then one untimed pass that records the join operators
-// of every action the query runs, split into the barrier builds and the
-// final write.
+// across queries, each also counting the Spark jobs it started and the
+// classes Janino compiled for it; then one untimed pass that records the
+// join operators of every action the query runs, split into the barrier
+// builds and the final write.
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -49,10 +50,41 @@ def once(q: String): Double = {
   (System.nanoTime() - t0) / 1e9
 }
 
+// jobs started, counted by a listener; `settle` runs a marker job and
+// waits for its start event, after which every earlier job is counted
+val settleMarker = "barrier_bench_settle"
+val jobsStarted = new java.util.concurrent.atomic.AtomicLong
+val settled = new java.util.concurrent.atomic.AtomicReference[java.util.concurrent.CountDownLatch]
+spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+  override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    if (Option(e.properties).exists(_.getProperty("spark.job.description") == settleMarker))
+      settled.get.countDown()
+    else jobsStarted.incrementAndGet()
+})
+def settle(): Unit = {
+  val latch = new java.util.concurrent.CountDownLatch(1)
+  settled.set(latch)
+  spark.sparkContext.setJobDescription(settleMarker)
+  try spark.sparkContext.parallelize(1 to 1, 1).count()
+  finally spark.sparkContext.setJobDescription(null)
+  latch.await(60, java.util.concurrent.TimeUnit.SECONDS)
+}
+def compiles(): Long =
+  org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+// (wall, jobs, Janino compiles) of one timed run
+def trial(q: String): (Double, Long, Long) = {
+  settle()
+  val (j0, c0) = (jobsStarted.get, compiles())
+  val wall = once(q)
+  settle()
+  (wall, jobsStarted.get - j0, compiles() - c0)
+}
+
 names.foreach(once)
 val (tot0, st0) = steal()
-val walls = names.map(_ -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-(1 to trials).foreach { _ => names.foreach(q => walls(q) += once(q)) }
+val runs = names.map(_ -> scala.collection.mutable.ArrayBuffer.empty[(Double, Long, Long)]).toMap
+(1 to trials).foreach { _ => names.foreach(q => runs(q) += trial(q)) }
 val (tot1, st1) = steal()
 
 // join operators of a plan, through AQE stages; `intoCache` also reads
@@ -94,7 +126,9 @@ def jsObj(m: Map[String, Int]) =
   m.toSeq.sorted.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
 val rows = names.map { q =>
   val (build, fin, acts) = plans(q)
-  s""""$q": {"walls_s": [${walls(q).map(w => f"$w%.3f").mkString(", ")}], """ +
+  s""""$q": {"walls_s": [${runs(q).map(r => f"${r._1}%.3f").mkString(", ")}], """ +
+    s""""jobs": [${runs(q).map(_._2).mkString(", ")}], """ +
+    s""""compiles": [${runs(q).map(_._3).mkString(", ")}], """ +
     s""""build_joins": ${jsObj(build)}, "final_joins": ${jsObj(fin)}, """ +
     s""""build_actions": [${acts.map(a => s""""$a"""").mkString(", ")}]}"""
 }
